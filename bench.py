@@ -504,7 +504,7 @@ def write_bench_md(result: dict) -> None:
             f"History: r1's 6.5× 8→32 anomaly was 64 MB Arrow batches × 32\n"
             f"tasks → ParallelGC pauses; r2 capped batches at 1024/32m, which\n"
             f"fixed n32 but taxed n2 2×; r3 scales the cap with parallelism\n"
-            f"(session.py, measured sweep in tools/exp_n2_arrow.py).\n"
+            f"(session.py, measured batch-size sweep).\n"
             + ctrl +
             "\nHost-weather caveat: this sandbox's throughput on\n"
             "memory-bound work swings 2-8x minute to minute (observed\n"

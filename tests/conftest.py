@@ -10,6 +10,7 @@ from veranda_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", app_name="veranda_spark_tests", shuffle_partitions=8)
+    cores = min(8, len(os.sched_getaffinity(0)))
+    s = get_spark(master=f"local[{cores}]", app_name="veranda_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()

@@ -5,13 +5,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from veranda_spark.functions.geometry import points_in_polygon
+from veranda_spark.functions.geometry import points_in_polygon, points_in_rings
 from veranda_spark.grid import RegularGrid
 from veranda_spark.operators.joins import (
     cell_histogram,
     derive_salt_map,
     knn_join,
     pip_join,
+    pip_join_table,
     point_in_tile_join,
     salted_broadcast_join,
 )
@@ -50,40 +51,55 @@ def test_pip_join_matches_bruteforce(spark, points):
     assert len(want) > 50
 
 
-def test_pip_join_classified_cover_edge_and_concave(spark):
-    # round-9 regression: the cell cover is now classified
-    # (outside-dropped / full-skip / boundary ray-cast).  This pins the
-    # classification against brute force for (a) points EXACTLY on
-    # polygon edges — they live in boundary cells, so the r1-r8
-    # half-open ray-cast convention must be preserved bit-for-bit, (b) a
-    # CONCAVE polygon whose bbox contains cells fully outside the
-    # polygon (the dropped-cell and full-cell classes both appear), and
-    # (c) interior points in full cells (skip path).
+@pytest.mark.parametrize("via", ["dict", "table"])
+def test_pip_join_classified_cover_edge_and_concave(spark, via):
+    # The cell cover is classified (outside-dropped / full-skip /
+    # boundary ray-cast), and the dict (pip_join) and DataFrame
+    # (pip_join_table) inputs share it.  This pins the classification
+    # against brute force for (a) points EXACTLY on polygon edges — they
+    # live in boundary cells, so the half-open ray-cast convention must
+    # be preserved bit-for-bit, (b) a CONCAVE polygon whose bbox contains
+    # cells fully outside the polygon (the dropped-cell and full-cell
+    # classes both appear), (c) interior points in full cells (skip
+    # path) and, for the table input, (d) a ring list whose hole
+    # strictly contains whole 32-px cells plus a disjoint second part:
+    # cells inside the hole must come out outside, not full.
     concave = [(10.0, -10.0), (700.0, -10.0), (700.0, -700.0),
                (360.0, -360.0), (10.0, -700.0)]  # notch up the middle
     square = [(64.0, -64.0), (512.0, -64.0), (512.0, -512.0),
               (64.0, -512.0)]  # integer-vertex: real on-edge points exist
+    polys = {"cv": [concave], "sq": [square]}
+    outer = [(560.0, -560.0), (1000.0, -560.0), (1000.0, -1000.0), (560.0, -1000.0)]
+    hole = [(630.0, -630.0), (930.0, -630.0), (930.0, -930.0), (630.0, -930.0)]
+    part = [(100.0, -760.0), (400.0, -760.0), (250.0, -1000.0)]
     ids = np.arange(N)
     xs, ys = (ids * 7919) % 1024, -((ids * 104729) % 1024)
     df = spark.createDataFrame(
         [(int(i), int(x), int(y)) for i, x, y in zip(ids, xs, ys)],
         "point_id long, px long, py long",
     )
-    got = pip_join(df, {"cv": concave, "sq": square}).collect()
-    want = set()
-    n_on_edge = 0
-    for pid, poly in [("cv", concave), ("sq", square)]:
-        inside = points_in_polygon(
-            xs.astype(float), ys.astype(float), np.array(poly)
+    if via == "dict":
+        got = pip_join(df, {k: v[0] for k, v in polys.items()}, res=5)
+    else:
+        polys["mp"] = [outer, hole, part]
+        frame = spark.createDataFrame(
+            [(k, [[list(p) for p in ring] for ring in rings]) for k, rings in polys.items()],
+            "polygon_id string, xy array<array<array<double>>>",
         )
+        got = pip_join_table(df, frame, res=5)
+    want = set()
+    for pid, rings in polys.items():
+        inside = points_in_rings(xs.astype(float), ys.astype(float), rings)
         want |= {(pid, int(i)) for i in ids[inside]}
-        if pid == "sq":
-            on_edge = (
-                ((xs == 64) | (xs == 512)) & (ys <= -64) & (ys >= -512)
-            ) | (((ys == -64) | (ys == -512)) & (xs >= 64) & (xs <= 512))
-            n_on_edge = int(on_edge.sum())
-    assert {(r["polygon_id"], r["point_id"]) for r in got} == want
-    assert len(want) > 100 and n_on_edge > 0  # edge cases actually present
+    on_edge = (
+        ((xs == 64) | (xs == 512)) & (ys <= -64) & (ys >= -512)
+    ) | (((ys == -64) | (ys == -512)) & (xs >= 64) & (xs <= 512))
+    in_hole = (xs > 630) & (xs < 930) & (ys < -630) & (ys > -930)
+    assert {(r["polygon_id"], r["point_id"]) for r in got.collect()} == want
+    # edge cases actually present
+    assert len(want) > 100 and on_edge.sum() > 0 and in_hole.sum() > 50
+    if via == "table":
+        assert sum(p == "mp" for p, _ in want) > 50
 
 
 @pytest.mark.parametrize("k", [1, 5, 20])

@@ -15,17 +15,17 @@ ANSI SQL for the oracle.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from veranda_spark.cells import cell_id, pack_cell, ring_cells
+from veranda_spark.cells import CELL_OFFSET, cell_id, ring_cells
 from veranda_spark.functions.geometry import (
     is_ring_list_column,
-    points_in_polygon,
     points_in_rings,
     segment_intersects_boxes,
     spec_to_rings,
@@ -35,62 +35,129 @@ from veranda_spark.functions.geometry import (
 # ---- point-in-polygon -------------------------------------------------------
 
 
-def _polygon_cover_rows(
-    polygons: dict[str, Sequence[tuple[float, float]]],
-    res: int,
-    to_px: callable,
-) -> list[tuple[str, int, bool]]:
-    """Driver-side cell cover of each polygon at resolution res (polygons
-    are a small dimension — the H3 polyfill analog), CLASSIFIED per cell
-    (round-9, guide §4 "eliminate the Python boundary" applied to the
-    candidate volume):
+def _pack_rings(rings: list[np.ndarray]) -> bytes:
+    """Ring list → float64 bytes: per ring its vertex count, then its x,y
+    pairs.  Exact, and flat: an Arrow batch whose nested-list column is
+    all null or empty crashes the Python worker on conversion."""
+    return np.concatenate([np.r_[len(r), r.ravel()] for r in rings]).tobytes()
 
-    - a cell no polygon edge touches is uniformly inside or outside
-      (the boundary cannot cross it) — decided by one center test:
-      entirely-outside cells are DROPPED from the cover (their
-      candidates were all UDF-rejected before), entirely-inside cells
-      are emitted with ``full=True`` (their candidates are hits by
-      construction and skip the exact re-check);
-    - boundary cells (an edge touches the box) emit ``full=False`` and
+
+def _unpack_rings(blob: bytes) -> list[np.ndarray]:
+    a, rings, i = np.frombuffer(blob, "float64"), [], 0
+    while i < len(a):
+        n = int(a[i])
+        rings.append(a[i + 1:i + 1 + 2 * n].reshape(n, 2))
+        i += 1 + 2 * n
+    return rings
+
+
+def _polygon_cover_rows(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Cell cover of ONE polygon (a ring list, even-odd) at resolution
+    res, CLASSIFIED per cell (the Raptor full/partial split):
+
+    - a cell no ring edge touches is uniformly inside or outside (the
+      boundary cannot cross it) — decided by one centre test: outside
+      cells are DROPPED, inside cells are ``full`` (their points are
+      hits by construction and skip the exact re-check);
+    - boundary cells (an edge touches the closed box) are not full and
       keep the exact ray-cast re-check.
 
-    Exactness: the polygon→cell-frame map is an affine (reflection), so
-    parity is preserved; boundary-degenerate center points cannot occur
-    in edge-free cells.  The emitted (full ∪ partial) cover is exactly
-    the polygon's touched cells, a subset of the old bbox cover — rows
-    that only ever produced UDF-rejected candidates are gone."""
+    Holes and multipolygons need nothing extra: the edge test runs over
+    every ring and the centre test is even-odd, so a cell strictly
+    inside a hole comes out outside.  Returns the packed cell ids and
+    full flags of the non-outside cells, row-major over the bbox."""
     size = 1 << res
-    out = []
-    from veranda_spark.cells import CELL_OFFSET
+    allv = np.concatenate(rings)
+    ixs = np.arange(int(np.floor(allv[:, 0].min() / size)),
+                    int(np.floor(allv[:, 0].max() / size)) + 1)
+    iys = np.arange(int(np.floor(allv[:, 1].min() / size)),
+                    int(np.floor(allv[:, 1].max() / size)) + 1)
+    ix, iy = (a.ravel() for a in np.meshgrid(ixs, iys))
+    xmin = (ix * size).astype("float64")
+    ymin = (iy * size).astype("float64")
+    xmax, ymax = xmin + size, ymin + size
+    edge_hit = np.zeros(ix.shape, dtype=bool)
+    for ring in rings:
+        for (ax, ay), (bx, by) in zip(ring, np.roll(ring, -1, axis=0)):
+            edge_hit |= segment_intersects_boxes(ax, ay, bx, by, xmin, ymin, xmax, ymax)
+    keep = edge_hit | points_in_rings(xmin + size / 2.0, ymin + size / 2.0, rings)
+    cell = (res << 58) + (iy[keep] + CELL_OFFSET) * (1 << 29) + (ix[keep] + CELL_OFFSET)
+    return cell, ~edge_hit[keep]
 
-    for pid, poly in polygons.items():
-        p = np.asarray(poly, dtype="float64")
-        u, v = zip(*(to_px(x, y) for x, y in p))
-        pp = np.stack([np.asarray(u, dtype="float64"),
-                       np.asarray(v, dtype="float64")], axis=1)
-        c0, c1 = pp[:, 0].min(), pp[:, 0].max()
-        r0, r1 = pp[:, 1].min(), pp[:, 1].max()
-        iys = range(int(np.floor(r0 / size)), int(np.floor(r1 / size)) + 1)
-        ixs = range(int(np.floor(c0 / size)), int(np.floor(c1 / size)) + 1)
-        xmin = np.array([ix * size for iy in iys for ix in ixs], dtype="float64")
-        ymin = np.array([iy * size for iy in iys for ix in ixs], dtype="float64")
-        xmax, ymax = xmin + size, ymin + size
-        edge_hit = np.zeros(xmin.shape, dtype=bool)
-        for i in range(len(pp)):
-            ax, ay = pp[i]
-            bx, by = pp[(i + 1) % len(pp)]
-            edge_hit |= segment_intersects_boxes(
-                ax, ay, bx, by, xmin, ymin, xmax, ymax
-            )
-        center_in = points_in_polygon(xmin + size / 2.0, ymin + size / 2.0, pp)
-        for idx, (iy, ix) in enumerate(
-            (iy, ix) for iy in iys for ix in ixs
-        ):
-            if not edge_hit[idx] and not center_in[idx]:
-                continue  # entirely outside — no candidates worth making
-            cell = (res << 58) + (iy + CELL_OFFSET) * (1 << 29) + (ix + CELL_OFFSET)
-            out.append((pid, cell, bool(not edge_hit[idx])))
-    return out
+
+def _classified_cover(
+    polygons: DataFrame,
+    poly_id: str,
+    xy_col: str,
+    res: int,
+    to_frame: Callable[[list[np.ndarray]], list[np.ndarray]] | None = None,
+) -> DataFrame:
+    """The one polygon cover step of pip_join, pip_join_table and
+    zonal_stats_table: a single ``mapInPandas`` over the polygon rows
+    (executor-side — the H3 polyfill analog) emitting
+    ``(poly_id, _cell, _full, _rings)`` for every non-outside cell of
+    each polygon (``_polygon_cover_rows``).
+
+    ``xy_col`` is one ring or a ring list (holes / multipolygons,
+    even-odd), detected from the column's nesting depth.  The rings,
+    packed (``_pack_rings``), ride only on boundary rows — the only rows
+    the exact re-check reads; full rows carry null.  A null or empty
+    ``xy_col`` emits nothing.  ``to_frame`` first maps each polygon's
+    rings into the frame the cells are keyed in (zonal: world → pixel)."""
+    multi_ring = is_ring_list_column(polygons, xy_col)
+    schema = T.StructType([
+        polygons.schema[poly_id],
+        T.StructField("_cell", T.LongType()),
+        T.StructField("_full", T.BooleanType()),
+        T.StructField("_rings", T.BinaryType()),
+    ])
+
+    def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids, cells, full, ring_rows = [], [], [], []
+            for pid, spec in zip(pdf[poly_id], pdf[xy_col]):
+                rings = [] if spec is None else spec_to_rings(spec, multi_ring)
+                rings = [r for r in rings if len(r)]
+                if not rings:
+                    continue
+                if to_frame is not None:
+                    rings = to_frame(rings)
+                c, f = _polygon_cover_rows(rings, res)
+                packed = _pack_rings(rings)
+                ids += [pid] * len(c)
+                cells.append(c)
+                full.append(f)
+                ring_rows += [None if fi else packed for fi in f]
+            yield pd.DataFrame({
+                poly_id: ids,
+                "_cell": np.concatenate(cells) if cells else np.empty(0, "int64"),
+                "_full": np.concatenate(full) if full else np.empty(0, bool),
+                "_rings": ring_rows,
+            })
+
+    return polygons.select(poly_id, xy_col).mapInPandas(cover, schema)
+
+
+@F.pandas_udf(T.BooleanType())
+def _inside(
+    px: pd.Series, py: pd.Series, pid: pd.Series, full: pd.Series, rings: pd.Series
+) -> pd.Series:
+    """Exact re-check only where the boundary can reach: full-cell
+    candidates are hits by construction; boundary-cell candidates — the
+    ONLY rows where a point can sit near/on an edge — run the even-odd
+    ray-cast bit for bit, so edge-point behavior (the half-open
+    crossing convention) is exactly what it always was.  (A convex
+    all-same-sign Column predicate was tried here and reverted in
+    review: it excluded exactly-on-edge points the ray-cast admits.)
+    The rings are parsed once per polygon id within the batch."""
+    out = full.to_numpy(dtype=bool).copy()
+    todo = np.flatnonzero(~out)
+    xv, yv = px.to_numpy("float64"), py.to_numpy("float64")
+    keys = pid.to_numpy()[todo]
+    for pos in pd.Series(todo).groupby(keys, dropna=False).indices.values():
+        m = todo[pos]
+        out[m] = points_in_rings(xv[m], yv[m], _unpack_rings(rings.iloc[m[0]]))
+    return pd.Series(out)
 
 
 def pip_join(
@@ -102,57 +169,24 @@ def pip_join(
     how: str = "inner",
 ) -> DataFrame:
     """Point-in-polygon join (the north rule's core join; veranda analog:
-    polygon select P7, base.py:510-557).
+    polygon select P7, base.py:510-557) against a small dict of
+    single-ring polygons.
 
-    Two-phase plan:
-    1. coarse: broadcast equi-join of point cell keys against the
-       polygons' cell covers (cheap, prunes almost everything);
-    2. exact: vectorized ray-cast re-check inside an Arrow pandas UDF.
+    The dict becomes a one-slice, one-row-per-polygon frame and runs
+    through ``pip_join_table``'s plan (classified cover, broadcast
+    equi-join on the cell key, exact re-check on boundary candidates).
+    ``how="left"`` keeps unmatched points with a null polygon_id.
 
     ``points`` uses world coords equal to pixel coords here (grid with
     ul=0, ps=1); pass transformed columns otherwise.
     """
     from veranda_spark.session import local_df
 
-    spark = points.sparkSession
-    cover = _polygon_cover_rows(polygons, res, lambda x, y: (x, -y))
-    # one-slice dim frame (see session.local_df: the default ~32 Python
-    # slices cost ~1.5s of broadcast build for a few hundred rows)
-    cover_df = local_df(
-        spark, cover, "polygon_id string, cell long, full boolean"
+    rows = [(pid, [[float(x), float(y)] for x, y in poly]) for pid, poly in polygons.items()]
+    zones = local_df(
+        points.sparkSession, rows, "polygon_id string, xy array<array<double>>"
     )
-    pts = points.withColumn(
-        "_cell", cell_id(F.col(x_col), -F.col(y_col), res)
-    )
-    cand = pts.join(F.broadcast(cover_df), pts["_cell"] == cover_df["cell"], "inner").drop(
-        "cell", "_cell"
-    )
-    polys = {k: np.asarray(v, dtype="float64") for k, v in polygons.items()}
-
-    # Exact re-check only where the boundary can reach (round-9, guide
-    # §4): full-cell candidates are hits by construction and skip the
-    # ray-cast inside the UDF; boundary-cell candidates — the ONLY rows
-    # where a point can sit near/on an edge — keep the r1-r8 even-odd
-    # ray-cast BIT-FOR-BIT, so edge-point behavior (the half-open
-    # crossing convention) is exactly what it always was.  (A convex
-    # all-same-sign Column predicate was tried here and reverted in
-    # review: it excluded exactly-on-edge points the ray-cast admits.)
-    @F.pandas_udf("boolean")
-    def inside(
-        px: pd.Series, py: pd.Series, pid: pd.Series, full: pd.Series
-    ) -> pd.Series:
-        out = full.to_numpy(dtype=bool).copy()
-        todo = ~out
-        xv, yv = px.to_numpy("float64"), py.to_numpy("float64")
-        for p, poly in polys.items():
-            m = todo & (pid == p).to_numpy()
-            if m.any():
-                out[m] = points_in_polygon(xv[m], yv[m], poly)
-        return pd.Series(out)
-
-    hits = cand.filter(
-        inside(F.col(x_col), F.col(y_col), F.col("polygon_id"), F.col("full"))
-    ).drop("full")
+    hits = pip_join_table(points, zones, x_col, y_col, res=res)
     if how == "inner":
         return hits
     if how == "left":
@@ -172,73 +206,35 @@ def pip_join_table(
     res: int = 6,
     broadcast_cover: bool = True,
 ) -> DataFrame:
-    """Point-in-polygon join against a polygon TABLE (round-2 addition:
-    the dict-based ``pip_join`` caps the polygon side at task-closure
-    size; this variant scales to millions of zones).
+    """Point-in-polygon join against a polygon TABLE (scales past the
+    task-closure size of a dict to millions of zones).
 
-    ``polygons`` carries (poly_id, xy_col: array<array<double>>) with
-    vertices in the SAME planar frame as (x_col, y_col).  Plan:
+    ``polygons`` carries (poly_id, xy_col) with vertices in the SAME
+    planar frame as (x_col, y_col); ``xy_col`` is one ring
+    (array<array<double>>) or a ring LIST (holes / multipolygons,
+    even-odd) — detected from the column's nesting depth.  Plan:
 
-    1. per-polygon bbox + cell cover computed JVM-side (array_min/max +
-       sequence explode — no driver loop, no Python);
+    1. classified cell cover, computed on the executors
+       (``_classified_cover``): outside cells dropped, full cells
+       flagged, rings only on boundary cells;
     2. candidate equi-join on the cell key (broadcast when the cover side
        is dim-sized, shuffle hash otherwise — set broadcast_cover=False
        for huge polygon tables and let AQE pick);
-    3. exact ray-cast re-check in an Arrow pandas UDF, vectorized over
-       the points of each polygon within the batch.
+    3. exact ray-cast re-check (``_inside``) on boundary candidates only.
 
     Reference analog: slice_by_geom over arbitrary OGR geometry
     (base.py:538-555) — here as a relational join instead of a per-file
-    loop.
-
-    ``xy_col`` is one ring (array<array<double>>) or a ring LIST (holes /
-    multipolygons, even-odd) — detected from the column's nesting depth."""
-    size = 1 << res
-    multi_ring = is_ring_list_column(polygons, xy_col)
-    flat_xy = F.flatten(F.col(xy_col)) if multi_ring else F.col(xy_col)
-    xs = F.transform(flat_xy, lambda v: F.element_at(v, 1))
-    ys = F.transform(flat_xy, lambda v: F.element_at(v, 2))
-    ix0 = F.floor(F.array_min(xs) / F.lit(size)).cast("long")
-    ix1 = F.floor(F.array_max(xs) / F.lit(size)).cast("long")
-    iy0 = F.floor(F.array_min(ys) / F.lit(size)).cast("long")
-    iy1 = F.floor(F.array_max(ys) / F.lit(size)).cast("long")
-    cover = polygons.select(
-        F.col(poly_id),
-        F.col(xy_col),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(iy0, iy1),
-                    lambda iy: F.transform(
-                        F.sequence(ix0, ix1), lambda ix: pack_cell(ix, iy, res)
-                    ),
-                )
-            )
-        ).alias("_cell"),
-    )
+    loop."""
+    cover = _classified_cover(polygons, poly_id, xy_col, res)
     if broadcast_cover:
         cover = F.broadcast(cover)
     pts = points.withColumn("_cell", cell_id(F.col(x_col), F.col(y_col), res))
-    cand = pts.join(cover, "_cell").drop("_cell")
-
-    @F.pandas_udf("boolean")
-    def inside_t(px: pd.Series, py: pd.Series, pid: pd.Series, xy: pd.Series) -> pd.Series:
-        out = np.zeros(len(px), dtype=bool)
-        xv, yv = px.to_numpy("float64"), py.to_numpy("float64")
-        for p in pid.unique():
-            m = (pid == p).to_numpy()
-            first = int(np.flatnonzero(m)[0])
-            spec = xy.iloc[first]
-            rings = spec_to_rings(spec, multi_ring)
-            if multi_ring:
-                out[m] = points_in_rings(xv[m], yv[m], rings)
-            else:
-                out[m] = points_in_polygon(xv[m], yv[m], rings[0])
-        return pd.Series(out)
-
-    return cand.filter(
-        inside_t(F.col(x_col), F.col(y_col), F.col(poly_id), F.col(xy_col))
-    ).drop(xy_col)
+    return (
+        pts.join(cover, "_cell")
+        .filter(_inside(F.col(x_col), F.col(y_col), F.col(poly_id),
+                        F.col("_full"), F.col("_rings")))
+        .drop("_cell", "_full", "_rings")
+    )
 
 
 # ---- point -> tile lookup (J1/J3) ------------------------------------------

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from veranda_spark.cells import cover_cells, pack_cell
+from veranda_spark.cells import cover_cells
 from veranda_spark.functions.codec import decode_image
 from veranda_spark.functions.geometry import (
     spec_to_rings,
@@ -683,95 +683,56 @@ def zonal_stats_table(
 
     Plan, shaped so pixels move at most once and never duplicate:
 
-    1. slim image footprints and polygon bboxes each explode their cell
-       cover (JVM-side) and equi-join on the cell key → candidate
-       (image, polygon) pairs;
+    1. slim image footprints explode their cell cover (JVM-side); the
+       polygons, moved into the pixel frame, take the shared classified
+       cover (``joins._classified_cover``, outside cells dropped); the
+       two equi-join on the cell key → candidate (image, polygon) pairs;
     2. pairs collapse to ONE row per image carrying its candidate
-       polygons (collect_list of (id, xy) structs) — payload bytes then
-       join in once, by image id, with no per-polygon duplication;
+       polygons (a set of (id, xy) structs) — payload bytes then join in
+       once, by image id, with no per-polygon duplication;
     3. mapInPandas decodes each image once and emits per-polygon PARTIAL
        aggregates; a tiny groupBy(polygon_id) combines.
+
+    Every pixel centre inside a polygon lies in a non-outside cell of
+    that polygon which its image's cover also holds, so dropping the
+    outside cells loses no pixel; ``_zonal_partial`` skips pairs with no
+    pixel inside.
 
     ``xy_col`` is either one ring (array<array<double>> of [x,y] points)
     or a ring LIST (holes / multipolygons, even-odd semantics) — detected
     from the column's nesting depth.
     """
-    from veranda_spark.functions.geometry import is_ring_list_column
+    from veranda_spark.functions.geometry import (
+        is_ring_list_column,
+        rings_to_pixel_frame,
+    )
+    from veranda_spark.operators.joins import _classified_cover
 
-    size = 1 << res
+    affine = (grid.ul_x, grid.ul_y, grid.psx, grid.psy, grid.rot_x, grid.rot_y)
+    rings_to_pixel_frame([], *affine)  # a singular geotransform fails here, not in a task
     id_col = "image_id" if "image_id" in df.columns else df.columns[0]
     multi_ring = is_ring_list_column(polygons, xy_col)
-    flat_xy = F.flatten(F.col(xy_col)) if multi_ring else F.col(xy_col)
     img_cover = df.select(
         F.col(id_col).alias("_img"),
         F.explode(
             cover_cells(F.col("px_col0"), F.col("px_row0"), F.col("w"), F.col("h"), res)
         ).alias("_cell"),
     )
-    xs = F.transform(flat_xy, lambda v: F.element_at(v, 1))
-    ys = F.transform(flat_xy, lambda v: F.element_at(v, 2))
-    # world → pixel frame, then cell cover of the polygon bbox
-    if grid.is_rotated:
-        # per-VERTEX inverse affine, THEN min/max: under rotation the
-        # extreme world x/y no longer sit at the extreme pixel cols/rows
-        # (round 5 — exact, the affine maps vertices to vertices)
-        det = -(grid.psx * grid.psy + grid.rot_x * grid.rot_y)
-        _scale = abs(grid.psx * grid.psy) + abs(grid.rot_x * grid.rot_y)
-        if not (abs(det) > 1e-12 * max(_scale, 1e-300)):
-            raise ValueError(
-                "singular geotransform: the pixel axes are collinear "
-                f"(psx={grid.psx}, psy={grid.psy}, rot_x={grid.rot_x}, "
-                f"rot_y={grid.rot_y})"
-            )
-        colsv = F.zip_with(
-            xs, ys,
-            lambda x, y: (F.lit(-grid.psy) * (x - F.lit(grid.ul_x))
-                          - F.lit(grid.rot_x) * (y - F.lit(grid.ul_y)))
-            / F.lit(det),
-        )
-        rowsv = F.zip_with(
-            xs, ys,
-            lambda x, y: (F.lit(-grid.rot_y) * (x - F.lit(grid.ul_x))
-                          + F.lit(grid.psx) * (y - F.lit(grid.ul_y)))
-            / F.lit(det),
-        )
-        pc0, pc1 = F.array_min(colsv), F.array_max(colsv)
-        pr0, pr1 = F.array_min(rowsv), F.array_max(rowsv)
-    else:
-        pc0 = (F.array_min(xs) - F.lit(grid.ul_x)) / F.lit(grid.psx)
-        pc1 = (F.array_max(xs) - F.lit(grid.ul_x)) / F.lit(grid.psx)
-        pr0 = (F.lit(grid.ul_y) - F.array_max(ys)) / F.lit(grid.psy)
-        pr1 = (F.lit(grid.ul_y) - F.array_min(ys)) / F.lit(grid.psy)
-    ix0 = F.floor(pc0 / F.lit(size)).cast("long")
-    ix1 = F.floor(pc1 / F.lit(size)).cast("long")
-    iy0 = F.floor(pr0 / F.lit(size)).cast("long")
-    iy1 = F.floor(pr1 / F.lit(size)).cast("long")
-    poly_cover = polygons.select(
-        F.col(poly_id).alias("_pid"),
-        F.col(xy_col).alias("_xy"),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(iy0, iy1),
-                    lambda iy: F.transform(
-                        F.sequence(ix0, ix1), lambda ix: pack_cell(ix, iy, res)
-                    ),
-                )
-            )
-        ).alias("_cell"),
-    )
+    poly_cover = _classified_cover(
+        polygons, poly_id, xy_col, res, lambda rings: rings_to_pixel_frame(rings, *affine)
+    ).select(F.col(poly_id).alias("_pid"), "_cell")
+    zones = polygons.select(F.col(poly_id).alias("_pid"), F.col(xy_col).alias("_xy"))
     if broadcast_cover:
-        poly_cover = F.broadcast(poly_cover)
+        poly_cover, zones = F.broadcast(poly_cover), F.broadcast(zones)
     pairs = (
         img_cover.join(poly_cover, "_cell")
-        .select("_img", "_pid", "_xy")
+        .select("_img", "_pid")
         .distinct()
+        .join(zones, "_pid")
         .groupBy("_img")
-        .agg(F.collect_list(F.struct("_pid", "_xy")).alias("zonal_polys"))
+        .agg(F.collect_set(F.struct("_pid", "_xy")).alias("zonal_polys"))
     )
     work = df.join(pairs, df[id_col] == pairs["_img"]).drop("_img")
-    grid_args = (grid.ul_x, grid.ul_y, grid.psx, grid.psy,
-                 grid.rot_x, grid.rot_y)
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -782,7 +743,7 @@ def zonal_stats_table(
                 for entry in row.zonal_polys:
                     pid, xy = entry["_pid"], entry["_xy"]
                     rings = spec_to_rings(xy, multi_ring)
-                    p = _zonal_partial(arr, rings, grid_args, row)
+                    p = _zonal_partial(arr, rings, affine, row)
                     if p is not None:
                         out.append((str(pid),) + p)
             yield pd.DataFrame(

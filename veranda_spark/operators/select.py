@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from veranda_spark.functions.geometry import (
-    points_in_polygon,
     points_in_rings,
-    polygon_bbox,
     rings_bbox,
     segment_intersects_boxes,
 )
@@ -144,51 +142,11 @@ def select_polygon(
 
     Pixel-level masking (apply_mask=True) happens at read time —
     ``read_window(..., mask_polygon=...)`` — matching veranda, where the
-    register keeps whole tiles and only pixels are nodata'd out.
+    register keeps whole tiles and only pixels are nodata'd out.  The
+    ring runs through ``select_multipolygon``: for a single ring its
+    bbox, even-odd test and edge loop are the same.
     """
-    if grid.is_rotated:
-        (poly_px,), unit = _pixel_frame(grid, [polygon])
-        return select_polygon(df, unit, poly_px, exact)
-    poly = np.asarray(polygon, dtype="float64")
-    xmin, ymin, xmax, ymax = polygon_bbox(poly)
-    out = select_bbox(df, grid, (xmin, ymin, xmax, ymax))
-    if not exact:
-        return out
-    ul_x, ul_y, psx, psy = grid.ul_x, grid.ul_y, grid.psx, grid.psy
-
-    @F.pandas_udf("boolean")
-    def footprint_intersects(
-        px_col0: pd.Series, px_row0: pd.Series, w: pd.Series, h: pd.Series
-    ) -> pd.Series:
-        # exact test, complete for arbitrary simple polygons: (a) any
-        # footprint corner/center inside polygon (box ⊂ polygon), (b) any
-        # polygon vertex inside box (polygon ⊂ box), (c) any polygon edge
-        # crossing the box (sliver cuts — Liang-Barsky, closes the
-        # false-negative hole flagged in round 1)
-        x0 = ul_x + px_col0.to_numpy() * psx
-        x1 = ul_x + (px_col0.to_numpy() + w.to_numpy()) * psx
-        y0 = ul_y - px_row0.to_numpy() * psy
-        y1 = ul_y - (px_row0.to_numpy() + h.to_numpy()) * psy
-        hit = np.zeros(len(px_col0), dtype=bool)
-        for cx, cy in ((x0, y0), (x0, y1), (x1, y0), (x1, y1), ((x0 + x1) / 2, (y0 + y1) / 2)):
-            hit |= points_in_polygon(cx, cy, poly)
-        for vx, vy in poly:
-            hit |= (x0 <= vx) & (vx <= x1) & (y1 <= vy) & (vy <= y0)
-        n = len(poly)
-        for i in range(n):
-            ax, ay = poly[i]
-            bx, by = poly[(i + 1) % n]
-            miss = ~hit
-            if not miss.any():
-                break
-            hit[miss] |= segment_intersects_boxes(
-                ax, ay, bx, by, x0[miss], y1[miss], x1[miss], y0[miss]
-            )
-        return pd.Series(hit)
-
-    return out.filter(
-        footprint_intersects(F.col("px_col0"), F.col("px_row0"), F.col("w"), F.col("h"))
-    )
+    return select_multipolygon(df, grid, [polygon], exact)
 
 
 def select_multipolygon(

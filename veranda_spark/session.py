@@ -12,6 +12,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical RAM, at most 24g.  In local mode the
+    driver heap is the whole executor, and the Python workers and page
+    cache need the other half: a fixed 24g heap on a 15 GB host let the
+    JVM grow until the kernel OOM-killed it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(1024, min(24 * 1024, ram_mb // 2))}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "veranda_spark",
@@ -26,9 +35,9 @@ def get_spark(
             shuffle_partitions = max(int(master[6:-1]), 4)
         else:
             shuffle_partitions = 2 * cpus
-    # Parallelism-aware Arrow batch sizing (round-3, measured with
-    # tools/exp_n2_arrow.py on the 600k-row burn-in, fresh JVM per trial,
-    # configs interleaved so host weather cancels):
+    # Parallelism-aware Arrow batch sizing (round-3, measured as a sweep
+    # on the 600k-row burn-in, fresh JVM per trial, configs interleaved
+    # so host weather cancels):
     #   local[2]:  1024rec/32m 63.5s | 2048/64m 47.6s | 4096/128m 34.4s
     #   local[8]:  1024rec/32m 12.9s | 2048/64m 11.1s | 4096/128m 11.7s
     #   local[32]: 1024rec/32m is the round-2 GC fix (64 MB batches x 32
@@ -80,7 +89,10 @@ def get_spark(
             str(batch_mb * 1024 * 1024),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("VERANDA_SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("VERANDA_SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         # Arrow batches allocate multi-MB byte[]s; under G1 those are
         # "humongous" allocations and the default collector GC-thrashes
         # (measured 30x slowdown: VM Thread + GC threads saturating all

@@ -6,11 +6,13 @@ from pyspark.sql import functions as F
 
 from veranda_spark.fixtures import generate_images
 from veranda_spark.grid import RegularGrid
+from veranda_spark.io import table
 from veranda_spark.io.lineage import (
     read_lineage,
     read_tiles,
     write_tiles_checkpointed,
 )
+from veranda_spark.io.table import delete_rows
 from veranda_spark.operators.raster import burn_in
 from veranda_spark.sources.multimodal import extract_features, resize, sample_frames
 
@@ -27,21 +29,24 @@ def test_checkpointed_write_and_resume(spark, tmp_path):
     r1 = write_tiles_checkpointed(tiles, base, run_id="r1")
     assert r1 == {"run_id": "r1", "written": n_tiles, "skipped": 0}
     lin = read_lineage(spark, base)
-    assert lin.filter("status = 'done'").count() == n_tiles
+    assert lin.count() == n_tiles
 
     # resume: nothing recomputed
     r2 = write_tiles_checkpointed(tiles, base, run_id="r2")
     assert r2["written"] == 0 and r2["skipped"] == n_tiles
 
-    # partial lineage: drop 3 tiles from lineage → only those rewritten
+    # 3 tiles deleted from the sink → only those rewritten
     some = [r["tile_id"] for r in lin.limit(3).collect()]
-    kept = lin.filter(~F.col("tile_id").isin(some))
-    kept.write.mode("overwrite").parquet(str(tmp_path / "lin2"))
-    spark.read.parquet(str(tmp_path / "lin2")).write.mode("overwrite").parquet(
-        base + "/_lineage"
+    delete_rows(
+        spark, base, spark.createDataFrame([(t,) for t in some], "tile_id string"),
+        keys=["tile_id"], partition_by="tile_id",
     )
     r3 = write_tiles_checkpointed(tiles, base, run_id="r3")
     assert r3["written"] == 3 and r3["skipped"] == n_tiles - 3
+    assert {
+        r["tile_id"] for r in read_lineage(spark, base)
+        .filter("run_id = 'r3'").select("tile_id").collect()
+    } == set(some)
 
     back = read_tiles(spark, base)
     assert back.select("tile_id").distinct().count() == n_tiles
@@ -193,7 +198,30 @@ def test_compact_tiles(spark, tmp_path):
     assert out["written"] > 0
 
 
-def test_compact_keep_history_vacuums_orphans(spark, tmp_path):
+def _crash_commit_once(monkeypatch):
+    """Make the next table commit fail after its data is staged: the
+    claimed version directory is left behind, ``_current`` never moves."""
+    real = table._fenced_promote_commit
+    calls = []
+
+    def crash(*args):
+        if not calls:
+            calls.append(args)
+            raise RuntimeError("simulated crash before commit")
+        return real(*args)
+
+    monkeypatch.setattr(table, "_fenced_promote_commit", crash)
+    return calls
+
+
+def _tile_runs(spark, base):
+    return sorted(
+        (r["tile_id"], r["run_id"]) for r in
+        read_tiles(spark, base, mode="all").select("tile_id", "run_id").collect()
+    )
+
+
+def test_compact_keep_history_vacuums_orphans(spark, tmp_path, monkeypatch):
     import os
 
     from veranda_spark.io.lineage import compact_tiles, snapshots
@@ -202,23 +230,23 @@ def test_compact_keep_history_vacuums_orphans(spark, tmp_path):
     for i, n in enumerate((60, 150)):
         t = burn_in(generate_images(spark, n, seed=i), GRID, per_layer=False)
         write_tiles_checkpointed(t, base, run_id=f"r{i}", scope="run")
-    committed = read_tiles(spark, base, mode="all").count()
+    committed = _tile_runs(spark, base)
     snaps_before = {r["run_id"]: r["n_tiles"] for r in snapshots(spark, base).collect()}
 
-    # simulate a crash AFTER the data append, BEFORE the lineage commit:
-    # orphan rows on disk that no commit record covers
+    # a real crash between the staged data write and the commit: the
+    # rows sit in an uncommitted version directory nobody points at
     orphan = burn_in(generate_images(spark, 40, seed=7), GRID, per_layer=False)
-    (orphan.withColumn("run_id", F.lit("crashed"))
-           .withColumn("attempt_id", F.lit("deadbeef"))
-           .write.mode("append").partitionBy("tile_id")
-           .parquet(os.path.join(base, "tiles")))
-    raw_before = spark.read.parquet(os.path.join(base, "tiles")).count()
-    assert raw_before > committed  # orphans exist on disk
-    assert read_tiles(spark, base, mode="all").count() == committed  # invisible
+    calls = _crash_commit_once(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        write_tiles_checkpointed(orphan, base, run_id="crashed", scope="run")
+    orphan_stage = calls[0][1]
+    assert os.path.isdir(orphan_stage)  # staged debris on disk
+    assert _tile_runs(spark, base) == committed  # invisible
 
     stats = compact_tiles(spark, base, keep_history=True)
-    raw_after = spark.read.parquet(os.path.join(base, "tiles")).count()
-    assert raw_after == committed  # orphans vacuumed
+    assert not os.path.exists(orphan_stage)  # debris vacuumed
+    assert table.current_version(base) == 3  # re-claimed the orphan's slot
+    assert _tile_runs(spark, base) == committed  # exactly one copy each
     assert stats["files_after"] == stats["tiles"]
     # history preserved: same snapshots, time travel still works
     snaps_after = {r["run_id"]: r["n_tiles"] for r in snapshots(spark, base).collect()}
@@ -226,129 +254,46 @@ def test_compact_keep_history_vacuums_orphans(spark, tmp_path):
     assert read_tiles(spark, base, as_of="r0").count() == snaps_before["r0"]
 
 
-def test_replay_after_partial_crash_never_duplicates(spark, tmp_path):
-    # THE deterministic-run_id crash window: the data append of batch
-    # "b1" lands, the lineage commit does not, then streaming replays
-    # the same batch.  Attempt-scoped commits must keep exactly ONE copy
-    # visible.
-    import os
-
+def test_replay_after_partial_crash_never_duplicates(spark, tmp_path, monkeypatch):
+    # THE deterministic-run_id crash window: batch "b1"'s data is
+    # staged, its commit never lands, then streaming replays the same
+    # batch.  Exactly ONE copy must be visible afterwards.
     base = str(tmp_path / "sink")
+    first = burn_in(generate_images(spark, 60, seed=4), GRID, per_layer=False)
+    write_tiles_checkpointed(first, base, run_id="b0", scope="run")
+    committed = _tile_runs(spark, base)
     tiles = burn_in(generate_images(spark, 100, seed=3), GRID, per_layer=False).cache()
     n_tiles = tiles.count()
 
-    # simulate the half-written first attempt: data rows present
-    # (with their own attempt id), no lineage commit
-    (tiles.withColumn("run_id", F.lit("b1"))
-          .withColumn("attempt_id", F.lit("attempt_crashed"))
-          .write.mode("append").partitionBy("tile_id")
-          .parquet(os.path.join(base, "tiles")))
+    _crash_commit_once(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        write_tiles_checkpointed(tiles, base, run_id="b1", scope="run")
+    assert _tile_runs(spark, base) == committed  # nothing visible changed
 
     # the replay: same run_id, scope="run" — sees no commit, rewrites all
     out = write_tiles_checkpointed(tiles, base, run_id="b1", scope="run")
     assert out["written"] == n_tiles
 
-    back = read_tiles(spark, base, mode="all")
+    back = read_tiles(spark, base, mode="all").filter("run_id = 'b1'")
     assert back.count() == n_tiles  # one visible copy, not two
     assert back.groupBy("tile_id").count().filter("count > 1").count() == 0
-    assert read_tiles(spark, base, mode="latest").count() == n_tiles
-    # the crashed attempt's rows are on disk but never visible
-    raw = spark.read.parquet(os.path.join(base, "tiles"))
-    assert raw.count() == 2 * n_tiles
-
-
-def test_compaction_crash_recovery(spark, tmp_path):
-    import os
-    import shutil
-
-    from veranda_spark.io.lineage import lineage_path, recover_compaction
-
-    base = str(tmp_path / "sink")
-    t = burn_in(generate_images(spark, 80, seed=2), GRID, per_layer=False)
-    write_tiles_checkpointed(t, base, run_id="r0")
-    golden = {
-        (r["tile_id"], bytes(r["bytes"])) for r in
-        read_tiles(spark, base).select("tile_id", "bytes").collect()
-    }
-
-    def snapshot_dirs():
-        shutil.copytree(base, base + ".orig")
-
-    def restore_dirs():
-        shutil.rmtree(base)
-        shutil.copytree(base + ".orig", base)
-        shutil.rmtree(base + ".orig")
-
-    # crash state A: marker written, tiles retired, nothing promoted
-    snapshot_dirs()
-    old = base + ".pre_compact"
-    os.makedirs(old)
-    open(base + ".compact_marker", "w").write("rX")
-    os.rename(os.path.join(base, "tiles"), os.path.join(old, "tiles"))
-    assert recover_compaction(base) == "rolled_back"
-    got = {(r["tile_id"], bytes(r["bytes"])) for r in
-           read_tiles(spark, base).select("tile_id", "bytes").collect()}
-    assert got == golden
-    restore_dirs()
-
-    # crash state B: tiles promoted from staging, lineage not yet — the
-    # silent-wrong-data hazard; rollback restores BOTH originals
-    snapshot_dirs()
-    os.makedirs(os.path.join(old, ""), exist_ok=True)
-    open(base + ".compact_marker", "w").write("rX")
-    os.rename(os.path.join(base, "tiles"), os.path.join(old, "tiles"))
-    os.rename(lineage_path(base), os.path.join(old, "_lineage"))
-    # a fake promoted staging dir takes tiles' place
-    os.makedirs(os.path.join(base, "tiles"))
-    assert recover_compaction(base) == "rolled_back"
-    got = {(r["tile_id"], bytes(r["bytes"])) for r in
-           read_tiles(spark, base).select("tile_id", "bytes").collect()}
-    assert got == golden
-    restore_dirs()
-
-    # crash state C: everything promoted, marker not yet removed -> forward
-    open(base + ".compact_marker", "w").write("rX")
-    assert recover_compaction(base) == "rolled_forward"
-    assert not os.path.exists(base + ".compact_marker")
-    got = {(r["tile_id"], bytes(r["bytes"])) for r in
-           read_tiles(spark, base).select("tile_id", "bytes").collect()}
-    assert got == golden
-    # no pending swap: a plain call is a no-op
-    assert recover_compaction(base) is None
-
-
-def test_attempt_upgrade_transition(spark, tmp_path):
-    # pre-upgrade sink (no attempt_id anywhere) + one post-upgrade write:
-    # legacy committed rows must stay visible, orphans must stay hidden
-    import os
-    import time as _time
-
-    base = str(tmp_path / "sink")
-    legacy = burn_in(generate_images(spark, 80, seed=1), GRID, per_layer=False).cache()
-    n_legacy = legacy.count()
-    (legacy.withColumn("run_id", F.lit("old1"))
-           .write.mode("append").partitionBy("tile_id")
-           .parquet(os.path.join(base, "tiles")))
-    lin_rows = legacy.select(
-        "tile_id", "tile_row", "tile_col",
-        F.col("n_images").cast("long").alias("n_images"),
-        F.lit("old1").alias("run_id"), F.lit("done").alias("status"),
-        F.lit(None).cast("double").alias("psnr"),
-        F.lit(float(_time.time())).alias("completed_at"),
+    assert _tile_runs(spark, base) == sorted(
+        committed + [(r["tile_id"], "b1") for r in tiles.select("tile_id").collect()]
     )
-    lin_rows.write.mode("append").parquet(os.path.join(base, "_lineage"))
-    assert read_tiles(spark, base, mode="all").count() == n_legacy
 
-    # post-upgrade write adds a new generation with attempt ids
-    extra = burn_in(generate_images(spark, 200, seed=2), GRID, per_layer=False)
-    out = write_tiles_checkpointed(extra, base, run_id="new1", scope="run")
-    assert out["written"] > 0
-    allrows = read_tiles(spark, base, mode="all")
-    assert allrows.filter("run_id = 'old1'").count() == n_legacy  # not lost
-    assert allrows.count() == n_legacy + out["written"]
-    # latest still resolves one row per tile
-    latest = read_tiles(spark, base, mode="latest")
-    assert latest.count() == latest.select("tile_id").distinct().count()
+
+def test_crashed_first_write_is_replayed(spark, tmp_path, monkeypatch):
+    # a crash in the very first commit leaves version 1 with no
+    # _current; the rerun clears it and commits version 1 itself
+    base = str(tmp_path / "sink")
+    tiles = burn_in(generate_images(spark, 60, seed=8), GRID, per_layer=False).cache()
+    _crash_commit_once(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        write_tiles_checkpointed(tiles, base, run_id="b0", scope="run")
+    assert read_lineage(spark, base) is None
+    out = write_tiles_checkpointed(tiles, base, run_id="b0", scope="run")
+    assert out["written"] == tiles.count() == read_tiles(spark, base).count()
+    assert table.current_version(base) == 1
 
 
 def test_compact_requires_lineage(spark, tmp_path):
@@ -361,7 +306,38 @@ def test_compact_requires_lineage(spark, tmp_path):
     t.withColumn("run_id", F.lit("x")).write.mode("append").partitionBy(
         "tile_id"
     ).parquet(os.path.join(base, "tiles"))
-    with pytest.raises(FileNotFoundError, match="lineage"):
+    with pytest.raises(FileNotFoundError, match="no committed tile sink"):
         compact_tiles(base=base, spark=spark)
     # the sink was never touched: raw rows still readable
     assert spark.read.parquet(os.path.join(base, "tiles")).count() > 0
+
+
+def test_mixed_schema_runs_share_one_sink(spark, tmp_path):
+    # a lossless run then a lossy_fmt run into one sink: the second run
+    # adds psnr/fmt columns; both generations read back, null-filled
+    base = str(tmp_path / "sink")
+    t1 = burn_in(generate_images(spark, 120, seed=5), GRID, per_layer=False)
+    r1 = write_tiles_checkpointed(t1, base, run_id="r1", scope="run")
+    t2 = burn_in(generate_images(spark, 300, seed=6), GRID, per_layer=False)
+    r2 = write_tiles_checkpointed(
+        t2, base, run_id="r2", lossy_fmt="tiff", scope="run"
+    )
+    assert r1["written"] > 0 and r2["written"] > 0
+    got = {
+        (r["run_id"], r["fmt"]): r["count"]
+        for r in read_tiles(spark, base, mode="all")
+        .groupBy("run_id", "fmt").count().collect()
+    }
+    assert got == {("r1", None): r1["written"], ("r2", "tiff"): r2["written"]}
+    psnr = {
+        r["run_id"]: (r["n"], r["n_null"], r["mx"])
+        for r in read_lineage(spark, base).groupBy("run_id").agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("psnr").isNull().cast("int")).alias("n_null"),
+            F.max("psnr").alias("mx"),
+        ).collect()
+    }
+    assert psnr == {
+        "r1": (r1["written"], r1["written"], None),
+        "r2": (r2["written"], 0, 1e9),
+    }

@@ -32,7 +32,7 @@ def main() -> None:
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     names = sys.argv[1:] or (
         benchmod.HEADLINE + benchmod.NEWOP + benchmod.ROUND3
         + benchmod.ROUND4 + benchmod.ROUND5 + benchmod.ROUND6

@@ -1,11 +1,17 @@
-"""Checkpointed tiled writes with per-partition lineage + resume.
+"""Checkpointed tiled writes with per-tile lineage + resume.
 
 North-rule addition (no reference analog — veranda is one-shot batch;
-closest is its append mode, native/netcdf.py:354-358): every tile-group
-write appends a lineage record (tile id, cell range, row counts, pixel
-stats/PSNR) to a lineage table; a killed job resumes by anti-joining
-completed tiles — no recomputation, no streaming state store
-(SURVEY.md §2.8: resume is table-driven by design).
+closest is its append mode, native/netcdf.py:354-358): the sink at
+``base`` is an io/table.py versioned table partitioned by ``tile_id``,
+and every data row carries its own lineage (``run_id``,
+``completed_at``, and ``psnr`` for re-encoded runs).  Each write is one
+``table.append_rows`` commit, so a crash before ``_current`` moves
+leaves a version directory nothing points at — invisible to every
+reader.  A killed job resumes by anti-joining completed tiles — no
+recomputation, no streaming state store (SURVEY.md §2.8: resume is
+table-driven by design).  A sink has a SINGLE writer (the table
+contract): every sink commit claims as ``_SINK_OWNER`` and first clears
+that owner's crash debris.
 """
 
 from __future__ import annotations
@@ -16,15 +22,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "tile_id string, tile_row long, tile_col long, n_images long, "
-    "run_id string, attempt_id string, status string, psnr double, "
-    "completed_at double"
-)
+from veranda_spark.io import table
 
-
-def lineage_path(base: str) -> str:
-    return os.path.join(base, "_lineage")
+#: claim owner of every sink commit (writes and compactions)
+_SINK_OWNER = "veranda_spark.lineage"
 
 
 def _strip_file_scheme(p: str) -> str:
@@ -36,8 +37,8 @@ def _hadoop_path_exists(spark: SparkSession, p: str) -> bool:
 
     Only the NO-JVM case falls back to a local check; filesystem errors
     (auth, connectivity) RAISE — swallowing them would read an existing
-    remote lineage as absent and surface orphaned attempts as duplicates
-    on resume, the exact failure this function exists to prevent."""
+    remote checkpoint marker as absent and silently recompute (or mix)
+    checkpointed state."""
     jvm = getattr(spark, "_jvm", None)
     if jvm is None:
         return os.path.exists(_strip_file_scheme(p))
@@ -96,31 +97,29 @@ def _hadoop_read_text(spark: SparkSession, p: str) -> str:
 
 
 def read_lineage(spark: SparkSession, base: str) -> DataFrame | None:
-    """None when the lineage table does not exist yet; any OTHER read
-    failure (corrupt footer after a crash mid-append, FS errors) raises —
-    visibility now depends entirely on the lineage join, so silently
-    treating a broken lineage as absent would surface orphaned attempts
-    as duplicate rows."""
-    p = lineage_path(base)
-    # absent-vs-corrupt decided by the FILESYSTEM, not by matching
-    # exception text (which varies across Spark versions/locales): a
-    # missing path is None, any read error on an EXISTING path raises.
-    # The existence check goes through the Hadoop FileSystem API so
-    # hdfs://, s3a:// etc. resolve correctly — a driver-local
-    # os.path.exists would read every remote lineage as absent and
-    # surface orphaned attempts as duplicates on resume.
-    if not _hadoop_path_exists(spark, p):
+    """One lineage row per committed data row — a projection of the
+    sink's current version (``psnr`` null for lossless runs).  None when
+    no sink has been committed at ``base`` yet."""
+    if table.current_version(base) is None:
         return None
-    # mergeSchema: sinks written before the attempt_id upgrade mix
-    # schemas; merged reads give the old rows attempt_id = NULL
-    return spark.read.option("mergeSchema", "true").parquet(p)
+    t = table.read_table(spark, base)
+    psnr = F.col("psnr") if "psnr" in t.columns else F.lit(None).cast("double")
+    return t.select(
+        "tile_id",
+        "tile_row",
+        "tile_col",
+        F.col("n_images").cast("long").alias("n_images"),
+        "run_id",
+        psnr.alias("psnr"),
+        "completed_at",
+    )
 
 
 def completed_tiles(spark: SparkSession, base: str) -> DataFrame | None:
     lin = read_lineage(spark, base)
     if lin is None:
         return None
-    return lin.filter(F.col("status") == "done").select("tile_id").distinct()
+    return lin.select("tile_id").distinct()
 
 
 def write_tiles_checkpointed(
@@ -135,28 +134,30 @@ def write_tiles_checkpointed(
     """Write burn-in output partitioned by tile_id with lineage records.
 
     ``tiles`` is the output of ``operators.raster.burn_in`` (one row per
-    tile canvas).  Already-completed tiles (per the lineage table) are
-    anti-joined away before any pixel work — the resume path.
+    tile canvas).  Already-completed tiles (per the sink's lineage
+    columns) are anti-joined away before any pixel work — the resume
+    path.
 
-    Crash-safety: every data row carries this run's ``run_id`` and the
-    lineage append is the COMMIT record — ``read_tiles`` only surfaces
-    rows whose (tile_id, run_id) appears in the lineage, so a crash
-    between the data append and the lineage append leaves orphan rows
-    that are invisible and harmlessly superseded by the rerun (no
-    duplicate tiles on read — round-1 advisory).
+    Crash-safety: every data row carries this run's ``run_id`` and
+    ``completed_at``, and the rows commit as ONE table version
+    (``table.append_rows``).  A crash before the commit leaves an
+    uncommitted version directory that no reader sees; the rerun clears
+    it (``recover_orphans`` for the sink owner) and writes its tiles
+    once — no duplicate tiles on read, also for a replay with the same
+    run_id.
 
     With ``lossy_fmt`` canvases are re-encoded through the codec hook —
     "dctq" (lossy) or "tiff"/"tiff_lzw"/"tiff_deflate"/"tiff_packbits"/
     "cog" (lossless GeoTIFF-sink parity, PSNR recorded as the 1e9 cap
     for exact round-trips; pass ``grid`` to embed each tile's GeoTIFF
     placement tags so payloads are self-describing GeoTIFFs) — and
-    the PER-TILE PSNR vs the exact canvas is recorded in the lineage
-    table; tiles below ``min_psnr`` (input_hint: 40 dB) fail the job
+    the PER-TILE PSNR vs the exact canvas is recorded in a ``psnr``
+    column; tiles below ``min_psnr`` (input_hint: 40 dB) fail the job
     loudly instead of silently persisting corrupt pixels.  Lossless
-    writes record NULL psnr (not NaN).  Returns counters
-    {written, skipped} where skipped = tiles already committed in the
-    lineage (computed from the lineage table alone — the pixel pipeline
-    is executed exactly once).
+    writes carry no psnr column (``read_lineage`` reports NULL, not
+    NaN).  Returns counters {run_id, written, skipped} where skipped =
+    tiles already committed (computed from the sink's lineage columns
+    alone — the pixel pipeline is executed exactly once).
 
     ``scope`` controls the resume anti-join: "table" (default) skips
     tiles committed by ANY run — overwrite/one-shot semantics; "run"
@@ -164,16 +165,7 @@ def write_tiles_checkpointed(
     each run adds its own generation of tiles (streaming micro-batches:
     a crash-replay of the same batch is a no-op, while other batches'
     tiles are untouched).
-
-    Every write additionally stamps a fresh ``attempt_id``; the lineage
-    commit records it and ``read_tiles`` joins on (tile_id, run_id,
-    attempt_id).  This closes the deterministic-run_id replay window:
-    if a data append lands but the crash precedes the lineage append,
-    the replay (same run_id, NEW attempt) commits its own rows and the
-    half-written attempt's rows stay invisible forever — no duplicates.
     """
-    import uuid
-
     if scope not in ("table", "run"):
         raise ValueError(f"scope {scope!r}")
     # rotated grids flow through the FULL 6-value tile geotransform,
@@ -182,18 +174,11 @@ def write_tiles_checkpointed(
     # (round 5c — the last rotation guard, now real support)
     spark = tiles.sparkSession
     run_id = run_id or f"run_{int(time.time() * 1000)}"
-    attempt_id = uuid.uuid4().hex[:16]
-    if scope == "run":
-        lin = read_lineage(spark, base)
-        done = (
-            None
-            if lin is None
-            else lin.filter(
-                (F.col("status") == "done") & (F.col("run_id") == run_id)
-            ).select("tile_id").distinct()
-        )
-    else:
-        done = completed_tiles(spark, base)
+    table.recover_orphans(base, owner=_SINK_OWNER)
+    lin = read_lineage(spark, base)
+    if lin is not None and scope == "run":
+        lin = lin.filter(F.col("run_id") == run_id)
+    done = None if lin is None else lin.select("tile_id").distinct()
     n_done = 0 if done is None else done.count()
     todo = tiles if done is None else tiles.join(done, "tile_id", "left_anti")
     if lossy_fmt is not None:
@@ -261,44 +246,25 @@ def write_tiles_checkpointed(
         todo = todo.mapInPandas(reencode, schema=out_schema)
     todo = (
         todo.withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt_id", F.lit(attempt_id))
+        .withColumn("completed_at", F.lit(time.time()))
         .cache()
     )
     n_todo = todo.count()
     if n_todo:
-        (
-            todo.write.mode("append")
-            .partitionBy("tile_id")
-            .parquet(os.path.join(base, "tiles"))
-        )
-        lineage = todo.select(
-            "tile_id",
-            "tile_row",
-            "tile_col",
-            F.col("n_images").cast("long").alias("n_images"),
-            F.lit(run_id).alias("run_id"),
-            F.lit(attempt_id).alias("attempt_id"),
-            F.lit("done").alias("status"),
-            (
-                F.col("psnr") if lossy_fmt is not None else F.lit(None).cast("double")
-            ).alias("psnr"),
-            F.lit(time.time()).alias("completed_at"),
-        )
-        lineage.write.mode("append").parquet(lineage_path(base))
+        table.append_rows(todo, base, "tile_id", owner=_SINK_OWNER)
     todo.unpersist()
     return {"run_id": run_id, "written": n_todo, "skipped": n_done}
 
 
 def snapshots(spark: SparkSession, base: str) -> DataFrame:
-    """Iceberg-style snapshot log derived from the lineage table: one row
-    per committed run (run_id, n_tiles, committed_at).  The lineage IS
-    the snapshot metadata — no extra bookkeeping write."""
+    """Iceberg-style snapshot log derived from the lineage columns: one
+    row per committed run (run_id, n_tiles, committed_at).  The lineage
+    IS the snapshot metadata — no extra bookkeeping write."""
     lin = read_lineage(spark, base)
     if lin is None:
-        raise FileNotFoundError(f"no lineage at {lineage_path(base)}")
+        raise FileNotFoundError(f"no committed tile sink at {base}")
     return (
-        lin.filter(F.col("status") == "done")
-        .groupBy("run_id")
+        lin.groupBy("run_id")
         .agg(
             F.count("*").alias("n_tiles"),
             F.max("completed_at").alias("committed_at"),
@@ -313,120 +279,39 @@ def read_tiles(
     as_of: str | float | None = None,
     mode: str = "latest",
 ) -> DataFrame:
-    """Read back the tiled sink (partition pruning on tile_id applies).
-
-    Only lineage-committed rows are visible, so orphan rows from a crash
-    between the data and lineage appends never surface.  ``mode``:
-    "latest" (default) — the newest 'done' run per tile wins (overwrite
-    semantics); "all" — every committed (tile_id, run_id) generation is
-    returned (append semantics: streaming micro-batch layers).
+    """Read back the tiled sink's current version (partition pruning on
+    tile_id applies).  ``mode``: "latest" (default) — the newest run per
+    tile wins (overwrite semantics); "all" — every committed (tile_id,
+    run_id) generation is returned (append semantics: streaming
+    micro-batch layers).
 
     ``as_of`` time-travels the read (Iceberg snapshot semantics on top of
-    the run_id commit protocol): a run_id string pins the table as of
+    the per-row ``completed_at``): a run_id string pins the sink as of
     that run's commit; a float unix timestamp pins it as of that instant.
     Runs committed later are invisible — including tiles they added."""
     if mode not in ("latest", "all"):
         raise ValueError(f"mode {mode!r}")
-    data = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(base, "tiles")
-    )
-    lin = read_lineage(spark, base)
-    if lin is None or "run_id" not in data.columns:
-        if as_of is not None:
-            raise ValueError("as_of requires a lineage-committed sink")
-        return data
-    done = lin.filter(F.col("status") == "done")
+    data = table.read_table(spark, base)
     if as_of is not None:
         if isinstance(as_of, str):
-            row = done.filter(F.col("run_id") == as_of).agg(
-                F.max("completed_at").alias("t")
-            ).first()
-            if row is None or row["t"] is None:
+            cutoff = data.filter(F.col("run_id") == as_of).agg(
+                F.max("completed_at")
+            ).first()[0]
+            if cutoff is None:
                 raise ValueError(f"unknown run_id {as_of!r}")
-            cutoff = float(row["t"])
         else:
-            cutoff = float(as_of)
-        done = done.filter(F.col("completed_at") <= cutoff)
-    # attempt-scoped commits (see write_tiles_checkpointed): join on the
-    # attempt too, NULL-safely — rows/commits from before the attempt_id
-    # upgrade carry NULL on both sides (mergeSchema) and must keep
-    # matching each other, while a half-written attempt of a replayed
-    # run can never surface alongside the committed one
-    has_attempt = "attempt_id" in data.columns or "attempt_id" in lin.columns
-    if has_attempt:
-        if "attempt_id" not in data.columns:
-            data = data.withColumn("attempt_id", F.lit(None).cast("string"))
-        if "attempt_id" not in lin.columns:
-            done = done.withColumn("attempt_id", F.lit(None).cast("string"))
-    val_keys = ["run_id"] + (["attempt_id"] if has_attempt else [])
-
-    def _join(committed):
-        cond = (data["tile_id"] == committed["tile_id"]) & (
-            data["run_id"] == committed["run_id"]
-        )
-        if has_attempt:
-            cond = cond & data["attempt_id"].eqNullSafe(committed["attempt_id"])
-        return data.join(F.broadcast(committed), cond, "left_semi")
-
+            cutoff = as_of
+        data = data.filter(F.col("completed_at") <= float(cutoff))
     if mode == "all":
-        return _join(done.select("tile_id", *val_keys).distinct())
-    latest = (
-        done.groupBy("tile_id")
-        .agg(F.max_by(F.struct(*val_keys), "completed_at").alias("_s"))
-        .select("tile_id", *[F.col(f"_s.{k}").alias(k) for k in val_keys])
+        return data
+    latest = data.groupBy(F.col("tile_id").alias("_tile")).agg(
+        F.max_by("run_id", "completed_at").alias("_run")
     )
-    return _join(latest)
-
-
-def recover_compaction(base: str) -> str | None:
-    """Recover a sink from an interrupted compaction swap.
-
-    compact_tiles stages everything first, then drops a MARKER file and
-    performs the directory renames; this function (called automatically
-    at the start of every compact_tiles, and safe to call any time) uses
-    the marker to either roll FORWARD (all renames finished — just
-    clean up) or roll BACK (restore the retired originals).  Returns
-    "rolled_forward", "rolled_back", or None when no swap was pending.
-    Staging leftovers from a crash before the marker existed are
-    discarded — the original sink was never touched at that point."""
-    import shutil
-
-    tmp = base + ".compacting"
-    old_dir = base + ".pre_compact"
-    marker = base + ".compact_marker"
-    tiles_dir = os.path.join(base, "tiles")
-    if not os.path.exists(marker):
-        for d in (tmp, old_dir):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        return None
-    swap_done = (
-        not os.path.exists(os.path.join(tmp, "tiles"))
-        and not os.path.exists(os.path.join(tmp, "_lineage"))
-        and os.path.exists(tiles_dir)
-        and os.path.exists(lineage_path(base))
+    return data.join(
+        F.broadcast(latest),
+        (F.col("tile_id") == F.col("_tile")) & (F.col("run_id") == F.col("_run")),
+        "left_semi",
     )
-    if swap_done:
-        for d in (tmp, old_dir):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        os.remove(marker)
-        return "rolled_forward"
-    # roll back: whatever originals were retired into old_dir go back;
-    # any staged piece already promoted into base is discarded
-    if os.path.exists(os.path.join(old_dir, "tiles")):
-        if os.path.exists(tiles_dir):
-            shutil.rmtree(tiles_dir)
-        os.rename(os.path.join(old_dir, "tiles"), tiles_dir)
-    if os.path.exists(os.path.join(old_dir, "_lineage")):
-        if os.path.exists(lineage_path(base)):
-            shutil.rmtree(lineage_path(base))
-        os.rename(os.path.join(old_dir, "_lineage"), lineage_path(base))
-    for d in (tmp, old_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    os.remove(marker)
-    return "rolled_back"
 
 
 def compact_tiles(
@@ -439,105 +324,43 @@ def compact_tiles(
     / expire-snapshots analog).  Many append runs (streaming micro-batches,
     resumed jobs) leave one small parquet file per run per tile; at 10^12
     scale that file count dominates scan planning.  This rewrites the sink
-    to the CURRENT generation only — one task (= one file) per tile — and
-    replaces the lineage with a single compact commit.
-
-    Staged swap, never in-place: the compacted table and lineage are
-    written to a sibling directory, then directory renames make the swap
-    under a marker file — a crash at ANY point is recoverable: before
-    the marker the original sink was never touched, and with the marker
-    present ``recover_compaction`` (run automatically on the next
-    compaction) rolls the swap back to the originals or forward to the
-    completed state.
+    to the CURRENT generation only — one file per tile, every row
+    restamped as one compact run — and expires every older version.
     Time travel to pre-compaction runs is expired by design (that is what
     'expire snapshots' means) — snapshot history restarts at the compact
     run.  ``keep_history=True`` instead compacts EVERY committed
-    generation into one file per tile and keeps the lineage verbatim —
-    snapshots/time travel still work, and crash-orphan rows (data rows
-    whose commit record never landed) are vacuumed because only
-    lineage-committed rows are staged.  On an object store replace the
-    renames with a catalog pointer swap."""
-    import shutil
+    generation into one file per tile (``table.compact_table``) and keeps
+    the rows' lineage verbatim — snapshots/time travel still work.
 
-    recover_compaction(base)  # roll back/forward any interrupted swap
-    if read_lineage(spark, base) is None:
-        # guard BEFORE staging/renames: a lineage-less sink would
-        # otherwise fail mid-swap with tiles already retired
-        raise FileNotFoundError(
-            f"compaction needs a lineage table at {lineage_path(base)}"
-        )
-    marker = base + ".compact_marker"
+    Both are ordinary table commits: a crash at any point leaves the
+    committed sink untouched, and the next sink write or compaction
+    clears the debris.  Returns {run_id, tiles, files_before,
+    files_after}."""
+    table.recover_orphans(base, owner=_SINK_OWNER)
+    cur = table.current_version(base)
+    if cur is None:
+        raise FileNotFoundError(f"no committed tile sink at {base}")
     run_id = run_id or f"compact_{int(time.time() * 1000)}"
+    before = table._partition_file_counts(base, cur, "tile_id")
     if keep_history:
-        cur = read_tiles(spark, base, mode="all")
-        lin = read_lineage(spark, base)
-        if lin is None:
-            raise FileNotFoundError(
-                f"keep_history compaction needs a lineage table at "
-                f"{lineage_path(base)}"
-            )
-        old_lineage = lin.filter(F.col("status") == "done")
+        table.compact_table(spark, base, partition_by="tile_id", owner=_SINK_OWNER)
     else:
-        cur = (
+        latest = (
             read_tiles(spark, base, mode="latest")
             .withColumn("run_id", F.lit(run_id))
-            .withColumn("attempt_id", F.lit(run_id))
+            .withColumn("completed_at", F.lit(time.time()))
         )
-    tiles_dir = os.path.join(base, "tiles")
-
-    def _count_files(d: str) -> int:
-        return sum(
-            1
-            for root, _dirs, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
+        table.merge_into(
+            spark, base, latest, keys=["tile_id"], partition_by="tile_id",
+            owner=_SINK_OWNER,
         )
-
-    files_before = _count_files(tiles_dir)
-    tmp = base + ".compacting"
-    (
-        cur.repartition("tile_id")
-        .write.mode("overwrite")
-        .partitionBy("tile_id")
-        .parquet(os.path.join(tmp, "tiles"))
+        table.expire_versions(base, keep=1)
+    after = table._partition_file_counts(
+        base, table.current_version(base), "tile_id"
     )
-    staged = spark.read.parquet(os.path.join(tmp, "tiles"))
-    n_tiles = staged.select("tile_id").distinct().count()
-    if keep_history:
-        lineage = old_lineage
-    else:
-        lineage = (
-            staged.groupBy("tile_id", "tile_row", "tile_col")
-            .agg(F.sum(F.col("n_images").cast("long")).alias("n_images"))
-            .select(
-                "tile_id",
-                "tile_row",
-                "tile_col",
-                "n_images",
-                F.lit(run_id).alias("run_id"),
-                F.lit(run_id).alias("attempt_id"),
-                F.lit("done").alias("status"),
-                F.lit(None).cast("double").alias("psnr"),
-                F.lit(time.time()).alias("completed_at"),
-            )
-        )
-    lineage.write.mode("overwrite").parquet(os.path.join(tmp, "_lineage"))
-    # swap under a marker: recover_compaction can roll an interrupted
-    # sequence back (originals retired into .pre_compact) or forward
-    old = base + ".pre_compact"
-    os.makedirs(old)
-    with open(marker, "w") as fh:
-        fh.write(run_id)
-    os.rename(tiles_dir, os.path.join(old, "tiles"))
-    os.rename(lineage_path(base), os.path.join(old, "_lineage"))
-    os.rename(os.path.join(tmp, "tiles"), tiles_dir)
-    os.rename(os.path.join(tmp, "_lineage"), lineage_path(base))
-    os.remove(marker)
-    shutil.rmtree(old)
-    shutil.rmtree(tmp, ignore_errors=True)
     return {
         "run_id": run_id,
-        "tiles": n_tiles,
-        "files_before": files_before,
-        "files_after": _count_files(tiles_dir),
+        "tiles": len(after),
+        "files_before": sum(before.values()),
+        "files_after": sum(after.values()),
     }

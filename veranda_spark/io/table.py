@@ -1,7 +1,8 @@
 """Versioned parquet tables with copy-on-write MERGE — Iceberg-style
-snapshot semantics without an Iceberg runtime (none in this env; the
-tile sinks get the same guarantees from io/lineage.py's run_id
-protocol, this module generalizes them to arbitrary keyed tables).
+snapshot semantics without an Iceberg runtime (none in this env).  This
+is the engine's one commit protocol: keyed tables and the tile sinks of
+io/lineage.py (a table partitioned by tile_id, written by
+``append_rows``) both commit through ``_claimed_version``.
 
 Layout::
 
@@ -11,8 +12,7 @@ Layout::
 
 The ``_current`` pointer is written LAST via an atomic rename, so a
 crash mid-write leaves an orphan (invisible) version directory, never a
-half-visible table — the same commit-point discipline as
-write_tiles_checkpointed.  ``merge_into`` rewrites only the partitions
+half-visible table.  ``merge_into`` rewrites only the partitions
 an update batch touches; untouched partitions are carried into the new
 version either by hard links (local/POSIX FS) or by a per-version
 ``_manifest.json`` listing the version directory where each untouched
@@ -116,6 +116,26 @@ def _has_parquet(vdir: str) -> bool:
         if any(fn.endswith(".parquet") for fn in files):
             return True
     return False
+
+
+def _count_parquet(d: str) -> int:
+    return sum(
+        fn.endswith(".parquet") for _root, _dirs, files in os.walk(d)
+        for fn in files
+    )
+
+
+def _partition_file_counts(
+    path: str, version: int, partition_by: str
+) -> dict[str, int]:
+    """Parquet files per partition directory name of ``version``,
+    following manifest entries to the directory holding the bytes."""
+    return {
+        name: _count_parquet(_partition_src(path, name, v, rel))
+        for name, (v, rel) in _old_partitions(
+            path, version, partition_by
+        ).items()
+    }
 
 
 def _links_supported(path: str) -> bool:
@@ -608,9 +628,10 @@ def recover_orphans(
     exclusive-mkdir protocol exists to prevent."""
     import time
 
-    cur = current_version(path)
-    if cur is None:
+    if not os.path.isdir(_versions_dir(path)):
         return []
+    # no _current yet: every version dir is a crashed first commit
+    cur = current_version(path) or 0
     removed = []
     for name in sorted(os.listdir(_versions_dir(path))):
         if not (name.isdigit() and int(name) > cur):
@@ -654,6 +675,15 @@ def _evolved_marker(path: str) -> str:
     actually changed: readers switch to mergeSchema scans +
     null-filling unions only from then on."""
     return os.path.join(path, "_schema_evolved")
+
+
+def _mark_evolved(path: str) -> None:
+    """Flip readers to schema-merging scans BEFORE any write: a marker
+    without a commit is harmless (mergeSchema on a uniform table is just
+    slower), the reverse is data loss."""
+    if not os.path.exists(_evolved_marker(path)):
+        with open(_evolved_marker(path), "w") as f:
+            f.write("1")
 
 
 def _evolve_schemas(
@@ -719,6 +749,40 @@ def _evolve_schemas(
     cols = sorted(set(t_fields) | set(u_fields))
     widened = bool(set(u_fields) - set(t_fields))
     return tgt.select(cols), updates.select(cols), widened
+
+
+def append_rows(
+    df: DataFrame, path: str, partition_by: str, owner: str | None = None
+) -> dict:
+    """INSERT INTO: commit ``df``'s rows as a new version on top of the
+    current one (version 1 when no table exists yet) through the claim
+    protocol.  Every committed partition is hard-linked into the new
+    version (copied where the fs refuses links) and the new rows are
+    appended into the same partition directories — O(files of the
+    current version) links plus the new rows' write.  Always link mode,
+    never a manifest: a partition that is both a manifest entry and a
+    freshly written directory would lose its older rows at the next
+    commit (``_old_partitions`` keeps only the physical directory).
+
+    A column set that differs from the committed version's first flips
+    the table to schema-merging reads (``_mark_evolved``), as
+    ``merge_into(schema_mode="evolve")`` does: older rows read back with
+    the new columns null."""
+    cur = current_version(path)
+    part_vers: dict[str, tuple[int, bool]] = {}
+    if cur is None:
+        os.makedirs(_versions_dir(path), exist_ok=True)
+    else:
+        if not os.path.exists(_evolved_marker(path)) and set(df.columns) != set(
+            read_table(df.sparkSession, path).columns
+        ):
+            _mark_evolved(path)
+        part_vers = _old_partitions(path, cur, partition_by)
+    new_v = (cur or 0) + 1
+    with _claimed_version(path, new_v, owner) as (_new_dir, stage, _nonce):
+        _carry_untouched(path, stage, part_vers, set(), "link")
+        df.write.mode("append").partitionBy(partition_by).parquet(stage)
+    return {"version": new_v, "previous": cur}
 
 
 def merge_into(
@@ -787,12 +851,8 @@ def merge_into(
         tgt, updates, widened = _evolve_schemas(
             tgt, updates, keys, partition_by
         )
-        if widened and not os.path.exists(_evolved_marker(path)):
-            # flip readers to schema-merging scans BEFORE any write:
-            # a marker without a commit is harmless (mergeSchema on a
-            # uniform table is just slower), the reverse is data loss
-            with open(_evolved_marker(path), "w") as f:
-                f.write("1")
+        if widened:
+            _mark_evolved(path)
     if commit_mode == "auto":
         commit_mode = "link" if _links_supported(path) else "manifest"
     # layout validation (and the partition inventory) runs BEFORE the
@@ -1170,12 +1230,6 @@ def compact_table(
     if commit_mode == "auto":
         commit_mode = "link" if _links_supported(path) else "manifest"
 
-    def _count_parquet(d: str) -> int:
-        n = 0
-        for _root, _dirs, files in os.walk(d):
-            n += sum(1 for fn in files if fn.endswith(".parquet"))
-        return n
-
     # layout guard: compacting a partitioned table without partition_by
     # would FLATTEN it (and the next partitioned merge would then carry
     # nothing and silently drop untouched rows); the reverse mismatch
@@ -1210,10 +1264,7 @@ def compact_table(
                 "files_after": _count_parquet(new_dir)}
 
     part_vers = _old_partitions(path, cur, partition_by)
-    counts = {
-        name: _count_parquet(_partition_src(path, name, v, rel))
-        for name, (v, rel) in part_vers.items()
-    }
+    counts = _partition_file_counts(path, cur, partition_by)
     touched = {n for n, c in counts.items() if c > max_files}
     before = sum(counts.values())
     if not touched:
@@ -1250,10 +1301,7 @@ def compact_table(
         )
         if manifest_entries:
             _write_manifest(stage, manifest_entries)
-    after = sum(
-        _count_parquet(_partition_src(path, name, v, rel))
-        for name, (v, rel) in _old_partitions(path, new_v, partition_by).items()
-    )
+    after = sum(_partition_file_counts(path, new_v, partition_by).values())
     return {"version": new_v, "compacted": len(touched),
             "files_before": before, "files_after": after}
 

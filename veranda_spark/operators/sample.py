@@ -126,6 +126,15 @@ def global_rank(
     cumulative partition offsets.  The partitioned frame is
     localCheckpoint-pinned so the offset pass and the rank pass see the
     SAME range boundaries (RangePartitioner samples per execution)."""
+    return _global_rank(df, key_cols, rank_col)[0]
+
+
+def _global_rank(
+    df: DataFrame, key_cols: list[str], rank_col: str
+) -> tuple[DataFrame, int]:
+    """``global_rank`` plus the total row count, already known from the
+    offset pass — contrastive_pairs needs it and would otherwise run one
+    more count() job over the window."""
     spark = df.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     part = (
@@ -149,12 +158,7 @@ def global_rank(
     out = part.withColumn(
         rank_col, F.row_number().over(w) + omap[F.col("_pid")]
     ).drop("_pid")
-    # total row count, already known from the offset pass — callers
-    # (contrastive_pairs) would otherwise run one more count() job over
-    # the window (round-9, guide §1: don't recompute what a prior job
-    # already established)
-    out._global_rank_total = acc
-    return out
+    return out, acc
 
 
 def contrastive_pairs(
@@ -177,11 +181,8 @@ def contrastive_pairs(
     keyed = df.select(F.col(id_col)).withColumn(
         "_mk", F.md5(F.col(id_col).cast("string"))
     )
-    gr = global_rank(keyed, ["_mk", id_col])
+    gr, n = _global_rank(keyed, ["_mk", id_col], "rank")
     ranked = gr.drop("_mk")
-    n = getattr(gr, "_global_rank_total", None)
-    if n is None:  # defensive: attribute contract broken
-        n = ranked.count()
     if n == 0:
         return ranked.select(
             F.col(id_col).alias("anchor_id"),

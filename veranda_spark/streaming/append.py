@@ -142,8 +142,8 @@ def burn_in_stream(
     tiles', in STREAMING form).
 
     foreachBatch: every micro-batch of image rows burns into per-tile
-    canvases and commits through the lineage run_id protocol with
-    run_id = the batch id and scope="run" — a crash-replay of the same
+    canvases and commits one tile-sink version with run_id = the
+    batch id and scope="run" — a crash-replay of the same
     epoch anti-joins its own committed tiles away (idempotent), while
     other batches' generations are untouched.  Read back with
     ``read_tiles(mode="all")`` (each batch is one generation of layers)

@@ -17,6 +17,15 @@ def _rows(df):
     return {(r["k"], r["p"], r["val"]) for r in df.collect()}
 
 
+def _inodes(vdir, part):
+    d = os.path.join(vdir, part)
+    return {
+        f: os.stat(os.path.join(d, f)).st_ino
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    }
+
+
 @pytest.fixture()
 def base(spark, tmp_path):
     path = str(tmp_path / "tbl")
@@ -32,8 +41,7 @@ def test_merge_upsert_semantics(spark, base):
         [(3, 3, "updated3"), (100, 0, "new100")], "k long, p long, val string"
     )
     res = merge_into(spark, base, upd, keys=["k"], partition_by="p")
-    assert res["version"] == 2 and res["previous"] == 1
-    assert res["commit_mode"] in ("link", "manifest")
+    assert res == {"version": 2, "previous": 1}
     got = _rows(read_table(spark, base))
     assert (3, 3, "updated3") in got and (3, 3, "v3") not in got
     assert (100, 0, "new100") in got
@@ -58,20 +66,11 @@ def test_cow_links_untouched_partitions(spark, base):
     merge_into(spark, base, upd, keys=["k"], partition_by="p")
     v1 = os.path.join(base, "_versions", "000001")
     v2 = os.path.join(base, "_versions", "000002")
-
-    def inodes(vdir, part):
-        d = os.path.join(vdir, part)
-        return {
-            f: os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
     # untouched partition p=2: files are the SAME inodes (hard links)
-    assert inodes(v1, "p=2") == inodes(v2, "p=2")
+    assert _inodes(v1, "p=2") == _inodes(v2, "p=2")
     # affected partition p=1 was rewritten (no shared inodes)
     assert not (
-        set(inodes(v1, "p=1").values()) & set(inodes(v2, "p=1").values())
+        set(_inodes(v1, "p=1").values()) & set(_inodes(v2, "p=1").values())
     )
 
 
@@ -252,69 +251,28 @@ def _no_links(monkeypatch):
 
 
 def test_manifest_mode_merge_no_links(spark, base, monkeypatch):
-    # object-store path: hard links unavailable -> auto falls back to
-    # manifest commits; semantics identical, NO full-table rewrite
+    # a filesystem that refuses hard links: the untouched partitions are
+    # COPIED into v2 (same files, new inodes) instead of being referenced
+    # from v1, and the merge semantics are unchanged
     _no_links(monkeypatch)
     upd = spark.createDataFrame([(1, 1, "Y")], "k long, p long, val string")
-    res = merge_into(spark, base, upd, keys=["k"], partition_by="p")
-    assert res["commit_mode"] == "manifest"
+    assert merge_into(spark, base, upd, keys=["k"], partition_by="p") == {
+        "version": 2, "previous": 1,
+    }
     got = _rows(read_table(spark, base))
     assert (1, 1, "Y") in got and (1, 1, "v1") not in got
     assert len(got) == 20
     v1 = os.path.join(base, "_versions", "000001")
     v2 = os.path.join(base, "_versions", "000002")
-    # no full rewrite: only the affected partition is physically in v2
-    phys = sorted(d for d in os.listdir(v2) if d.startswith("p="))
-    assert phys == ["p=1"]
-    import json as _json
-
-    with open(os.path.join(v2, "_manifest.json")) as f:
-        entries = {e["name"]: e["v"] for e in _json.load(f)["entries"]}
-    assert entries == {"p=0": 1, "p=2": 1, "p=3": 1}
-    assert os.path.isdir(v1)  # referenced bytes live in v1
-
-
-def test_manifest_chain_flattens_and_expire_retains(spark, base, monkeypatch):
-    from veranda_spark.io.table import expire_versions
-
-    _no_links(monkeypatch)
-    up1 = spark.createDataFrame([(1, 1, "Y")], "k long, p long, val string")
-    merge_into(spark, base, up1, keys=["k"], partition_by="p")
-    up2 = spark.createDataFrame([(0, 0, "Z")], "k long, p long, val string")
-    merge_into(spark, base, up2, keys=["k"], partition_by="p")
-    v1 = os.path.join(base, "_versions", "000001")
-    v2 = os.path.join(base, "_versions", "000002")
-    v3 = os.path.join(base, "_versions", "000003")
-    import json as _json
-
-    with open(os.path.join(v3, "_manifest.json")) as f:
-        entries = {e["name"]: e["v"] for e in _json.load(f)["entries"]}
-    # chain flattened at write time: p=2/p=3 point at v1 (where the bytes
-    # live), p=1 at v2 — never v3 -> v2 -> v1 hops; version NUMBERS so a
-    # relocated table keeps reading
-    assert entries == {"p=1": 2, "p=2": 1, "p=3": 1}
-    assert os.path.isdir(v1) and os.path.isdir(v2)
-    got = _rows(read_table(spark, base))
-    assert (0, 0, "Z") in got and (1, 1, "Y") in got and len(got) == 20
-    # expiry must RETAIN v1 and v2: the surviving v3 manifest references both
-    removed = expire_versions(base, keep=1)
-    assert removed == []
-    assert _rows(read_table(spark, base)) == got
-
-
-def test_manifest_mode_explicit(spark, base):
-    upd = spark.createDataFrame([(5, 1, "E")], "k long, p long, val string")
-    res = merge_into(
-        spark, base, upd, keys=["k"], partition_by="p", commit_mode="manifest"
-    )
-    assert res["commit_mode"] == "manifest"
-    got = _rows(read_table(spark, base))
-    assert (5, 1, "E") in got and len(got) == 20
+    for part in ("p=0", "p=2", "p=3"):
+        old, new = _inodes(v1, part), _inodes(v2, part)
+        assert old and old.keys() == new.keys()
+        assert not set(old.values()) & set(new.values())
 
 
 def test_manifest_table_survives_relocation(spark, tmp_path, monkeypatch):
-    # manifests store version NUMBERS, not paths: moving the whole table
-    # directory must not break reads
+    # every version directory is self-contained, with or without links:
+    # moving the whole table directory must not break reads of any version
     import shutil
 
     _no_links(monkeypatch)
@@ -324,34 +282,14 @@ def test_manifest_table_survives_relocation(spark, tmp_path, monkeypatch):
     )
     create_table(df, src, partition_by="p")
     upd = spark.createDataFrame([(1, 1, "Y")], "k long, p long, val string")
-    res = merge_into(spark, src, upd, keys=["k"], partition_by="p")
-    assert res["commit_mode"] == "manifest"
+    merge_into(spark, src, upd, keys=["k"], partition_by="p")
+    before = _rows(read_table(spark, src))
     dst = str(tmp_path / "moved")
     shutil.move(src, dst)
     got = _rows(read_table(spark, dst))
+    assert got == before
     assert (1, 1, "Y") in got and len(got) == 20
-
-
-def test_expire_retains_transitively_referenced(spark, base, monkeypatch):
-    # review r4: v3's manifest names v2 AND v1; keep=1 must retain the
-    # whole chain — a retained version with a dangling manifest would
-    # fail its read mid-scan
-    from veranda_spark.io.table import expire_versions, list_versions
-
-    _no_links(monkeypatch)
-    merge_into(spark, base, spark.createDataFrame(
-        [(1, 1, "a")], "k long, p long, val string"), keys=["k"],
-        partition_by="p")                      # v2: manifest -> v1
-    merge_into(spark, base, spark.createDataFrame(
-        [(0, 0, "b")], "k long, p long, val string"), keys=["k"],
-        partition_by="p")                      # v3: manifest -> v2, v1
-    assert expire_versions(base, keep=1) == []
-    assert list_versions(base) == [1, 2, 3]
-    got = _rows(read_table(spark, base))
-    assert (1, 1, "a") in got and (0, 0, "b") in got and len(got) == 20
-    # every retained version must still read cleanly end-to-end
-    for v in (1, 2, 3):
-        assert len(_rows(read_table(spark, base, version=v))) == 20
+    assert len(_rows(read_table(spark, dst, version=1))) == 20
 
 
 def test_compact_table_partitioned(spark, tmp_path):
@@ -384,12 +322,11 @@ def test_compact_table_partitioned(spark, tmp_path):
                     "files_before": 3, "files_after": 3}
 
 
-def test_compact_table_manifest_partial(spark, tmp_path, monkeypatch):
+def test_compact_table_partial_links(spark, tmp_path):
     # only the fragmented partition is rewritten; the rest carry over as
-    # manifest entries (no links, no byte copies)
+    # hard links (the same inodes in v3 as in v2)
     from veranda_spark.io.table import compact_table
 
-    _no_links(monkeypatch)
     path = str(tmp_path / "frag2")
     df = spark.createDataFrame(
         [(i, i % 3, f"v{i}") for i in range(30)], "k long, p long, val string"
@@ -407,13 +344,15 @@ def test_compact_table_manifest_partial(spark, tmp_path, monkeypatch):
         "append"
     ).parquet(os.path.join(path, "_versions", "000002", "p=1"))
     res = compact_table(spark, path, partition_by="p")
-    assert res["compacted"] == 1
+    assert res["version"] == 3 and res["compacted"] == 1
+    v2 = os.path.join(path, "_versions", "000002")
     v3 = os.path.join(path, "_versions", "000003")
-    import json as _json
-
-    with open(os.path.join(v3, "_manifest.json")) as f:
-        entries = {e["name"]: e["v"] for e in _json.load(f)["entries"]}
-    assert set(entries) == {"p=0", "p=2"}  # untouched partitions carried
+    for part in ("p=0", "p=2"):
+        assert _inodes(v2, part) and _inodes(v2, part) == _inodes(v3, part)
+    assert len(_inodes(v2, "p=1")) == 2 and len(_inodes(v3, "p=1")) == 1
+    assert not (
+        set(_inodes(v2, "p=1").values()) & set(_inodes(v3, "p=1").values())
+    )
     got = _rows(read_table(spark, path))
     assert len(got) == 38 and (101, 1, "u1") in got
 
@@ -484,77 +423,6 @@ def test_owner_scoped_orphan_recovery(spark, base):
     stray = os.path.join(base, "_versions", "000004")
     os.makedirs(stray)
     assert recover_orphans(base) == [4]
-
-
-def test_relocate_versions_reclaims_manifest_bytes(spark, base, monkeypatch):
-    # VERDICT r4 #2: under manifest mode, expire retained every version a
-    # surviving manifest named — bytes leaked under CDC churn.  relocate
-    # + expire must reclaim them while keeping every surviving read
-    # (current AND time-travel) byte-identical, and later merges must
-    # carry the relocated partitions correctly.
-    import veranda_spark.io.table as tbl
-    from veranda_spark.io.table import (
-        expire_versions,
-        list_versions,
-        relocate_versions,
-    )
-
-    monkeypatch.setattr(tbl, "_links_supported", lambda p: False)
-    # churn: five merges, each touching ONE partition, so old versions
-    # keep physically holding the untouched partitions
-    for j in range(5):
-        upd = spark.createDataFrame(
-            [(j, j % 4, f"u{j}")], "k long, p long, val string"
-        )
-        merge_into(spark, base, upd, keys=["k"], partition_by="p",
-                   commit_mode="manifest")
-    assert list_versions(base) == [1, 2, 3, 4, 5, 6]
-    got_before = _rows(read_table(spark, base))
-    tt_before = _rows(read_table(spark, base, version=5))
-
-    # without relocation, expire cannot reclaim v1 (still referenced)
-    assert expire_versions(base, keep=2) == []
-
-    res = relocate_versions(base, keep=2)
-    assert res["relocated"] > 0 and res["rewritten_manifests"] > 0
-    # reads are unchanged after the manifest flip, before expire
-    assert _rows(read_table(spark, base)) == got_before
-    assert _rows(read_table(spark, base, version=5)) == tt_before
-    # idempotent: a second run copies nothing
-    assert relocate_versions(base, keep=2)["relocated"] == 0
-
-    removed = expire_versions(base, keep=2)
-    assert removed == [1, 2, 3, 4], removed
-    for v in removed:
-        assert not os.path.isdir(os.path.join(base, "_versions", f"{v:06d}"))
-    assert _rows(read_table(spark, base)) == got_before
-    assert _rows(read_table(spark, base, version=5)) == tt_before
-
-    # a merge AFTER relocation must carry rel-entries through untouched
-    upd = spark.createDataFrame([(0, 0, "post")], "k long, p long, val string")
-    merge_into(spark, base, upd, keys=["k"], partition_by="p",
-               commit_mode="manifest")
-    got = _rows(read_table(spark, base))
-    assert (0, 0, "post") in got
-    assert len(got) == len(got_before)
-    # untouched partitions (p=1,2,3) still fully present
-    assert {t for t in got if t[1] == 3} == {t for t in got_before if t[1] == 3}
-
-    # and compact_table resolves relocated partition paths for counting:
-    # fragment the current version's physical p=0 (merges themselves now
-    # write one file per partition — round-9), then compact; the
-    # relocated partitions must be counted (and carried) correctly
-    cur_v = max(list_versions(base))
-    spark.createDataFrame([], "k long, val string").coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(base, "_versions", f"{cur_v:06d}", "p=0"))
-    got = _rows(read_table(spark, base))
-    from veranda_spark.io.table import compact_table
-
-    r = compact_table(spark, base, partition_by="p", max_files=1,
-                      commit_mode="manifest")
-    assert r["compacted"] >= 1
-    assert _rows(read_table(spark, base)) == got
 
 
 def test_unowned_orphan_age_gate_self_heals(spark, base):
@@ -629,59 +497,6 @@ def test_null_owner_claim_is_never_age_swept(spark, base):
     assert os.path.isdir(d)
     # manual recovery still clears it
     assert recover_orphans(base) == [2]
-
-
-def test_relocate_sweeps_stranded_copies(spark, base, monkeypatch):
-    # review r5 pass-2 #6: a crashed relocate's orphan copy under a
-    # survivor's _relocated/ store is swept once nothing references it
-    import veranda_spark.io.table as tbl
-    from veranda_spark.io.table import relocate_versions
-
-    monkeypatch.setattr(tbl, "_links_supported", lambda p: False)
-    for j in range(4):
-        upd = spark.createDataFrame(
-            [(j, j % 4, f"u{j}")], "k long, p long, val string"
-        )
-        merge_into(spark, base, upd, keys=["k"], partition_by="p",
-                   commit_mode="manifest")
-    # simulate a crashed earlier run: stranded unreferenced copy + torn tmp
-    v5 = os.path.join(base, "_versions", "000005", "_relocated")
-    os.makedirs(os.path.join(v5, "p=9"))
-    with open(os.path.join(v5, "p=9", "junk.parquet"), "w") as f:
-        f.write("x")
-    os.makedirs(os.path.join(v5, "p=1._tmp"))
-    res = relocate_versions(base, keep=2)
-    assert res["swept"] >= 2
-    assert not os.path.isdir(os.path.join(v5, "p=9"))
-    assert not os.path.isdir(os.path.join(v5, "p=1._tmp"))
-    # the live rel-copies survive and reads stay correct
-    got = _rows(read_table(spark, base))
-    assert len(got) == 20
-
-
-def test_relocate_noop_on_link_mode_tables(spark, base):
-    # link-mode tables share bytes by inode — nothing references old
-    # version DIRS via manifests, so relocate has nothing to do and
-    # expire works as before
-    from veranda_spark.io.table import (
-        expire_versions,
-        list_versions,
-        relocate_versions,
-    )
-
-    for j in range(3):
-        upd = spark.createDataFrame(
-            [(j, j % 4, f"u{j}")], "k long, p long, val string"
-        )
-        merge_into(spark, base, upd, keys=["k"], partition_by="p",
-                   commit_mode="link")
-    before = _rows(read_table(spark, base))
-    res = relocate_versions(base, keep=2)
-    assert res["relocated"] == 0 and res["rewritten_manifests"] == 0
-    removed = expire_versions(base, keep=2)
-    assert removed == [1, 2]
-    assert list_versions(base) == [3, 4]
-    assert _rows(read_table(spark, base)) == before
 
 
 def test_stale_heartbeat_claim_self_heals(spark, base):
@@ -1068,8 +883,7 @@ def test_restore_version_partitioned(spark, base):
                 spark.createDataFrame([(7,)], "k long"),
                 keys=["k"], partition_by="p")                         # v3
     res = restore_version(base, 1)                                   # v4
-    assert res == {"version": 4, "restored": 1, "previous": 3,
-                   "commit_mode": res["commit_mode"]}
+    assert res == {"version": 4, "restored": 1, "previous": 3}
     # content identical to v1: un-deleted, un-merged
     assert _rows(read_table(spark, base)) == _rows(
         read_table(spark, base, version=1)
@@ -1104,14 +918,17 @@ def test_restore_version_guards_and_unpartitioned(spark, tmp_path):
     assert got == {(i, f"v{i}") for i in range(6)}
 
 
-def test_restore_then_expire_preserves_content(spark, base):
-    """restore_version's carried partitions (links or manifest refs to
-    the restored snapshot's holders) must survive expire_versions: the
-    transitive manifest-retention rule keeps referenced versions, and
-    link-mode inodes survive directory removal."""
+@pytest.mark.parametrize("links", [True, False], ids=["links", "no_links"])
+def test_restore_then_expire_preserves_content(spark, base, monkeypatch, links):
+    """restore_version's carried partitions must survive expire_versions:
+    linked inodes outlive the expired directories, and on a filesystem
+    that refuses links the restored version holds its own copies."""
     from veranda_spark.io.table import (
         delete_rows, expire_versions, restore_version,
     )
+
+    if not links:
+        _no_links(monkeypatch)
 
     delete_rows(spark, base, spark.createDataFrame([(3,), (7,)], "k long"),
                 keys=["k"], partition_by="p")                         # v2
@@ -1156,18 +973,3 @@ def test_wrong_partition_column_is_loud(spark, base):
     # table untouched by all three
     assert current_version(base) == 1
     assert read_table(spark, base).count() == 20
-
-
-def test_restore_unpartitioned_manifest_mode_is_loud(spark, tmp_path):
-    from veranda_spark.io.table import delete_rows, restore_version
-
-    path = str(tmp_path / "flat_m")
-    create_table(
-        spark.createDataFrame([(i,) for i in range(4)], "k long"), path
-    )
-    delete_rows(spark, path, spark.createDataFrame([(1,)], "k long"),
-                keys=["k"])
-    with pytest.raises(ValueError, match="manifests name partitions"):
-        restore_version(path, 1, commit_mode="manifest")
-    # auto/link still work
-    assert restore_version(path, 1)["commit_mode"] in ("link", "copy")

@@ -14,12 +14,10 @@ The ``_current`` pointer is written LAST via an atomic rename, so a
 crash mid-write leaves an orphan (invisible) version directory, never a
 half-visible table.  ``merge_into`` rewrites only the partitions
 an update batch touches; untouched partitions are carried into the new
-version either by hard links (local/POSIX FS) or by a per-version
-``_manifest.json`` listing the version directory where each untouched
-partition's bytes physically live (object stores have no inodes —
-manifests are how Iceberg/Delta commit there).  ``commit_mode="auto"``
-probes link support and falls back to manifests, so the same code path
-is O(changed partitions) on both storage classes.
+version by hard links, so every version directory is self-contained
+and a commit writes O(changed partitions) bytes.  A filesystem that
+refuses links gets a per-file copy of the carried partitions instead:
+still correct, but the commit then pays for the carried bytes too.
 
 Concurrency: SINGLE WRITER per table.  The new version directory is
 claimed with an exclusive ``os.mkdir`` — a second concurrent merge fails
@@ -77,40 +75,10 @@ def create_table(
     return 1
 
 
-def _manifest_path(vdir: str) -> str:
-    return os.path.join(vdir, "_manifest.json")
-
-
-def _read_manifest(vdir: str) -> list[dict]:
-    """Manifest entries ``{"name": <partition dirname>, "v": <version
-    number holding the bytes>[, "rel": true]}`` — empty when the version
-    is fully physical (link-mode or v1).  Versions are stored as
-    NUMBERS, not paths, so a relocated table keeps working.  ``rel``
-    marks bytes living under that version's ``_relocated/`` store
-    (written by ``relocate_versions`` when the original holder was
-    expired)."""
-    try:
-        with open(_manifest_path(vdir)) as f:
-            return json.load(f)["entries"]
-    except FileNotFoundError:
-        return []
-
-
-def _partition_src(path: str, name: str, v: int, rel: bool = False) -> str:
-    """Filesystem directory physically holding partition ``name`` for a
-    manifest entry pointing at version ``v``."""
-    vdir = _version_path(path, v)
-    return (
-        os.path.join(vdir, "_relocated", name) if rel
-        else os.path.join(vdir, name)
-    )
-
-
 def _has_parquet(vdir: str) -> bool:
-    """True when the version dir holds parquet VISIBLE to a Spark scan.
+    """True when the directory holds parquet VISIBLE to a Spark scan.
     Underscore/dot-prefixed subdirs are skipped — Spark treats them as
-    hidden (that invisibility is what makes the ``_relocated/`` store
-    safe to populate inside a committed, readable version)."""
+    hidden."""
     for root, dirs, files in os.walk(vdir):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         if any(fn.endswith(".parquet") for fn in files):
@@ -128,35 +96,12 @@ def _count_parquet(d: str) -> int:
 def _partition_file_counts(
     path: str, version: int, partition_by: str
 ) -> dict[str, int]:
-    """Parquet files per partition directory name of ``version``,
-    following manifest entries to the directory holding the bytes."""
+    """Parquet files per partition directory name of ``version``."""
+    vdir = _version_path(path, version)
     return {
-        name: _count_parquet(_partition_src(path, name, v, rel))
-        for name, (v, rel) in _old_partitions(
-            path, version, partition_by
-        ).items()
+        name: _count_parquet(os.path.join(vdir, name))
+        for name in _old_partitions(path, version, partition_by)
     }
-
-
-def _links_supported(path: str) -> bool:
-    """Probe hard-link support where the table lives (object-store
-    mounts and some containers refuse links — that's the manifest
-    case)."""
-    probe = os.path.join(path, f"_linkprobe_{uuid.uuid4().hex}")
-    link = probe + ".l"
-    try:
-        with open(probe, "w") as f:
-            f.write("x")
-        os.link(probe, link)
-        return True
-    except OSError:
-        return False
-    finally:
-        for p in (probe, link):
-            try:
-                os.remove(p)
-            except OSError:
-                pass
 
 
 def read_table(
@@ -164,10 +109,9 @@ def read_table(
 ) -> DataFrame:
     """Read a committed snapshot (the current one, or ``version`` for
     time travel).  Orphan (uncommitted) versions are unreadable by
-    construction — nothing points at them.  Manifest-committed versions
-    are assembled as a union of partition-directory scans grouped by the
-    version directory that physically holds the bytes (one scan per
-    group, basePath-anchored so partition columns resolve)."""
+    construction — nothing points at them.  Every version directory is
+    self-contained (carried partitions are hard links), so a snapshot is
+    one scan of its directory."""
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
@@ -175,48 +119,17 @@ def read_table(
     vdir = _version_path(path, v)
     if v > cur or not os.path.isdir(vdir):
         raise ValueError(f"version {v} does not exist (current={cur})")
-    entries = _read_manifest(vdir)
+    r = spark.read
     # mergeSchema: after a schema-evolving merge (merge_into
     # schema_mode="evolve") a snapshot legitimately mixes parquet files
     # written under different schemas (carried partitions keep their old
     # files); schema union fills missing columns with nulls.  Gated on
     # the table-root marker an evolving merge writes (review r8 pass-3
     # #4): never-evolved tables keep the cheap single-footer schema
-    # inference AND the loud unionByName guard against a column
-    # genuinely lost to corruption in one manifest group.
-    evolved = os.path.exists(_evolved_marker(path))
-
-    def scan(base: str | None, *paths: str):
-        r = spark.read
-        if base is not None:
-            r = r.option("basePath", base)
-        if evolved:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(*paths)
-
-    if not entries:
-        return scan(None, vdir)
-    # group by (version, relocated?) — each group scans with a basePath
-    # anchored at the directory holding the partition dirs, so partition
-    # columns resolve from the dir names either way
-    by_src: dict[tuple[int, bool], list[str]] = {}
-    for e in entries:
-        key = (int(e["v"]), bool(e.get("rel", False)))
-        by_src.setdefault(key, []).append(
-            _partition_src(path, e["name"], key[0], key[1])
-        )
-    parts = []
-    for (v2, rel), paths in sorted(by_src.items()):
-        base = _version_path(path, v2)
-        if rel:
-            base = os.path.join(base, "_relocated")
-        parts.append(scan(base, *paths))
-    if _has_parquet(vdir):
-        parts.append(scan(vdir, vdir))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=evolved)
-    return out
+    # inference.
+    if os.path.exists(_evolved_marker(path)):
+        r = r.option("mergeSchema", "true")
+    return r.parquet(vdir)
 
 
 def list_versions(path: str) -> list[int]:
@@ -244,53 +157,41 @@ def _unescape_partition_dir(name: str):
     return unquote(raw)
 
 
-def _link_tree(src: str, dst: str) -> bool:
+def _link_file(src: str, dst: str) -> None:
+    """Hard-link ``src`` to ``dst``, copying where the filesystem refuses
+    links (EXDEV, EPERM): a link-less filesystem still commits correctly,
+    it just pays for the carried bytes."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _link_tree(src: str, dst: str) -> None:
     """Hard-link a partition directory into the new version (COW: bytes
-    are shared, directories are new).  Returns True when any file had
-    to be COPIED (the fs refused a link) so callers can report the
-    commit honestly."""
-    copied = False
+    are shared, directories are new), with ``_link_file``'s per-file
+    copy fallback."""
     for root, _dirs, files in os.walk(src):
         rel = os.path.relpath(root, src)
         tgt = os.path.join(dst, rel) if rel != "." else dst
         os.makedirs(tgt, exist_ok=True)
         for fn in files:
-            s, d = os.path.join(root, fn), os.path.join(tgt, fn)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-                copied = True
-    return copied
+            _link_file(os.path.join(root, fn), os.path.join(tgt, fn))
 
 
-def _old_partitions(
-    path: str, cur: int, partition_by: str
-) -> dict[str, tuple[int, bool]]:
-    """The current version's partitions as {dir name: (version holding
-    the bytes, relocated?)}: physical dirs plus manifest entries
-    pointing at older versions — resolving the entry's version HERE
-    flattens manifest chains to one hop."""
+def _old_partitions(path: str, cur: int, partition_by: str) -> list[str]:
+    """The partition directory names of version ``cur``."""
     old_dir = _version_path(path, cur)
-    part_vers: dict[str, tuple[int, bool]] = {
-        e["name"]: (int(e["v"]), bool(e.get("rel", False)))
-        for e in _read_manifest(old_dir)
-    }
-    physical = [
+    physical = sorted(
         name for name in os.listdir(old_dir)
         if "=" in name and not name.startswith("_")
         and os.path.isdir(os.path.join(old_dir, name))
-    ]
-    for name in physical:
-        if name.startswith(f"{partition_by}="):
-            part_vers[name] = (cur, False)
+    )
     # layout guard (review r8 pass-6 #1): the caller's partition column
     # must AGREE with the snapshot's physical layout — a wrong name
     # would carry NOTHING as untouched and the commit would silently
     # drop every row outside the rewritten set
-    prefixes = {n.split("=", 1)[0] for n in part_vers} | {
-        n.split("=", 1)[0] for n in physical
-    }
+    prefixes = {n.split("=", 1)[0] for n in physical}
     if prefixes and prefixes != {partition_by}:
         raise ValueError(
             f"table at {path} is partitioned by "
@@ -298,49 +199,29 @@ def _old_partitions(
             "a wrong partition column would silently drop every "
             "untouched partition"
         )
-    if not part_vers:
+    if not physical:
         raise ValueError(
             f"table at {path} (version {cur}) has no "
             f"'{partition_by}=' partitions — wrong partition_by, or an "
             "unpartitioned table (omit partition_by)"
         )
-    return part_vers
+    return physical
 
 
 def _carry_untouched(
-    path: str,
-    new_dir: str,
-    part_vers: dict[str, tuple[int, bool]],
-    touched_names: set[str],
-    commit_mode: str,
-) -> tuple[list[dict], bool]:
-    """Carry every partition NOT in ``touched_names`` into the new
-    version — hard links (link mode) or manifest entries (returned; the
-    caller writes them after its data append).  The second return value
-    is True when link mode had to COPY any file (fs refused links)."""
-    manifest_entries: list[dict] = []
-    copied = False
-    for name, (src_v, rel) in sorted(part_vers.items()):
-        if name in touched_names:
+    src_dir: str, stage: str, names: list[str], touched: set[str]
+) -> None:
+    """Hard-link every entry of ``src_dir`` named in ``names`` and NOT in
+    ``touched`` into the stage: partition directories, or a restored
+    snapshot's loose parquet files."""
+    for name in names:
+        if name in touched:
             continue
-        if commit_mode == "link":
-            copied |= _link_tree(
-                _partition_src(path, name, src_v, rel),
-                os.path.join(new_dir, name),
-            )
+        src, dst = os.path.join(src_dir, name), os.path.join(stage, name)
+        if os.path.isdir(src):
+            _link_tree(src, dst)
         else:
-            entry = {"name": name, "v": src_v}
-            if rel:
-                entry["rel"] = True
-            manifest_entries.append(entry)
-    return manifest_entries, copied
-
-
-def _write_manifest(new_dir: str, entries: list[dict]) -> None:
-    tmp = _manifest_path(new_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"entries": entries}, f)
-    os.replace(tmp, _manifest_path(new_dir))
+            _link_file(src, dst)
 
 
 #: Heartbeat refresh period stamped into claims by merge_into /
@@ -349,6 +230,15 @@ def _write_manifest(new_dir: str, entries: list[dict]) -> None:
 #: constant), so changing the default never makes old on-disk claims
 #: look stale.
 _CLAIM_HB_S = 5.0
+
+#: ``recover_orphans(owner=...)`` clears an UNOWNED orphan (no readable
+#: claim) only once it is this many seconds old.
+_UNOWNED_GRACE_S = 300.0
+
+#: ``recover_orphans(owner=...)`` sweeps a foreign claim that declares a
+#: heartbeat promise only once its mtime is this many multiples of the
+#: claim's own ``hb_s`` old.
+_STALE_HB_MULTIPLE = 60.0
 
 
 def _write_claim(
@@ -384,8 +274,7 @@ def _write_claim(
     re-claimed: the commit-time fence that closes the frozen-writer
     dual-commit window (ADVICE r6).
 
-    Leading-underscore name keeps it invisible to parquet scans, like
-    ``_manifest.json``."""
+    Leading-underscore name keeps it invisible to parquet scans."""
     p = os.path.join(vdir, "_claim.json")
     tmp = p + ".tmp"
     body: dict = {"owner": owner}
@@ -433,8 +322,8 @@ def _verify_claim(vdir: str, nonce: str) -> None:
 
 def _stage_dir(vdir: str, nonce: str) -> str:
     """Per-invocation staging subdirectory INSIDE the claimed version
-    dir.  All of a writer's output (partition dirs, parquet files,
-    manifest) lands here and is promoted into the version dir only
+    dir.  All of a writer's output (partition dirs, parquet files)
+    lands here and is promoted into the version dir only
     AFTER the commit fence passes — so a writer frozen past the stale
     threshold whose version was swept and re-claimed can, at worst,
     recreate an underscore-prefixed subdir (invisible to Spark/Hadoop
@@ -581,12 +470,7 @@ class _claim_heartbeat:
         self._thread.join(timeout=self._hb_s)
 
 
-def recover_orphans(
-    path: str,
-    owner: str | None = None,
-    unowned_grace_s: float = 300.0,
-    stale_hb_multiple: float = 60.0,
-) -> list[int]:
+def recover_orphans(path: str, owner: str | None = None) -> list[int]:
     """Delete uncommitted (orphan) version directories left by crashed
     merges.  Run this before retrying a merge that failed its exclusive
     claim — merge_into itself never removes an existing claim directory
@@ -600,7 +484,7 @@ def recover_orphans(
     - orphans whose ``_claim.json`` names exactly that owner (its own
       crash debris), and
     - UNOWNED orphans (no readable claim) older than
-      ``unowned_grace_s`` seconds — claims are written atomically
+      ``_UNOWNED_GRACE_S`` seconds — claims are written atomically
       microseconds after the mkdir, so an unowned dir past the grace
       window can only be a crash in that microsecond gap or
       pre-claim-era debris, never a live writer; without this the
@@ -609,8 +493,8 @@ def recover_orphans(
     - foreign claims that DECLARE a heartbeat promise (``hb_s`` in the
       claim — merge_into/compact_table refresh the claim file's mtime
       every ``hb_s`` seconds while alive) whose claim mtime is more
-      than ``stale_hb_multiple × hb_s`` seconds old.  A live writer
-      refreshes at ``hb_s/2``; the default multiple (60 → 5 minutes at
+      than ``_STALE_HB_MULTIPLE × hb_s`` seconds old.  A live writer
+      refreshes at ``hb_s/2``; the multiple (60 → 5 minutes at
       the stock ``hb_s=5``) sits far beyond any plausible driver pause
       (GC, VM migration, swap storm — ADVICE r6 judged 60 s reachable,
       so the old 12× default was raised), so a claim that stale can
@@ -651,9 +535,9 @@ def recover_orphans(
                 if has_claim:
                     # foreign claim: sweepable ONLY on a visibly broken
                     # heartbeat promise; no promise → never touch
-                    if hb_s is None or age < stale_hb_multiple * hb_s:
+                    if hb_s is None or age < _STALE_HB_MULTIPLE * hb_s:
                         continue
-                elif age < unowned_grace_s:
+                elif age < _UNOWNED_GRACE_S:
                     continue  # possibly a just-claimed dir mid-stamp
         shutil.rmtree(vdir)
         removed.append(int(name))
@@ -759,17 +643,14 @@ def append_rows(
     protocol.  Every committed partition is hard-linked into the new
     version (copied where the fs refuses links) and the new rows are
     appended into the same partition directories — O(files of the
-    current version) links plus the new rows' write.  Always link mode,
-    never a manifest: a partition that is both a manifest entry and a
-    freshly written directory would lose its older rows at the next
-    commit (``_old_partitions`` keeps only the physical directory).
+    current version) links plus the new rows' write.
 
     A column set that differs from the committed version's first flips
     the table to schema-merging reads (``_mark_evolved``), as
     ``merge_into(schema_mode="evolve")`` does: older rows read back with
     the new columns null."""
     cur = current_version(path)
-    part_vers: dict[str, tuple[int, bool]] = {}
+    names: list[str] = []
     if cur is None:
         os.makedirs(_versions_dir(path), exist_ok=True)
     else:
@@ -777,10 +658,10 @@ def append_rows(
             read_table(df.sparkSession, path).columns
         ):
             _mark_evolved(path)
-        part_vers = _old_partitions(path, cur, partition_by)
+        names = _old_partitions(path, cur, partition_by)
     new_v = (cur or 0) + 1
     with _claimed_version(path, new_v, owner) as (_new_dir, stage, _nonce):
-        _carry_untouched(path, stage, part_vers, set(), "link")
+        _carry_untouched(_version_path(path, new_v - 1), stage, names, set())
         df.write.mode("append").partitionBy(partition_by).parquet(stage)
     return {"version": new_v, "previous": cur}
 
@@ -791,7 +672,6 @@ def merge_into(
     updates: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
-    commit_mode: str = "auto",
     owner: str | None = None,
     schema_mode: str = "strict",
 ) -> dict:
@@ -802,11 +682,7 @@ def merge_into(
 
     Copy-on-write granularity: with ``partition_by``, only partitions
     present in the update batch are rewritten — every other partition is
-    carried over by hard link (``commit_mode="link"``) or by a manifest
-    entry pointing at the version directory that physically holds its
-    bytes (``"manifest"`` — the object-store path: no inode sharing
-    assumed, manifest chains are flattened at write time so reads never
-    chase more than one hop).  ``"auto"`` probes link support.  An
+    carried over by hard link (copied where the fs refuses links).  An
     update that MOVES a row across partitions must carry the new
     partition value; the row's old partition is rewritten too (both
     sides are affected).
@@ -832,8 +708,6 @@ def merge_into(
     (nulls for the missing columns), so old versions time-travel with
     their own schema.
     """
-    if commit_mode not in ("auto", "link", "manifest"):
-        raise ValueError(f"commit_mode must be auto|link|manifest, got {commit_mode!r}")
     if schema_mode not in ("strict", "evolve"):
         raise ValueError(f"schema_mode must be strict|evolve, got {schema_mode!r}")
     cur = current_version(path)
@@ -853,14 +727,10 @@ def merge_into(
         )
         if widened:
             _mark_evolved(path)
-    if commit_mode == "auto":
-        commit_mode = "link" if _links_supported(path) else "manifest"
     # layout validation (and the partition inventory) runs BEFORE the
     # version claim so a wrong partition_by fails cleanly with no
     # orphan claimed dir (review r8 pass-6)
-    part_vers = (
-        _old_partitions(path, cur, partition_by) if partition_by else {}
-    )
+    names = _old_partitions(path, cur, partition_by) if partition_by else []
     new_v = cur + 1
     with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
         if partition_by:
@@ -899,16 +769,16 @@ def merge_into(
             aff_set = {s for s in affected_strs if s is not None}  # Spark-rendered
             aff_null = any(a is None for a in affected)
             touched_names = {
-                name for name in part_vers
+                name for name in names
                 if (
                     (v := _unescape_partition_dir(name)) is None and aff_null
                 ) or (v is not None and v in aff_set)
             }
             # everything lands in the nonce-keyed STAGE subdir (carried
-            # partitions, fresh writes, manifest) and is promoted only
-            # after the commit fence passes — see _stage_dir
-            manifest_entries, _copied = _carry_untouched(
-                path, stage, part_vers, touched_names, commit_mode
+            # partitions and fresh writes) and is promoted only after the
+            # commit fence passes — see _stage_dir
+            _carry_untouched(
+                _version_path(path, cur), stage, names, touched_names
             )
             tgt_aff = tgt.filter(
                 _isin_or_null(partition_by, aff_vals, aff_null)
@@ -929,8 +799,6 @@ def merge_into(
                 .partitionBy(partition_by)
                 .parquet(stage)
             )
-            if manifest_entries:
-                _write_manifest(stage, manifest_entries)
         else:
             merged = tgt.join(
                 updates.select(keys), keys, "left_anti"
@@ -942,7 +810,7 @@ def merge_into(
         # the context manager runs the fenced promote+commit; our stage
         # is ours to clean even inside a re-claimed dir, and the
         # committed state is untouched on any fence failure
-    return {"version": new_v, "previous": cur, "commit_mode": commit_mode}
+    return {"version": new_v, "previous": cur}
 
 
 def delete_rows(
@@ -951,7 +819,6 @@ def delete_rows(
     keys_df: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
-    commit_mode: str = "auto",
     owner: str | None = None,
     trust_partition_hint: bool = False,
 ) -> dict:
@@ -964,9 +831,10 @@ def delete_rows(
     disappears from the new version).
 
     Snapshot isolation means older versions still SERVE the deleted
-    rows; physical removal is ``delete_rows`` + ``expire_versions``
-    (plus ``relocate_versions`` first for manifest-mode bytes) — the
-    documented GDPR erasure sequence.
+    rows; physical removal is ``delete_rows`` + ``expire_versions`` —
+    the documented GDPR erasure sequence (a carried partition shares
+    its inodes, so its bytes go when the last version linking them
+    does).
 
     Deleting EVERY row: allowed on an unpartitioned table (Spark
     writes a schema-only empty part file, so the empty snapshot stays
@@ -982,8 +850,6 @@ def delete_rows(
     then silently skips rows living elsewhere, which is why trusting
     it is opt-in.
     """
-    if commit_mode not in ("auto", "link", "manifest"):
-        raise ValueError(f"commit_mode must be auto|link|manifest, got {commit_mode!r}")
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
@@ -1008,11 +874,7 @@ def delete_rows(
     # no eager distinct: every consumer is a semi/anti join probe side or
     # re-distincts itself (the hint collect) — round-9, guide §2.4
     dels = keys_df.select(kcols + ([partition_by] if hint else []))
-    if commit_mode == "auto":
-        commit_mode = "link" if _links_supported(path) else "manifest"
-    part_vers = (
-        _old_partitions(path, cur, partition_by) if partition_by else {}
-    )
+    names = _old_partitions(path, cur, partition_by) if partition_by else []
     new_v = cur + 1
     with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
         if partition_by:
@@ -1037,13 +899,13 @@ def delete_rows(
             aff_set = {r["_s"] for r in aff_rows if r["_s"] is not None}
             aff_null = any(r["_v"] is None for r in aff_rows)
             touched_names = {
-                name for name in part_vers
+                name for name in names
                 if (
                     (v := _unescape_partition_dir(name)) is None and aff_null
                 ) or (v is not None and v in aff_set)
             }
-            manifest_entries, _copied = _carry_untouched(
-                path, stage, part_vers, touched_names, commit_mode
+            _carry_untouched(
+                _version_path(path, cur), stage, names, touched_names
             )
             remaining = tgt.filter(
                 _isin_or_null(partition_by, aff_vals, aff_null)
@@ -1054,9 +916,7 @@ def delete_rows(
                 .partitionBy(partition_by)
                 .parquet(stage)
             )
-            if manifest_entries:
-                _write_manifest(stage, manifest_entries)
-            if not manifest_entries and not _has_parquet(stage):
+            if not _has_parquet(stage):
                 # PARTITIONED delete-all: every partition directory
                 # vanished, so the snapshot has no parquet schema
                 # anywhere — refuse and leave no orphan dir.  (The
@@ -1075,32 +935,29 @@ def delete_rows(
         else:
             remaining = tgt.join(dels.select(kcols), kcols, "left_anti")
             remaining.write.mode("append").parquet(stage)
-    return {"version": new_v, "previous": cur, "commit_mode": commit_mode}
+    return {"version": new_v, "previous": cur}
 
 
 def restore_version(
     path: str,
     version: int,
-    commit_mode: str = "auto",
     owner: str | None = None,
 ) -> dict:
     """Delta RESTORE analog: make an older snapshot current again by
     committing a NEW version whose content is ``version``'s — a
-    metadata-only operation on partitioned tables (links or manifest
-    entries; zero data bytes move).  Pure filesystem work: no
+    metadata-only operation (hard links; zero data bytes move, or a
+    copy where the fs refuses links).  Pure filesystem work: no
     SparkSession parameter, unlike its write siblings (review r8
     pass-5 — there is genuinely no Spark job here).
 
-    The snapshot's layout is derived from the snapshot ITSELF
-    (manifest entries / ``name=`` partition dirs vs loose parquet
-    files), never from a caller-supplied partition column — review r8
-    pass-5 #1: a wrong/omitted partition argument used to stage
-    nothing and commit an EMPTY snapshot, breaking every later read.
-    Unpartitioned snapshots are self-contained (each merge rewrites
-    the full row set), so their files hard-link across — or COPY on a
-    link-less filesystem, reported honestly as ``commit_mode="copy"``
-    (manifest entries are partition-named and cannot represent loose
-    files).
+    The snapshot's layout is derived from the snapshot ITSELF, never
+    from a caller-supplied partition column — review r8 pass-5 #1: a
+    wrong/omitted partition argument used to stage nothing and commit
+    an EMPTY snapshot, breaking every later read.  One path serves both
+    layouts: the snapshot's top-level ``name=`` partition directories
+    and loose ``.parquet`` files are linked into the new version.
+    ``_``-prefixed entries (the old ``_claim.json``, ``_SUCCESS``) are
+    skipped; the new claim would collide with them on promote.
 
     Non-destructive by design: later versions stay on disk and
     time-travel-readable until ``expire_versions``, and the new
@@ -1109,8 +966,6 @@ def restore_version(
     re-pointed ``_current``.  Composes with ``delete_rows`` as the
     oops-recovery path: restore(v_before_delete) un-deletes.
     """
-    if commit_mode not in ("auto", "link", "manifest"):
-        raise ValueError(f"commit_mode must be auto|link|manifest, got {commit_mode!r}")
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
@@ -1119,60 +974,22 @@ def restore_version(
     src_dir = _version_path(path, version)
     if version > cur or not os.path.isdir(src_dir):
         raise ValueError(f"version {version} does not exist (current={cur})")
-    requested_mode = commit_mode
-    if commit_mode == "auto":
-        commit_mode = "link" if _links_supported(path) else "manifest"
-    # layout from the snapshot itself: manifest entries + partition dirs
-    part_vers = {
-        e["name"]: (int(e["v"]), bool(e.get("rel", False)))
-        for e in _read_manifest(src_dir)
-    }
-    names = sorted(os.listdir(src_dir))
-    for name in names:
-        if (
-            "=" in name and not name.startswith("_")
-            and os.path.isdir(os.path.join(src_dir, name))
-        ):
-            part_vers[name] = (version, False)
-    loose = [fn for fn in names if fn.endswith(".parquet")]
-    if not part_vers and not loose:
+    names = [
+        name for name in sorted(os.listdir(src_dir))
+        if not name.startswith("_") and (
+            name.endswith(".parquet")
+            or ("=" in name and os.path.isdir(os.path.join(src_dir, name)))
+        )
+    ]
+    if not names:
         raise ValueError(
             f"version {version} holds no partitions and no parquet "
             "files — refusing to restore an unreadable snapshot"
         )
-    if not part_vers and requested_mode == "manifest":
-        # manifest entries are partition-named and cannot represent
-        # loose files — fail the EXPLICIT request loudly instead of
-        # silently substituting links (review r8 pass-6 #2; 'auto' on
-        # a link-less fs legitimately falls through to the copy path)
-        raise ValueError(
-            "commit_mode='manifest' cannot restore an unpartitioned "
-            "snapshot (manifests name partitions, not files) — use "
-            "'auto' or 'link'"
-        )
     new_v = cur + 1
     with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
-        if part_vers:
-            manifest_entries, copied = _carry_untouched(
-                path, stage, part_vers, set(), commit_mode
-            )
-            if manifest_entries:
-                _write_manifest(stage, manifest_entries)
-            if copied:
-                commit_mode = "copy"  # honest: the fs refused links
-        else:
-            copied = False
-            for fn in loose:
-                src = os.path.join(src_dir, fn)
-                dst = os.path.join(stage, fn)
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
-                    copied = True
-            commit_mode = "copy" if copied else "link"
-    return {"version": new_v, "restored": version, "previous": cur,
-            "commit_mode": commit_mode}
+        _carry_untouched(src_dir, stage, names, set())
+    return {"version": new_v, "restored": version, "previous": cur}
 
 
 def compact_table(
@@ -1180,7 +997,6 @@ def compact_table(
     path: str,
     partition_by: str | None = None,
     max_files: int = 1,
-    commit_mode: str = "auto",
     owner: str | None = None,
 ) -> dict:
     """Small-file compaction (Iceberg OPTIMIZE / bin-packing analog) for
@@ -1188,11 +1004,11 @@ def compact_table(
     than ``max_files`` parquet files are rewritten into a NEW committed
     version (ONE output file per compacted partition — ``max_files`` is
     the trigger threshold, not an output count; the unpartitioned path
-    coalesces to ``max_files`` files); every other partition carries over by link or
-    manifest exactly like ``merge_into`` — O(compacted partitions), the
-    rest of a 100 TB table is never read.  Readers of older versions are
-    unaffected (snapshot isolation); reclaim old bytes later with
-    ``expire_versions``.
+    coalesces to ``max_files`` files); every other partition carries
+    over by hard link exactly like ``merge_into`` — O(compacted
+    partitions), the rest of a 100 TB table is never read.  Readers of
+    older versions are unaffected (snapshot isolation); reclaim old
+    bytes later with ``expire_versions``.
 
     Returns {version, compacted, files_before, files_after}; when no
     partition exceeds the threshold, NO new version is created
@@ -1220,22 +1036,18 @@ def compact_table(
     recovery needed.  A live-but-slow compactor keeps heartbeating, so
     its claim is never raced.
     """
-    if commit_mode not in ("auto", "link", "manifest"):
-        raise ValueError(f"commit_mode must be auto|link|manifest, got {commit_mode!r}")
     if owner is None:
         owner = f"compact_table:{uuid.uuid4().hex[:12]}"
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
-    if commit_mode == "auto":
-        commit_mode = "link" if _links_supported(path) else "manifest"
 
     # layout guard: compacting a partitioned table without partition_by
     # would FLATTEN it (and the next partitioned merge would then carry
     # nothing and silently drop untouched rows); the reverse mismatch
     # would silently no-op.  Fail loudly on either.
     cur_dir = _version_path(path, cur)
-    is_partitioned = bool(_read_manifest(cur_dir)) or any(
+    is_partitioned = any(
         "=" in name and os.path.isdir(os.path.join(cur_dir, name))
         for name in os.listdir(cur_dir)
     )
@@ -1263,7 +1075,6 @@ def compact_table(
         return {"version": new_v, "compacted": 1, "files_before": before,
                 "files_after": _count_parquet(new_dir)}
 
-    part_vers = _old_partitions(path, cur, partition_by)
     counts = _partition_file_counts(path, cur, partition_by)
     touched = {n for n, c in counts.items() if c > max_files}
     before = sum(counts.values())
@@ -1272,9 +1083,7 @@ def compact_table(
                 "files_before": before, "files_after": before}
     new_v = cur + 1
     with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
-        manifest_entries, _copied = _carry_untouched(
-            path, stage, part_vers, touched, commit_mode
-        )
+        _carry_untouched(cur_dir, stage, sorted(counts), touched)
         # rewrite the oversized partitions: the predicate is over the
         # partition column only, so Catalyst PRUNES the scan to exactly the
         # touched partition directories (O(compacted bytes), not O(table)).
@@ -1299,119 +1108,9 @@ def compact_table(
             .partitionBy(partition_by)
             .parquet(stage)
         )
-        if manifest_entries:
-            _write_manifest(stage, manifest_entries)
     after = sum(_partition_file_counts(path, new_v, partition_by).values())
     return {"version": new_v, "compacted": len(touched),
             "files_before": before, "files_after": after}
-
-
-def relocate_versions(path: str, keep: int = 2) -> dict:
-    """Materialize manifest-referenced bytes OUT of versions that
-    ``expire_versions(keep)`` would otherwise retain whole, so the
-    subsequent expire actually reclaims them — the byte-reclamation pass
-    for ``commit_mode="manifest"`` tables (object stores), closing the
-    slow leak where heavy CDC churn kept old version dirs alive because
-    one surviving manifest still named them.
-
-    Every entry in a SURVIVING version's manifest that points at a
-    doomed version gets its partition bytes copied into
-    ``<oldest surviving referencing version>/_relocated/<name>`` — one
-    copy even when several survivors share the entry — and the
-    surviving manifests are then flipped to ``{"v": <survivor>,
-    "rel": true}``.  O(reclaimed bytes): only partitions whose holder is
-    about to expire move; the rest of a 100 TB table is untouched.
-
-    Crash-safe and safe under live readers/writers:
-
-    - bytes are copied to a temp name and renamed into ``_relocated/``
-      (invisible to parquet scans — Spark skips underscore paths), so
-      there is never a moment when a reader can see a partition twice;
-    - manifests flip atomically (tmp + rename) only AFTER all bytes
-      exist, so a reader always resolves to identical bytes at the old
-      or the new location;
-    - a crash mid-run leaves the table fully readable (expire's
-      transitive retention still protects the not-yet-flipped
-      references); re-running relocate_versions completes the job
-      (existing ``_relocated`` partitions are skipped, torn temp copies
-      are redone).
-
-    Returns {"relocated": n_partitions_copied, "rewritten_manifests": n}.
-    Call ``expire_versions(path, keep)`` afterwards to reclaim.
-    """
-    cur = current_version(path)
-    if cur is None:
-        return {"relocated": 0, "rewritten_manifests": 0}
-    versions = list_versions(path)
-    cutoff = versions[-keep:] if keep < len(versions) else versions
-    survivors = set(cutoff) | {cur}
-    # (name, src_v, src_rel) → oldest surviving version referencing it
-    targets: dict[tuple[str, int, bool], int] = {}
-    for s in sorted(survivors):
-        for e in _read_manifest(_version_path(path, s)):
-            v, rel = int(e["v"]), bool(e.get("rel", False))
-            if v in survivors:
-                continue
-            targets.setdefault((e["name"], int(e["v"]), rel), s)
-    n_copied = 0
-    for (name, v, rel), tgt in sorted(targets.items()):
-        dst_root = os.path.join(_version_path(path, tgt), "_relocated")
-        os.makedirs(dst_root, exist_ok=True)
-        dst = os.path.join(dst_root, name)
-        if os.path.isdir(dst):
-            continue  # a previous run already materialized this one
-        tmp = dst + "._tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)  # torn copy from a crash — redo
-        shutil.copytree(_partition_src(path, name, v, rel), tmp)
-        os.rename(tmp, dst)  # atomic publish (still scan-invisible)
-        n_copied += 1
-    n_manifests = 0
-    for s in sorted(survivors):
-        vdir = _version_path(path, s)
-        entries = _read_manifest(vdir)
-        if not entries:
-            continue
-        new_entries, changed = [], False
-        for e in entries:
-            v, rel = int(e["v"]), bool(e.get("rel", False))
-            if v in survivors:
-                new_entries.append(e)
-                continue
-            new_entries.append(
-                {"name": e["name"], "v": targets[(e["name"], v, rel)],
-                 "rel": True}
-            )
-            changed = True
-        if changed:
-            _write_manifest(vdir, new_entries)
-            n_manifests += 1
-    # sweep stranded copies: a crash after copying but before the flip,
-    # followed by a survivor-set shift, can leave a _relocated/<name>
-    # that no manifest (of ANY still-readable version — time travel
-    # included) references; without this the reclamation pass would
-    # itself leak one copy per crash (review r5 pass-2 #6)
-    all_dirs = [
-        int(n) for n in os.listdir(_versions_dir(path)) if n.isdigit()
-    ]  # committed versions AND in-flight claims (a live merge's orphan
-    #    may already carry rel-entries copied from the current manifest)
-    referenced = {
-        (int(e["v"]), e["name"])
-        for v in all_dirs
-        for e in _read_manifest(_version_path(path, v))
-        if e.get("rel", False)
-    }
-    swept = 0
-    for v in versions:
-        rel_root = os.path.join(_version_path(path, v), "_relocated")
-        if not os.path.isdir(rel_root):
-            continue
-        for name in os.listdir(rel_root):
-            if name.endswith("._tmp") or (v, name) not in referenced:
-                shutil.rmtree(os.path.join(rel_root, name))
-                swept += 1
-    return {"relocated": n_copied, "rewritten_manifests": n_manifests,
-            "swept": swept}
 
 
 def expire_versions(path: str, keep: int = 2) -> list[int]:
@@ -1419,41 +1118,19 @@ def expire_versions(path: str, keep: int = 2) -> list[int]:
     ``keep`` committed versions.  Hard-linked files make this safe — a
     partition directory shared with a surviving version keeps its bytes
     (the link count drops, the inode survives); only bytes referenced
-    exclusively by expired versions are reclaimed.  Manifest-committed
-    survivors instead REFERENCE older version directories by path, so a
-    version still named by any surviving manifest is retained whole
-    (deleting or pruning it would corrupt the survivor) — the same
-    still-referenced-files rule Iceberg applies.  Run
-    ``relocate_versions(path, keep)`` first to move those referenced
-    bytes into the survivors so this pass can actually reclaim the old
-    directories.  The current version is never expired.  Returns the
-    versions removed."""
+    exclusively by expired versions are reclaimed.  The current version
+    is never expired.  Returns the versions removed."""
     if keep < 1:
         raise ValueError("keep must be >= 1 (the current version survives)")
     cur = current_version(path)
     if cur is None:
         return []
     versions = list_versions(path)
-    cutoff = versions[-keep:] if keep < len(versions) else versions
-    survivors = set(cutoff) | {cur}
-    # transitive retention: anything a RETAINED version's manifest names
-    # must itself be retained (a retained version with a dangling
-    # manifest would fail its time-travel read mid-scan) — expand to a
-    # fixpoint; chains are write-time-flattened so this converges fast
-    retained = set(survivors)
-    while True:
-        referenced = {
-            int(e["v"])
-            for v in retained
-            for e in _read_manifest(_version_path(path, v))
-        }
-        if referenced <= retained:
-            break
-        retained |= referenced
+    survivors = set(versions[-keep:]) | {cur}
     removed = []
     for v in versions:
-        if v in retained:
-            continue  # survivor, or still pointed at by a retained manifest
+        if v in survivors:
+            continue
         vdir = _version_path(path, v)
         # rename-then-delete: the rename either fully hides the version
         # (list_versions only matches digit names) or fails cleanly with

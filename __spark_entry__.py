@@ -334,19 +334,9 @@ def q_cell_histogram(spark, sf_dir):
 
 
 def q_knn(spark, sf_dir):
-    # round-9: pass the density hint a real caller with a maintained
-    # histogram would (the r3/r4 hint API): the F0 point set is uniform
-    # by construction (events*7919 % W), so per-cell density is
-    # analytic — sf0.1's 600k rows over 2048 res-6 cells ≈ 293.  This
-    # removes the per-call sampling pass; the estimate only places the
-    # first ring (r=1 for any sf here) — the guard radius + escalation
-    # keep the RESULT identical for any hint value (joins.py contract).
     from veranda_spark.operators.joins import knn_join
 
-    return knn_join(
-        _points(spark, sf_dir), _queries_df(spark), k=KNN_K, res=CELL_RES,
-        per_cell_hint=293.0,
-    )
+    return knn_join(_points(spark, sf_dir), _queries_df(spark), k=KNN_K, res=CELL_RES)
 
 
 def q_point_in_tile(spark, sf_dir):

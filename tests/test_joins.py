@@ -102,22 +102,75 @@ def test_pip_join_classified_cover_edge_and_concave(spark, via):
         assert sum(p == "mp" for p, _ in want) > 50
 
 
-@pytest.mark.parametrize("k", [1, 5, 20])
+def _knn_brute(ids, xs, ys, qpts, k):
+    """Exact (query_id, point_id, dist_sq, knn_rank) rows, ORDER BY
+    dist_sq, point_id per query."""
+    rows = []
+    for qid, qx, qy in qpts:
+        d2 = (xs - qx) ** 2 + (ys - qy) ** 2
+        rows += [(qid, int(ids[j]), int(d2[j]), rank)
+                 for rank, j in enumerate(np.lexsort((ids, d2))[:k], 1)]
+    return sorted(rows)
+
+
+def _knn_rows(df):
+    return sorted((r["query_id"], r["point_id"], r["dist_sq"], r["knn_rank"])
+                  for r in df.collect())
+
+
+@pytest.mark.parametrize("k", [1, 5, 20, 3500])
 def test_knn_matches_bruteforce(spark, points, k):
     rng = np.random.default_rng(42)
     qpts = [(int(i), int(x), -int(y)) for i, (x, y) in enumerate(rng.integers(0, 1024, (25, 2)))]
     queries = spark.createDataFrame(qpts, schema="query_id long, qx long, qy long")
-    got = knn_join(points, queries, k=k, res=5).collect()
-    ids, xs, ys = _points_np()
-    for qid, qx, qy in qpts:
-        d2 = (xs - qx) ** 2 + (ys - qy) ** 2
-        order = np.lexsort((ids, d2))[:k]
-        want = [(int(ids[j]), int(d2[j])) for j in order]
-        mine = sorted(
-            [(r["point_id"], r["dist_sq"]) for r in got if r["query_id"] == qid],
-            key=lambda t: (t[1], t[0]),
-        )
-        assert mine == want, f"query {qid} k={k}"
+    # one pass: the query collect, then the top-k map + its one merge
+    points.count()  # materialize the cached fixture outside the count
+    sc = spark.sparkContext
+    sc.setJobGroup(f"knn_k{k}", "knn_join one pass")
+    got = _knn_rows(knn_join(points, queries, k=k, res=5))
+    sc.setJobGroup("knn_done", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(f"knn_k{k}"))
+    assert n_jobs <= 3, n_jobs
+    assert got == _knn_brute(*_points_np(), qpts, k)
+
+
+def test_knn_heavy_ties_across_batches(spark):
+    # ~2000 points with shuffled ids on a 10x10 lattice: every distance is
+    # tied ~20 ways, and the ties straddle 4 partitions and many Arrow
+    # batches, so the per-batch top-k (cut inside a tie group at k=5) and
+    # the merge (at k=37) must break ties on point id as the brute force does
+    n = 2000
+    ids = np.random.default_rng(3).permutation(n) * 5 + 11
+    pos = np.arange(n) % 100
+    xs, ys = 16 * (pos % 10) - 80, 16 * (pos // 10) - 40
+    points = spark.createDataFrame(
+        [(int(i), int(x), int(y)) for i, x, y in zip(ids, xs, ys)],
+        "point_id long, px long, py long",
+    ).repartition(4)
+    qpts = [(0, -8, 32), (1, -80, -40), (2, 100_000, -250_000)]  # centre, corner, far outside
+    queries = spark.createDataFrame(qpts, "query_id long, qx long, qy long")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "128")
+    try:
+        for k in (5, 37):
+            got = _knn_rows(knn_join(points, queries, k=k, res=5))
+            assert got == _knn_brute(ids, xs, ys, qpts, k), k
+        assert knn_join(points, queries.limit(0), k=37, res=5).collect() == []
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            knn_join(points, queries, k=0)
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_knn_ring_guard_is_the_covered_radius(spark):
+    # 32-px cells, query in cell (0,0): A sits in the radius-1 ring's
+    # corner cell at d2=4050 (inside (2*32)^2), B just outside that ring
+    # at d2=2500.  Only a guard of (r*32)^2 keeps searching and finds B.
+    points = spark.createDataFrame([(1, 61, 61), (2, 66, 16)], "point_id long, px long, py long")
+    queries = spark.createDataFrame([(0, 16, 16)], "query_id long, qx long, qy long")
+    got = [tuple(r) for r in knn_join(points.coalesce(1), queries, k=1, res=5).collect()]
+    assert got == [(0, 2, 2500, 1)]
 
 
 def test_point_in_tile_join(spark, points):
@@ -151,37 +204,6 @@ def test_cell_histogram_and_salt_map(spark, points):
     assert total == N
     salt = derive_salt_map(hist, target_rows_per_part=100)
     assert salt and all(v >= 2 for v in salt.values())
-
-
-def test_knn_histogram_reuse_skips_sampled_pass(spark, points):
-    # VERDICT r3 #8: a caller-maintained cell histogram replaces the
-    # sampled density pass — same answer, and construction runs fewer
-    # jobs on the point table (one tiny agg over occupied cells instead)
-    rng = np.random.default_rng(7)
-    qpts = [(int(i), int(x), -int(y))
-            for i, (x, y) in enumerate(rng.integers(0, 1024, (10, 2)))]
-    queries = spark.createDataFrame(qpts, schema="query_id long, qx long, qy long")
-    hist = cell_histogram(points, "px", "py", res=5).cache()
-    hist.count()  # materialize once, as a maintaining caller would
-
-    sc = spark.sparkContext
-    sc.setJobGroup("knn_sampled", "knn without histogram")
-    base = knn_join(points, queries, k=5, res=5)
-    sc.setJobGroup("knn_hist", "knn with cached histogram")
-    reused = knn_join(points, queries, k=5, res=5, histogram=hist)
-    sc.setJobGroup("knn_done", "")
-    tracker = sc.statusTracker()
-    n_sampled = len(tracker.getJobIdsForGroup("knn_sampled"))
-    n_hist = len(tracker.getJobIdsForGroup("knn_hist"))
-    # the histogram path must not add point-table jobs: strictly fewer
-    # or equal construction jobs, and the sampled pass disappears
-    assert n_hist <= n_sampled, (n_hist, n_sampled)
-    got = sorted((r["query_id"], r["point_id"], r["dist_sq"])
-                 for r in reused.collect())
-    want = sorted((r["query_id"], r["point_id"], r["dist_sq"])
-                  for r in base.collect())
-    assert got == want
-    hist.unpersist()
 
 
 def test_point_in_tile_join_planetary_flip(spark, points):

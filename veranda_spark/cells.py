@@ -72,8 +72,8 @@ def parent_cell(cell: Column, parent_res: int) -> Column:
 
 def ring_cells(cell: Column, k: int, res: int) -> Column:
     """Array of all cell ids within Chebyshev distance k of ``cell``
-    ((2k+1)^2 cells — H3 grid_disk analog).  Used for kNN candidate
-    generation and neighborhood joins."""
+    ((2k+1)^2 cells — H3 grid_disk analog).  Used for neighborhood
+    joins."""
     _, ix, iy = unpack_cell(cell)
     dxs = F.sequence(F.lit(-k), F.lit(k))
     return F.flatten(

@@ -4,8 +4,9 @@ North-rule additions over the reference (SURVEY.md §2.3): veranda's only
 join-shaped computations are register⋈mosaic tile pruning (J1),
 polygon⋈tile intersection (J2, base.py:546-555) and point→tile lookup
 (J3, base.py:471-477).  This module re-expresses them as real Spark joins
-and adds what veranda lacks: kNN (ring expansion + distance re-rank) and
-explicit skew handling (cell histogram → salted broadcast join).
+and adds what veranda lacks: kNN (an exact top-k per Arrow batch by cell
+ring search, merged by one window) and explicit skew handling (cell
+histogram → salted broadcast join).
 
 All coordinates here are integer pixel coords (SURVEY.md §7 hard-part #1:
 join on integers, never rounded floats); distances are exact integer
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from veranda_spark.cells import CELL_OFFSET, cell_id, ring_cells
+from veranda_spark.cells import CELL_OFFSET, cell_id
 from veranda_spark.functions.geometry import (
     is_ring_list_column,
     points_in_rings,
@@ -271,7 +272,7 @@ def point_in_tile_join(
     return keyed.join(tiles if big_dim else F.broadcast(tiles), "tile_id", "inner")
 
 
-# ---- kNN by ring expansion --------------------------------------------------
+# ---- kNN: exact per-batch top-k, one merge ---------------------------------
 
 
 def knn_join(
@@ -285,136 +286,68 @@ def knn_join(
     query_id: str = "query_id",
     qx: str = "qx",
     qy: str = "qy",
-    max_rounds: int = 4,
-    per_cell_hint: float | None = None,
-    hist_sample: int = 16,
-    histogram: DataFrame | None = None,
 ) -> DataFrame:
     """k-nearest-neighbors of each query point (north-rule addition; no
     reference analog — SURVEY.md §2.3 J3 note).
 
-    Plan: iterative cell-ring expansion.  Round i broadcast-joins the
-    (small) query set, exploded over its Chebyshev ring of radius r_i, to
-    the (big) point set on the cell key — the big side never shuffles.
-    A query is satisfied once its k-th candidate lies within the
-    guaranteed-covered radius r_i·cellsize (no closer point can hide
-    outside the ring).  Unsatisfied queries escalate; stragglers fall back
-    to a brute-force broadcast NL join.
+    The query side must be small: it is collected to the driver and
+    shipped to every task.  One ``mapInPandas`` over the points sorts
+    each Arrow batch by (cy, cx) cell at ``res``; per query it reads a
+    doubling Chebyshev ring of cells as ``searchsorted`` row slices until
+    the k-th candidate lies within the ring's guaranteed radius r·2^res
+    (any point outside is strictly farther) or the ring covers the
+    batch, and emits the batch top-k in (dist_sq, point_id) order.  One
+    ``row_number`` window per query keeps the first k.  Exact: the global
+    top-k under a total order is a subset of the union of the per-batch
+    top-k under that order, so ties break on point id as ``ORDER BY
+    dist_sq, point_id`` does.  Distances are exact integer squared
+    distances; rows with a null coordinate match nothing."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    qrows = queries.select(query_id, F.col(qx).cast("long").alias("_qx"),
+                           F.col(qy).cast("long").alias("_qy")).dropna(subset=["_qx", "_qy"]).collect()
+    qids = np.array([r[0] for r in qrows])
+    q = np.array([r[1:] for r in qrows], "int64").reshape(-1, 2)
 
-    Distances are exact integer squared distances; ties break on point id
-    so output is deterministic and oracle-reproducible.
-    """
-    size = 1 << res
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(px).cast("long").alias("_px"),
-        F.col(py).cast("long").alias("_py"),
-    ).withColumn("_pcell", cell_id(F.col("_px"), F.col("_py"), res))
-    qs = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col(qx).cast("long").alias("_qx"),
-        F.col(qy).cast("long").alias("_qy"),
-    )
+    def topk(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if pdf.empty or not len(q):
+                continue
+            p = pdf[["_px", "_py"]].to_numpy("int64")
+            o = np.lexsort((p >> res).T)  # (cy, cx) order
+            p, ids = p[o], pdf["_pid"].to_numpy()[o]
+            c = p >> res
+            c0, c1 = c.min(0), c.max(0)
+            nx = c1[0] - c0[0] + 1
+            key = (c - c0) @ np.array([1, nx])
+            sel = []
+            for qi, (qp, qc) in enumerate(zip(q, q >> res)):
+                r = 1
+                while True:
+                    a, b = np.maximum(qc - r, c0), np.minimum(qc + r, c1)  # ring ∩ batch extent
+                    row = (np.arange(a[1], b[1] + 1) - c0[1]) * nx - c0[0]
+                    lo = np.searchsorted(key, row + a[0])
+                    n = np.maximum(np.searchsorted(key, row + b[0], "right") - lo, 0)
+                    cand = np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n)  # ∪ [lo, lo+n)
+                    d2 = ((p[cand] - qp) ** 2).sum(1)
+                    if (a == c0).all() and (b == c1).all() or (
+                            len(d2) >= k and np.partition(d2, k - 1)[k - 1] <= (r << res) ** 2):
+                        break
+                    r *= 2
+                top = cand[np.lexsort((ids[cand], d2))[:k]]
+                sel.append((np.full(len(top), qi), top))
+            qi, top = (np.concatenate(a) for a in zip(*sel))
+            yield pd.DataFrame({"_qid": qids[qi], "_pid": ids[top], "_d2": ((p[top] - q[qi]) ** 2).sum(1)})
 
-    remaining = qs
-    results: DataFrame | None = None
-    # adaptive initial radius from the CELL HISTOGRAM (round-2: the bbox
-    # average under-estimates density on hotspot-skewed data — a huge
-    # near-empty bbox drives a needlessly large first ring).  The median
-    # occupied-cell count is robust to both skew and empty space; the
-    # guard radius + brute-force fallback keep correctness independent of
-    # the estimate.  Round-3: the estimate no longer costs a full pass —
-    # callers with a maintained histogram pass per_cell_hint (median rows
-    # per occupied cell); otherwise a deterministic 1-in-hist_sample hash
-    # sample of the point table is histogrammed and scaled back up;
-    # round-4 callers can instead pass histogram=cell_histogram(points,..)
-    # (same res) so the estimate is one agg over occupied cells — no
-    # point-table rescan on repeated kNN calls.  A
-    # wrong estimate only moves work between rounds, never the answer.
-    import math
-
-    per_cell = per_cell_hint
-    if per_cell is None and histogram is not None:
-        # round-4 (VERDICT r3 #8): a caller-maintained cell_histogram()
-        # frame (columns cell,count — same res!) replaces the sampled
-        # pass: the median comes from ONE tiny agg over occupied cells
-        # (cache the histogram and repeated kNN calls never rescan the
-        # point table for density estimation)
-        stats = histogram.agg(
-            F.count("*").alias("n_cells"),
-            F.percentile_approx("count", 0.5).alias("p50"),
-        ).collect()[0]
-        if stats["n_cells"]:
-            per_cell = float(stats["p50"])
-    if per_cell is None:
-        spts = pts
-        scale = 1
-        if hist_sample > 1:
-            spts = pts.filter(
-                F.pmod(F.xxhash64("_pid"), F.lit(hist_sample)) == 0
-            )
-            scale = hist_sample
-        stats = spts.groupBy("_pcell").count().agg(
-            F.count("*").alias("n_cells"),
-            F.percentile_approx("count", 0.5).alias("p50"),
-        ).collect()[0]
-        if stats["n_cells"]:
-            per_cell = float(stats["p50"]) * scale
-    if per_cell is not None and per_cell > 0:
-        # ring of radius r covers (2r+1)^2 cells; aim for ~3k candidates
-        r = max(1, int(math.ceil((math.sqrt(3.0 * k / per_cell) - 1) / 2)))
-        r = min(r, 64)
-    else:
-        r = 1
-    for _ in range(max_rounds):
-        ring = remaining.withColumn(
-            "_cell", F.explode(ring_cells(cell_id(F.col("_qx"), F.col("_qy"), res), r, res))
-        )
-        cand = pts.join(F.broadcast(ring), pts["_pcell"] == ring["_cell"], "inner")
-        dx = F.col("_px") - F.col("_qx")
-        dy = F.col("_py") - F.col("_qy")
-        cand = cand.withColumn("_d2", dx * dx + dy * dy)  # exact integer distance
-        w = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
-        # localCheckpoint the (tiny: ≤ k rows/query) ranked frame — the
-        # round's convergence probe (take(1) on the anti-join), the
-        # sat_ids agg AND the caller's final action all read it, so
-        # without the materialization the big candidate join + window
-        # executes up to three times per round (round-9, guide §1/§2.4)
-        ranked = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .localCheckpoint(eager=True)
-        )
-        # satisfied: k candidates AND kth distance within guaranteed radius
-        guard = (r * size) ** 2
-        sat_ids = (
-            ranked.groupBy("_qid")
-            .agg(F.count("*").alias("_n"), F.max("_d2").alias("_dk"))
-            .filter((F.col("_n") == k) & (F.col("_dk") <= guard))
-            .select("_qid")
-        )
-        done = ranked.join(sat_ids, "_qid", "left_semi")
-        results = done if results is None else results.unionByName(done)
-        remaining = remaining.join(sat_ids, "_qid", "left_anti")
-        if not remaining.take(1):
-            remaining = None
-            break
-        r *= 4
-    if remaining is not None and remaining.take(1):
-        # brute force for stragglers (tiny query side → broadcast NL join)
-        cand = pts.crossJoin(F.broadcast(remaining))
-        dx = F.col("_px") - F.col("_qx")
-        dy = F.col("_py") - F.col("_qy")
-        cand = cand.withColumn("_d2", dx * dx + dy * dy)
-        w = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
-        brute = cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
-        results = brute if results is None else results.unionByName(brute)
-    return results.select(
-        F.col("_qid").alias(query_id),
-        F.col("_pid").alias(point_id),
-        F.col("_d2").alias("dist_sq"),
-        F.col("_rn").alias("knn_rank"),
-    )
+    schema = T.StructType([T.StructField("_qid", queries.schema[query_id].dataType),
+                           T.StructField("_pid", points.schema[point_id].dataType),
+                           T.StructField("_d2", T.LongType())])
+    pts = points.select(F.col(point_id).alias("_pid"), F.col(px).cast("long").alias("_px"),
+                        F.col(py).cast("long").alias("_py")).dropna(subset=["_px", "_py"])
+    rank = F.row_number().over(Window.partitionBy("_qid").orderBy("_d2", "_pid"))
+    return pts.mapInPandas(topk, schema).withColumn("_rn", rank).filter(F.col("_rn") <= k).select(
+        F.col("_qid").alias(query_id), F.col("_pid").alias(point_id),
+        F.col("_d2").alias("dist_sq"), F.col("_rn").alias("knn_rank"))
 
 
 # ---- skew handling ----------------------------------------------------------

@@ -18,7 +18,7 @@ canonicalized (id_a < id_b) to avoid duplicates and self-pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from veranda_spark.functions.text import (
@@ -48,8 +48,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 def dedup_keep_first(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup keeping the smallest id per fingerprint group (the
     deterministic survivor rule)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("fp").orderBy(F.col(id_col).asc())
     return (
         df.withColumn("fp", fingerprint(F.col(text_col)))
@@ -296,71 +294,58 @@ def connected_components(
     PAIRS under-specify dedup: if A~B and B~C, all three are one group
     even when A~C never surfaced — survivor selection needs components.
 
-    Min-label propagation WITH pointer doubling: each round every node
-    takes the min label in its neighborhood, then compresses label →
-    label-of-label (path halving), so even a pure chain converges in
-    O(log n) rounds instead of O(diameter).  Each round is two shuffles;
-    lineage is truncated with localCheckpoint every round so plans stay
-    flat at web scale.  Raises if max_iter rounds do not converge.
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) rewrites one edge
+    frame ``(hi, lo)``, hi >= lo, each round:
 
-    ``stats`` (optional) receives {"rounds": <rounds run including the
-    final no-change round>} — the hook the scale stress-test uses to
-    assert the O(log diameter) convergence claim (VERDICT r7 #5)."""
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-    # Round-9 (guide §2.4 "remove shuffles outright"): a one-time
-    # self-loop per node folds the old separate labels⋈neigh "least(own,
-    # neighborhood-min)" join into the SAME aggregation that computes the
-    # neighborhood min — min over (in-neighbors ∪ self) ≡
-    # least(own label, min over in-neighbors).  The self row also carries
-    # the node's pre-round label out of the agg (``old``), so convergence
-    # is a shuffle-free filter-count on the checkpointed frame instead of
-    # a per-round new⋈old join.  Two joins fewer per round; identical
-    # label evolution, hence identical components and round count.
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+    - large-star: each neighbour v >= u of node u links to
+      min(N(u) ∪ {u}), a window min by node over both edge directions;
+    - small-star: each hi and each of its lo's link to that hi's
+      smallest lo, a window min by hi.
+
+    Neither step changes connectivity, and the frame converges to a star
+    forest, one row per node — (leaf, root) or (root, root) — that both
+    steps map to itself.  The check tests exactly that: no node has a
+    smaller neighbour and a second row.  ("No lo is also a hi" is not
+    enough: it can stop with a node linked to two roots.)  A round is
+    distinct + one eager localCheckpoint (flat plans) + that one check.
+    The paper bounds the rounds by O(log² n) for any id order; a shuffled
+    2000-node path takes 9, the sorted 2^18-node chain 18.  Raises
+    RuntimeError if ``max_iter`` rounds do not converge.
+
+    Duplicate and reversed pairs collapse.  A self-pair (x, x) or a pair
+    with one null side (x, None) still makes x a node; null ids never are.
+
+    ``stats`` (optional) receives {"rounds": <rounds run, including the
+    last one, whose check found the star forest>}."""
+    hi, lo, u, v, m = (F.col(c) for c in ("hi", "lo", "u", "v", "m"))
+    a, b = F.col(id_a), F.col(id_b)
+    edges = pairs.select(F.greatest(a, b).alias("hi"), F.least(a, b).alias("lo")).filter(
+        hi.isNotNull()
     )
-    edges2 = edges.union(
-        labels.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).localCheckpoint(eager=True)
+    both_ways = F.inline(F.array(F.struct(hi.alias("u"), lo.alias("v")),
+                                 F.struct(lo.alias("u"), hi.alias("v"))))
     for it in range(max_iter):
         if stats is not None:
             stats["rounds"] = it + 1
-        upd = (
-            edges2.join(labels, edges2["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(
-                    F.when(F.col("dst") == F.col("src"), F.col("label"))
-                ).alias("old"),
-            )
-            .select(F.col("src").alias("node"), "label", "old")
+        large = (
+            edges.select(both_ways)
+            .withColumn("m", F.least(u, F.min(v).over(Window.partitionBy("u"))))
+            .filter(v >= u)
+            .select(v.alias("hi"), m.alias("lo"))
         )
-        # pointer doubling: label <- label(label) (labels cover every node)
-        parents = upd.select(
-            F.col("node").alias("lnode"), F.col("label").alias("llabel")
+        small = large.withColumn("m", F.min(lo).over(Window.partitionBy("hi"))).select(
+            F.inline(F.array(F.struct(hi, m.alias("lo")), F.struct(lo.alias("hi"), m.alias("lo"))))
         )
-        new_labels = (
-            upd.join(parents, upd["label"] == parents["lnode"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("llabel", F.col("label"))
-                ).alias("label"),
-                "old",
-            )
-            .localCheckpoint(eager=True)
+        edges = small.distinct().localCheckpoint(eager=True)
+        unsettled = (
+            edges.select(both_ways)
+            .groupBy("u")
+            .agg(F.min(v).alias("v"), F.count("*").alias("n"))
+            .filter((v < u) & (F.col("n") > 1))
         )
-        changed = new_labels.filter(F.col("label") != F.col("old")).count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            return labels.select(F.col("node"), F.col("label").alias("component"))
+        if unsettled.isEmpty():
+            return edges.select(hi.alias("node"), lo.alias("component"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 

@@ -129,7 +129,7 @@ def local_df(spark: SparkSession, rows, schema, slices: int = 1):
 
 
 def stop_spark() -> None:
-    """Stop the active session (needed between local[8]/local[32] bench runs)."""
+    """Stop the active session (needed before starting one with a different master)."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()

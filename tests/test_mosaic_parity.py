@@ -149,3 +149,7 @@ def test_burn_in_numeric_order_last_writer_wins(spark):
     assert len(out) == 1
     canvas = np.frombuffer(out[0]["bytes"], dtype=np.uint8).reshape(8, 8)
     assert (canvas == 10).all()  # numeric max id placed last
+    # the stitched read places in the same native order over the window
+    win = read_window(df, g, 0, 0, 8, 8).collect()
+    assert len(win) == 1
+    assert (np.frombuffer(win[0]["bytes"], dtype=np.uint8) == 10).all()

@@ -30,6 +30,14 @@ def _hotspot_rows(spark, n=120):
     )
 
 
+def _every_tile(n_salt):
+    return {
+        f"{r}_{c}": n_salt
+        for r in range(GRID.n_tile_rows)
+        for c in range(GRID.n_tile_cols)
+    }
+
+
 def _canvases(tiles):
     return {
         t["tile_id"]: np.frombuffer(t["bytes"], dtype=t["dtype"]).reshape(
@@ -43,7 +51,7 @@ def test_salted_matches_plain(spark):
     df = _hotspot_rows(spark).cache()
     plain = _canvases(burn_in(df, GRID, per_layer=False).collect())
     salted = _canvases(
-        burn_in_salted(df, GRID, salt_map={"0_0": 8}, default_salt=1).collect()
+        burn_in_salted(df, GRID, salt_map={"0_0": 8}).collect()
     )
     assert set(plain) == set(salted)
     for tid in plain:
@@ -53,9 +61,37 @@ def test_salted_matches_plain(spark):
 def test_salted_all_tiles_salted(spark):
     df = _hotspot_rows(spark, 60).cache()
     plain = _canvases(burn_in(df, GRID, per_layer=False).collect())
-    salted = _canvases(burn_in_salted(df, GRID, default_salt=4).collect())
+    salted = _canvases(burn_in_salted(df, GRID, salt_map=_every_tile(4)).collect())
     for tid in plain:
         np.testing.assert_array_equal(salted[tid], plain[tid], err_msg=tid)
+
+
+def test_salted_keeps_layers_apart(spark):
+    # two layers piled on the same hotspot: one canvas per (tile, layer),
+    # exactly burn_in's default per_layer=True — never one mixed canvas
+    df = (
+        _hotspot_rows(spark)
+        .withColumn("var", F.lit("sig"))
+        .withColumn("layer_id", (F.col("image_id") % 2 + 1).cast("int"))
+        .cache()
+    )
+
+    def keyed(tiles):
+        return {
+            (t["tile_id"], t["var"], t["layer_id"]): (
+                t["n_images"],
+                np.frombuffer(t["bytes"], dtype=t["dtype"]).reshape(t["h"], t["w"]),
+            )
+            for t in tiles
+        }
+
+    plain = keyed(burn_in(df, GRID).collect())
+    salted = keyed(burn_in_salted(df, GRID, salt_map={"0_0": 8}).collect())
+    assert {k[2] for k in plain} == {1, 2}
+    assert set(salted) == set(plain)
+    for k, (n, canvas) in plain.items():
+        assert salted[k][0] == n, k
+        np.testing.assert_array_equal(salted[k][1], canvas, err_msg=str(k))
 
 
 def test_salted_rejects_string_order(spark):
@@ -96,7 +132,7 @@ def test_salted_multiband_matches_plain(spark):
     df = _hotspot_rows_rgb(spark).cache()
     plain = _canvases_nd(burn_in(df, GRID, per_layer=False).collect())
     salted = _canvases_nd(
-        burn_in_salted(df, GRID, salt_map={"0_0": 8}, default_salt=2).collect()
+        burn_in_salted(df, GRID, salt_map={**_every_tile(2), "0_0": 8}).collect()
     )
     assert set(plain) == set(salted)
     for tid in plain:

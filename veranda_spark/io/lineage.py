@@ -96,6 +96,29 @@ def _hadoop_read_text(spark: SparkSession, p: str) -> str:
     return bytes(baos.toByteArray()).decode()
 
 
+def _checkpoint_once(spark: SparkSession, marker: str, fp: str, what: str, write) -> None:
+    """Run ``write()`` unless ``marker`` says it already completed with
+    the parameter fingerprint ``fp``; the marker lands only after a
+    complete write.  An empty marker was written before fingerprints
+    existed: accept it (the data is valid) and stamp it.  A marker with
+    a different fingerprint raises — resuming with different parameters
+    must fail loudly, never reuse stale state.  (Input identity is the
+    caller's contract: one checkpoint location per input, the same
+    ownership rule as any streaming checkpoint.)"""
+    if not _hadoop_path_exists(spark, marker):
+        write()
+        _hadoop_touch(spark, marker, fp)
+        return
+    prev = _hadoop_read_text(spark, marker)
+    if prev == "":
+        _hadoop_touch(spark, marker, fp)
+    elif prev != fp:
+        raise ValueError(
+            f"{what} was written with different parameters ({prev}); "
+            f"use a fresh checkpoint location for {fp}"
+        )
+
+
 def read_lineage(spark: SparkSession, base: str) -> DataFrame | None:
     """One lineage row per committed data row — a projection of the
     sink's current version (``psnr`` null for lossless runs).  None when

@@ -1187,15 +1187,12 @@ def q_resample_average(spark, sf_dir):
 
     yy, xx = np.mgrid[0:64, 0:64]
     arr = ((3 * xx + 5 * yy) % 251).astype("float64")
-    # round-9: 1-slice local frames (veranda_spark.session.local_df) so
-    # each KB-sized leg runs single-task instead of scheduling ~32
-    # near-empty Python round-trips per Arrow stage
-    from veranda_spark.session import local_df as _one_part_df
+    # driver-built legs are Arrow local relations: scanning one runs no
+    # Python worker (veranda_spark.session.local_df)
+    from veranda_spark.session import local_df
 
-    def _one_part(rows, schema):
-        return _one_part_df(spark, rows, schema)
-
-    df = _one_part(
+    df = local_df(
+        spark,
         [("img1", arr.tobytes(), 64, 64, "raw", "float64", 0, 0)],
         "image_id string, bytes binary, w int, h int, fmt string, "
         "dtype string, px_col0 long, px_row0 long",
@@ -1249,7 +1246,8 @@ def q_resample_average(spark, sf_dir):
             )
             tile_rows.append((f"T{tr}{tc}", tr, tc, "data", 1,
                               sub.tobytes(), 64, 64, 1, "float64"))
-    tiles = _one_part(
+    tiles = local_df(
+        spark,
         tile_rows,
         "tile_id string, tile_row long, tile_col long, var string, "
         "layer_id int, bytes binary, h int, w int, channels int, "
@@ -1290,7 +1288,8 @@ def q_resample_average(spark, sf_dir):
 
     rq, cq = np.mgrid[0:64, 0:64].astype("float64")
     quad = (rq * rq + 3 * rq + 7) * (cq * cq + 5 * cq + 11)
-    df_q = _one_part(
+    df_q = local_df(
+        spark,
         [("imgq", quad.tobytes(), 64, 64, "raw", "float64", 0, 0)],
         "image_id string, bytes binary, w int, h int, fmt string, "
         "dtype string, px_col0 long, px_row0 long",
@@ -1308,11 +1307,13 @@ def q_resample_average(spark, sf_dir):
         "layer_id int, bytes binary, h int, w int, channels int, "
         "dtype string, n_images long"
     )
-    ta = _one_part(
+    ta = local_df(
+        spark,
         [("A00", 0, 0, "x", 1, va.tobytes(), 64, 64, 1, "float64", 1)],
         tile_schema,
     )
-    tb = _one_part(
+    tb = local_df(
+        spark,
         [("A00", 0, 0, "y", 1, vb.tobytes(), 64, 64, 1, "float64", 1)],
         tile_schema,
     )

@@ -2,6 +2,7 @@
 (from_filepaths → select_* → read / export) over the Spark engine."""
 
 import numpy as np
+import pytest
 
 from veranda_spark.api import RasterReader, RasterWriter
 from veranda_spark.fixtures import MOSAIC_2X2_GRID, ONE_TILE_GRID, cube_to_rows, simple_cube
@@ -86,3 +87,48 @@ def test_reader_from_sink_roundtrip(spark, tmp_path):
     assert set(got) == set(want)
     for k in want:
         np.testing.assert_array_equal(got[k], want[k], err_msg=str(k))
+
+
+LOCAL_SCHEMA = "i int, l long, s string, b binary, a array<array<array<double>>>"
+LOCAL_ROWS = [
+    (1, 2**40, None, b"\x00\xff", [[[1.0, 2.0]], []]),
+    (2, None, "x", None, []),
+    (None, -5, "", b"", None),
+]
+
+
+@pytest.mark.parametrize("rows", [LOCAL_ROWS, []], ids=["rows", "empty"])
+def test_local_df_is_a_local_relation(spark, rows):
+    # driver-built frames are Arrow local relations: the plan is a
+    # LocalTableScan and collecting one runs no Spark job (a parallelized
+    # list ran a pickled-row Python task on every scan)
+    from veranda_spark.session import local_df
+
+    df = local_df(spark, rows, LOCAL_SCHEMA)
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    sc.setJobGroup("local_df_collect", "local_df collect")
+    got = df.collect()
+    sc.setJobGroup("local_df_done", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("local_df_collect")) == 0
+    # exact round trip: nulls, int vs long, binary, nested empty lists;
+    # zero rows keep the declared schema
+    assert [tuple(r) for r in got] == rows
+    assert df.schema.simpleString() == (
+        "struct<i:int,l:bigint,s:string,b:binary,a:array<array<array<double>>>>"
+    )
+
+
+def test_local_df_filter_guards_a_derived_column(spark):
+    # projections over a local relation are not evaluated before filter
+    # pushdown: under ANSI, a division that a later filter guards must
+    # not raise, and a pruned raising column is never evaluated
+    from pyspark.sql import functions as F
+
+    from veranda_spark.session import local_df
+
+    df = local_df(spark, [(1, 2), (3, 0)], "a long, b long")
+    guarded = df.withColumn("x", F.col("a") / F.col("b")).filter("b != 0")
+    assert [r["x"] for r in guarded.collect()] == [0.5]
+    trap = df.withColumn("t", F.raise_error(F.lit("evaluated")))
+    assert trap.select("a").count() == 2

@@ -51,6 +51,16 @@ def test_pip_join_matches_bruteforce(spark, points):
     assert len(want) > 50
 
 
+def test_pip_join_empty_polygon_dict(spark, points):
+    # an empty dict is a zero-row local relation the optimizer may prune:
+    # inner gives nothing, left keeps every point with a null polygon_id
+    assert pip_join(points, {}).count() == 0
+    left = pip_join(points, {}, how="left").collect()
+    assert len(left) == N
+    assert all(r["polygon_id"] is None for r in left)
+    assert sorted(r["point_id"] for r in left) == list(range(N))
+
+
 @pytest.mark.parametrize("via", ["dict", "table"])
 def test_pip_join_classified_cover_edge_and_concave(spark, via):
     # The cell cover is classified (outside-dropped / full-skip /

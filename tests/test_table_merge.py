@@ -793,6 +793,27 @@ def test_delete_rows_partitioned(spark, base):
     assert v1 >= {3, 7}
 
 
+@pytest.mark.parametrize("partitioned", [True, False])
+def test_delete_rows_empty_keys_is_identity(spark, base, tmp_path, partitioned):
+    # a zero-row local relation as the key set: the optimizer may prune
+    # the empty semi/anti join side, and the new version must still read
+    # back identical to the previous one
+    from veranda_spark.io.table import delete_rows
+    from veranda_spark.session import local_df
+
+    path, part = base, "p"
+    if not partitioned:
+        path, part = str(tmp_path / "flat_empty_keys"), None
+        create_table(read_table(spark, base), path)
+    before = _rows(read_table(spark, path))
+    res = delete_rows(spark, path, local_df(spark, [], "k long"), keys=["k"],
+                      partition_by=part)
+    assert res == {"version": 2, "previous": 1}
+    assert current_version(path) == 2
+    assert _rows(read_table(spark, path)) == before
+    assert len(before) == 20
+
+
 def test_delete_rows_whole_partition_disappears(spark, base):
     from veranda_spark.io.table import delete_rows
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from veranda_spark.functions.codec import encode_image
 from veranda_spark.grid import RegularGrid
+from veranda_spark.session import local_df
 
 IMAGES_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -183,7 +184,7 @@ def cube_to_rows(
         )
         for lay in range(n)
     ]
-    return spark.createDataFrame(rows, schema=CUBE_ROWS_SCHEMA)
+    return local_df(spark, rows, CUBE_ROWS_SCHEMA)
 
 
 AUDIO_SCHEMA = "audio_id string, bytes binary, fmt string, rate int, n_samples int"

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from veranda_spark.session import local_df
+
 _WKB_POINT, _WKB_POLYGON = 1, 3
 
 
@@ -118,4 +120,4 @@ def polygons_df(
 ) -> DataFrame:
     """Small polygon dimension table with WKB geometry (broadcastable)."""
     rows = [(pid, wkb_polygon(poly)) for pid, poly in polygons.items()]
-    return spark.createDataFrame(rows, schema="polygon_id string, geometry binary")
+    return local_df(spark, rows, "polygon_id string, geometry binary")

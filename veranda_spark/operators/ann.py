@@ -574,14 +574,15 @@ def build_ivf_index(
     if rot is not None:
         for i, rvec in enumerate(rot):
             rows.append(("rot", i, None, [float(x) for x in rvec], None))
-    # dim-sized meta in ONE partition/file (round-9, guide §6 small
-    # files; see session.local_df for why not createDataFrame/coalesce)
+    # dim-sized meta in ONE file (guide §6 small files): the local
+    # relation spans min(rows, defaultParallelism) partitions, and
+    # coalescing it is free — its scan runs no Python
     from veranda_spark.session import local_df
 
     meta = local_df(
         spark, rows, "kind string, i int, j int, vec array<double>, sval string"
     )
-    create_table(meta, meta_path)
+    create_table(meta.coalesce(1), meta_path)
     return v
 
 

@@ -173,7 +173,7 @@ def pip_join(
     polygon select P7, base.py:510-557) against a small dict of
     single-ring polygons.
 
-    The dict becomes a one-slice, one-row-per-polygon frame and runs
+    The dict becomes a one-row-per-polygon local relation and runs
     through ``pip_join_table``'s plan (classified cover, broadcast
     equi-join on the cell key, exact re-check on boundary candidates).
     ``how="left"`` keeps unmatched points with a null polygon_id.

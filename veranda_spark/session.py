@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -104,6 +104,15 @@ def get_spark(
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # local_df frames are LocalRelations, and this rule would evaluate
+        # every projection over one on the driver BEFORE column pruning and
+        # filter pushdown: a pruned raise_error column, or an ANSI division
+        # by zero that a later filter guards, then fails the query.
+        # Excluded, those projections run as ordinary JVM tasks instead.
+        .config(
+            "spark.sql.optimizer.excludedRules",
+            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -112,20 +121,39 @@ def get_spark(
     return spark
 
 
-def local_df(spark: SparkSession, rows, schema, slices: int = 1):
-    """Small local rows → DataFrame in ``slices`` partitions (default 1).
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Small driver-local rows (tuples in ``schema`` order) → DataFrame.
 
-    ``spark.createDataFrame(list)`` parallelizes into defaultParallelism
-    Python slices, so every downstream stage of a dim-sized frame
-    schedules ~cores near-empty Python tasks — and ``.coalesce(1)`` is
-    WORSE: the coalesced task computes all parent slices sequentially,
-    each paying its own Python-worker handshake (measured 4.1s vs 0.55s
-    for one KB-sized pipeline in round 9).  A 1-slice parallelize is
-    single-task end to end.  Use for fixture rows, salt maps, cell
-    covers, index metadata — anything dim-sized and driver-local."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, slices), schema
+    The rows go to Spark as one Arrow table typed by the DDL ``schema``.
+    Below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) the result is a ``LocalRelation``: its plan is a
+    ``LocalTableScan`` in ``min(rows, defaultParallelism)`` partitions,
+    and collecting or broadcasting it runs no Spark job and no Python
+    worker.  ``createDataFrame`` over a list or a parallelized RDD maps
+    every row through pickled-row Python on each scan instead; the
+    150-key frame of perfbench tile_io's ``delete_rows`` was such a
+    one-task Python broadcast build.  Measured on a 4-core host
+    (``local[4]``, perfbench seed 1, traced): ``delete_rows`` 11 → 7
+    jobs, 1.57 → 0.86 s wall, longest task 0.68 → 0.15 s; over 12
+    interleaved pairs, spatial_join rows/s median 21470 → 24490 and
+    tile_io 10810 → 12140.  Use for fixture rows, salt maps, polygon
+    dicts, key sets, index metadata — anything dim-sized and
+    driver-local."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    if len(cols) != len(struct.fields):
+        raise ValueError(f"local_df: rows have {len(cols)} fields, schema {len(struct.fields)}")
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
     )
+    return spark.createDataFrame(table, struct)
 
 
 def stop_spark() -> None:

@@ -199,18 +199,25 @@ def test_compact_tiles(spark, tmp_path):
 
 
 def _crash_commit_once(monkeypatch):
-    """Make the next table commit fail after its data is staged: the
-    claimed version directory is left behind, ``_current`` never moves."""
-    real = table._fenced_promote_commit
+    """Make the next table commit die after its data is staged, as a
+    killed writer does: nothing is published, and the stage stays under
+    ``_staging/`` (moved to a name the writer's own cleanup does not
+    know).  Returns the list the debris path is appended to."""
+    import os
+    import uuid
+
+    real = table._publish
     calls = []
 
-    def crash(*args):
+    def crash(stage, vdir):
         if not calls:
-            calls.append(args)
+            debris = os.path.join(os.path.dirname(stage), uuid.uuid4().hex)
+            os.rename(stage, debris)
+            calls.append(debris)
             raise RuntimeError("simulated crash before commit")
-        return real(*args)
+        return real(stage, vdir)
 
-    monkeypatch.setattr(table, "_fenced_promote_commit", crash)
+    monkeypatch.setattr(table, "_publish", crash)
     return calls
 
 
@@ -234,19 +241,22 @@ def test_compact_keep_history_vacuums_orphans(spark, tmp_path, monkeypatch):
     snaps_before = {r["run_id"]: r["n_tiles"] for r in snapshots(spark, base).collect()}
 
     # a real crash between the staged data write and the commit: the
-    # rows sit in an uncommitted version directory nobody points at
+    # rows sit in an unpublished stage nobody reads
     orphan = burn_in(generate_images(spark, 40, seed=7), GRID, per_layer=False)
     calls = _crash_commit_once(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated crash"):
         write_tiles_checkpointed(orphan, base, run_id="crashed", scope="run")
-    orphan_stage = calls[0][1]
+    orphan_stage = calls[0]
     assert os.path.isdir(orphan_stage)  # staged debris on disk
     assert _tile_runs(spark, base) == committed  # invisible
 
     stats = compact_tiles(spark, base, keep_history=True)
-    assert not os.path.exists(orphan_stage)  # debris vacuumed
-    assert table.current_version(base) == 3  # re-claimed the orphan's slot
+    assert table.current_version(base) == 3  # the slot the crash never took
     assert _tile_runs(spark, base) == committed  # exactly one copy each
+    # the manual sweep vacuums the debris and changes no read
+    assert table.recover_orphans(base) == [os.path.basename(orphan_stage)]
+    assert not os.path.exists(orphan_stage)
+    assert _tile_runs(spark, base) == committed
     assert stats["files_after"] == stats["tiles"]
     # history preserved: same snapshots, time travel still works
     snaps_after = {r["run_id"]: r["n_tiles"] for r in snapshots(spark, base).collect()}
@@ -283,8 +293,8 @@ def test_replay_after_partial_crash_never_duplicates(spark, tmp_path, monkeypatc
 
 
 def test_crashed_first_write_is_replayed(spark, tmp_path, monkeypatch):
-    # a crash in the very first commit leaves version 1 with no
-    # _current; the rerun clears it and commits version 1 itself
+    # a crash in the very first commit publishes no version 1; the
+    # rerun commits version 1 itself, beside the crashed stage
     base = str(tmp_path / "sink")
     tiles = burn_in(generate_images(spark, 60, seed=8), GRID, per_layer=False).cache()
     _crash_commit_once(monkeypatch)

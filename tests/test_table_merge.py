@@ -57,8 +57,9 @@ def test_snapshot_isolation_time_travel(spark, base):
     assert (0, 0, "v0") in v1 and (0, 0, "X") not in v1
     assert (0, 0, "X") in v2
     assert list_versions(base) == [1, 2]
-    with pytest.raises(ValueError, match="does not exist"):
-        read_table(spark, base, version=9)
+    for missing in (9, 0):
+        with pytest.raises(ValueError, match="does not exist"):
+            read_table(spark, base, version=missing)
 
 
 def test_cow_links_untouched_partitions(spark, base):
@@ -84,24 +85,28 @@ def test_partition_move_rewrites_both_sides(spark, base):
 
 
 def test_crashed_merge_is_invisible(spark, base):
+    # a writer killed before its publish rename leaves only its stage —
+    # parquet under _staging/<uuid>/ — which changes no read and blocks
+    # no writer: the next merge commits version 2 with no recovery call
+    import uuid
+
     from veranda_spark.io.table import recover_orphans
 
-    # simulate a crash: orphan version dir exists but _current not bumped
-    orphan = os.path.join(base, "_versions", "000002")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "garbage"), "w") as f:
-        f.write("partial")
-    assert current_version(base) == 1
-    assert _rows(read_table(spark, base)) == _rows(read_table(spark, base, 1))
-    # a merge must NOT silently clobber the claim (concurrent-writer
-    # protection): it fails loudly; recover_orphans clears the crash debris
+    before = _rows(read_table(spark, base))
+    stage = os.path.join(base, "_staging", uuid.uuid4().hex)
+    spark.createDataFrame([(0, 0, "ghost")], "k long, p long, val string")\
+        .write.partitionBy("p").parquet(stage)
+    assert current_version(base) == 1 and list_versions(base) == [1]
+    assert _rows(read_table(spark, base)) == before
     upd = spark.createDataFrame([(0, 0, "Z")], "k long, p long, val string")
-    with pytest.raises(FileExistsError):
-        merge_into(spark, base, upd, keys=["k"], partition_by="p")
-    assert recover_orphans(base) == [2]
     res = merge_into(spark, base, upd, keys=["k"], partition_by="p")
-    assert res["version"] == 2
-    assert (0, 0, "Z") in _rows(read_table(spark, base))
+    assert res == {"version": 2, "previous": 1}
+    got = _rows(read_table(spark, base))
+    assert (0, 0, "Z") in got and (0, 0, "ghost") not in got
+    # the manual sweep removes the debris, and only the debris
+    assert recover_orphans(base) == [os.path.basename(stage)]
+    assert os.listdir(os.path.join(base, "_staging")) == []
+    assert _rows(read_table(spark, base)) == got
 
 
 def test_unpartitioned_merge_and_schema_guard(spark, tmp_path):
@@ -250,7 +255,7 @@ def _no_links(monkeypatch):
     monkeypatch.setattr(os, "link", _exdev)
 
 
-def test_manifest_mode_merge_no_links(spark, base, monkeypatch):
+def test_no_links_merge_copies_carried_partitions(spark, base, monkeypatch):
     # a filesystem that refuses hard links: the untouched partitions are
     # COPIED into v2 (same files, new inodes) instead of being referenced
     # from v1, and the merge semantics are unchanged
@@ -270,7 +275,7 @@ def test_manifest_mode_merge_no_links(spark, base, monkeypatch):
         assert not set(old.values()) & set(new.values())
 
 
-def test_manifest_table_survives_relocation(spark, tmp_path, monkeypatch):
+def test_no_links_table_survives_relocation(spark, tmp_path, monkeypatch):
     # every version directory is self-contained, with or without links:
     # moving the whole table directory must not break reads of any version
     import shutil
@@ -290,6 +295,7 @@ def test_manifest_table_survives_relocation(spark, tmp_path, monkeypatch):
     assert got == before
     assert (1, 1, "Y") in got and len(got) == 20
     assert len(_rows(read_table(spark, dst, version=1))) == 20
+    assert list_versions(dst) == [1, 2]
 
 
 def test_compact_table_partitioned(spark, tmp_path):
@@ -370,325 +376,135 @@ def test_compact_table_unpartitioned(spark, tmp_path):
     assert len(_rows(read_table(spark, path))) == 40
 
 
-def test_owner_scoped_orphan_recovery(spark, base):
-    # ADVICE r4 (medium): the CDC stream's automated orphan recovery must
-    # never delete a claim held by a concurrent compact_table / manual
-    # merge — only claims the stream itself stamped.
-    import json
+def test_same_base_race_exactly_one_commits(spark, base, monkeypatch):
+    # two writers from the same base: the one that publishes second
+    # finds its version number taken and fails loudly; the first
+    # commit survives whole and the loser leaves no stage behind
+    import veranda_spark.io.table as tbl
 
-    from veranda_spark.io.table import recover_orphans
-    from veranda_spark.streaming.append import merge_batch_handler
+    real = tbl._publish
+    rival = spark.createDataFrame([(2, 2, "rival")],
+                                  "k long, p long, val string")
 
-    ckpt = str(base) + "_ckpt"
-    handler = merge_batch_handler(base, ["k"], ckpt, partition_by="p")
+    def rival_publishes_first(stage, vdir):
+        monkeypatch.setattr(tbl, "_publish", real)
+        assert merge_into(spark, base, rival, keys=["k"],
+                          partition_by="p")["version"] == 2
+        real(stage, vdir)
 
-    # a concurrent compactor's LIVE claim: version dir + foreign owner
-    foreign = os.path.join(base, "_versions", "000002")
-    os.makedirs(foreign)
-    with open(os.path.join(foreign, "_claim.json"), "w") as f:
-        json.dump({"owner": "compact_table"}, f)
-
-    upd = spark.createDataFrame([(0, 0, "S")], "k long, p long, val string")
-    # the stream must NOT clear the foreign claim; merge then fails loudly
+    monkeypatch.setattr(tbl, "_publish", rival_publishes_first)
+    upd = spark.createDataFrame([(1, 1, "loser")],
+                                "k long, p long, val string")
     with pytest.raises(FileExistsError):
-        handler(upd, 0)
-    assert os.path.isdir(foreign), "stream deleted a foreign writer's claim"
-    assert os.path.exists(os.path.join(foreign, "_claim.json"))
-
-    # drop the compactor claim (as if it committed elsewhere / was
-    # manually recovered), then simulate the STREAM's own crashed claim:
-    # owner-scoped recovery clears it and the replayed batch applies
-    import shutil
-
-    shutil.rmtree(foreign)
-    with pytest.raises(FileNotFoundError):
-        # marker was never written (merge raised), so batch 0 replays
-        open(os.path.join(base, "_stream_batch_zzz"))
-    handler(upd, 0)  # claims 000002 itself now, commits
-    assert current_version(base) == 2
-
-    # stream's own crash debris: claim stamped with the stream's owner
-    own = os.path.join(base, "_versions", "000003")
-    os.makedirs(own)
-    import hashlib
-    tag = hashlib.md5(os.path.abspath(ckpt).encode()).hexdigest()[:12]
-    with open(os.path.join(own, "_claim.json"), "w") as f:
-        json.dump({"owner": f"merge_stream:{tag}"}, f)
-    upd2 = spark.createDataFrame([(1, 1, "T")], "k long, p long, val string")
-    handler(upd2, 1)  # recovery clears OUR orphan, merge proceeds
-    assert current_version(base) == 3
-    assert (1, 1, "T") in _rows(read_table(spark, base))
-
-    # manual recovery (owner=None) still clears everything
-    stray = os.path.join(base, "_versions", "000004")
-    os.makedirs(stray)
-    assert recover_orphans(base) == [4]
+        merge_into(spark, base, upd, keys=["k"], partition_by="p")
+    assert list_versions(base) == [1, 2]
+    got = _rows(read_table(spark, base))
+    assert (2, 2, "rival") in got and (1, 1, "v1") in got and len(got) == 20
+    assert os.listdir(os.path.join(base, "_staging")) == []
 
 
-def test_unowned_orphan_age_gate_self_heals(spark, base):
-    # review r5 #1: a crash in the microsecond mkdir->claim window leaves
-    # an UNOWNED orphan; owner-scoped recovery must clear it once it is
-    # older than the grace window (else the stream wedges forever), but
-    # must SKIP a fresh unowned dir (possibly a live writer mid-stamp).
-    import time
+def test_concurrent_publishers_take_each_version_once(tmp_path):
+    # more racing writers than cores, no Spark: every published version
+    # holds exactly the stage of the one writer told it won, losers get
+    # FileExistsError, and no stage outlives its writer
+    import sys
+    import threading
 
-    from veranda_spark.io.table import recover_orphans
+    import veranda_spark.io.table as tbl
 
-    fresh = os.path.join(base, "_versions", "000002")
-    os.makedirs(fresh)
-    assert recover_orphans(base, owner="merge_stream:x") == []
-    assert os.path.isdir(fresh), "fresh unowned dir must survive the grace"
-    old_t = time.time() - 3600
-    os.utime(fresh, (old_t, old_t))
-    assert recover_orphans(base, owner="merge_stream:x") == [2]
-    assert not os.path.isdir(fresh)
+    path = str(tmp_path / "race")
+    wins, twice, lock = {}, [], threading.Lock()
 
+    def writer(wid):
+        for i in range(25):
+            base = current_version(path)
+            try:
+                with tbl._staged_version(path, base) as stage:
+                    with open(os.path.join(stage, "who"), "w") as f:
+                        f.write(f"{wid}:{i}")
+            except FileExistsError:
+                continue
+            with lock:
+                if (base or 0) + 1 in wins:
+                    twice.append((base or 0) + 1)
+                wins[(base or 0) + 1] = f"{wid}:{i}"
 
-def test_compact_owner_unique_per_invocation(spark, tmp_path):
-    # review r5 #3: two compactors must never share an owner string, or
-    # owner-scoped recovery could clear a live second compactor's claim
-    import json
-
-    from veranda_spark.io.table import compact_table, create_table
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(8)], "k long, val string")
-    create_table(df, path)
-    # force file counts above threshold by two single-row merges, then
-    # compact; churn again so the SECOND compact also does real work
-    for j in range(2):
-        merge_into(spark, path,
-                   spark.createDataFrame([(100 + j, "x")], "k long, val string"),
-                   keys=["k"])
-    assert compact_table(spark, path, max_files=1)["compacted"] >= 1
-    for j in range(2):
-        merge_into(spark, path,
-                   spark.createDataFrame([(200 + j, "y")], "k long, val string"),
-                   keys=["k"])
-    assert compact_table(spark, path, max_files=1)["compacted"] >= 1
-    owners = []
-    for name in sorted(os.listdir(os.path.join(path, "_versions"))):
-        cp = os.path.join(path, "_versions", name, "_claim.json")
-        if os.path.exists(cp):
-            with open(cp) as f:
-                o = json.load(f)["owner"]
-            if o and o.startswith("compact_table:"):
-                owners.append(o)
-    assert len(owners) >= 2 and len(set(owners)) == len(owners), owners
-
-
-def test_null_owner_claim_is_never_age_swept(spark, base):
-    # review r5 pass-2 #1: a manual merge_into(owner=None) stamps
-    # {"owner": null} — PRESENT claim, distinct from NO claim.  The
-    # stream's owner-scoped recovery must never clear it, however old
-    # (a long manual merge's mtime can go stale while Spark writes).
-    import json
-    import time
-
-    from veranda_spark.io.table import recover_orphans
-
-    d = os.path.join(base, "_versions", "000002")
-    os.makedirs(d)
-    with open(os.path.join(d, "_claim.json"), "w") as f:
-        json.dump({"owner": None}, f)
-    old_t = time.time() - 7200
-    os.utime(d, (old_t, old_t))
-    assert recover_orphans(base, owner="merge_stream:x") == []
-    assert os.path.isdir(d)
-    # manual recovery still clears it
-    assert recover_orphans(base) == [2]
-
-
-def test_stale_heartbeat_claim_self_heals(spark, base):
-    # VERDICT r5 #5: a compactor that crashes mid-rewrite leaves a claim
-    # carrying a heartbeat promise (hb_s).  Once the claim mtime goes
-    # stale past stale_hb_multiple*hb_s, the stream's owner-scoped
-    # recovery sweeps it — the stream self-heals without manual
-    # recover_orphans(path).
-    import json
-    import time
-
-    from veranda_spark.io.table import recover_orphans
-
-    d = os.path.join(base, "_versions", "000002")
-    os.makedirs(d)
-    cp = os.path.join(d, "_claim.json")
-    with open(cp, "w") as f:
-        json.dump({"owner": "compact_table:deadbeef", "hb_s": 5.0}, f)
-    # fresh claim (heartbeat current): never touched
-    assert recover_orphans(base, owner="merge_stream:x") == []
-    assert os.path.isdir(d), "live compactor's claim must survive"
-    # heartbeat visibly broken: mtime 12*hb_s+ old -> swept
-    old_t = time.time() - 3600
-    os.utime(cp, (old_t, old_t))
-    assert recover_orphans(base, owner="merge_stream:x") == [2]
-    assert not os.path.isdir(d)
-
-
-def test_foreign_claim_without_promise_never_swept(spark, base):
-    # The pass-2 safety is preserved: a claim WITHOUT hb_s (a manual /
-    # pre-heartbeat-era writer made no liveness promise) is never
-    # age-swept no matter how stale its mtime.
-    import json
-    import time
-
-    from veranda_spark.io.table import recover_orphans
-
-    d = os.path.join(base, "_versions", "000002")
-    os.makedirs(d)
-    cp = os.path.join(d, "_claim.json")
-    with open(cp, "w") as f:
-        json.dump({"owner": "compact_table:nopromise"}, f)
-    old_t = time.time() - 7200
-    os.utime(cp, (old_t, old_t))
-    os.utime(d, (old_t, old_t))
-    assert recover_orphans(base, owner="merge_stream:x") == []
-    assert os.path.isdir(d)
-
-
-def test_claim_heartbeat_refreshes_mtime(tmp_path):
-    # The _claim_heartbeat context refreshes the claim file's mtime
-    # while the body runs, and stops when the body exits.
-    import time
-
-    from veranda_spark.io.table import _claim_heartbeat, _write_claim
-
-    d = str(tmp_path / "v2")
-    os.makedirs(d)
-    _write_claim(d, "compact_table:hb", hb_s=0.1)
-    cp = os.path.join(d, "_claim.json")
-    old_t = time.time() - 100
-    os.utime(cp, (old_t, old_t))
-    with _claim_heartbeat(d, hb_s=0.1):
-        time.sleep(0.5)
-        live_mtime = os.stat(cp).st_mtime
-    assert time.time() - live_mtime < 10, "heartbeat must refresh mtime"
-    after = os.stat(cp).st_mtime
-    time.sleep(0.4)
-    assert os.stat(cp).st_mtime == after, "heartbeat must stop on exit"
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,))
+                   for w in range(2 * os.cpu_count())]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert twice == [], "a version number was won twice"
+    assert list_versions(path) == sorted(wins) == list(range(1, len(wins) + 1))
+    for v, who in wins.items():
+        with open(os.path.join(path, "_versions", f"{v:06d}", "who")) as f:
+            assert f.read() == who
+    assert os.listdir(os.path.join(path, "_staging")) == []
 
 
 def test_stream_self_heals_after_compactor_crash(spark, base, tmp_path):
-    # End-to-end: dead-compactor debris on the table; the CDC stream's
-    # next batch recovers it automatically and the merge commits.
-    import json
-    import time
+    # a compactor killed mid-rewrite leaves its stage (carried links and
+    # parquet) under _staging/; the CDC stream's next batch commits
+    # beside it with no recovery step, and the debris changes no read
+    import shutil
 
     from veranda_spark.streaming.append import merge_batch_handler
 
-    d = os.path.join(base, "_versions", "000002")
-    os.makedirs(d)
-    cp = os.path.join(d, "_claim.json")
-    with open(cp, "w") as f:
-        json.dump({"owner": "compact_table:crashed", "hb_s": 5.0}, f)
-    old_t = time.time() - 3600
-    os.utime(cp, (old_t, old_t))
+    debris = os.path.join(base, "_staging", "0" * 32)
+    shutil.copytree(os.path.join(base, "_versions", "000001"), debris)
     handle = merge_batch_handler(
         base, keys=["k"], checkpoint_dir=str(tmp_path / "ck"),
         partition_by="p",
     )
     batch = spark.createDataFrame([(3, 3, "streamed3")],
                                   "k long, p long, val string")
-    handle(batch, 0)  # would raise FileExistsError without self-heal
+    handle(batch, 0)
+    assert current_version(base) == 2
     got = _rows(read_table(spark, base))
     assert (3, 3, "streamed3") in got and (3, 3, "v3") not in got
-
-
-def test_claim_heartbeat_survives_transient_oserror(tmp_path, monkeypatch):
-    # review r6 #5: a transient utime failure (ESTALE/EIO on network
-    # storage) must not permanently kill a LIVE writer's heartbeat —
-    # only FileNotFoundError (claim gone = committed/recovered) stops it.
-    import time
-
-    import veranda_spark.io.table as tbl
-
-    d = str(tmp_path / "v2")
-    os.makedirs(d)
-    tbl._write_claim(d, "compact_table:flaky", hb_s=0.1)
-    cp = os.path.join(d, "_claim.json")
-    old_t = time.time() - 100
-    os.utime(cp, (old_t, old_t))
-    real_utime = os.utime
-    fails = {"n": 0}
-
-    def flaky_utime(path, *a, **kw):
-        if fails["n"] < 3:
-            fails["n"] += 1
-            raise OSError(116, "Stale file handle", path)
-        return real_utime(path, *a, **kw)
-
-    monkeypatch.setattr(tbl.os, "utime", flaky_utime)
-    with tbl._claim_heartbeat(d, hb_s=0.1):
-        time.sleep(0.6)
-        assert fails["n"] == 3, "transient errors must have been retried"
-        assert time.time() - os.stat(cp).st_mtime < 10, (
-            "heartbeat must recover after transient errors"
-        )
-
-
-def test_verify_claim_raises_on_missing_and_foreign_nonce(tmp_path):
-    # ADVICE r6 (medium): the commit-time fence must refuse to publish
-    # when the claim vanished (swept) or carries another writer's nonce
-    # (swept + re-claimed under the same version number).
-    import json
-
-    import pytest
-
-    from veranda_spark.io.table import _verify_claim, _write_claim
-
-    d = str(tmp_path / "v2")
-    os.makedirs(d)
-    _write_claim(d, "merge:a", hb_s=5.0, nonce="ours")
-    _verify_claim(d, "ours")  # happy path: no raise
-    with open(os.path.join(d, "_claim.json"), "w") as f:
-        json.dump({"owner": "merge:b", "hb_s": 5.0, "nonce": "theirs"}, f)
-    with pytest.raises(RuntimeError, match="another writer re-claimed"):
-        _verify_claim(d, "ours")
-    os.remove(os.path.join(d, "_claim.json"))
-    with pytest.raises(RuntimeError, match="missing/unreadable"):
-        _verify_claim(d, "ours")
+    assert len(got) == 20
+    assert os.path.isdir(debris)
 
 
 def test_frozen_writer_aborts_instead_of_dual_commit(spark, base, monkeypatch):
-    # End-to-end fence: simulate a writer frozen past the stale sweep
-    # whose claim was swept and re-claimed by a recoverer before the
-    # writer resumed.  The resumed writer's merge must ABORT loudly and
-    # must NOT move the committed version pointer.
-    import json
-
-    import pytest
-
+    # a writer frozen after staging (base v1, publishing v2) while two
+    # other commits land and expire_versions(keep=1) vacates v2: on
+    # resume its rename hits v2's tombstone and fails, so its stale
+    # snapshot never becomes readable under the vacated number
     import veranda_spark.io.table as tbl
-    from veranda_spark.io.table import current_version
+    from veranda_spark.io.table import expire_versions
 
-    real_write_claim = tbl._write_claim
+    real = tbl._publish
 
-    def swept_then_reclaimed(vdir, owner, hb_s=None, nonce=None):
-        real_write_claim(vdir, owner, hb_s=hb_s, nonce=nonce)
-        # a recoverer swept our claim while we were frozen and a second
-        # writer re-claimed the same version number with its own nonce
-        with open(os.path.join(vdir, "_claim.json"), "w") as f:
-            json.dump(
-                {"owner": "merge:other", "hb_s": hb_s, "nonce": "foreign"}, f
-            )
+    def frozen(stage, vdir):
+        monkeypatch.setattr(tbl, "_publish", real)
+        for k, val in ((2, "w2"), (3, "w3")):                      # v2, v3
+            merge_into(spark, base,
+                       spark.createDataFrame([(k, k % 4, val)],
+                                             "k long, p long, val string"),
+                       keys=["k"], partition_by="p")
+        assert expire_versions(base, keep=1) == [1, 2]
+        real(stage, vdir)
 
-    monkeypatch.setattr(tbl, "_write_claim", swept_then_reclaimed)
-    before = current_version(base)
-    upd = spark.createDataFrame([(1, 1, "clobber")],
+    monkeypatch.setattr(tbl, "_publish", frozen)
+    upd = spark.createDataFrame([(1, 1, "stale")],
                                 "k long, p long, val string")
-    with pytest.raises(RuntimeError, match="re-claimed"):
+    with pytest.raises(FileExistsError):
         merge_into(spark, base, upd, keys=["k"], partition_by="p")
-    assert current_version(base) == before, (
-        "aborted merge must not publish a version"
-    )
+    assert list_versions(base) == [3] and current_version(base) == 3
+    for v in (1, 2):
+        with pytest.raises(ValueError, match="does not exist"):
+            read_table(spark, base, version=v)
     got = _rows(read_table(spark, base))
-    assert all(v != "clobber" for *_ks, v in got)
-    # review r7 #3: the aborted writer's output was STAGED — the version
-    # dir it wrote under must contain no visible (non-underscore) files
-    # that a reader of a re-claimed committed version would pick up
-    v2 = os.path.join(base, "_versions", "000002")
-    visible = [n for n in os.listdir(v2) if not n.startswith("_")]
-    assert visible == [], f"parquet debris leaked into version dir: {visible}"
+    assert (3, 3, "w3") in got and all(v != "stale" for *_ks, v in got)
+    assert os.listdir(os.path.join(base, "_staging")) == []
 
 
 # ---- schema evolution (round 8: Delta/Iceberg mergeSchema analog) ----------
@@ -852,7 +668,7 @@ def test_delete_rows_all_rows_guarded(spark, base):
     assert current_version(base) == 1
     assert read_table(spark, base).count() == 20
     assert not os.path.isdir(os.path.join(base, "_versions", "000002"))
-    # a typo'd key name fails BEFORE the version claim (no orphan)
+    # a typo'd key name fails BEFORE any staging (no orphan)
     with pytest.raises(ValueError, match="table lacks key"):
         delete_rows(spark, base, spark.createDataFrame([(1,)], "K long"),
                     keys=["K"], partition_by="p")
@@ -913,7 +729,7 @@ def test_restore_version_partitioned(spark, base):
     assert (3, 3, "X3") in _rows(read_table(spark, base, version=2))
     assert 7 not in {r["k"]
                      for r in read_table(spark, base, version=3).collect()}
-    # the table keeps working: a merge after restore claims v5
+    # the table keeps working: a merge after restore commits v5
     upd2 = spark.createDataFrame([(0, 0, "Z")], "k long, p long, val string")
     assert merge_into(spark, base, upd2, keys=["k"],
                       partition_by="p")["version"] == 5

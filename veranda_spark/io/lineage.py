@@ -5,13 +5,12 @@ closest is its append mode, native/netcdf.py:354-358): the sink at
 ``base`` is an io/table.py versioned table partitioned by ``tile_id``,
 and every data row carries its own lineage (``run_id``,
 ``completed_at``, and ``psnr`` for re-encoded runs).  Each write is one
-``table.append_rows`` commit, so a crash before ``_current`` moves
-leaves a version directory nothing points at — invisible to every
-reader.  A killed job resumes by anti-joining completed tiles — no
-recomputation, no streaming state store (SURVEY.md §2.8: resume is
-table-driven by design).  A sink has a SINGLE writer (the table
-contract): every sink commit claims as ``_SINK_OWNER`` and first clears
-that owner's crash debris.
+``table.append_rows`` commit — a stage under ``<base>/_staging/``
+published by one rename — so a crash before the rename leaves only a
+stage, invisible to every reader and in no writer's way.  A killed job
+resumes by anti-joining completed tiles — no recomputation, no
+streaming state store (SURVEY.md §2.8: resume is table-driven by
+design).  A sink has a SINGLE writer (the table contract).
 """
 
 from __future__ import annotations
@@ -23,9 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from veranda_spark.io import table
-
-#: claim owner of every sink commit (writes and compactions)
-_SINK_OWNER = "veranda_spark.lineage"
 
 
 def _strip_file_scheme(p: str) -> str:
@@ -163,11 +159,10 @@ def write_tiles_checkpointed(
 
     Crash-safety: every data row carries this run's ``run_id`` and
     ``completed_at``, and the rows commit as ONE table version
-    (``table.append_rows``).  A crash before the commit leaves an
-    uncommitted version directory that no reader sees; the rerun clears
-    it (``recover_orphans`` for the sink owner) and writes its tiles
-    once — no duplicate tiles on read, also for a replay with the same
-    run_id.
+    (``table.append_rows``).  A crash before the commit leaves only an
+    unpublished stage that no reader sees; the rerun commits its tiles
+    once beside it — no duplicate tiles on read, also for a replay with
+    the same run_id.
 
     With ``lossy_fmt`` canvases are re-encoded through the codec hook —
     "dctq" (lossy) or "tiff"/"tiff_lzw"/"tiff_deflate"/"tiff_packbits"/
@@ -197,7 +192,6 @@ def write_tiles_checkpointed(
     # (round 5c — the last rotation guard, now real support)
     spark = tiles.sparkSession
     run_id = run_id or f"run_{int(time.time() * 1000)}"
-    table.recover_orphans(base, owner=_SINK_OWNER)
     lin = read_lineage(spark, base)
     if lin is not None and scope == "run":
         lin = lin.filter(F.col("run_id") == run_id)
@@ -274,7 +268,7 @@ def write_tiles_checkpointed(
     )
     n_todo = todo.count()
     if n_todo:
-        table.append_rows(todo, base, "tile_id", owner=_SINK_OWNER)
+        table.append_rows(todo, base, "tile_id")
     todo.unpersist()
     return {"run_id": run_id, "written": n_todo, "skipped": n_done}
 
@@ -356,17 +350,16 @@ def compact_tiles(
     the rows' lineage verbatim — snapshots/time travel still work.
 
     Both are ordinary table commits: a crash at any point leaves the
-    committed sink untouched, and the next sink write or compaction
-    clears the debris.  Returns {run_id, tiles, files_before,
-    files_after}."""
-    table.recover_orphans(base, owner=_SINK_OWNER)
+    committed sink untouched and an unpublished stage that blocks no
+    later write (``table.recover_orphans`` sweeps it when no writer is
+    live).  Returns {run_id, tiles, files_before, files_after}."""
     cur = table.current_version(base)
     if cur is None:
         raise FileNotFoundError(f"no committed tile sink at {base}")
     run_id = run_id or f"compact_{int(time.time() * 1000)}"
     before = table._partition_file_counts(base, cur, "tile_id")
     if keep_history:
-        table.compact_table(spark, base, partition_by="tile_id", owner=_SINK_OWNER)
+        table.compact_table(spark, base, partition_by="tile_id")
     else:
         latest = (
             read_tiles(spark, base, mode="latest")
@@ -374,8 +367,7 @@ def compact_tiles(
             .withColumn("completed_at", F.lit(time.time()))
         )
         table.merge_into(
-            spark, base, latest, keys=["tile_id"], partition_by="tile_id",
-            owner=_SINK_OWNER,
+            spark, base, latest, keys=["tile_id"], partition_by="tile_id"
         )
         table.expire_versions(base, keep=1)
     after = table._partition_file_counts(

@@ -1,37 +1,53 @@
 """Versioned parquet tables with copy-on-write MERGE — Iceberg-style
 snapshot semantics without an Iceberg runtime (none in this env).  This
-is the engine's one commit protocol: keyed tables and the tile sinks of
+is the engine's one commit path: keyed tables and the tile sinks of
 io/lineage.py (a table partitioned by tile_id, written by
-``append_rows``) both commit through ``_claimed_version``.
+``append_rows``) all commit through ``_staged_version``.
 
 Layout::
 
     <path>/_versions/000001/...   immutable snapshot directories
     <path>/_versions/000002/...
-    <path>/_current               text file naming the committed version
+    <path>/_staging/<uuid>/       a writer's unpublished stage
 
-The ``_current`` pointer is written LAST via an atomic rename, so a
-crash mid-write leaves an orphan (invisible) version directory, never a
-half-visible table.  ``merge_into`` rewrites only the partitions
-an update batch touches; untouched partitions are carried into the new
-version by hard links, so every version directory is self-contained
-and a commit writes O(changed partitions) bytes.  A filesystem that
-refuses links gets a per-file copy of the carried partitions instead:
-still correct, but the commit then pays for the carried bytes too.
+A writer builds its whole new version in a stage under ``_staging/``
+(same filesystem as ``_versions/``; the leading underscore hides it
+from Spark scans) and publishes it with ONE ``os.rename`` onto
+``_versions/<base+1>`` — the put-if-absent by which Delta Lake commits
+log entry N.  rename(2) onto a non-empty directory fails, and a stage
+is never empty (it holds Spark's ``_SUCCESS`` or a restore's carried
+entries), so of two writers from the same base exactly one commits and
+the other raises FileExistsError — after its Spark work, at publish
+time.  The current version is the highest live version directory;
+there is no pointer file.  A crash before the rename leaves only a
+stage, which no reader lists and no writer trips on; ``recover_orphans``
+sweeps such stages when no writer is live.
 
-Concurrency: SINGLE WRITER per table.  The new version directory is
-claimed with an exclusive ``os.mkdir`` — a second concurrent merge fails
-loudly (FileExistsError) instead of silently discarding the first
-writer's commit.  A crashed merge leaves an orphan claim; run
-``recover_orphans`` to clear it before retrying.
+``merge_into`` rewrites only the partitions an update batch touches;
+untouched partitions are carried into the new version by hard links, so
+every version directory is self-contained and a commit writes
+O(changed partitions) bytes.  A filesystem that refuses links gets a
+per-file copy of the carried partitions instead: still correct, but the
+commit then pays for the carried bytes too.
+
+``expire_versions`` turns a version into a tombstone: an empty
+``_expired/`` created inside it hides it from every reader in one step,
+then the rest of its contents go.  The slot stays non-empty, so a
+writer frozen since an older base can never rename a stale snapshot
+into it.
+
+Concurrency: a table has a single writer by contract; a second writer
+racing it fails loudly instead of silently discarding a commit.  Tables
+written by the earlier claim protocol (a pointer file naming the
+committed version) are not read compatibly: a leftover claimed orphan
+there would be taken for the current version.
 """
 
 from __future__ import annotations
 
-import json
+import errno
 import os
 import shutil
-import threading
 import uuid
 from contextlib import contextmanager
 
@@ -43,35 +59,50 @@ def _versions_dir(path: str) -> str:
     return os.path.join(path, "_versions")
 
 
+def _staging_dir(path: str) -> str:
+    return os.path.join(path, "_staging")
+
+
 def _version_path(path: str, version: int) -> str:
     return os.path.join(_versions_dir(path), f"{version:06d}")
 
 
-def current_version(path: str) -> int | None:
+def _expired_marker(vdir: str) -> str:
+    """The tombstone ``expire_versions`` leaves in an expired slot."""
+    return os.path.join(vdir, "_expired")
+
+
+def _is_live(path: str, version: int) -> bool:
+    vdir = _version_path(path, version)
+    return os.path.isdir(vdir) and not os.path.exists(_expired_marker(vdir))
+
+
+def _slots(path: str) -> list[int]:
+    """Every version number with a directory, live or tombstoned."""
     try:
-        with open(os.path.join(path, "_current")) as f:
-            return int(f.read().strip())
+        names = os.listdir(_versions_dir(path))
     except FileNotFoundError:
-        return None
+        return []
+    return sorted(int(n) for n in names if n.isdigit())
 
 
-def _commit(path: str, version: int) -> None:
-    tmp = os.path.join(path, "_current.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(path, "_current"))  # atomic commit point
+def current_version(path: str) -> int | None:
+    """The highest live version — the last one published."""
+    return next(
+        (v for v in reversed(_slots(path)) if _is_live(path, v)), None
+    )
 
 
 def create_table(
     df: DataFrame, path: str, partition_by: str | None = None
 ) -> int:
-    """Write version 1 of a managed versioned table."""
-    os.makedirs(_versions_dir(path), exist_ok=True)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(_version_path(path, 1))
-    _commit(path, 1)
+    """Write version 1 of a managed versioned table (FileExistsError
+    when ``path`` already holds one)."""
+    with _staged_version(path, 0) as stage:
+        w = df.write.mode("append")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(stage)
     return 1
 
 
@@ -108,17 +139,18 @@ def read_table(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Read a committed snapshot (the current one, or ``version`` for
-    time travel).  Orphan (uncommitted) versions are unreadable by
-    construction — nothing points at them.  Every version directory is
-    self-contained (carried partitions are hard links), so a snapshot is
-    one scan of its directory."""
+    time travel).  Unpublished stages are unreadable by construction —
+    they never sit under ``_versions/``, and expired versions are
+    tombstoned.  Every version directory is self-contained (carried
+    partitions are hard links), so a snapshot is one scan of its
+    directory."""
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
-    v = version or cur
-    vdir = _version_path(path, v)
-    if v > cur or not os.path.isdir(vdir):
+    v = cur if version is None else version
+    if not _is_live(path, v):
         raise ValueError(f"version {v} does not exist (current={cur})")
+    vdir = _version_path(path, v)
     r = spark.read
     # mergeSchema: after a schema-evolving merge (merge_into
     # schema_mode="evolve") a snapshot legitimately mixes parquet files
@@ -133,14 +165,8 @@ def read_table(
 
 
 def list_versions(path: str) -> list[int]:
-    cur = current_version(path)
-    if cur is None:
-        return []
-    out = []
-    for name in sorted(os.listdir(_versions_dir(path))):
-        if name.isdigit() and int(name) <= cur:
-            out.append(int(name))
-    return out
+    """Every live version, oldest first (tombstones excluded)."""
+    return [v for v in _slots(path) if _is_live(path, v)]
 
 
 def _unescape_partition_dir(name: str):
@@ -224,333 +250,70 @@ def _carry_untouched(
             _link_file(src, dst)
 
 
-#: Heartbeat refresh period stamped into claims by merge_into /
-#: compact_table.  The stale-sweep threshold in ``recover_orphans`` is
-#: expressed in multiples of the CLAIM'S OWN declared ``hb_s`` (not this
-#: constant), so changing the default never makes old on-disk claims
-#: look stale.
-_CLAIM_HB_S = 5.0
-
-#: ``recover_orphans(owner=...)`` clears an UNOWNED orphan (no readable
-#: claim) only once it is this many seconds old.
-_UNOWNED_GRACE_S = 300.0
-
-#: ``recover_orphans(owner=...)`` sweeps a foreign claim that declares a
-#: heartbeat promise only once its mtime is this many multiples of the
-#: claim's own ``hb_s`` old.
-_STALE_HB_MULTIPLE = 60.0
-
-
-def _write_claim(
-    vdir: str,
-    owner: str | None,
-    hb_s: float | None = None,
-    nonce: str | None = None,
-) -> None:
-    """Stamp a freshly claimed version directory with the writer's
-    identity (``_claim.json``).  Written immediately after the exclusive
-    ``os.mkdir`` so an automated recoverer can tell WHOSE crash debris an
-    orphan is — see ``recover_orphans(owner=...)``.  ATOMIC (tmp +
-    os.replace): a torn claim file can never exist, so an orphan without
-    a readable claim always means a crash in the microsecond
-    mkdir→claim window (or pre-claim-era debris) — which is what lets
-    the age-gated unowned-orphan recovery below stay safe.
-
-    ``hb_s`` is the writer's PROMISE to refresh the claim file's mtime
-    at least every ``hb_s`` seconds while it is alive (see
-    ``_claim_heartbeat``).  Recording the interval in the claim itself
-    lets ``recover_orphans`` age-sweep a crashed writer's claim — a
-    claim whose mtime is many multiples of its own declared interval old
-    can only be dead — while claims WITHOUT the promise (manual writers,
-    crashed mid-stamp) keep the absolute never-touch safety.
-
-    ``nonce`` is a per-invocation token (not just the owner string — an
-    owner restarts with the same name) that the writer re-checks against
-    the on-disk claim immediately before ``_commit`` (``_verify_claim``).
-    If a recoverer swept this claim as stale (writer frozen past its
-    heartbeat promise — SIGSTOP, VM pause, swap storm — then resumed)
-    the nonce is gone or different, and the resumed writer ABORTS
-    instead of publishing a version directory another writer may have
-    re-claimed: the commit-time fence that closes the frozen-writer
-    dual-commit window (ADVICE r6).
-
-    Leading-underscore name keeps it invisible to parquet scans."""
-    p = os.path.join(vdir, "_claim.json")
-    tmp = p + ".tmp"
-    body: dict = {"owner": owner}
-    if hb_s is not None:
-        body["hb_s"] = hb_s
-    if nonce is not None:
-        body["nonce"] = nonce
-    with open(tmp, "w") as f:
-        json.dump(body, f)
-    os.replace(tmp, p)
-
-
-def _verify_claim(vdir: str, nonce: str) -> None:
-    """Commit-time fence: re-read ``_claim.json`` and require OUR nonce.
-
-    Called after the staged write, before ``_promote_stage``/``_commit``.
-    A frozen-then-resumed writer whose claim was age-swept (and possibly
-    re-claimed by a recoverer under the same version number) finds the
-    claim missing or carrying a different nonce and aborts loudly.
-    Because everything it wrote landed in its own nonce-keyed
-    ``_stage_*`` subdir (underscore = invisible to Spark/Hadoop readers;
-    removed on abort), the new owner's committed snapshot is never
-    contaminated — the remaining race is the microseconds between this
-    check and the promote+rename, which the stale threshold (many
-    heartbeat intervals, while OUR heartbeat is demonstrably alive
-    again) makes unreachable."""
+@contextmanager
+def _staged_version(path: str, base: int | None):
+    """THE commit path, in one place: yield a fresh stage under
+    ``<path>/_staging/`` for the body to fill (hard links, parquet
+    appends), then publish it as version ``base+1`` with one rename
+    (``_publish``).  An exception from the body publishes nothing.  The
+    stage is removed on every exit; only a killed process leaves one
+    behind, and no reader or writer looks at it."""
+    stage = os.path.join(_staging_dir(path), uuid.uuid4().hex)
+    os.makedirs(stage)
+    os.makedirs(_versions_dir(path), exist_ok=True)
     try:
-        with open(os.path.join(vdir, "_claim.json")) as f:
-            body = json.load(f)
-    except (FileNotFoundError, ValueError) as e:
-        raise RuntimeError(
-            f"commit fence: claim at {vdir} is missing/unreadable ({e}) — "
-            "this writer's claim was swept while it was frozen (or the "
-            "directory was recovered); ABORTING the commit. The table's "
-            "committed state is untouched; retry the merge."
-        ) from e
-    if body.get("nonce") != nonce:
-        raise RuntimeError(
-            f"commit fence: claim at {vdir} carries nonce "
-            f"{body.get('nonce')!r}, not ours — another writer re-claimed "
-            "this version number after our claim went heartbeat-stale; "
-            "ABORTING the commit to prevent dual-commit corruption."
-        )
+        yield stage
+        _publish(stage, _version_path(path, (base or 0) + 1))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
-def _stage_dir(vdir: str, nonce: str) -> str:
-    """Per-invocation staging subdirectory INSIDE the claimed version
-    dir.  All of a writer's output (partition dirs, parquet files)
-    lands here and is promoted into the version dir only
-    AFTER the commit fence passes — so a writer frozen past the stale
-    threshold whose version was swept and re-claimed can, at worst,
-    recreate an underscore-prefixed subdir (invisible to Spark/Hadoop
-    readers) inside the new owner's directory; it can never mix its
-    part-files into a committed snapshot (review r7 #3 — the
-    nonce-only fence stopped the PUBLISH but not the parquet append).
-    The leading underscore is load-bearing: hidden to readers."""
-    return os.path.join(vdir, f"_stage_{nonce}")
+def _publish(stage: str, vdir: str) -> None:
+    """Put-if-absent of ``vdir``: one ``os.rename`` of the stage onto it.
+    rename(2) fails onto a non-empty directory (ENOTEMPTY, or EEXIST on
+    some filesystems) and replaces an empty one — so an empty stage is
+    refused here, every published version is non-empty, and a tombstone
+    keeps its ``_expired/`` (``expire_versions``): a version number is
+    taken at most once."""
+    if not os.listdir(stage):
+        raise RuntimeError(f"refusing to publish an empty stage as {vdir}")
+    try:
+        os.rename(stage, vdir)
+    except OSError as e:
+        if e.errno in (errno.ENOTEMPTY, errno.EEXIST):
+            raise FileExistsError(
+                e.errno,
+                "version already taken — another writer committed (or "
+                "the slot was expired) since this write's base version; "
+                "the table is untouched, retry on the new current version",
+                vdir,
+            ) from e
+        raise
 
 
-def _promote_stage(stage: str, vdir: str) -> list[str]:
-    """Move every staged child up into the version dir (same-filesystem
-    renames — metadata-only).  Runs strictly after ``_verify_claim``;
-    collisions mean a protocol violation and fail loudly.  Returns the
-    promoted child names so a post-promote fence failure can demote
-    them (ADVICE r7: N partition renames on a slow FS can take far
-    longer than the pre-promote check assumed, so the fence re-runs
-    after promotion too — see ``_fenced_promote_commit``)."""
-    names = sorted(os.listdir(stage))
+def recover_orphans(path: str) -> list[str]:
+    """Delete every stage under ``<path>/_staging/`` — the debris of
+    writers killed before they published.  A MANUAL sweep: run it only
+    when no writer is live on the table, since a live writer's stage
+    looks the same.  Stages are invisible to readers and never block a
+    commit, so nothing waits on this.  Returns the removed stage
+    names."""
+    try:
+        names = sorted(os.listdir(_staging_dir(path)))
+    except FileNotFoundError:
+        return []
     for name in names:
-        dst = os.path.join(vdir, name)
-        if os.path.exists(dst):
-            raise RuntimeError(
-                f"staged promote: {dst} already exists — version dir "
-                "was mutated outside the claim protocol"
-            )
-        os.rename(os.path.join(stage, name), dst)
-    os.rmdir(stage)
+        shutil.rmtree(os.path.join(_staging_dir(path), name), ignore_errors=True)
     return names
 
 
-def _fenced_promote_commit(
-    path: str, stage: str, vdir: str, nonce: str, version: int
-) -> None:
-    """Fence → promote → fence again → commit.  The second fence closes
-    the window ADVICE r7 flagged: promoting N partition dirs is N
-    sequential renames, which on a slow/network FS can dwarf the
-    'microseconds' the first check assumed.  After the re-check the
-    unguarded window is genuinely just the final ``_current`` rename.
-    On a post-promote fence failure the promoted children are demoted
-    back into the stage and the stage removed (best-effort — a
-    re-claimer racing these renames collides loudly in its own
-    ``_promote_stage``, never silently)."""
-    try:
-        _verify_claim(vdir, nonce)
-    except RuntimeError:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    promoted = _promote_stage(stage, vdir)
-    try:
-        _verify_claim(vdir, nonce)
-    except RuntimeError:
-        os.makedirs(stage, exist_ok=True)
-        for name in promoted:
-            src = os.path.join(vdir, name)
-            if os.path.exists(src):
-                os.rename(src, os.path.join(stage, name))
-        shutil.rmtree(stage, ignore_errors=True)
-        raise
-    _commit(path, version)
-
-
-@contextmanager
-def _claimed_version(path: str, new_v: int, owner: str | None):
-    """THE claim protocol, in one place (review r8 pass-5 #3 — it was
-    hand-rolled at five sites, and every hardening had to be re-applied
-    to each): exclusive ``os.mkdir`` claim, ownership stamp + nonce,
-    nonce-keyed stage dir (created eagerly), heartbeat while the body
-    runs, then fence → promote → fence → commit.  Yields
-    ``(new_dir, stage, nonce)``.  An exception from the body skips the
-    commit and propagates (the claim stays for recover_orphans /
-    owner-scoped recovery, exactly like the previous inline code); a
-    body that wants to ABORT cleanly removes stage+claim+dir itself
-    before raising."""
-    new_dir = _version_path(path, new_v)
-    # exclusive claim: fails loudly on a concurrent writer or a crashed
-    # orphan (recover_orphans clears the latter) — never rmtree here
-    os.mkdir(new_dir)
-    nonce = uuid.uuid4().hex
-    _write_claim(new_dir, owner, hb_s=_CLAIM_HB_S, nonce=nonce)
-    stage = _stage_dir(new_dir, nonce)
-    os.makedirs(stage, exist_ok=True)
-    with _claim_heartbeat(new_dir):
-        yield new_dir, stage, nonce
-        _fenced_promote_commit(path, stage, new_dir, nonce, new_v)
-
-
-def _claim_info(vdir: str) -> tuple[bool, str | None, float | None]:
-    """(has_readable_claim, owner, hb_s).  A PRESENT claim with a null
-    owner (``merge_into(owner=None)``) is distinct from NO claim: the
-    former is some other writer — live or crashed — and owner-scoped
-    recovery must never touch it UNLESS the claim itself declares a
-    heartbeat promise (``hb_s``) it has visibly broken (review r5 pass-2
-    #1: a long manual NON-heartbeating merge's st_mtime can go stale
-    past any grace window while Spark writes inside the dir); only a
-    MISSING claim marks the microsecond mkdir-window debris the
-    unowned-age gate may clear."""
-    try:
-        with open(os.path.join(vdir, "_claim.json")) as f:
-            body = json.load(f)
-        hb = body.get("hb_s")
-        return True, body.get("owner"), float(hb) if hb is not None else None
-    except (FileNotFoundError, ValueError):
-        return False, None, None
-
-
-class _claim_heartbeat:
-    """Context manager: while the body runs, a daemon thread refreshes
-    the claim file's mtime every ``hb_s`` seconds (``os.utime`` — cheap,
-    atomic metadata-only).  The writer's Spark jobs run synchronously in
-    the claiming process, so the thread dying with the process is
-    exactly the liveness signal: mtime stops advancing ⇒ writer crashed.
-    Exceptions in the body propagate; the thread always stops."""
-
-    def __init__(self, vdir: str, hb_s: float = _CLAIM_HB_S):
-        self._path = os.path.join(vdir, "_claim.json")
-        self._hb_s = hb_s
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    def _run(self) -> None:
-        # refresh at half the promised interval so one missed wakeup
-        # (GC pause, scheduler hiccup) still keeps the promise
-        while not self._stop.wait(self._hb_s / 2.0):
-            try:
-                os.utime(self._path)
-            except FileNotFoundError:
-                return  # claim gone (committed/recovered) — nothing to do
-            except OSError:
-                # a TRANSIENT error (ESTALE/EIO on network FS) must not
-                # kill the heartbeat — a frozen mtime on a LIVE writer
-                # would get its claim swept and reopen the dual-commit
-                # corruption (review r6 #5).  Keep trying; persistent
-                # failure means the promise breaks, which is the honest
-                # signal (the writer's storage is gone anyway).
-                continue
-
-    def __enter__(self) -> "_claim_heartbeat":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join(timeout=self._hb_s)
-
-
-def recover_orphans(path: str, owner: str | None = None) -> list[int]:
-    """Delete uncommitted (orphan) version directories left by crashed
-    merges.  Run this before retrying a merge that failed its exclusive
-    claim — merge_into itself never removes an existing claim directory
-    (doing so is exactly the lost-update race).
-
-    With ``owner=None`` (manual recovery) ALL orphans are cleared —
-    callers must ensure no writer is live on the table.  With an
-    ``owner`` string, an automated recoverer (e.g. the CDC stream's
-    merge_batch_handler) clears ONLY:
-
-    - orphans whose ``_claim.json`` names exactly that owner (its own
-      crash debris), and
-    - UNOWNED orphans (no readable claim) older than
-      ``_UNOWNED_GRACE_S`` seconds — claims are written atomically
-      microseconds after the mkdir, so an unowned dir past the grace
-      window can only be a crash in that microsecond gap or
-      pre-claim-era debris, never a live writer; without this the
-      stream would wedge forever on such debris (every batch raising
-      FileExistsError), and
-    - foreign claims that DECLARE a heartbeat promise (``hb_s`` in the
-      claim — merge_into/compact_table refresh the claim file's mtime
-      every ``hb_s`` seconds while alive) whose claim mtime is more
-      than ``_STALE_HB_MULTIPLE × hb_s`` seconds old.  A live writer
-      refreshes at ``hb_s/2``; the multiple (60 → 5 minutes at
-      the stock ``hb_s=5``) sits far beyond any plausible driver pause
-      (GC, VM migration, swap storm — ADVICE r6 judged 60 s reachable,
-      so the old 12× default was raised), so a claim that stale can
-      only be a crashed writer; a compactor that dies mid-rewrite no
-      longer wedges a live CDC stream until manual recovery — the
-      stream self-heals on its next batch.  Even the pathological
-      frozen-past-threshold-then-resumed writer cannot dual-commit: the
-      commit-time nonce fence (``_verify_claim``) makes it abort.
-
-    A foreign claim WITHOUT the heartbeat marker is never touched (the
-    writer made no liveness promise to judge it by — a long manual
-    merge's mtime legitimately goes stale while Spark writes inside the
-    dir); deleting another live writer's claim would let both commit
-    into the same version directory, the exact corruption the
-    exclusive-mkdir protocol exists to prevent."""
-    import time
-
-    if not os.path.isdir(_versions_dir(path)):
-        return []
-    # no _current yet: every version dir is a crashed first commit
-    cur = current_version(path) or 0
-    removed = []
-    for name in sorted(os.listdir(_versions_dir(path))):
-        if not (name.isdigit() and int(name) > cur):
-            continue
-        vdir = os.path.join(_versions_dir(path), name)
-        if owner is not None:
-            has_claim, claim, hb_s = _claim_info(vdir)
-            if not (has_claim and claim == owner):
-                try:
-                    stamp = (
-                        os.path.join(vdir, "_claim.json")
-                        if has_claim else vdir
-                    )
-                    age = time.time() - os.stat(stamp).st_mtime
-                except OSError:
-                    continue  # vanished concurrently
-                if has_claim:
-                    # foreign claim: sweepable ONLY on a visibly broken
-                    # heartbeat promise; no promise → never touch
-                    if hb_s is None or age < _STALE_HB_MULTIPLE * hb_s:
-                        continue
-                elif age < _UNOWNED_GRACE_S:
-                    continue  # possibly a just-claimed dir mid-stamp
-        shutil.rmtree(vdir)
-        removed.append(int(name))
-    return removed
-
-
-def _isin_or_null(col_name: str, vals: list, has_null: bool):
-    """Null-safe membership filter: ``isin()`` never matches NULL, so
-    the NULL partition needs its own disjunct — shared by merge_into
-    and delete_rows (review r8 pass-4 #5)."""
-    cond = F.col(col_name).isin(vals) if vals else F.lit(False)
+def _isin_or_null(col, vals: list, has_null: bool):
+    """Null-safe membership filter on Column ``col``: ``isin()`` never
+    matches NULL, so the NULL partition needs its own disjunct — shared
+    by merge_into, delete_rows and compact_table."""
+    cond = col.isin(vals) if vals else F.lit(False)
     if has_null:
-        cond = cond | F.col(col_name).isNull()
+        cond = cond | col.isNull()
     return cond
 
 
@@ -635,12 +398,9 @@ def _evolve_schemas(
     return tgt.select(cols), updates.select(cols), widened
 
 
-def append_rows(
-    df: DataFrame, path: str, partition_by: str, owner: str | None = None
-) -> dict:
+def append_rows(df: DataFrame, path: str, partition_by: str) -> dict:
     """INSERT INTO: commit ``df``'s rows as a new version on top of the
-    current one (version 1 when no table exists yet) through the claim
-    protocol.  Every committed partition is hard-linked into the new
+    current one (version 1 when no table exists yet).  Every committed partition is hard-linked into the new
     version (copied where the fs refuses links) and the new rows are
     appended into the same partition directories — O(files of the
     current version) links plus the new rows' write.
@@ -651,19 +411,17 @@ def append_rows(
     the new columns null."""
     cur = current_version(path)
     names: list[str] = []
-    if cur is None:
-        os.makedirs(_versions_dir(path), exist_ok=True)
-    else:
+    if cur is not None:
         if not os.path.exists(_evolved_marker(path)) and set(df.columns) != set(
             read_table(df.sparkSession, path).columns
         ):
             _mark_evolved(path)
         names = _old_partitions(path, cur, partition_by)
-    new_v = (cur or 0) + 1
-    with _claimed_version(path, new_v, owner) as (_new_dir, stage, _nonce):
-        _carry_untouched(_version_path(path, new_v - 1), stage, names, set())
+    with _staged_version(path, cur) as stage:
+        if cur is not None:
+            _carry_untouched(_version_path(path, cur), stage, names, set())
         df.write.mode("append").partitionBy(partition_by).parquet(stage)
-    return {"version": new_v, "previous": cur}
+    return {"version": (cur or 0) + 1, "previous": cur}
 
 
 def merge_into(
@@ -672,7 +430,6 @@ def merge_into(
     updates: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
-    owner: str | None = None,
     schema_mode: str = "strict",
 ) -> dict:
     """Upsert (MERGE INTO): matched target rows are replaced by the
@@ -687,10 +444,12 @@ def merge_into(
     partition value; the row's old partition is rewritten too (both
     sides are affected).
 
-    Concurrency: single writer.  The new version directory is claimed
-    with exclusive ``os.mkdir`` — a concurrent merge (or a leftover
-    orphan from a crash; see ``recover_orphans``) raises
-    FileExistsError instead of silently clobbering the other writer.
+    Concurrency: single writer.  The new version is staged under
+    ``_staging/`` and published with one rename onto ``cur+1`` — if a
+    concurrent writer published that version first, this merge raises
+    FileExistsError (after its Spark work) instead of silently
+    clobbering the other commit.  A crashed merge leaves only its stage,
+    which blocks nothing.
 
     Scale: the per-partition rewrite is `target_partition ⊕ updates` —
     a broadcast-able anti-join when the update batch is small; the
@@ -727,12 +486,11 @@ def merge_into(
         )
         if widened:
             _mark_evolved(path)
-    # layout validation (and the partition inventory) runs BEFORE the
-    # version claim so a wrong partition_by fails cleanly with no
-    # orphan claimed dir (review r8 pass-6)
+    # layout validation (and the partition inventory) runs BEFORE any
+    # staging so a wrong partition_by fails with no Spark work
+    # (review r8 pass-6)
     names = _old_partitions(path, cur, partition_by) if partition_by else []
-    new_v = cur + 1
-    with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
+    with _staged_version(path, cur) as stage:
         if partition_by:
             # partitions touched by the update batch: the updates' own
             # partition values PLUS the current partition of any matched key
@@ -774,14 +532,13 @@ def merge_into(
                     (v := _unescape_partition_dir(name)) is None and aff_null
                 ) or (v is not None and v in aff_set)
             }
-            # everything lands in the nonce-keyed STAGE subdir (carried
-            # partitions and fresh writes) and is promoted only after the
-            # commit fence passes — see _stage_dir
+            # everything lands in the stage (carried partitions and
+            # fresh writes); one rename publishes it — see _publish
             _carry_untouched(
                 _version_path(path, cur), stage, names, touched_names
             )
             tgt_aff = tgt.filter(
-                _isin_or_null(partition_by, aff_vals, aff_null)
+                _isin_or_null(F.col(partition_by), aff_vals, aff_null)
             )
             # every update row's partition is in `affected` by construction
             # (left_anti needs no distinct probe side — round-9)
@@ -803,14 +560,8 @@ def merge_into(
             merged = tgt.join(
                 updates.select(keys), keys, "left_anti"
             ).unionByName(updates)
-            # append INTO the stage under the claimed dir —
-            # mode("overwrite") would delete the directory first,
-            # voiding the exclusive-mkdir claim
             merged.write.mode("append").parquet(stage)
-        # the context manager runs the fenced promote+commit; our stage
-        # is ours to clean even inside a re-claimed dir, and the
-        # committed state is untouched on any fence failure
-    return {"version": new_v, "previous": cur}
+    return {"version": cur + 1, "previous": cur}
 
 
 def delete_rows(
@@ -819,7 +570,6 @@ def delete_rows(
     keys_df: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
-    owner: str | None = None,
     trust_partition_hint: bool = False,
 ) -> dict:
     """DELETE by key (`DELETE FROM t WHERE (k) IN (SELECT k FROM d)`) —
@@ -857,9 +607,8 @@ def delete_rows(
     missing = sorted(set(keys) - set(keys_df.columns))
     if missing:
         raise ValueError(f"delete_rows: keys_df lacks key column(s) {missing}")
-    # validate against the TARGET too, before the version claim — a
-    # typo'd key name failing inside the claim block would leave an
-    # orphan claimed dir behind (review r8 pass-4 #3)
+    # validate against the TARGET too, before any staging — a typo'd
+    # key name then fails with no Spark work (review r8 pass-4 #3)
     missing_t = sorted(set(keys) - set(tgt.columns))
     if missing_t:
         raise ValueError(
@@ -875,14 +624,13 @@ def delete_rows(
     # re-distincts itself (the hint collect) — round-9, guide §2.4
     dels = keys_df.select(kcols + ([partition_by] if hint else []))
     names = _old_partitions(path, cur, partition_by) if partition_by else []
-    new_v = cur + 1
-    with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
+    with _staged_version(path, cur) as stage:
         if partition_by:
             scan = tgt
             if hint:
                 hrows = dels.select(partition_by).distinct().collect()
                 scan = tgt.filter(_isin_or_null(
-                    partition_by,
+                    F.col(partition_by),
                     [r[0] for r in hrows if r[0] is not None],
                     any(r[0] is None for r in hrows),
                 ))
@@ -908,7 +656,7 @@ def delete_rows(
                 _version_path(path, cur), stage, names, touched_names
             )
             remaining = tgt.filter(
-                _isin_or_null(partition_by, aff_vals, aff_null)
+                _isin_or_null(F.col(partition_by), aff_vals, aff_null)
             ).join(dels.select(kcols), kcols, "left_anti")
             (
                 remaining.repartition(F.col(partition_by))
@@ -919,13 +667,11 @@ def delete_rows(
             if not _has_parquet(stage):
                 # PARTITIONED delete-all: every partition directory
                 # vanished, so the snapshot has no parquet schema
-                # anywhere — refuse and leave no orphan dir.  (The
-                # unpartitioned path has no such hazard: Spark writes a
-                # schema-only empty part file, so an empty snapshot
-                # stays readable — verified on this Spark version.)
-                shutil.rmtree(stage, ignore_errors=True)
-                os.remove(os.path.join(new_dir, "_claim.json"))
-                os.rmdir(new_dir)
+                # anywhere — refuse; the stage is dropped unpublished.
+                # (The unpartitioned path has no such hazard: Spark
+                # writes a schema-only empty part file, so an empty
+                # snapshot stays readable — verified on this Spark
+                # version.)
                 raise ValueError(
                     "delete_rows removed every row of the partitioned "
                     "table — an all-partitions-deleted snapshot has no "
@@ -935,14 +681,10 @@ def delete_rows(
         else:
             remaining = tgt.join(dels.select(kcols), kcols, "left_anti")
             remaining.write.mode("append").parquet(stage)
-    return {"version": new_v, "previous": cur}
+    return {"version": cur + 1, "previous": cur}
 
 
-def restore_version(
-    path: str,
-    version: int,
-    owner: str | None = None,
-) -> dict:
+def restore_version(path: str, version: int) -> dict:
     """Delta RESTORE analog: make an older snapshot current again by
     committing a NEW version whose content is ``version``'s — a
     metadata-only operation (hard links; zero data bytes move, or a
@@ -956,14 +698,14 @@ def restore_version(
     an EMPTY snapshot, breaking every later read.  One path serves both
     layouts: the snapshot's top-level ``name=`` partition directories
     and loose ``.parquet`` files are linked into the new version.
-    ``_``-prefixed entries (the old ``_claim.json``, ``_SUCCESS``) are
-    skipped; the new claim would collide with them on promote.
+    ``_``-prefixed entries (``_SUCCESS``) are skipped; the carried
+    entries alone keep the stage non-empty, which ``_publish`` needs.
 
     Non-destructive by design: later versions stay on disk and
     time-travel-readable until ``expire_versions``, and the new
-    version slots into the normal claim protocol (``cur+1``), so
-    concurrent writers keep failing loudly instead of colliding with a
-    re-pointed ``_current``.  Composes with ``delete_rows`` as the
+    version is published like any other commit (one rename onto
+    ``cur+1``), so a concurrent writer fails loudly instead of either
+    commit being lost.  Composes with ``delete_rows`` as the
     oops-recovery path: restore(v_before_delete) un-deletes.
     """
     cur = current_version(path)
@@ -971,9 +713,9 @@ def restore_version(
         raise FileNotFoundError(f"no committed table at {path}")
     if version == cur:
         raise ValueError(f"version {version} is already current")
-    src_dir = _version_path(path, version)
-    if version > cur or not os.path.isdir(src_dir):
+    if not _is_live(path, version):
         raise ValueError(f"version {version} does not exist (current={cur})")
+    src_dir = _version_path(path, version)
     names = [
         name for name in sorted(os.listdir(src_dir))
         if not name.startswith("_") and (
@@ -986,10 +728,9 @@ def restore_version(
             f"version {version} holds no partitions and no parquet "
             "files — refusing to restore an unreadable snapshot"
         )
-    new_v = cur + 1
-    with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
+    with _staged_version(path, cur) as stage:
         _carry_untouched(src_dir, stage, names, set())
-    return {"version": new_v, "restored": version, "previous": cur}
+    return {"version": cur + 1, "restored": version, "previous": cur}
 
 
 def compact_table(
@@ -997,7 +738,6 @@ def compact_table(
     path: str,
     partition_by: str | None = None,
     max_files: int = 1,
-    owner: str | None = None,
 ) -> dict:
     """Small-file compaction (Iceberg OPTIMIZE / bin-packing analog) for
     versioned tables: partitions of the CURRENT version holding more
@@ -1018,26 +758,13 @@ def compact_table(
     version per micro-batch, each appending one small file per touched
     partition — compaction folds them back to one file per partition.
 
-    Concurrency vs a LIVE stream: the compactor's claim directory is
-    stamped with ``owner`` (default: a unique
-    ``compact_table:<uuid>`` per invocation — unique so that
-    owner-scoped recovery can NEVER mistake a second, live compactor's
-    claim for this one's debris), and the stream's automated orphan
-    recovery only clears claims it stamped itself — so running
-    compact_table against a live merge_stream table never has its claim
-    deleted mid-write.  The two writers still race on the version
-    number: whichever claims ``cur+1`` second fails loudly with
-    FileExistsError (retry after the other commits).  A compactor that
-    CRASHES leaves its claim behind, but the claim carries a heartbeat
-    promise (mtime refreshed every ``_CLAIM_HB_S`` seconds while the
-    compactor lives — ``_claim_heartbeat``); once the mtime goes stale
-    past the promise, the stream's owner-scoped ``recover_orphans``
-    sweeps it and the stream SELF-HEALS on its next batch — no manual
-    recovery needed.  A live-but-slow compactor keeps heartbeating, so
-    its claim is never raced.
+    Concurrency vs a LIVE stream: the compactor and the stream race on
+    the version number — whichever publishes ``cur+1`` second fails
+    loudly with FileExistsError at its rename (retry after the other
+    commits); neither commit is lost.  A compactor that CRASHES leaves
+    only its stage under ``_staging/``, which the stream never looks
+    at: its next batch commits as usual.
     """
-    if owner is None:
-        owner = f"compact_table:{uuid.uuid4().hex[:12]}"
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
@@ -1067,13 +794,12 @@ def compact_table(
         if before <= max_files:
             return {"version": cur, "compacted": 0,
                     "files_before": before, "files_after": before}
-        new_v = cur + 1
-        with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
+        with _staged_version(path, cur) as stage:
             read_table(spark, path).coalesce(max_files).write.mode(
                 "append"
             ).parquet(stage)
-        return {"version": new_v, "compacted": 1, "files_before": before,
-                "files_after": _count_parquet(new_dir)}
+        return {"version": cur + 1, "compacted": 1, "files_before": before,
+                "files_after": _count_parquet(_version_path(path, cur + 1))}
 
     counts = _partition_file_counts(path, cur, partition_by)
     touched = {n for n, c in counts.items() if c > max_files}
@@ -1081,8 +807,7 @@ def compact_table(
     if not touched:
         return {"version": cur, "compacted": 0,
                 "files_before": before, "files_after": before}
-    new_v = cur + 1
-    with _claimed_version(path, new_v, owner) as (new_dir, stage, nonce):
+    with _staged_version(path, cur) as stage:
         _carry_untouched(cur_dir, stage, sorted(counts), touched)
         # rewrite the oversized partitions: the predicate is over the
         # partition column only, so Catalyst PRUNES the scan to exactly the
@@ -1091,53 +816,54 @@ def compact_table(
         # one task, so the partitioned write emits ONE file per compacted
         # partition (max_files is the trigger threshold, not an output
         # count — documented above).
-        tgt = read_table(spark, path)
         touched_vals = [_unescape_partition_dir(n) for n in touched]
-        has_null = any(v is None for v in touched_vals)
-        vals = [v for v in touched_vals if v is not None]
-        cond = (
-            F.col(partition_by).cast("string").isin(vals)
-            if vals else F.lit(False)
+        cond = _isin_or_null(
+            F.col(partition_by).cast("string"),
+            [v for v in touched_vals if v is not None],
+            any(v is None for v in touched_vals),
         )
-        if has_null:
-            cond = cond | F.col(partition_by).isNull()
         (
-            tgt.filter(cond)
+            read_table(spark, path).filter(cond)
             .repartition(len(touched), partition_by)
             .write.mode("append")
             .partitionBy(partition_by)
             .parquet(stage)
         )
-    after = sum(_partition_file_counts(path, new_v, partition_by).values())
-    return {"version": new_v, "compacted": len(touched),
+    after = sum(_partition_file_counts(path, cur + 1, partition_by).values())
+    return {"version": cur + 1, "compacted": len(touched),
             "files_before": before, "files_after": after}
 
 
 def expire_versions(path: str, keep: int = 2) -> list[int]:
-    """Iceberg ``expire_snapshots`` analog: delete all but the newest
-    ``keep`` committed versions.  Hard-linked files make this safe — a
+    """Iceberg ``expire_snapshots`` analog: expire all but the newest
+    ``keep`` live versions.  Hard-linked files make this safe — a
     partition directory shared with a surviving version keeps its bytes
     (the link count drops, the inode survives); only bytes referenced
     exclusively by expired versions are reclaimed.  The current version
-    is never expired.  Returns the versions removed."""
+    is never expired.  Returns the versions expired.
+
+    Each expired slot becomes a tombstone, in two steps: an empty
+    ``_expired/`` is created inside it — one atomic mkdir that hides the
+    version from ``list_versions``, ``read_table`` and
+    ``restore_version`` — and then everything else in it is deleted.  A
+    crash between the steps leaves a hidden, half-deleted slot, never a
+    truncated snapshot that still reads.  The slot stays non-empty, so a
+    writer frozen since an older base can never rename a stale snapshot
+    into it (``_publish`` raises FileExistsError).  Stages under
+    ``_staging/`` are never touched: one may be a live writer's, already
+    holding its carried links."""
     if keep < 1:
         raise ValueError("keep must be >= 1 (the current version survives)")
-    cur = current_version(path)
-    if cur is None:
-        return []
-    versions = list_versions(path)
-    survivors = set(versions[-keep:]) | {cur}
-    removed = []
-    for v in versions:
-        if v in survivors:
-            continue
+    expired = list_versions(path)[:-keep]
+    for v in expired:
         vdir = _version_path(path, v)
-        # rename-then-delete: the rename either fully hides the version
-        # (list_versions only matches digit names) or fails cleanly with
-        # the version intact — a partial rmtree would leave a corrupt but
-        # still-listed snapshot that read_table serves silently truncated
-        trash = vdir + ".trash"
-        os.rename(vdir, trash)
-        shutil.rmtree(trash, ignore_errors=True)
-        removed.append(v)
-    return removed
+        os.mkdir(_expired_marker(vdir))
+        for name in os.listdir(vdir):
+            entry = os.path.join(vdir, name)
+            if entry == _expired_marker(vdir):
+                continue
+            if os.path.isdir(entry):
+                shutil.rmtree(entry, ignore_errors=True)
+            else:
+                os.remove(entry)
+    return expired

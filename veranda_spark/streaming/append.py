@@ -178,12 +178,11 @@ def merge_batch_handler(
     import hashlib
     import os
 
-    from veranda_spark.io.table import merge_into, recover_orphans
+    from veranda_spark.io.table import merge_into
 
     ckpt_tag = hashlib.md5(
         os.path.abspath(checkpoint_dir).encode()
     ).hexdigest()[:12]
-    claim_owner = f"merge_stream:{ckpt_tag}"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(path, f"_stream_batch_{ckpt_tag}")
@@ -194,22 +193,16 @@ def merge_batch_handler(
             last = -1
         if batch_id <= last:
             return  # crash-replay of an applied epoch: no-op
-        # a crash between the version-dir claim and its commit leaves an
-        # orphan that would fail merge_into's exclusive claim forever.
-        # Owner-scoped recovery clears ONLY this stream's own crash
-        # debris (claims stamped with claim_owner) plus foreign claims
-        # with a visibly broken heartbeat promise (a compactor that
-        # crashed mid-rewrite — its claim's mtime stops refreshing, so
-        # the stream self-heals instead of wedging until manual
-        # recovery).  A LIVE compact_table or manual merge_into keeps
-        # its claim (heartbeating or no promise to judge), and the
-        # subsequent merge_into then fails loudly with FileExistsError
-        # instead of two writers committing mixed data into one version
-        # directory.
-        recover_orphans(path, owner=claim_owner)
+        # nothing to recover first: a crashed merge (this stream's or a
+        # compactor's) leaves only an unpublished stage under _staging/,
+        # which no commit looks at.  A LIVE compact_table or manual
+        # merge_into that publishes the same version first makes this
+        # merge fail loudly with FileExistsError at its rename — the
+        # marker stays unwritten, so the batch replays — instead of two
+        # writers' data mixing in one version.
         merge_into(
             batch_df.sparkSession, path, batch_df, keys,
-            partition_by=partition_by, owner=claim_owner,
+            partition_by=partition_by,
         )
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:

@@ -721,7 +721,8 @@ def q_neardup_groups(spark, sf_dir):
     # closure over the same pair list — every node's label is hash-compared,
     # so a wrong transitive closure cannot pass.  doc_id < 2000 bounds the
     # oracle's reachability blow-up (contiguous ids are hypercube-connected,
-    # so reach is O(n^2) rows) while still covering all of sf0.01.
+    # so reach is O(n^2) rows) while still covering all of sf0.01.  A graph
+    # that small is labelled on connected_components' driver path.
     from veranda_spark.operators.dedup import (
         connected_components,
         phash_neardup_pairs,

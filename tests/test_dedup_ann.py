@@ -221,7 +221,19 @@ def _union_find_labels(pairs):
     return {n: find(n) for n in parent}
 
 
-def test_connected_components_vs_union_find(spark):
+@pytest.fixture(params=["driver", "loop"])
+def cc_path(request, monkeypatch):
+    """Which connected_components path runs: "driver" at the default
+    size limit, "loop" with a limit no edge set meets, not even an
+    empty one."""
+    from veranda_spark.operators import dedup
+
+    if request.param == "loop":
+        monkeypatch.setattr(dedup, "_DRIVER_EDGES", -1)
+    return request.param
+
+
+def test_connected_components_vs_union_find(spark, cc_path):
     from veranda_spark.operators.dedup import (
         connected_components,
         dedup_keep_first_neardup,
@@ -249,10 +261,20 @@ def test_connected_components_vs_union_find(spark):
         (73, 76), (73, 77), (71, 74), (74, 76), (72, 75), (75, 77),
     ]
     pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {r["node"]: r["component"] for r in connected_components(pdf).collect()}
+    st: dict = {}
+    got = {r["node"]: r["component"] for r in connected_components(pdf, stats=st).collect()}
     want = _union_find_labels(pairs)
     assert want[55] == 55 and want[61] == 61 and None not in want
     assert got == want
+    assert (st["rounds"] == 0) == (cc_path == "driver"), st
+
+    # no nodes: an empty pair frame and an all-null one, typed as the ids
+    for no_nodes in (pdf.limit(0), pdf.filter(F.col("id_a").isNull() & F.col("id_b").isNull())):
+        st = {}
+        comp = connected_components(no_nodes, stats=st)
+        assert comp.collect() == []
+        assert comp.schema.simpleString() == "struct<node:bigint,component:bigint>"
+        assert (st["rounds"] == 0) == (cc_path == "driver"), st
 
     # survivor rule: exactly one doc per component survives
     nodes = sorted(want)
@@ -263,11 +285,11 @@ def test_connected_components_vs_union_find(spark):
 
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
-def test_connected_components_shuffled_path(spark, id_type):
+def test_connected_components_shuffled_path(spark, id_type, cc_path):
     """A 2000-node path whose ids are not in path order (string ids are
     zero-padded, as the benchmark's image ids are).  Label propagation
     needs rounds linear in the path length here; large-star/small-star
-    stays within ceil(log2(n - 1)) + 2."""
+    stays within ceil(log2(n - 1)) + 2, and the driver path runs none."""
     import math
     import random
 
@@ -284,8 +306,30 @@ def test_connected_components_shuffled_path(spark, id_type):
     st: dict = {}
     got = {r["node"]: r["component"] for r in connected_components(pdf, stats=st).collect()}
     assert got == _union_find_labels(path)
-    bound = math.ceil(math.log2(n - 1)) + 2
+    bound = 0 if cc_path == "driver" else math.ceil(math.log2(n - 1)) + 2
     assert st["rounds"] <= bound, (st["rounds"], bound)
+
+
+def test_connected_components_small_graph_jobs(spark):
+    """A 2000-edge graph is labelled on the driver: the distinct-edge
+    probe is the only Spark work, and collecting the LocalRelation it
+    returns runs none.  The large-star/small-star loop runs 55 jobs on
+    the same graph."""
+    import random
+
+    from veranda_spark.operators.dedup import connected_components
+    from veranda_spark.session import local_df
+
+    ids = list(range(2001))
+    random.Random(2).shuffle(ids)
+    pairs = local_df(spark, list(zip(ids, ids[1:])), "id_a long, id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_small", "connected_components on the driver")
+    got = connected_components(pairs).collect()
+    sc.setJobGroup("cc_done", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_small"))
+    assert n_jobs <= 2, n_jobs
+    assert len(got) == 2001 and {r["component"] for r in got} == {0}
 
 
 def test_opq_rotation_is_orthonormal():
@@ -382,7 +426,7 @@ def test_persisted_ivf_pq_index_matches_per_call(spark, embeddings, tmp_path):
     assert served == fresh
 
 
-def test_connected_components_scale_stress(spark):
+def test_connected_components_scale_stress(spark, monkeypatch):
     """VERDICT r7 #5: the 100-TB dedup story rests on connected
     components being O(log diameter) with flat lineage.  ~1.39M-edge
     chain+clique graph: a 2^18-node chain with ids in path order
@@ -394,10 +438,15 @@ def test_connected_components_scale_stress(spark):
       star forest)
     - exact components for both shapes
     - the returned plan is checkpoint-flat: its size is a small
-      constant, NOT a function of rounds run."""
+      constant, NOT a function of rounds run.
+    The graph is forced onto the large-star/small-star loop, which these
+    bounds grade, so that no driver-path size limit can move it off."""
     import math
 
+    from veranda_spark.operators import dedup
     from veranda_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "_DRIVER_EDGES", -1)
 
     n_chain = 1 << 18
     chain = spark.range(n_chain - 1).select(

@@ -18,6 +18,7 @@ canonicalized (id_a < id_b) to avoid duplicates and self-pairs.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -282,6 +283,64 @@ def embedding_neardup_pairs(
     )
 
 
+# Largest distinct edge set labelled on the driver; a larger one runs the
+# large-star/small-star loop.  On random graphs with string ids (4-core
+# host, local[4], 2011m driver, 2 runs each) the driver path took 0.5-2.0 s
+# against the loop's 2.7-5.2 s at 10k edges, 0.8-0.9 s vs 4.5-5.2 s at 100k
+# and 7.1-8.2 s vs 26.6-31.1 s at 1M.  It wins at every size measured, so
+# the limit is what a 2 GiB driver holds comfortably, not a crossover.
+_DRIVER_EDGES = 1_000_000
+
+
+def _min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Smallest code in each node's component, for edges (a[i], b[i])
+    over node codes 0..n-1.
+
+    FastSV (Zhang, Azad and Hu, SIAM PP 2020) over a parent vector f,
+    f[x] <= x: each pass hooks every edge end, and its parent, to the
+    smallest grandparent across the edge, then shortcuts (f = f[f]).  A
+    pass that changes nothing leaves f constant across every edge and
+    pointing at roots, so f[x] is the smallest code of x's component.
+    Hooking the parent matters: min-label propagation with pointer
+    jumping alone needs ~n passes on a shuffled n-node path (1062 at
+    n = 2000), this needs about log2(n) (10)."""
+    f = np.arange(n)
+    while True:
+        gf = f[f]
+        g = f.copy()
+        for u, v in ((a, b), (b, a)):
+            np.minimum.at(g, u, gf[v])
+            np.minimum.at(g, f[u], gf[v])
+        g = g[g]
+        if np.array_equal(g, f):
+            return f
+        f = g
+
+
+def _label_on_driver(spark, edges, id_type) -> DataFrame:
+    """(node, component) of a fetched Arrow ``(hi, lo)`` edge table, as a
+    driver-local frame.  The ids are coded by their rank in sorted order
+    (Arrow sorts integers and strings as Spark compares them), so the
+    smallest code of a component is its smallest id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from veranda_spark.session import local_df
+
+    both = pa.chunked_array(edges["hi"].chunks + edges["lo"].chunks,
+                            type=edges.schema.field("hi").type).combine_chunks()
+    enc = both.dictionary_encode()
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty_like(order)
+    rank[order] = np.arange(order.size)
+    codes = rank[enc.indices.to_numpy()]
+    ids = enc.dictionary.take(order)
+    lab = _min_labels(codes[: edges.num_rows], codes[edges.num_rows:], order.size)
+    t = id_type.simpleString()
+    return local_df(spark, pa.table([ids, ids.take(lab)], names=["node", "component"]),
+                    f"node {t}, component {t}")
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -294,35 +353,53 @@ def connected_components(
     PAIRS under-specify dedup: if A~B and B~C, all three are one group
     even when A~C never surfaced — survivor selection needs components.
 
-    Alternating large-star / small-star (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014) rewrites one edge
-    frame ``(hi, lo)``, hi >= lo, each round:
+    Two paths over one edge frame ``(hi, lo)``, hi >= lo, chosen by the
+    input's size.  A probe fetches at most ``_DRIVER_EDGES + 1`` distinct
+    edges through Arrow.
 
-    - large-star: each neighbour v >= u of node u links to
-      min(N(u) ∪ {u}), a window min by node over both edge directions;
-    - small-star: each hi and each of its lo's link to that hi's
-      smallest lo, a window min by hi.
+    - **Driver** (at most ``_DRIVER_EDGES`` distinct edges): the ids are
+      coded by rank and labelled with numpy (``_min_labels``), and the
+      result comes back as a driver-local Arrow frame (a LocalRelation,
+      so a join against it broadcasts with no shuffle).  The benchmark's
+      ~3.1k-edge near-dup graph takes this path.
+    - **Loop** (larger): alternating large-star / small-star (Kiveris et
+      al., "Connected Components in MapReduce and Beyond", SoCC 2014)
+      rewrites the edge frame each round:
 
-    Neither step changes connectivity, and the frame converges to a star
-    forest, one row per node — (leaf, root) or (root, root) — that both
-    steps map to itself.  The check tests exactly that: no node has a
-    smaller neighbour and a second row.  ("No lo is also a hi" is not
-    enough: it can stop with a node linked to two roots.)  A round is
-    distinct + one eager localCheckpoint (flat plans) + that one check.
-    The paper bounds the rounds by O(log² n) for any id order; a shuffled
-    2000-node path takes 9, the sorted 2^18-node chain 18.  Raises
-    RuntimeError if ``max_iter`` rounds do not converge.
+      - large-star: each neighbour v >= u of node u links to
+        min(N(u) ∪ {u}), a window min by node over both edge directions;
+      - small-star: each hi and each of its lo's link to that hi's
+        smallest lo, a window min by hi.
 
-    Duplicate and reversed pairs collapse.  A self-pair (x, x) or a pair
-    with one null side (x, None) still makes x a node; null ids never are.
+      Neither step changes connectivity, and the frame converges to a
+      star forest, one row per node — (leaf, root) or (root, root) —
+      that both steps map to itself.  The check tests exactly that: no
+      node has a smaller neighbour and a second row.  ("No lo is also a
+      hi" is not enough: it can stop with a node linked to two roots.)
+      A round is distinct + one eager localCheckpoint (flat plans) +
+      that one check.  The paper bounds the rounds by O(log² n) for any
+      id order; a shuffled 2000-node path takes 9, the sorted
+      2^18-node chain 18.  Raises RuntimeError if ``max_iter`` rounds do
+      not converge.
 
-    ``stats`` (optional) receives {"rounds": <rounds run, including the
-    last one, whose check found the star forest>}."""
+    Both paths give the same rows.  Duplicate and reversed pairs
+    collapse.  A self-pair (x, x) or a pair with one null side
+    (x, None) still makes x a node; null ids never are.  ``node`` and
+    ``component`` have the id columns' type.
+
+    ``stats`` (optional) receives {"rounds": <loop rounds run, including
+    the last one, whose check found the star forest; 0 on the driver
+    path>}."""
     hi, lo, u, v, m = (F.col(c) for c in ("hi", "lo", "u", "v", "m"))
     a, b = F.col(id_a), F.col(id_b)
     edges = pairs.select(F.greatest(a, b).alias("hi"), F.least(a, b).alias("lo")).filter(
         hi.isNotNull()
     )
+    probe = edges.distinct().limit(_DRIVER_EDGES + 1).toArrow()
+    if probe.num_rows <= _DRIVER_EDGES:
+        if stats is not None:
+            stats["rounds"] = 0
+        return _label_on_driver(pairs.sparkSession, probe, edges.schema["hi"].dataType)
     both_ways = F.inline(F.array(F.struct(hi.alias("u"), lo.alias("v")),
                                  F.struct(lo.alias("u"), hi.alias("v"))))
     for it in range(max_iter):

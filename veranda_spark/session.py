@@ -122,7 +122,8 @@ def get_spark(
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Small driver-local rows (tuples in ``schema`` order) → DataFrame.
+    """Small driver-local rows (tuples in ``schema`` order, or a pyarrow
+    Table with ``schema``'s columns in order) → DataFrame.
 
     The rows go to Spark as one Arrow table typed by the DDL ``schema``.
     Below
@@ -146,11 +147,13 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     struct = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    cols = rows.columns if isinstance(rows, pa.Table) else list(zip(*rows))
+    cols = cols or [()] * len(struct.fields)
     if len(cols) != len(struct.fields):
         raise ValueError(f"local_df: rows have {len(cols)} fields, schema {len(struct.fields)}")
     table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        [c.cast(f.type) if isinstance(c, pa.ChunkedArray) else pa.array(c, type=f.type)
+         for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)

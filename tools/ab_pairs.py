@@ -3,7 +3,8 @@
     python tools/ab_pairs.py PARENT_DIR CHANGE_DIR --workload spatial_join --seeds 1-10
 
 For each seed it runs ``python3 perfbench/run.py --workload W --seed S
---seconds 5`` once in each checkout, one run after the other, never two
+--seconds R`` once in each checkout, R being ``BENCHMARK.json``'s
+``run_seconds`` (5), one run after the other, never two
 at once: the parent goes first on odd seeds and the change on even ones,
 so drift of the host during the session falls on both sides alike.  Each
 checkout runs its own ``perfbench/`` on its own source tree and keeps its
@@ -17,7 +18,6 @@ interquartile range.  It also prints each side's ``run.fail_frac``
 (failed operations over attempted ones) and the median wall of every
 set-up span and timed call, read from the worker's result file, so a
 moved end-to-end figure can be put down to the span that moved it.
-``--json PATH`` also writes every run's figures.
 """
 
 from __future__ import annotations
@@ -76,16 +76,13 @@ def main() -> int:
     ap.add_argument("change_dir")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 1,3,5-7")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="timed seconds per run (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--json", help="also write every run's figures here")
     args = ap.parse_args()
 
     roots = {"parent": os.path.abspath(args.parent_dir),
              "change": os.path.abspath(args.change_dir)}
     with open(os.path.join(roots["change"], "BENCHMARK.json"), encoding="utf-8") as f:
         spec = json.load(f)
-    seconds = args.seconds or spec["run_seconds"]
+    seconds = spec["run_seconds"]
     runs: dict[str, list[dict]] = {"parent": [], "change": []}
     seeds = parse_seeds(args.seeds)
     for seed in seeds:
@@ -120,9 +117,6 @@ def main() -> int:
         p = statistics.median(r["spans"].get(key, 0.0) for r in runs["parent"])
         c = statistics.median(r["spans"].get(key, 0.0) for r in runs["change"])
         print(f"  {key:<48}{p:>8.3f} -> {c:.3f}")
-    if args.json:
-        with open(args.json, "w", encoding="utf-8") as f:
-            json.dump({"workload": args.workload, "seeds": seeds, "runs": runs}, f, indent=1)
     return 0
 
 

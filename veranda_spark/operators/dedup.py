@@ -288,7 +288,10 @@ def embedding_neardup_pairs(
 # host, local[4], 2011m driver, 2 runs each) the driver path took 0.5-2.0 s
 # against the loop's 2.7-5.2 s at 10k edges, 0.8-0.9 s vs 4.5-5.2 s at 100k
 # and 7.1-8.2 s vs 26.6-31.1 s at 1M.  It wins at every size measured, so
-# the limit is what a 2 GiB driver holds comfortably, not a crossover.
+# the limit is a memory cap, not a crossover.  At 1M string-id edges the
+# call plus keep-first's anti-join peaked at 0.91-1.01 GB of the 1.79 GB
+# JVM heap and 0.32-0.42 GB of Python RSS (random graph, 864k nodes; 1M
+# disjoint edges, 2M nodes).
 _DRIVER_EDGES = 1_000_000
 
 
@@ -359,9 +362,13 @@ def connected_components(
 
     - **Driver** (at most ``_DRIVER_EDGES`` distinct edges): the ids are
       coded by rank and labelled with numpy (``_min_labels``), and the
-      result comes back as a driver-local Arrow frame (a LocalRelation,
-      so a join against it broadcasts with no shuffle).  The benchmark's
-      ~3.1k-edge near-dup graph takes this path.
+      result comes back through ``session.local_df``.  Below
+      ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) that
+      is a LocalRelation, so a join against it broadcasts with no
+      shuffle; the benchmark's ~3.1k-edge near-dup graph takes this
+      path.  A larger result is an RDD scan of the same rows, and joins
+      against it shuffle: 1M disjoint string-id edges (2M nodes) gave
+      one, and keep-first's anti-join ran as a sort-merge join.
     - **Loop** (larger): alternating large-star / small-star (Kiveris et
       al., "Connected Components in MapReduce and Beyond", SoCC 2014)
       rewrites the edge frame each round:

@@ -62,17 +62,63 @@ def test_snapshot_isolation_time_travel(spark, base):
             read_table(spark, base, version=missing)
 
 
-def test_cow_links_untouched_partitions(spark, base):
+def _merge_k1(spark, path):
     upd = spark.createDataFrame([(1, 1, "Y")], "k long, p long, val string")
-    merge_into(spark, base, upd, keys=["k"], partition_by="p")
+    merge_into(spark, path, upd, keys=["k"], partition_by="p")
+
+
+def _delete_k1(spark, path):
+    from veranda_spark.io.table import delete_rows
+
+    delete_rows(spark, path, spark.createDataFrame([(1,)], "k long"),
+                keys=["k"], partition_by="p")
+
+
+_MUTATIONS = pytest.mark.parametrize(
+    "mutate", [_merge_k1, _delete_k1], ids=["merge_into", "delete_rows"]
+)
+
+
+@_MUTATIONS
+def test_cow_links_untouched_partitions(spark, base, mutate):
+    # key 1 lives in p=1: only that partition is rewritten
+    mutate(spark, base)
     v1 = os.path.join(base, "_versions", "000001")
     v2 = os.path.join(base, "_versions", "000002")
-    # untouched partition p=2: files are the SAME inodes (hard links)
-    assert _inodes(v1, "p=2") == _inodes(v2, "p=2")
-    # affected partition p=1 was rewritten (no shared inodes)
+    # untouched partitions: files are the SAME inodes (hard links)
+    for part in ("p=0", "p=2", "p=3"):
+        assert _inodes(v1, part) and _inodes(v1, part) == _inodes(v2, part)
+    # the touched partition p=1 was rewritten into ONE new file
+    assert len(_inodes(v2, "p=1")) == 1
     assert not (
         set(_inodes(v1, "p=1").values()) & set(_inodes(v2, "p=1").values())
     )
+
+
+# Spark jobs of one merge_into or delete_rows on the `base` fixture at
+# local[4] with 8 shuffle partitions (10 each): an upper bound, so the
+# rewrite path cannot gain a job unnoticed
+_MAX_JOBS = 10
+
+
+@_MUTATIONS
+def test_mutation_job_count(spark, base, mutate):
+    # the count depends on the shuffle partition count (11 for both at 2),
+    # and get_spark on the live session resets it, so pin the fixture's 8
+    sc = spark.sparkContext
+    group = f"table_{mutate.__name__}"
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    sc.setJobGroup(group, "one table mutation")
+    try:
+        mutate(spark, base)
+    finally:
+        sc.setJobGroup("table_done", "")
+        spark.conf.set(conf, old)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= _MAX_JOBS, n_jobs
+    assert current_version(base) == 2
 
 
 def test_partition_move_rewrites_both_sides(spark, base):
@@ -639,21 +685,6 @@ def test_delete_rows_whole_partition_disappears(spark, base):
     t = read_table(spark, base)
     assert t.filter(t.p == 2).count() == 0
     assert t.count() == 15
-
-
-def test_delete_rows_partition_hint(spark, base):
-    from veranda_spark.io.table import delete_rows
-
-    # correct hint: pruned scan, same result
-    dels = spark.createDataFrame([(5, 1)], "k long, p long")
-    delete_rows(spark, base, dels, keys=["k"], partition_by="p",
-                trust_partition_hint=True)
-    assert 5 not in {r["k"] for r in read_table(spark, base).collect()}
-    # WRONG hint silently skips (the documented opt-in hazard)
-    dels2 = spark.createDataFrame([(6, 0)], "k long, p long")  # 6 lives in p=2
-    delete_rows(spark, base, dels2, keys=["k"], partition_by="p",
-                trust_partition_hint=True)
-    assert 6 in {r["k"] for r in read_table(spark, base).collect()}
 
 
 def test_delete_rows_all_rows_guarded(spark, base):

@@ -49,6 +49,7 @@ import errno
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -250,6 +251,55 @@ def _carry_untouched(
             _link_file(src, dst)
 
 
+def _touched(
+    names: list[str], values_df: DataFrame, partition_by: str
+) -> set[str]:
+    """The partition directory names (of ``names``) holding a value of
+    ``values_df[partition_by]``.  Values are matched as Spark renders
+    them — ``cast(partition_by as string)``, collected distinct once —
+    against the DECODED directory names: the partition writer names
+    directories with Spark's rendering (``'true'`` for a boolean, where
+    Python's str() gives ``'True'``) and %XX-escapes special characters,
+    and a null value is the ``__HIVE_DEFAULT_PARTITION__`` directory.
+    A directory missed here would be linked as untouched AND rewritten:
+    duplicated rows."""
+    vals = {
+        r[0] for r in values_df.select(F.col(partition_by).cast("string"))
+        .distinct().collect()
+    }
+    return {n for n in names if _unescape_partition_dir(n) in vals}
+
+
+def _rewrite(
+    stage: str, path: str, cur: int, names: list[str], touched: set[str],
+    partition_by: str, tgt: DataFrame,
+    rows: Callable[[DataFrame], DataFrame],
+) -> None:
+    """The partition-granular copy-on-write of every table mutation:
+    hard-link each partition of version ``cur`` not in ``touched`` into
+    the stage, and write ``rows(tgt restricted to the touched
+    partitions)`` there.  The restriction reads only the partition
+    column (by ``_touched``'s string rule), so Catalyst prunes the scan
+    to the touched directories.  The keyed repartition gives each
+    rewritten partition one task, hence ONE file; without it every scan
+    task writes its own file into each partition directory and every
+    later read pays for the listing (round-9; unnumbered, so AQE sizes
+    the exchange)."""
+    _carry_untouched(_version_path(path, cur), stage, names, touched)
+    vals = {_unescape_partition_dir(n) for n in touched}
+    col = F.col(partition_by).cast("string")
+    keep = col.isin(sorted(vals - {None})) if vals - {None} else F.lit(False)
+    if None in vals:
+        keep = keep | col.isNull()
+    (
+        rows(tgt.filter(keep))
+        .repartition(F.col(partition_by))
+        .write.mode("append")
+        .partitionBy(partition_by)
+        .parquet(stage)
+    )
+
+
 @contextmanager
 def _staged_version(path: str, base: int | None):
     """THE commit path, in one place: yield a fresh stage under
@@ -305,16 +355,6 @@ def recover_orphans(path: str) -> list[str]:
     for name in names:
         shutil.rmtree(os.path.join(_staging_dir(path), name), ignore_errors=True)
     return names
-
-
-def _isin_or_null(col, vals: list, has_null: bool):
-    """Null-safe membership filter on Column ``col``: ``isin()`` never
-    matches NULL, so the NULL partition needs its own disjunct — shared
-    by merge_into, delete_rows and compact_table."""
-    cond = col.isin(vals) if vals else F.lit(False)
-    if has_null:
-        cond = cond | col.isNull()
-    return cond
 
 
 def _evolved_marker(path: str) -> str:
@@ -490,77 +530,23 @@ def merge_into(
     # staging so a wrong partition_by fails with no Spark work
     # (review r8 pass-6)
     names = _old_partitions(path, cur, partition_by) if partition_by else []
+
+    def upsert(df: DataFrame) -> DataFrame:
+        # left_anti needs no distinct probe side (round-9)
+        return df.join(updates.select(keys), keys, "left_anti").unionByName(updates)
+
     with _staged_version(path, cur) as stage:
-        if partition_by:
-            # partitions touched by the update batch: the updates' own
-            # partition values PLUS the current partition of any matched key
-            # (a key may move across partitions)
-            # round-9 (guide §2.4): no per-branch distincts — the final
-            # union.distinct() below is the only dedup the collect needs,
-            # and a left_semi probe side needs no distinct either, so two
-            # Exchanges (and their AQE stage jobs) disappear per merge
-            upd_parts = updates.select(partition_by)
-            moved_parts = (
+        if not partition_by:
+            upsert(tgt).write.mode("append").parquet(stage)
+        else:
+            # touched: the updates' own partitions PLUS the current
+            # partition of any matched key (a key may move across
+            # partitions); no per-branch distinct (round-9, guide §2.4)
+            touched = _touched(names, updates.select(partition_by).union(
                 tgt.join(updates.select(keys), keys, "left_semi")
                 .select(partition_by)
-            )
-            # collect each value twice: raw (for the typed isin filter) and
-            # SPARK's cast-to-string (for directory-name matching — the
-            # partition writer names directories with Spark's own string
-            # rendering, which differs from Python str() for bool
-            # ('true' vs 'True') and some floats)
-            aff_rows = (
-                upd_parts.union(moved_parts)
-                .distinct()
-                .select(
-                    F.col(partition_by).alias("_v"),
-                    F.col(partition_by).cast("string").alias("_s"),
-                )
-                .collect()
-            )
-            affected = [r["_v"] for r in aff_rows]
-            affected_strs = [r["_s"] for r in aff_rows]
-            # compare DECODED directory values against the affected set:
-            # escaped characters and the NULL partition would otherwise be
-            # linked as "untouched" AND rewritten → duplicated rows
-            aff_vals = [a for a in affected if a is not None]  # raw typed values
-            aff_set = {s for s in affected_strs if s is not None}  # Spark-rendered
-            aff_null = any(a is None for a in affected)
-            touched_names = {
-                name for name in names
-                if (
-                    (v := _unescape_partition_dir(name)) is None and aff_null
-                ) or (v is not None and v in aff_set)
-            }
-            # everything lands in the stage (carried partitions and
-            # fresh writes); one rename publishes it — see _publish
-            _carry_untouched(
-                _version_path(path, cur), stage, names, touched_names
-            )
-            tgt_aff = tgt.filter(
-                _isin_or_null(F.col(partition_by), aff_vals, aff_null)
-            )
-            # every update row's partition is in `affected` by construction
-            # (left_anti needs no distinct probe side — round-9)
-            merged = tgt_aff.join(
-                updates.select(keys), keys, "left_anti"
-            ).unionByName(updates)
-            # one task (hence one file) per rewritten partition: without
-            # the keyed repartition every scan task writes its own file
-            # into each partition dir (~50 tiny files per version), and
-            # every later read_table/merge pays the listing + open cost
-            # (round-9, guide §6 small files; unnumbered = AQE-sized)
-            (
-                merged.repartition(F.col(partition_by))
-                .write.mode("append")
-                .partitionBy(partition_by)
-                .parquet(stage)
-            )
-        else:
-            merged = tgt.join(
-                updates.select(keys), keys, "left_anti"
-            ).unionByName(updates)
-            merged.write.mode("append").parquet(stage)
+            ), partition_by)
+            _rewrite(stage, path, cur, names, touched, partition_by, tgt, upsert)
     return {"version": cur + 1, "previous": cur}
 
 
@@ -570,7 +556,6 @@ def delete_rows(
     keys_df: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
-    trust_partition_hint: bool = False,
 ) -> dict:
     """DELETE by key (`DELETE FROM t WHERE (k) IN (SELECT k FROM d)`) —
     the right-to-be-forgotten primitive for training-data tables:
@@ -593,12 +578,9 @@ def delete_rows(
     ``create_table`` in that case.
 
     Scale: finding the affected partitions is a semi-join of the table
-    against the (typically tiny, broadcast) key set — a full scan at
-    100 TB unless the keys carry their partition.  When ``keys_df``
-    includes ``partition_by`` AND ``trust_partition_hint=True``, the
-    scan is pruned to the hinted partitions up front; a WRONG hint
-    then silently skips rows living elsewhere, which is why trusting
-    it is opt-in.
+    against the (typically tiny, broadcast) key set — a full scan of
+    the current version; only the rewrite is pruned to the touched
+    partitions.
     """
     cur = current_version(path)
     if cur is None:
@@ -614,56 +596,25 @@ def delete_rows(
         raise ValueError(
             f"delete_rows: table lacks key column(s) {missing_t}"
         )
+    # no eager distinct: both consumers are semi/anti join probe sides
+    # (round-9, guide §2.4)
     kcols = list(keys)
-    hint = (
-        trust_partition_hint
-        and partition_by is not None
-        and partition_by in keys_df.columns
-    )
-    # no eager distinct: every consumer is a semi/anti join probe side or
-    # re-distincts itself (the hint collect) — round-9, guide §2.4
-    dels = keys_df.select(kcols + ([partition_by] if hint else []))
+    dels = keys_df.select(kcols)
+
+    def survivors(df: DataFrame) -> DataFrame:
+        return df.join(dels, kcols, "left_anti")
+
     names = _old_partitions(path, cur, partition_by) if partition_by else []
     with _staged_version(path, cur) as stage:
-        if partition_by:
-            scan = tgt
-            if hint:
-                hrows = dels.select(partition_by).distinct().collect()
-                scan = tgt.filter(_isin_or_null(
-                    F.col(partition_by),
-                    [r[0] for r in hrows if r[0] is not None],
-                    any(r[0] is None for r in hrows),
-                ))
-            aff_rows = (
-                scan.join(dels.select(kcols), kcols, "left_semi")
-                .select(
-                    F.col(partition_by).alias("_v"),
-                    F.col(partition_by).cast("string").alias("_s"),
-                )
-                .distinct()
-                .collect()
+        if not partition_by:
+            survivors(tgt).write.mode("append").parquet(stage)
+        else:
+            touched = _touched(
+                names, tgt.join(dels, kcols, "left_semi").select(partition_by),
+                partition_by,
             )
-            aff_vals = [r["_v"] for r in aff_rows if r["_v"] is not None]
-            aff_set = {r["_s"] for r in aff_rows if r["_s"] is not None}
-            aff_null = any(r["_v"] is None for r in aff_rows)
-            touched_names = {
-                name for name in names
-                if (
-                    (v := _unescape_partition_dir(name)) is None and aff_null
-                ) or (v is not None and v in aff_set)
-            }
-            _carry_untouched(
-                _version_path(path, cur), stage, names, touched_names
-            )
-            remaining = tgt.filter(
-                _isin_or_null(F.col(partition_by), aff_vals, aff_null)
-            ).join(dels.select(kcols), kcols, "left_anti")
-            (
-                remaining.repartition(F.col(partition_by))
-                .write.mode("append")
-                .partitionBy(partition_by)
-                .parquet(stage)
-            )
+            _rewrite(stage, path, cur, names, touched, partition_by, tgt,
+                     survivors)
             if not _has_parquet(stage):
                 # PARTITIONED delete-all: every partition directory
                 # vanished, so the snapshot has no parquet schema
@@ -678,9 +629,6 @@ def delete_rows(
                     "readable parquet schema; recreate with create_table "
                     "instead"
                 )
-        else:
-            remaining = tgt.join(dels.select(kcols), kcols, "left_anti")
-            remaining.write.mode("append").parquet(stage)
     return {"version": cur + 1, "previous": cur}
 
 
@@ -789,8 +737,7 @@ def compact_table(
         )
 
     if partition_by is None:
-        vdir = _version_path(path, cur)
-        before = _count_parquet(vdir)
+        before = _count_parquet(cur_dir)
         if before <= max_files:
             return {"version": cur, "compacted": 0,
                     "files_before": before, "files_after": before}
@@ -808,27 +755,8 @@ def compact_table(
         return {"version": cur, "compacted": 0,
                 "files_before": before, "files_after": before}
     with _staged_version(path, cur) as stage:
-        _carry_untouched(cur_dir, stage, sorted(counts), touched)
-        # rewrite the oversized partitions: the predicate is over the
-        # partition column only, so Catalyst PRUNES the scan to exactly the
-        # touched partition directories (O(compacted bytes), not O(table)).
-        # The hash repartition on the partition column lands each value in
-        # one task, so the partitioned write emits ONE file per compacted
-        # partition (max_files is the trigger threshold, not an output
-        # count — documented above).
-        touched_vals = [_unescape_partition_dir(n) for n in touched]
-        cond = _isin_or_null(
-            F.col(partition_by).cast("string"),
-            [v for v in touched_vals if v is not None],
-            any(v is None for v in touched_vals),
-        )
-        (
-            read_table(spark, path).filter(cond)
-            .repartition(len(touched), partition_by)
-            .write.mode("append")
-            .partitionBy(partition_by)
-            .parquet(stage)
-        )
+        _rewrite(stage, path, cur, sorted(counts), touched, partition_by,
+                 read_table(spark, path), lambda df: df)
     after = sum(_partition_file_counts(path, cur + 1, partition_by).values())
     return {"version": cur + 1, "compacted": len(touched),
             "files_before": before, "files_after": after}

@@ -1443,12 +1443,16 @@ def build_pyramid_checkpointed(
     level k's committed table — never an in-memory cache, never the
     originals.  A crashed build resumes where it stopped:
 
-      - a fully-committed level (``_level_done`` marker) is read back,
-        zero recompute;
-      - a partially-committed level keeps its finished tiles (the sink's
-        per-tile lineage anti-join) and recomputes only the rest, with
-        the SHRINK input being the previous level's committed table
-        (4× smaller than source) rather than the original imagery.
+      - a finished level (``_level_done`` marker) is read back, zero
+        recompute;
+      - a level is all-or-nothing: its tiles commit as ONE sink version
+        (one ``append_rows`` published by one rename), so a build that
+        crashed inside a level committed none of its tiles and
+        recomputes the whole level, with the SHRINK input being the
+        previous level's committed table (4× smaller than source)
+        rather than the original imagery.  A crash after the commit but
+        before the marker recomputes nothing: the sink's per-tile
+        anti-join finds every tile done.
 
     tile_ids are namespaced ``var/layer/r_c`` so multi-variable levels
     don't collide in the per-tile lineage.  Returns the same

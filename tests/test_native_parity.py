@@ -15,16 +15,14 @@ from veranda_spark.operators.raster import burn_in, read_window
 from veranda_spark.operators.select import select
 
 
-def test_coordinate_formula_golden():
+def test_coordinate_formula_golden(spark):
     # F3 geo metadata golden (test_netcdf4.py:91-107): geotrans
     # (3000000, 500, 0, 1800000, 0, -500); x = gt0 + (0.5+i)*gt1
     g = RegularGrid(ul_x=3000000.0, ul_y=1800000.0, psx=500.0, psy=500.0,
                     tile_cols=100, tile_rows=100, n_tile_cols=1, n_tile_rows=1)
     assert g.tile_geotrans(0, 0) == (3000000.0, 500.0, 0.0, 1800000.0, 0.0, -500.0)
     import pyspark.sql.functions as F_
-    from veranda_spark.session import get_spark
 
-    spark = get_spark(master="local[2]", shuffle_partitions=2)
     df = spark.range(100).select(
         g.x_center(F_.col("id")).alias("x"), g.y_center(F_.col("id")).alias("y")
     )

@@ -841,3 +841,35 @@ def test_wrong_partition_column_is_loud(spark, base):
     # table untouched by all three
     assert current_version(base) == 1
     assert read_table(spark, base).count() == 20
+
+
+@pytest.mark.parametrize(
+    "ptype,pvals",
+    [("decimal(5,2)", ("1.50", "2.00")), ("string", ("010", "020"))],
+    ids=["decimal", "string"],
+)
+@_MUTATIONS
+def test_mutation_refuses_unreadable_partition_names(
+    spark, tmp_path, mutate, ptype, pvals
+):
+    # Spark infers a partition column's type from the directory names on
+    # read: p=2.00 comes back as double 2.0 and p=010 as int 10, so the
+    # touched partition of a matched key cannot be found by its value.
+    # Both mutations used to commit with the row silently kept; now they
+    # raise and commit nothing.
+    from decimal import Decimal
+
+    path = str(tmp_path / "tbl")
+    cast = Decimal if ptype.startswith("decimal") else str
+    schema = f"k long, p {ptype}, val string"
+    create_table(
+        spark.createDataFrame(
+            [(k, cast(pv), f"v{k}") for k, pv in zip((1, 2), pvals)], schema
+        ),
+        path, partition_by="p",
+    )
+    # the table-side value of key 1 renders differently from its directory
+    with pytest.raises(ValueError, match="do not round-trip"):
+        mutate(spark, path)
+    assert list_versions(path) == [1]
+    assert {r["k"] for r in read_table(spark, path).collect()} == {1, 2}

@@ -15,104 +15,12 @@ design).  A sink has a SINGLE writer (the table contract).
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from veranda_spark.io import table
-
-
-def _strip_file_scheme(p: str) -> str:
-    return p[len("file:"):] if p.startswith("file:") else p
-
-
-def _hadoop_path_exists(spark: SparkSession, p: str) -> bool:
-    """FS-scheme-aware existence check (local, hdfs://, s3a://, ...).
-
-    Only the NO-JVM case falls back to a local check; filesystem errors
-    (auth, connectivity) RAISE — swallowing them would read an existing
-    remote checkpoint marker as absent and silently recompute (or mix)
-    checkpointed state."""
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        return os.path.exists(_strip_file_scheme(p))
-    jpath = jvm.org.apache.hadoop.fs.Path(p)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _hadoop_touch(spark: SparkSession, p: str, content: str = "") -> None:
-    """Create a marker file (optionally with content) through the Hadoop
-    FileSystem API so hdfs:// and object-store paths work like local
-    ones (falls back to plain local IO when no JVM is attached).
-
-    ATOMIC: the content is written to a temp name and renamed into
-    place, so a crash mid-write can never leave a torn (e.g. empty)
-    marker at ``p`` — an empty marker therefore always means a
-    pre-fingerprint-era checkpoint, never a partial write, which is what
-    lets the resume paths accept-and-stamp it.  A crash between the
-    delete of an old marker and the rename leaves NO marker (fails
-    toward recompute, never toward accepting stale state)."""
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        local = _strip_file_scheme(p)
-        tmp = local + "._tmp"
-        with open(tmp, "w") as f:
-            f.write(content)
-        os.replace(tmp, local)  # atomic on POSIX
-        return
-    jpath = jvm.org.apache.hadoop.fs.Path(p)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    jtmp = jvm.org.apache.hadoop.fs.Path(p + "._tmp")
-    out = fs.create(jtmp, True)
-    if content:
-        out.write(bytearray(content.encode()))
-    out.close()
-    # HDFS rename refuses an existing destination: clear it first
-    if fs.exists(jpath):
-        fs.delete(jpath, False)
-    if not fs.rename(jtmp, jpath):
-        raise IOError(f"atomic marker rename failed: {p}")
-
-
-def _hadoop_read_text(spark: SparkSession, p: str) -> str:
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        with open(_strip_file_scheme(p)) as f:
-            return f.read()
-    jpath = jvm.org.apache.hadoop.fs.Path(p)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(jpath)
-    # NOTE: py4j does not copy mutated byte[] buffers back, so
-    # stream.read(buf) cannot work from Python — copy JVM-side instead
-    baos = jvm.java.io.ByteArrayOutputStream()
-    jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)
-    return bytes(baos.toByteArray()).decode()
-
-
-def _checkpoint_once(spark: SparkSession, marker: str, fp: str, what: str, write) -> None:
-    """Run ``write()`` unless ``marker`` says it already completed with
-    the parameter fingerprint ``fp``; the marker lands only after a
-    complete write.  An empty marker was written before fingerprints
-    existed: accept it (the data is valid) and stamp it.  A marker with
-    a different fingerprint raises — resuming with different parameters
-    must fail loudly, never reuse stale state.  (Input identity is the
-    caller's contract: one checkpoint location per input, the same
-    ownership rule as any streaming checkpoint.)"""
-    if not _hadoop_path_exists(spark, marker):
-        write()
-        _hadoop_touch(spark, marker, fp)
-        return
-    prev = _hadoop_read_text(spark, marker)
-    if prev == "":
-        _hadoop_touch(spark, marker, fp)
-    elif prev != fp:
-        raise ValueError(
-            f"{what} was written with different parameters ({prev}); "
-            f"use a fresh checkpoint location for {fp}"
-        )
 
 
 def read_lineage(spark: SparkSession, base: str) -> DataFrame | None:

@@ -1,8 +1,9 @@
 """Versioned parquet tables with copy-on-write MERGE — Iceberg-style
 snapshot semantics without an Iceberg runtime (none in this env).  This
-is the engine's one commit path: keyed tables and the tile sinks of
+is the engine's one commit path: keyed tables, the tile sinks of
 io/lineage.py (a table partitioned by tile_id, written by
-``append_rows``) all commit through ``_staged_version``.
+``append_rows``) and the quicklook/pyramid checkpoints (``write_once``)
+all commit through ``_staged_version``.
 
 Layout::
 
@@ -100,11 +101,55 @@ def create_table(
     """Write version 1 of a managed versioned table (FileExistsError
     when ``path`` already holds one)."""
     with _staged_version(path, 0) as stage:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(stage)
+        _write_stage(df, stage, partition_by)
     return 1
+
+
+def _write_stage(df: DataFrame, stage: str, partition_by: str | None) -> None:
+    w = df.write.mode("append")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(stage)
+
+
+def _fingerprint_file(vdir: str) -> str:
+    return os.path.join(vdir, "_fingerprint")
+
+
+def write_once(
+    df: DataFrame, path: str, fp: str, partition_by: str | None = None
+) -> int:
+    """A checkpoint: publish ``df`` as version 1 of the table at ``path``
+    stamped with the parameter fingerprint ``fp``, or, when a version is
+    already live there, write nothing and return its number.  The stamp
+    is a ``_fingerprint`` file written INSIDE the stage, so the one
+    rename publishes the data and the stamp together (Spark scans and
+    ``restore_version`` skip ``_``-prefixed files): a killed attempt
+    leaves only an unpublished stage and the next call starts over.
+    A live version whose stamp differs from ``fp``, or that has none (a
+    table written any other way), raises: resuming with different
+    parameters must fail loudly, never reuse stale state.  (Input
+    identity is the caller's contract: one checkpoint location per
+    input.)"""
+    cur = current_version(path)
+    if cur is None:
+        with _staged_version(path, 0) as stage:
+            _write_stage(df, stage, partition_by)
+            with open(_fingerprint_file(stage), "w") as f:
+                f.write(fp)
+        return 1
+    try:
+        with open(_fingerprint_file(_version_path(path, cur))) as f:
+            prev = f.read()
+    except FileNotFoundError:
+        prev = None
+    if prev != fp:
+        raise ValueError(
+            f"checkpoint {path} was written with different parameters "
+            f"({prev or 'no fingerprint'}); use a fresh checkpoint "
+            f"location for {fp}"
+        )
+    return cur
 
 
 def _has_parquet(vdir: str) -> bool:
@@ -252,22 +297,40 @@ def _carry_untouched(
 
 
 def _touched(
-    names: list[str], values_df: DataFrame, partition_by: str
+    names: list[str], partition_by: str, found: DataFrame,
+    new: DataFrame | None = None,
 ) -> set[str]:
     """The partition directory names (of ``names``) holding a value of
-    ``values_df[partition_by]``.  Values are matched as Spark renders
-    them — ``cast(partition_by as string)``, collected distinct once —
-    against the DECODED directory names: the partition writer names
-    directories with Spark's rendering (``'true'`` for a boolean, where
-    Python's str() gives ``'True'``) and %XX-escapes special characters,
-    and a null value is the ``__HIVE_DEFAULT_PARTITION__`` directory.
-    A directory missed here would be linked as untouched AND rewritten:
-    duplicated rows."""
-    vals = {
-        r[0] for r in values_df.select(F.col(partition_by).cast("string"))
-        .distinct().collect()
-    }
-    return {n for n in names if _unescape_partition_dir(n) in vals}
+    ``found[partition_by]`` (values read from the table) or
+    ``new[partition_by]`` (update values, which may open new
+    partitions).  Values are matched as Spark renders them —
+    ``cast(partition_by as string)``, collected distinct once — against
+    the DECODED directory names: the partition writer names directories
+    with Spark's rendering (``'true'`` for a boolean, where Python's
+    str() gives ``'True'``) and %XX-escapes special characters, and a
+    null value is the ``__HIVE_DEFAULT_PARTITION__`` directory.  A
+    directory missed here would be linked as untouched AND rewritten:
+    duplicated rows.  A ``found`` value came out of a directory, so one
+    that matches no name means the name does not round-trip through the
+    type Spark inferred for it on read (``p=2.00`` reads back as double
+    ``2.0``, ``p=010`` as int ``10``): that raises."""
+    col = F.col(partition_by).cast("string")
+    vals = found.select(col, F.lit(True))
+    if new is not None:
+        vals = vals.union(new.select(col, F.lit(False)))
+    rows = vals.distinct().collect()
+    decoded = {_unescape_partition_dir(n) for n in names}
+    lost = sorted(str(v) for v, is_found in rows if is_found and v not in decoded)
+    if lost:
+        raise ValueError(
+            f"partition column {partition_by!r} reads back as "
+            f"{found.schema[partition_by].dataType.simpleString()}, and its "
+            f"value(s) {lost[:3]} name no partition directory: the "
+            "directory names do not round-trip through that type, so a "
+            "rewrite would keep the rows it should replace"
+        )
+    wanted = {v for v, _ in rows}
+    return {n for n in names if _unescape_partition_dir(n) in wanted}
 
 
 def _rewrite(
@@ -542,10 +605,10 @@ def merge_into(
             # touched: the updates' own partitions PLUS the current
             # partition of any matched key (a key may move across
             # partitions); no per-branch distinct (round-9, guide §2.4)
-            touched = _touched(names, updates.select(partition_by).union(
-                tgt.join(updates.select(keys), keys, "left_semi")
-                .select(partition_by)
-            ), partition_by)
+            touched = _touched(
+                names, partition_by,
+                tgt.join(updates.select(keys), keys, "left_semi"), updates,
+            )
             _rewrite(stage, path, cur, names, touched, partition_by, tgt, upsert)
     return {"version": cur + 1, "previous": cur}
 
@@ -610,8 +673,7 @@ def delete_rows(
             survivors(tgt).write.mode("append").parquet(stage)
         else:
             touched = _touched(
-                names, tgt.join(dels, kcols, "left_semi").select(partition_by),
-                partition_by,
+                names, partition_by, tgt.join(dels, kcols, "left_semi")
             )
             _rewrite(stage, path, cur, names, touched, partition_by, tgt,
                      survivors)

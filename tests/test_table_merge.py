@@ -1,8 +1,10 @@
 """Versioned table MERGE: upsert semantics, snapshot isolation, COW."""
 
+import json
 import os
 
 import pytest
+from pyspark.sql.types import StructType
 
 from veranda_spark.io.table import (
     create_table,
@@ -15,6 +17,12 @@ from veranda_spark.io.table import (
 
 def _rows(df):
     return {(r["k"], r["p"], r["val"]) for r in df.collect()}
+
+
+def _published_schema(path, version):
+    vdir = os.path.join(path, "_versions", f"{version:06d}")
+    with open(os.path.join(vdir, "_schema.json")) as f:
+        return StructType.fromJson(json.load(f))
 
 
 def _inodes(vdir, part):
@@ -96,14 +104,15 @@ def test_cow_links_untouched_partitions(spark, base, mutate):
 
 
 # Spark jobs of one merge_into or delete_rows on the `base` fixture at
-# local[4] with 8 shuffle partitions (10 each): an upper bound, so the
-# rewrite path cannot gain a job unnoticed
-_MAX_JOBS = 10
+# local[4] with 8 shuffle partitions (9 each; read_table runs none, as it
+# scans with the version's stored schema): an upper bound, so neither
+# the rewrite path nor schema inference can add a job unnoticed
+_MAX_JOBS = 9
 
 
 @_MUTATIONS
 def test_mutation_job_count(spark, base, mutate):
-    # the count depends on the shuffle partition count (11 for both at 2),
+    # the count depends on the shuffle partition count (10 for both at 2),
     # and get_spark on the live session resets it, so pin the fixture's 8
     sc = spark.sparkContext
     group = f"table_{mutate.__name__}"
@@ -465,7 +474,7 @@ def test_concurrent_publishers_take_each_version_once(tmp_path):
         for i in range(25):
             base = current_version(path)
             try:
-                with tbl._staged_version(path, base) as stage:
+                with tbl._staged_version(path, base, StructType([])) as stage:
                     with open(os.path.join(stage, "who"), "w") as f:
                         f.write(f"{wid}:{i}")
             except FileExistsError:
@@ -843,33 +852,164 @@ def test_wrong_partition_column_is_loud(spark, base):
     assert read_table(spark, base).count() == 20
 
 
+_PARTITION_TYPES = [
+    ("decimal(5,2)", ("1.50", "2.00")),
+    ("string", ("010", "020")),
+    ("string", ("a:b/c%d", "plain")),
+    ("string", ("", "x")),
+    ("string", ("x", None)),
+    ("date", ("2020-01-02", "1999-12-31")),
+    ("timestamp", ("2020-01-02 03:04:05", "2020-01-02 03:04:05.123456")),
+    ("boolean", (True, False)),
+    ("double", (1e20, -0.0)),
+    ("float", (1.5, -0.0)),
+    ("int", (1, 2)),
+    ("bigint", (2**40, 7)),
+]
+
+
 @pytest.mark.parametrize(
-    "ptype,pvals",
-    [("decimal(5,2)", ("1.50", "2.00")), ("string", ("010", "020"))],
-    ids=["decimal", "string"],
+    "ptype,pvals", _PARTITION_TYPES,
+    ids=["decimal", "leading_zero", "escaped", "empty", "null", "date",
+         "timestamp", "boolean", "double", "float", "int", "bigint"],
 )
-@_MUTATIONS
-def test_mutation_refuses_unreadable_partition_names(
-    spark, tmp_path, mutate, ptype, pvals
-):
-    # Spark infers a partition column's type from the directory names on
-    # read: p=2.00 comes back as double 2.0 and p=010 as int 10, so the
-    # touched partition of a matched key cannot be found by its value.
-    # Both mutations used to commit with the row silently kept; now they
-    # raise and commit nothing.
-    from decimal import Decimal
+@pytest.mark.parametrize("op", ["merge_into", "delete_rows"])
+def test_mutation_round_trips_partition_types(spark, tmp_path, op, ptype, pvals):
+    # read with its stored schema, a partition column comes back with the
+    # type it was written with, so its values name their directories: a
+    # matched key's partition is found, and a new key merged into an
+    # existing partition keeps that partition's other rows (key 3 into
+    # p=1.50 keeps key 1)
+    from pyspark.sql import functions as F
+
+    from veranda_spark.io.table import delete_rows
 
     path = str(tmp_path / "tbl")
-    cast = Decimal if ptype.startswith("decimal") else str
-    schema = f"k long, p {ptype}, val string"
-    create_table(
-        spark.createDataFrame(
-            [(k, cast(pv), f"v{k}") for k, pv in zip((1, 2), pvals)], schema
-        ),
-        path, partition_by="p",
+
+    def frame(rows):
+        # the values are Spark's own casts of the literals
+        df = spark.createDataFrame(
+            [(k, None if v is None else str(v), val) for k, v, val in rows],
+            "k long, p string, val string",
+        )
+        return df.select("k", F.col("p").cast(ptype).alias("p"), "val")
+
+    def rendered(df):
+        # Spark writes an empty-string partition value as the NULL
+        # partition, so '' reads back as null
+        p = F.col("p").cast("string")
+        return set(map(tuple, df.select("k", F.when(p != "", p), "val").collect()))
+
+    a, b = pvals
+    create_table(frame([(1, a, "v1"), (2, b, "v2")]), path, partition_by="p")
+    if op == "merge_into":
+        merge_into(spark, path, frame([(2, b, "U2"), (3, a, "v3")]),
+                   keys=["k"], partition_by="p")
+        want = [(1, a, "v1"), (2, b, "U2"), (3, a, "v3")]
+    else:
+        delete_rows(spark, path, spark.createDataFrame([(1,)], "k long"),
+                    keys=["k"], partition_by="p")
+        want = [(2, b, "v2")]
+    assert list_versions(path) == [1, 2]
+    t = read_table(spark, path)
+    assert t.schema["p"].dataType.simpleString() == ptype
+    assert t.schema == _published_schema(path, 2)
+    assert rendered(t) == rendered(frame(want))
+
+
+# ---- every version carries its schema ---------------------------------------
+
+
+def _assert_versions_carry_schema(spark, path):
+    # read_table returns exactly the published schema: order included
+    for v in list_versions(path):
+        got = read_table(spark, path, version=v).schema
+        assert got == _published_schema(path, v), v
+
+
+@pytest.mark.parametrize("part", ["p", None], ids=["partitioned", "flat"])
+def test_every_writer_publishes_its_schema(spark, tmp_path, part):
+    from veranda_spark.io.table import (
+        compact_table, delete_rows, restore_version, write_once,
     )
-    # the table-side value of key 1 renders differently from its directory
-    with pytest.raises(ValueError, match="do not round-trip"):
-        mutate(spark, path)
-    assert list_versions(path) == [1]
-    assert {r["k"] for r in read_table(spark, path).collect()} == {1, 2}
+
+    schema = "k long, p long, val string"
+    df = spark.createDataFrame(
+        [(i, i % 3, f"v{i}") for i in range(12)], schema
+    ).repartition(4)
+    path = str(tmp_path / "t")
+    create_table(df, path, partition_by=part)                         # v1
+    res = compact_table(spark, path, partition_by=part,
+                        max_files=0 if part else 1)                   # v2
+    assert res["version"] == 2
+    upd = spark.createDataFrame([(1, 1, "U"), (50, 2, "n")], schema)
+    merge_into(spark, path, upd, keys=["k"], partition_by=part)       # v3
+    delete_rows(spark, path, spark.createDataFrame([(4,)], "k long"),
+                keys=["k"], partition_by=part)                        # v4
+    restore_version(path, 1)                                          # v5
+    assert list_versions(path) == [1, 2, 3, 4, 5]
+    order = ["k", "val", "p"] if part else ["k", "p", "val"]
+    assert read_table(spark, path).columns == order
+    _assert_versions_carry_schema(spark, path)
+
+    once = str(tmp_path / "once")
+    write_once(df, once, "fp", partition_by=part)
+    assert read_table(spark, once).columns == order
+    _assert_versions_carry_schema(spark, once)
+
+
+def test_append_rows_unions_schemas_and_refuses_type_conflicts(spark, tmp_path):
+    from veranda_spark.io.table import append_rows
+
+    path = str(tmp_path / "sink")
+    append_rows(spark.createDataFrame([(1, 0, "a")], "k long, p long, val string"),
+                path, "p")                                            # v1
+    # a new column, a missing one and another column order
+    append_rows(spark.createDataFrame([(0, "hot", 2)], "p long, tag string, k long"),
+                path, "p")                                            # v2
+    t = read_table(spark, path)
+    assert t.columns == ["k", "val", "tag", "p"]
+    assert set(map(tuple, t.collect())) == {(1, "a", None, 0), (2, None, "hot", 0)}
+    _assert_versions_carry_schema(spark, path)
+    bad = spark.createDataFrame([(3, 1, 7)], "k long, p long, val int")
+    with pytest.raises(ValueError, match=r"'val' \(string in the table, int here\)"):
+        append_rows(bad, path, "p")
+    assert list_versions(path) == [1, 2]
+    assert os.listdir(os.path.join(path, "_staging")) == []
+
+
+def test_strict_merge_refuses_a_changed_column_type(spark, base):
+    # unionByName would widen the rewritten partitions' files away from
+    # the stored type; the merge raises before any write instead
+    upd = spark.createDataFrame([(3, 3, 7)], "k long, p long, val int")
+    with pytest.raises(ValueError, match="schema mismatch: column type differs"):
+        merge_into(spark, base, upd, keys=["k"], partition_by="p")
+    assert list_versions(base) == [1]
+    assert (3, 3, "v3") in _rows(read_table(spark, base))
+
+
+def test_version_without_schema_is_refused(spark, base):
+    from veranda_spark.io.table import (
+        append_rows, compact_table, delete_rows, restore_version,
+    )
+
+    upd = spark.createDataFrame([(1, 1, "Y")], "k long, p long, val string")
+    merge_into(spark, base, upd, keys=["k"], partition_by="p")        # v2
+    missing = r"_schema\.json is missing.*recreate it with create_table"
+    os.remove(os.path.join(base, "_versions", "000001", "_schema.json"))
+    with pytest.raises(ValueError, match=missing):
+        read_table(spark, base, version=1)
+    with pytest.raises(ValueError, match=missing):
+        restore_version(base, 1)
+    os.remove(os.path.join(base, "_versions", "000002", "_schema.json"))
+    for mutate in (
+        lambda: read_table(spark, base),
+        lambda: merge_into(spark, base, upd, keys=["k"], partition_by="p"),
+        lambda: delete_rows(spark, base, spark.createDataFrame([(1,)], "k long"),
+                            keys=["k"], partition_by="p"),
+        lambda: append_rows(upd, base, "p"),
+        lambda: compact_table(spark, base, partition_by="p", max_files=0),
+    ):
+        with pytest.raises(ValueError, match=missing):
+            mutate()
+    assert list_versions(base) == [1, 2]

@@ -122,19 +122,6 @@ def rings_pixel_mask(
     return points_in_rings(gx.ravel(), gy.ravel(), px_rings).reshape(h, w)
 
 
-def bbox_intersects(
-    axmin, aymin, axmax, aymax, bxmin, bymin, bxmax, bymax
-) -> np.ndarray:
-    """Half-open box overlap test (veranda bbox select = PIP with
-    apply_mask=False, base.py:485-508)."""
-    return (
-        (np.asarray(axmin) < bxmax)
-        & (np.asarray(axmax) > bxmin)
-        & (np.asarray(aymin) < bymax)
-        & (np.asarray(aymax) > bymin)
-    )
-
-
 def polygon_pixel_mask(
     poly_xy: np.ndarray,
     ul_x: float,
@@ -188,12 +175,6 @@ def segment_intersects_boxes(
             t0 = np.maximum(t0, tn)
             t1 = np.minimum(t1, tf)
     return ok & (t0 <= t1)
-
-
-def polygon_area(poly: np.ndarray) -> float:
-    p = np.asarray(poly, dtype="float64")
-    x, y = p[:, 0], p[:, 1]
-    return 0.5 * abs(float(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))))
 
 
 def is_ring_list_column(df, xy_col: str) -> bool:

@@ -78,16 +78,6 @@ def lang_id(text: Column) -> Column:
     return F.when(best_score <= 0, F.lit("und")).otherwise(out)
 
 
-def quality_score(text: Column) -> Column:
-    """[0,1] quality heuristic: length band + low punctuation + stopword
-    presence (the classic pretraining-filter trio)."""
-    n_tok = token_count(text)
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(text) < 0.2, F.lit(1.0)).otherwise(F.lit(0.0))
-    stop_ok = F.when(stopword_hits(text) >= 2, F.lit(1.0)).otherwise(F.lit(0.0))
-    return (len_ok + punct_ok + stop_ok) / F.lit(3.0)
-
-
 def normalize_text(text: Column) -> Column:
     """Canonical form for near-exact dedup: lowercase, strip non-alnum,
     squeeze whitespace."""

@@ -90,10 +90,6 @@ def _read_ifds(data: bytes, bo: str) -> list[dict[int, list]]:
     return out
 
 
-def _read_ifd(data: bytes, bo: str) -> dict[int, list]:
-    return _read_ifds(data, bo)[0]
-
-
 # ---- TIFF-variant LZW -------------------------------------------------------
 # MSB-first bit packing, 9->12-bit codes, Clear=256, EOI=257, "early change"
 # (code width bumps one entry before the table is full) — the layout GDAL

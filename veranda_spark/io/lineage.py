@@ -42,13 +42,6 @@ def read_lineage(spark: SparkSession, base: str) -> DataFrame | None:
     )
 
 
-def completed_tiles(spark: SparkSession, base: str) -> DataFrame | None:
-    lin = read_lineage(spark, base)
-    if lin is None:
-        return None
-    return lin.select("tile_id").distinct()
-
-
 def write_tiles_checkpointed(
     tiles: DataFrame,
     base: str,

@@ -8,21 +8,29 @@ all commit through ``_staged_version``.
 Layout::
 
     <path>/_versions/000001/...   immutable snapshot directories
+    <path>/_versions/000001/_schema.json   that version's schema
     <path>/_versions/000002/...
     <path>/_staging/<uuid>/       a writer's unpublished stage
+
+Every version carries its schema, partition column included, in
+``_schema.json`` (Delta Lake keeps it in its log's metadata action),
+so the one rename publishes it with the data and ``read_table`` scans
+with it instead of inferring: ``p=1.50`` reads back as the
+``decimal(5,2)`` it was written as, and files that predate a column
+read it as null.
 
 A writer builds its whole new version in a stage under ``_staging/``
 (same filesystem as ``_versions/``; the leading underscore hides it
 from Spark scans) and publishes it with ONE ``os.rename`` onto
 ``_versions/<base+1>`` — the put-if-absent by which Delta Lake commits
 log entry N.  rename(2) onto a non-empty directory fails, and a stage
-is never empty (it holds Spark's ``_SUCCESS`` or a restore's carried
-entries), so of two writers from the same base exactly one commits and
-the other raises FileExistsError — after its Spark work, at publish
-time.  The current version is the highest live version directory;
-there is no pointer file.  A crash before the rename leaves only a
-stage, which no reader lists and no writer trips on; ``recover_orphans``
-sweeps such stages when no writer is live.
+is never empty (it holds at least ``_schema.json``), so of two writers
+from the same base exactly one commits and the other raises
+FileExistsError — after its Spark work, at publish time.  The current
+version is the highest live version directory; there is no pointer
+file.  A crash before the rename leaves only a stage, which no reader
+lists and no writer trips on; ``recover_orphans`` sweeps such stages
+when no writer is live.
 
 ``merge_into`` rewrites only the partitions an update batch touches;
 untouched partitions are carried into the new version by hard links, so
@@ -39,14 +47,15 @@ into it.
 
 Concurrency: a table has a single writer by contract; a second writer
 racing it fails loudly instead of silently discarding a commit.  Tables
-written by the earlier claim protocol (a pointer file naming the
-committed version) are not read compatibly: a leftover claimed orphan
-there would be taken for the current version.
+written before versions carried ``_schema.json`` are refused (recreate
+them); those of the earlier claim protocol (a ``_current`` pointer
+file) are not read compatibly.
 """
 
 from __future__ import annotations
 
 import errno
+import json
 import os
 import shutil
 import uuid
@@ -55,6 +64,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _versions_dir(path: str) -> str:
@@ -100,7 +110,7 @@ def create_table(
 ) -> int:
     """Write version 1 of a managed versioned table (FileExistsError
     when ``path`` already holds one)."""
-    with _staged_version(path, 0) as stage:
+    with _staged_version(path, 0, df.schema, partition_by) as stage:
         _write_stage(df, stage, partition_by)
     return 1
 
@@ -133,7 +143,7 @@ def write_once(
     input.)"""
     cur = current_version(path)
     if cur is None:
-        with _staged_version(path, 0) as stage:
+        with _staged_version(path, 0, df.schema, partition_by) as stage:
             _write_stage(df, stage, partition_by)
             with open(_fingerprint_file(stage), "w") as f:
                 f.write(fp)
@@ -150,17 +160,6 @@ def write_once(
             f"location for {fp}"
         )
     return cur
-
-
-def _has_parquet(vdir: str) -> bool:
-    """True when the directory holds parquet VISIBLE to a Spark scan.
-    Underscore/dot-prefixed subdirs are skipped — Spark treats them as
-    hidden."""
-    for root, dirs, files in os.walk(vdir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        if any(fn.endswith(".parquet") for fn in files):
-            return True
-    return False
 
 
 def _count_parquet(d: str) -> int:
@@ -185,29 +184,75 @@ def read_table(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Read a committed snapshot (the current one, or ``version`` for
-    time travel).  Unpublished stages are unreadable by construction —
+    time travel) with the schema stored in it — no inference, so no
+    Spark job.  Unpublished stages are unreadable by construction —
     they never sit under ``_versions/``, and expired versions are
     tombstoned.  Every version directory is self-contained (carried
     partitions are hard links), so a snapshot is one scan of its
-    directory."""
+    directory; files that predate a column read it as null."""
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed table at {path}")
     v = cur if version is None else version
     if not _is_live(path, v):
         raise ValueError(f"version {v} does not exist (current={cur})")
-    vdir = _version_path(path, v)
-    r = spark.read
-    # mergeSchema: after a schema-evolving merge (merge_into
-    # schema_mode="evolve") a snapshot legitimately mixes parquet files
-    # written under different schemas (carried partitions keep their old
-    # files); schema union fills missing columns with nulls.  Gated on
-    # the table-root marker an evolving merge writes (review r8 pass-3
-    # #4): never-evolved tables keep the cheap single-footer schema
-    # inference.
-    if os.path.exists(_evolved_marker(path)):
-        r = r.option("mergeSchema", "true")
-    return r.parquet(vdir)
+    schema = _stored_schema(path, v)
+    return spark.read.schema(schema).parquet(_version_path(path, v))
+
+
+def _schema_file(vdir: str) -> str:
+    return os.path.join(vdir, "_schema.json")
+
+
+def _stored_schema(path: str, version: int) -> StructType:
+    """The schema published in ``version``; a version without one was
+    written before versions carried their schema and is refused."""
+    fn = _schema_file(_version_path(path, version))
+    try:
+        with open(fn) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        raise ValueError(
+            f"{fn} is missing: the table at {path} was written before "
+            "versions carried their schema; recreate it with create_table"
+        ) from None
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field and element nullable, as a scan reads it."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in t
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _scan_schema(schema: StructType, partition_by: str | None) -> StructType:
+    """``schema`` as a scan of a version returns it: nullable throughout,
+    and the partition column last."""
+    fields = _nullable(schema).fields
+    return StructType(sorted(fields, key=lambda f: f.name == partition_by))
+
+
+def _require_types(table: StructType, rows: StructType, op: str) -> None:
+    """Raise when a column of ``rows`` has another type (nullability
+    aside) in ``table``: a version's files hold its stored types."""
+    tt = {f.name: _nullable(f.dataType) for f in table}
+    bad = [
+        f"{f.name!r} ({tt[f.name].simpleString()} in the table, "
+        f"{f.dataType.simpleString()} here)"
+        for f in rows if f.name in tt and _nullable(f.dataType) != tt[f.name]
+    ]
+    if bad:
+        raise ValueError(
+            f"{op}: column type differs: {', '.join(bad)} — schema changes "
+            "are add-only, cast explicitly first"
+        )
 
 
 def list_versions(path: str) -> list[int]:
@@ -308,28 +353,16 @@ def _touched(
     the DECODED directory names: the partition writer names directories
     with Spark's rendering (``'true'`` for a boolean, where Python's
     str() gives ``'True'``) and %XX-escapes special characters, and a
-    null value is the ``__HIVE_DEFAULT_PARTITION__`` directory.  A
+    null value is the ``__HIVE_DEFAULT_PARTITION__`` directory.  Both
+    frames carry the type the directories were written with (the
+    version's stored schema), so the rendering round-trips.  A
     directory missed here would be linked as untouched AND rewritten:
-    duplicated rows.  A ``found`` value came out of a directory, so one
-    that matches no name means the name does not round-trip through the
-    type Spark inferred for it on read (``p=2.00`` reads back as double
-    ``2.0``, ``p=010`` as int ``10``): that raises."""
+    duplicated rows."""
     col = F.col(partition_by).cast("string")
-    vals = found.select(col, F.lit(True))
+    vals = found.select(col)
     if new is not None:
-        vals = vals.union(new.select(col, F.lit(False)))
-    rows = vals.distinct().collect()
-    decoded = {_unescape_partition_dir(n) for n in names}
-    lost = sorted(str(v) for v, is_found in rows if is_found and v not in decoded)
-    if lost:
-        raise ValueError(
-            f"partition column {partition_by!r} reads back as "
-            f"{found.schema[partition_by].dataType.simpleString()}, and its "
-            f"value(s) {lost[:3]} name no partition directory: the "
-            "directory names do not round-trip through that type, so a "
-            "rewrite would keep the rows it should replace"
-        )
-    wanted = {v for v, _ in rows}
+        vals = vals.union(new.select(col))
+    wanted = {v for (v,) in vals.distinct().collect()}
     return {n for n in names if _unescape_partition_dir(n) in wanted}
 
 
@@ -364,18 +397,25 @@ def _rewrite(
 
 
 @contextmanager
-def _staged_version(path: str, base: int | None):
+def _staged_version(
+    path: str, base: int | None, schema: StructType,
+    partition_by: str | None = None,
+):
     """THE commit path, in one place: yield a fresh stage under
     ``<path>/_staging/`` for the body to fill (hard links, parquet
-    appends), then publish it as version ``base+1`` with one rename
-    (``_publish``).  An exception from the body publishes nothing.  The
-    stage is removed on every exit; only a killed process leaves one
-    behind, and no reader or writer looks at it."""
+    appends), write ``schema`` — the schema of the rows the version
+    holds, as ``_scan_schema`` orders it — into the stage's
+    ``_schema.json``, then publish it as version ``base+1`` with one
+    rename (``_publish``).  An exception from the body publishes
+    nothing.  The stage is removed on every exit; only a killed process
+    leaves one behind, and no reader or writer looks at it."""
     stage = os.path.join(_staging_dir(path), uuid.uuid4().hex)
     os.makedirs(stage)
     os.makedirs(_versions_dir(path), exist_ok=True)
     try:
         yield stage
+        with open(_schema_file(stage), "w") as f:
+            f.write(_scan_schema(schema, partition_by).json())
         _publish(stage, _version_path(path, (base or 0) + 1))
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -384,12 +424,10 @@ def _staged_version(path: str, base: int | None):
 def _publish(stage: str, vdir: str) -> None:
     """Put-if-absent of ``vdir``: one ``os.rename`` of the stage onto it.
     rename(2) fails onto a non-empty directory (ENOTEMPTY, or EEXIST on
-    some filesystems) and replaces an empty one — so an empty stage is
-    refused here, every published version is non-empty, and a tombstone
-    keeps its ``_expired/`` (``expire_versions``): a version number is
-    taken at most once."""
-    if not os.listdir(stage):
-        raise RuntimeError(f"refusing to publish an empty stage as {vdir}")
+    some filesystems) and replaces an empty one — every published
+    version holds its ``_schema.json`` and a tombstone keeps its
+    ``_expired/`` (``expire_versions``), so a version number is taken
+    at most once."""
     try:
         os.rename(stage, vdir)
     except OSError as e:
@@ -420,32 +458,17 @@ def recover_orphans(path: str) -> list[str]:
     return names
 
 
-def _evolved_marker(path: str) -> str:
-    """Table-root marker an evolving merge writes once the column set
-    actually changed: readers switch to mergeSchema scans +
-    null-filling unions only from then on."""
-    return os.path.join(path, "_schema_evolved")
-
-
-def _mark_evolved(path: str) -> None:
-    """Flip readers to schema-merging scans BEFORE any write: a marker
-    without a commit is harmless (mergeSchema on a uniform table is just
-    slower), the reverse is data loss."""
-    if not os.path.exists(_evolved_marker(path)):
-        with open(_evolved_marker(path), "w") as f:
-            f.write("1")
-
-
 def _evolve_schemas(
     tgt: DataFrame, updates: DataFrame, keys: list[str],
     partition_by: str | None
-) -> tuple[DataFrame, DataFrame, bool]:
+) -> tuple[DataFrame, DataFrame]:
     """Additive schema evolution for ``merge_into(schema_mode="evolve")``:
-    align both frames onto the UNION of their columns (new side fills
-    null, typed from the side that has the column).  Key and partition
-    columns must exist on both sides (a null partition/key from
-    evolution would silently misroute rows); shared columns with
-    differing types raise — evolution is add-only, never a cast."""
+    align both frames onto the UNION of their columns, the table's first
+    (new side fills null, typed from the side that has the column).
+    Key and partition columns must exist on both sides (a null
+    partition/key from evolution would silently misroute rows); shared
+    columns with differing types raise — evolution is add-only, never a
+    cast."""
     t_fields = {f.name: f.dataType for f in tgt.schema.fields}
     u_fields = {f.name: f.dataType for f in updates.schema.fields}
     # review r8 pass-3 #2: withColumn resolves names CASE-INSENSITIVELY
@@ -463,27 +486,7 @@ def _evolve_schemas(
                 "case-insensitively, so evolving here would null the "
                 "existing data)"
             )
-    _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
-    for name in sorted(set(t_fields) & set(u_fields)):
-        ts, us = t_fields[name].simpleString(), u_fields[name].simpleString()
-        if (
-            name == partition_by
-            and ts in _INTEGRAL and us in _INTEGRAL
-        ):
-            # the partition column's table-side type is INFERRED from
-            # directory names (int for small values even when written
-            # as long) — an integral-WIDTH delta there is an inference
-            # artifact, not schema drift; the union coerces it.  Any
-            # other partition type delta still raises (review r8 pass-3
-            # #3: e.g. double-vs-int renders '0.0' directories that
-            # bypass the touched-partition match and duplicate rows).
-            continue
-        if t_fields[name] != u_fields[name]:
-            raise ValueError(
-                f"merge_into schema evolution: column {name!r} has type "
-                f"{ts} in the table but {us} in the updates — "
-                "evolution is add-only, cast explicitly first"
-            )
+    _require_types(tgt.schema, updates.schema, "merge_into schema evolution")
     required = set(keys) | ({partition_by} if partition_by else set())
     missing = sorted(required - set(u_fields))
     if missing:
@@ -495,32 +498,31 @@ def _evolve_schemas(
         tgt = tgt.withColumn(name, F.lit(None).cast(u_fields[name]))
     for name in sorted(set(t_fields) - set(u_fields)):
         updates = updates.withColumn(name, F.lit(None).cast(t_fields[name]))
-    # deterministic, matching column order for the union downstream
-    cols = sorted(set(t_fields) | set(u_fields))
-    widened = bool(set(u_fields) - set(t_fields))
-    return tgt.select(cols), updates.select(cols), widened
+    return tgt, updates.select(tgt.columns)
 
 
 def append_rows(df: DataFrame, path: str, partition_by: str) -> dict:
     """INSERT INTO: commit ``df``'s rows as a new version on top of the
-    current one (version 1 when no table exists yet).  Every committed partition is hard-linked into the new
-    version (copied where the fs refuses links) and the new rows are
-    appended into the same partition directories — O(files of the
-    current version) links plus the new rows' write.
+    current one (version 1 when no table exists yet).  Every committed
+    partition is hard-linked into the new version (copied where the fs
+    refuses links) and the new rows are appended into the same
+    partition directories — O(files of the current version) links plus
+    the new rows' write.
 
-    A column set that differs from the committed version's first flips
-    the table to schema-merging reads (``_mark_evolved``), as
-    ``merge_into(schema_mode="evolve")`` does: older rows read back with
-    the new columns null."""
+    The new version's schema is the current one followed by ``df``'s
+    new columns: older rows read those as null, and new rows read a
+    column ``df`` lacks as null.  A column both have with different
+    types raises before any write."""
     cur = current_version(path)
-    names: list[str] = []
+    schema, names = df.schema, []
     if cur is not None:
-        if not os.path.exists(_evolved_marker(path)) and set(df.columns) != set(
-            read_table(df.sparkSession, path).columns
-        ):
-            _mark_evolved(path)
+        stored = _stored_schema(path, cur)
+        _require_types(stored, df.schema, f"append_rows to {path}")
+        schema = StructType(
+            stored.fields + [f for f in df.schema if f.name not in stored.names]
+        )
         names = _old_partitions(path, cur, partition_by)
-    with _staged_version(path, cur) as stage:
+    with _staged_version(path, cur, schema, partition_by) as stage:
         if cur is not None:
             _carry_untouched(_version_path(path, cur), stage, names, set())
         df.write.mode("append").partitionBy(partition_by).parquet(stage)
@@ -566,9 +568,10 @@ def merge_into(
     evolution: a column present on both sides with a different type
     still raises (no implicit casts).  Touched partitions are written
     under the evolved schema; carried-over partitions keep their old
-    parquet files — ``read_table`` merges schemas at scan time
-    (nulls for the missing columns), so old versions time-travel with
-    their own schema.
+    parquet files, which read the new columns as null under the evolved
+    schema the new version stores, and old versions time-travel with
+    their own stored schema.  In either mode a column the updates share
+    with the table must have the table's type.
     """
     if schema_mode not in ("strict", "evolve"):
         raise ValueError(f"schema_mode must be strict|evolve, got {schema_mode!r}")
@@ -583,12 +586,9 @@ def merge_into(
                 f"vs updates {sorted(updates.columns)} (pass "
                 "schema_mode='evolve' for additive evolution)"
             )
+        _require_types(tgt.schema, updates.schema, "merge_into schema mismatch")
     else:
-        tgt, updates, widened = _evolve_schemas(
-            tgt, updates, keys, partition_by
-        )
-        if widened:
-            _mark_evolved(path)
+        tgt, updates = _evolve_schemas(tgt, updates, keys, partition_by)
     # layout validation (and the partition inventory) runs BEFORE any
     # staging so a wrong partition_by fails with no Spark work
     # (review r8 pass-6)
@@ -598,7 +598,7 @@ def merge_into(
         # left_anti needs no distinct probe side (round-9)
         return df.join(updates.select(keys), keys, "left_anti").unionByName(updates)
 
-    with _staged_version(path, cur) as stage:
+    with _staged_version(path, cur, tgt.schema, partition_by) as stage:
         if not partition_by:
             upsert(tgt).write.mode("append").parquet(stage)
         else:
@@ -634,11 +634,11 @@ def delete_rows(
     its inodes, so its bytes go when the last version linking them
     does).
 
-    Deleting EVERY row: allowed on an unpartitioned table (Spark
-    writes a schema-only empty part file, so the empty snapshot stays
-    readable) but refused on a partitioned one (every partition dir
-    would vanish, leaving no parquet schema anywhere) — recreate with
-    ``create_table`` in that case.
+    Deleting EVERY row: allowed on an unpartitioned table but refused
+    on a partitioned one — every partition dir would vanish, and a
+    version with no partition directories fails every later mutation
+    (``_old_partitions``); recreate with ``create_table`` in that
+    case.
 
     Scale: finding the affected partitions is a semi-join of the table
     against the (typically tiny, broadcast) key set — a full scan of
@@ -668,7 +668,7 @@ def delete_rows(
         return df.join(dels, kcols, "left_anti")
 
     names = _old_partitions(path, cur, partition_by) if partition_by else []
-    with _staged_version(path, cur) as stage:
+    with _staged_version(path, cur, tgt.schema, partition_by) as stage:
         if not partition_by:
             survivors(tgt).write.mode("append").parquet(stage)
         else:
@@ -677,18 +677,16 @@ def delete_rows(
             )
             _rewrite(stage, path, cur, names, touched, partition_by, tgt,
                      survivors)
-            if not _has_parquet(stage):
+            if not any("=" in n for n in os.listdir(stage)):
                 # PARTITIONED delete-all: every partition directory
-                # vanished, so the snapshot has no parquet schema
-                # anywhere — refuse; the stage is dropped unpublished.
-                # (The unpartitioned path has no such hazard: Spark
-                # writes a schema-only empty part file, so an empty
-                # snapshot stays readable — verified on this Spark
-                # version.)
+                # vanished, and a version without one fails every later
+                # mutation in _old_partitions — refuse; the stage is
+                # dropped unpublished.  (An empty unpartitioned version
+                # takes later mutations as usual.)
                 raise ValueError(
                     "delete_rows removed every row of the partitioned "
-                    "table — an all-partitions-deleted snapshot has no "
-                    "readable parquet schema; recreate with create_table "
+                    "table — a version with no partition directories "
+                    "takes no later mutation; recreate with create_table "
                     "instead"
                 )
     return {"version": cur + 1, "previous": cur}
@@ -707,9 +705,10 @@ def restore_version(path: str, version: int) -> dict:
     wrong/omitted partition argument used to stage nothing and commit
     an EMPTY snapshot, breaking every later read.  One path serves both
     layouts: the snapshot's top-level ``name=`` partition directories
-    and loose ``.parquet`` files are linked into the new version.
-    ``_``-prefixed entries (``_SUCCESS``) are skipped; the carried
-    entries alone keep the stage non-empty, which ``_publish`` needs.
+    and loose ``.parquet`` files are linked into the new version, which
+    stores the restored version's schema: a restore also restores the
+    column set.  ``_``-prefixed entries (``_SUCCESS``, ``_schema.json``)
+    are skipped.
 
     Non-destructive by design: later versions stay on disk and
     time-travel-readable until ``expire_versions``, and the new
@@ -738,7 +737,7 @@ def restore_version(path: str, version: int) -> dict:
             f"version {version} holds no partitions and no parquet "
             "files — refusing to restore an unreadable snapshot"
         )
-    with _staged_version(path, cur) as stage:
+    with _staged_version(path, cur, _stored_schema(path, version)) as stage:
         _carry_untouched(src_dir, stage, names, set())
     return {"version": cur + 1, "restored": version, "previous": cur}
 
@@ -803,10 +802,9 @@ def compact_table(
         if before <= max_files:
             return {"version": cur, "compacted": 0,
                     "files_before": before, "files_after": before}
-        with _staged_version(path, cur) as stage:
-            read_table(spark, path).coalesce(max_files).write.mode(
-                "append"
-            ).parquet(stage)
+        tgt = read_table(spark, path)
+        with _staged_version(path, cur, tgt.schema) as stage:
+            tgt.coalesce(max_files).write.mode("append").parquet(stage)
         return {"version": cur + 1, "compacted": 1, "files_before": before,
                 "files_after": _count_parquet(_version_path(path, cur + 1))}
 
@@ -816,9 +814,10 @@ def compact_table(
     if not touched:
         return {"version": cur, "compacted": 0,
                 "files_before": before, "files_after": before}
-    with _staged_version(path, cur) as stage:
+    tgt = read_table(spark, path)
+    with _staged_version(path, cur, tgt.schema, partition_by) as stage:
         _rewrite(stage, path, cur, sorted(counts), touched, partition_by,
-                 read_table(spark, path), lambda df: df)
+                 tgt, lambda df: df)
     after = sum(_partition_file_counts(path, cur + 1, partition_by).values())
     return {"version": cur + 1, "compacted": len(touched),
             "files_before": before, "files_after": after}

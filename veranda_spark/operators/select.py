@@ -206,12 +206,6 @@ def select_multipolygon(
     )
 
 
-def apply_nan(df: DataFrame, value_col: str, nodata: float) -> DataFrame:
-    """P10 (base.py:276-295): nodata→NULL on a scalar column
-    (array/pixel nodata handling lives in the codec UDFs)."""
-    return df.withColumn(value_col, F.nullif(F.col(value_col), F.lit(nodata)))
-
-
 # ---- P1: serialized logical plan interpreter -------------------------------
 
 _OPS = {

@@ -347,9 +347,10 @@ def test_rotated_select_polygon_and_bbox(spark):
 
 
 def test_rotated_zonal_table_matches_dict_variant(spark):
-    # the polygon-TABLE zonal path (Column-side cell cover now uses the
-    # per-vertex inverse affine) must agree with the dict variant on a
-    # rotated grid
+    # the polygon-TABLE zonal path (cell cover in the pixel frame via the
+    # inverse affine) must agree with the dict variant on a rotated grid,
+    # and both with an independent world-space ray cast per zone (the
+    # dict variant runs the table plan, so a == b alone checks little)
     from veranda_spark.operators.raster import zonal_stats, zonal_stats_table
 
     rng = np.random.default_rng(43)
@@ -382,6 +383,20 @@ def test_rotated_zonal_table_matches_dict_variant(spark):
     b = {r["polygon_id"]: (r["n_px"], round(r["mean_val"], 9))
          for r in zonal_stats_table(df, g, ptab, auto_decode=False).collect()}
     assert a == b and len(a) >= 1
+    want = {}
+    for i, buf, w, h, _, _, c0, r0 in imgs:
+        arr = np.frombuffer(buf, dtype=np.uint8).reshape(h, w)
+        cc, rr = np.meshgrid(np.arange(w, dtype=float), np.arange(h, dtype=float))
+        wx, wy = g.px_center_world_np((cc + c0).ravel(), (rr + r0).ravel())
+        for pid, tri in polys.items():
+            vals = [float(v) for x, y, v in zip(wx, wy, arr.ravel())
+                    if _ray_cast(x, y, tri)]
+            want.setdefault(pid, []).extend(vals)
+    want = {pid: v for pid, v in want.items() if v}
+    assert set(a) == set(want)
+    for pid, vals in want.items():
+        assert a[pid][0] == len(vals)
+        np.testing.assert_allclose(a[pid][1], np.mean(vals), rtol=1e-9)
 
 
 def test_rotated_reproject_footprints_covers_corners(spark):

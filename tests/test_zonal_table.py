@@ -95,3 +95,31 @@ def test_table_accepts_rings(spark):
     got = _rows(zonal_stats_table(imgs, GRID, polys, auto_decode=False))
     assert got == want == _reference(imgs, {"z": [outer, hole]})
     assert got["z"][0] > 0
+
+
+def test_images_keyed_by_footprint_not_id(spark):
+    # both operators key images by their footprint: a null, missing or
+    # shared image_id neither drops pixels nor changes any zone
+    imgs = generate_images(spark, 200).cache()
+    want = _reference(imgs, {"tri": [TRI], "sq": [SQ]})
+    shared = imgs.withColumn("image_id", F.substring("image_id", 1, 9))
+    assert shared.select("image_id").distinct().count() < shared.count()
+    assert shared.select("px_col0", "px_row0", "w", "h").distinct().count() > (
+        shared.select("image_id").distinct().count())
+    polys = spark.createDataFrame(
+        [("tri", [[float(x), float(y)] for x, y in TRI]),
+         ("sq", [[float(x), float(y)] for x, y in SQ])],
+        "polygon_id string, xy array<array<double>>",
+    )
+    for frame in (
+        imgs.withColumn("image_id", F.lit(None).cast("string")),
+        imgs.drop("image_id"),
+        shared,
+    ):
+        assert _rows(zonal_stats_table(frame, GRID, polys, auto_decode=False)) == want
+        got = _rows(zonal_stats(frame, GRID, {"tri": TRI, "sq": SQ}, auto_decode=False))
+        assert got == want
+    assert len(want) == 2
+    empty = zonal_stats(imgs, GRID, {})
+    assert empty.columns == ["polygon_id", "n_px", "mean_val", "std_val", "min_val", "max_val"]
+    assert empty.collect() == []

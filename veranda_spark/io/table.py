@@ -17,7 +17,10 @@ Every version carries its schema, partition column included, in
 so the one rename publishes it with the data and ``read_table`` scans
 with it instead of inferring: ``p=1.50`` reads back as the
 ``decimal(5,2)`` it was written as, and files that predate a column
-read it as null.
+read it as null.  One partition value does not survive a commit: Spark
+writes a string partition value ``''`` as the null partition
+(``__HIVE_DEFAULT_PARTITION__``), so it reads back as ``None``.  Do not
+key rows on an empty-string partition value.
 
 A writer builds its whole new version in a stage under ``_staging/``
 (same filesystem as ``_versions/``; the leading underscore hides it
@@ -109,7 +112,9 @@ def create_table(
     df: DataFrame, path: str, partition_by: str | None = None
 ) -> int:
     """Write version 1 of a managed versioned table (FileExistsError
-    when ``path`` already holds one)."""
+    when ``path`` already holds one).  A string ``partition_by`` value
+    ``''`` is committed as the null partition and reads back as
+    ``None``."""
     with _staged_version(path, 0, df.schema, partition_by) as stage:
         _write_stage(df, stage, partition_by)
     return 1

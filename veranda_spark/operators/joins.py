@@ -93,11 +93,14 @@ def _classified_cover(
     res: int,
     to_frame: Callable[[list[np.ndarray]], list[np.ndarray]] | None = None,
 ) -> DataFrame:
-    """The one polygon cover step of pip_join, pip_join_table and
-    zonal_stats_table: a single ``mapInPandas`` over the polygon rows
+    """The one polygon cover step of both polygon plans — pip_join_table
+    (which the dict pip_join calls) and zonal_stats_table (which the dict
+    zonal_stats calls): a single ``mapInPandas`` over the polygon rows
     (executor-side — the H3 polyfill analog) emitting
     ``(poly_id, _cell, _full, _rings)`` for every non-outside cell of
-    each polygon (``_polygon_cover_rows``).
+    each polygon (``_polygon_cover_rows``).  zonal_stats_table joins the
+    cells against image footprint covers and keeps only
+    ``(poly_id, _cell)``.
 
     ``xy_col`` is one ring or a ring list (holes / multipolygons,
     even-odd), detected from the column's nesting depth.  The rings,

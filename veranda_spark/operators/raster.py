@@ -512,14 +512,6 @@ ZONAL_SCHEMA = (
 )
 
 
-def _as_rings(value) -> list[np.ndarray]:
-    """Normalize a polygon spec — one ring, or a list of rings (holes /
-    multipolygons, even-odd) — into a list of (N,2) arrays."""
-    if len(value) and hasattr(value[0][0], "__len__"):
-        return [np.asarray(r, dtype="float64") for r in value]
-    return [np.asarray(value, dtype="float64")]
-
-
 def _zonal_partial(arr: np.ndarray, rings, grid_args, row) -> tuple | None:
     ul_x, ul_y, psx, psy, rot_x, rot_y = grid_args
     h, w = arr.shape
@@ -561,36 +553,23 @@ def zonal_stats(
     auto_decode: bool = True,
 ) -> DataFrame:
     """Raster→vector zonal extraction (north-rule addition; semantics =
-    veranda polygon mask, base.py:510-557: out-of-polygon pixels excluded).
-    Dict values may be one ring or a list of rings (holes/multipolygons,
-    even-odd — round-2 generality).
+    veranda polygon mask, base.py:510-557: out-of-polygon pixels excluded)
+    against a small dict of zones.  Dict values may be one ring or a list
+    of rings (holes/multipolygons, even-odd).
 
-    Scale design: per-image PARTIAL aggregates are computed inside
-    ``mapInPandas`` (pixels never shuffle), then a tiny groupBy(polygon_id)
-    combines partials — map-side combine by construction.  The polygon
-    dict rides the task closure; for polygon TABLES use
-    ``zonal_stats_table``.
+    The dict becomes a one-row-per-polygon local relation of ring lists
+    and runs through ``zonal_stats_table``'s plan.
     """
-    polys = {k: _as_rings(v) for k, v in polygons.items()}
-    grid_args = (grid.ul_x, grid.ul_y, grid.psx, grid.psy,
-                 grid.rot_x, grid.rot_y)
+    from veranda_spark.session import local_df
 
-    def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: list[tuple] = []
-            for row in pdf.itertuples(index=False):
-                arr = _decode_row(row)
-                arr = _maybe_decode_values(arr, row, auto_decode)
-                for pid, rings in polys.items():
-                    p = _zonal_partial(arr, rings, grid_args, row)
-                    if p is not None:
-                        out.append((pid,) + p)
-            yield pd.DataFrame(
-                out or None,
-                columns=["polygon_id", "n_px", "sum_val", "sum_sq", "min_val", "max_val"],
-            )
-
-    return _combine_zonal(df.mapInPandas(partials, schema=ZONAL_SCHEMA))
+    rows = []
+    for pid, value in polygons.items():
+        rings = value if len(value) and hasattr(value[0][0], "__len__") else [value]
+        rows.append((pid, [[[float(x), float(y)] for x, y in r] for r in rings]))
+    zones = local_df(
+        df.sparkSession, rows, "polygon_id string, xy array<array<array<double>>>"
+    )
+    return zonal_stats_table(df, grid, zones, auto_decode=auto_decode)
 
 
 def zonal_stats_table(
@@ -600,28 +579,30 @@ def zonal_stats_table(
     poly_id: str = "polygon_id",
     xy_col: str = "xy",
     auto_decode: bool = True,
-    res: int = 6,
-    broadcast_cover: bool = True,
 ) -> DataFrame:
-    """Zonal extraction against a polygon TABLE (round-2: the dict variant
-    caps the zone count at task-closure size; this scales to millions).
+    """Zonal extraction against a polygon TABLE of any size — the one
+    zonal plan (the dict ``zonal_stats`` runs it too).
 
     Plan, shaped so pixels move at most once and never duplicate:
 
-    1. slim image footprints explode their cell cover (JVM-side); the
-       polygons, moved into the pixel frame, take the shared classified
-       cover (``joins._classified_cover``, outside cells dropped); the
-       two equi-join on the cell key → candidate (image, polygon) pairs;
-    2. pairs collapse to ONE row per image carrying its candidate
+    1. slim image footprints ``(px_col0, px_row0, w, h)`` explode their
+       cell cover (JVM-side); the polygons, moved into the pixel frame,
+       take the shared classified cover (``joins._classified_cover``,
+       outside cells dropped, broadcast); the two equi-join on the cell
+       key → candidate (footprint, polygon) pairs;
+    2. pairs collapse to ONE row per footprint carrying its candidate
        polygons (a set of (id, xy) structs) — payload bytes then join in
-       once, by image id, with no per-polygon duplication;
+       once, on the footprint columns, with no per-polygon duplication;
     3. mapInPandas decodes each image once and emits per-polygon PARTIAL
        aggregates; a tiny groupBy(polygon_id) combines.
 
-    Every pixel centre inside a polygon lies in a non-outside cell of
-    that polygon which its image's cover also holds, so dropping the
-    outside cells loses no pixel; ``_zonal_partial`` skips pairs with no
-    pixel inside.
+    Images are keyed by the footprint the cover is computed from:
+    images with one footprint share one candidate set, and a null,
+    duplicated or missing ``image_id`` neither drops pixels nor pulls
+    extra candidates.  Every pixel centre inside a polygon lies in
+    a non-outside cell of that polygon which its image's cover also
+    holds, so dropping the outside cells loses no pixel;
+    ``_zonal_partial`` skips pairs with no pixel inside.
 
     ``xy_col`` is either one ring (array<array<double>> of [x,y] points)
     or a ring LIST (holes / multipolygons, even-odd semantics) — detected
@@ -633,31 +614,28 @@ def zonal_stats_table(
     )
     from veranda_spark.operators.joins import _classified_cover
 
+    res = 6
     affine = (grid.ul_x, grid.ul_y, grid.psx, grid.psy, grid.rot_x, grid.rot_y)
     rings_to_pixel_frame([], *affine)  # a singular geotransform fails here, not in a task
-    id_col = "image_id" if "image_id" in df.columns else df.columns[0]
+    footprint = ["px_col0", "px_row0", "w", "h"]
     multi_ring = is_ring_list_column(polygons, xy_col)
     img_cover = df.select(
-        F.col(id_col).alias("_img"),
-        F.explode(
-            cover_cells(F.col("px_col0"), F.col("px_row0"), F.col("w"), F.col("h"), res)
-        ).alias("_cell"),
+        *footprint,
+        F.explode(cover_cells(*(F.col(c) for c in footprint), res)).alias("_cell"),
     )
     poly_cover = _classified_cover(
         polygons, poly_id, xy_col, res, lambda rings: rings_to_pixel_frame(rings, *affine)
     ).select(F.col(poly_id).alias("_pid"), "_cell")
     zones = polygons.select(F.col(poly_id).alias("_pid"), F.col(xy_col).alias("_xy"))
-    if broadcast_cover:
-        poly_cover, zones = F.broadcast(poly_cover), F.broadcast(zones)
     pairs = (
-        img_cover.join(poly_cover, "_cell")
-        .select("_img", "_pid")
+        img_cover.join(F.broadcast(poly_cover), "_cell")
+        .select(*footprint, "_pid")
         .distinct()
-        .join(zones, "_pid")
-        .groupBy("_img")
+        .join(F.broadcast(zones), "_pid")
+        .groupBy(*footprint)
         .agg(F.collect_set(F.struct("_pid", "_xy")).alias("zonal_polys"))
     )
-    work = df.join(pairs, df[id_col] == pairs["_img"]).drop("_img")
+    work = df.join(pairs, footprint)
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

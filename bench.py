@@ -1,134 +1,40 @@
-"""Benchmark harness.
+"""Query runner: ``python bench.py [query ...]`` (data: $SPARK_GRAFT_SF_DIR).
 
-1. Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-   on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
-   {"metric", "value", "unit", "queries", "sf", ...}.
-   Round-3 methodology: the headline obeys the repo's own fresh-JVM rule —
-   three complete passes, each in its OWN subprocess/JVM, per-query wall =
-   min across passes (each query runs once per JVM; what is forbidden is
-   repeat-trialing a query inside one JVM, where JIT/page-cache flatter
-   it).  The round-2 operator families are folded into the headline
-   metric; ``value_r2_comparable`` preserves the old 14-query sum for
-   cross-round comparison.
-2. North-rule scaling evidence (BASELINE.json: throughput at N and 4N
-   executors, efficiency >= 0.8): the identical spatial-join +
-   tile-assignment job at local[8] vs local[32] on the same materialized
-   input.  Each level runs in its own subprocess (fresh JVM — reusing one
-   JVM for several SparkContexts degrades the later ones and corrupts the
-   measurement); the input is generated once to parquet OUTSIDE the timed
-   window, so the measured job is scan → tile-cover join → per-tile
-   burn-in, i.e. the engine, not the synthetic generator.
-
-Set SPARK_GRAFT_SKIP_SCALING=1 to skip phase 2 (quick iteration).
-Set SPARK_GRAFT_HEADLINE_PASSES=1 for a quick single-pass headline.
+Query phase: 3 passes, each a fresh JVM on ``local[<cores>]`` (the CPUs this
+process may run on) running every queries() entry once in dict order; per-
+query wall = min across passes, frame build plus action.  The event log
+splits the best pass's wall into tagged jobs, task, GC, shuffle, Python-
+worker bytes and ``driver_s`` (wall outside any job).  Scaling phase, unless
+queries are named: burn-in at ``local[max(1, cores // 4)]`` and
+``local[cores]``, a fresh JVM per run, 3 interleaved rounds, best rows/s per
+level.  Per-query rows go to stderr; the last stdout line is one JSON object.
+All files the runs write live in one temporary directory, removed at exit.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.join(HERE, "perfbench")]
 
-import __spark_entry__ as entrymod
-from veranda_spark.grid import RegularGrid
-from veranda_spark.session import get_spark, stop_spark
+import eventlog  # noqa: E402
+import __spark_entry__ as entrymod  # noqa: E402
+from veranda_spark.grid import RegularGrid  # noqa: E402
+from veranda_spark.session import get_spark  # noqa: E402
 
-HEADLINE = [
-    "tile_assign",
-    "pip_polygon",
-    "cell_histogram",
-    "knn",
-    "tile_cover_counts",
-    "salted_join",
-    "tpch_q1",
-    "join_agg",
-    "sessionize",
-    "doc_tokens",
-    "dedup_exact",
-    "ann_topk",
-    "burn_in_tiles",
-    "image_features",
-]
+PASSES = 3
+CORES = len(os.sched_getaffinity(0))
+LAYERS = ("jobs", "task_s", "gc_s", "shuffle_bytes", "py_bytes_out", "py_bytes_in")
 
-#: round-2 operator families — folded into the headline metric in round 3
-#: (VERDICT r2 #10); reported separately so r2's informational numbers
-#: stay comparable
-NEWOP = [
-    "phash_neardup",
-    "stratified_sample",
-    "hash_split",
-    "doc_chunks",
-    "pivot_events",
-    "zorder_cells",
-    "ann_ivfpq",
-    "tile_algebra",
-]
-
-#: round-3 additions (JPEG decode, real CRS math, oracle'd CC chain,
-#: curation stages)
-ROUND3 = [
-    "jpeg_decode",
-    "reproject_crs",
-    "neardup_groups",
-    "doc_logprob",
-    "decontaminate",
-    "warp_crs",
-    "audio_features",
-    "merge_upsert",
-    "pyramid",
-    "composite_mosaic",
-    "contrastive_pairs",
-    "doc_repetition",
-]
-
-#: round-4 additions (filled in as round 4 lands operators)
-ROUND4: list[str] = [
-    "reproject_aeqd",
-    "warp_cubic",
-    "resample_average",
-    "doc_text_profile",
-    "media_metadata",
-    "compact_roundtrip",
-]
-
-#: round-5 additions: general CRS (LCC), oracle-graded zonal table,
-#: in-query IVF recall gate, rotation-exact average warp
-ROUND5: list[str] = [
-    "reproject_lcc",
-    "zonal_table",
-    "ann_ivf",
-    "warp_rotated",
-    "temporal_stats",
-]
-
-#: round-6 additions: Mercator/EQC/Hotine-oblique-Mercator reprojection
-#: (one compound oracle query) and the NetCDF-classic container loop
-ROUND6: list[str] = [
-    "reproject_merc",
-    "nc_roundtrip",
-]
-
-#: round-7 additions: the ann_ivf wall split (VERDICT r6 #3) — build
-#: must run BEFORE query in the pass (query serves the index build
-#: wrote this JVM).  ann_ivf_query is the leg comparable to r5's 1.9s
-#: train-per-call number; ann_ivf (ROUND5) keeps timing the full
-#: graded build+query+recall-gate pipeline.
-ROUND7: list[str] = [
-    "ann_ivf_build",
-    "ann_ivf_query",
-]
-
-#: row-preserving projections: under ``count()`` Catalyst prunes the
-#: projected expressions entirely, so the r3 walls for these measured
-#: session overhead, not operator cost (VERDICT r3 #1).  These get a
-#: value-dependent action (sum of xxhash64 over every output column)
-#: that forces full evaluation.  ACTION CHANGE vs r1-r3: their walls are
-#: larger this round because they now do their work — not a regression.
+#: row-preserving projections, whose expressions ``count()`` would prune:
+#: timed under a value-dependent action that forces full evaluation
 FULL_EVAL = {"reproject_crs", "reproject_aeqd", "reproject_lcc",
              "reproject_merc",
              "doc_tokens", "doc_text_profile", "hash_split",
@@ -147,7 +53,7 @@ def _timed_action(df, name: str) -> None:
         df.count()
 
 
-SCALE_ROWS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", "600000"))
+SCALE_ROWS = 600_000
 SCALE_PARTITIONS = 128
 # finer grid than the query GRID: parallelism must come from tiles at scale
 SCALE_GRID = RegularGrid(tile_cols=64, tile_rows=64, n_tile_cols=64, n_tile_rows=32)
@@ -158,663 +64,135 @@ def scale_run(cores: int, parquet_path: str) -> None:
     from veranda_spark.operators.raster import burn_in
 
     spark = get_spark(
-        master=f"local[{cores}]",
-        # partitions scale with the "cluster" size, as they would on a
-        # real N->4N executor change (2 waves per core)
-        shuffle_partitions=2 * cores,
-        app_name=f"scale_{cores}",
+        master=f"local[{cores}]", app_name=f"scale_{cores}",
+        shuffle_partitions=2 * cores,  # 2 waves per core, scaled as N->4N executors
         # AQE's extra query-stage materialization roughly doubles wall time
-        # for this short grouped-map pipeline; partitioning is already
-        # explicit here, so AQE buys nothing (it stays on for the engine's
-        # join-heavy paths).
+        # for this short grouped-map pipeline, whose partitioning is explicit
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     imgs = spark.read.parquet(parquet_path)
     n_rows = imgs.count()  # warms the scan outside the window
     # warm python workers on every task slot (fork + numpy/pandas import)
-    spark.range(4096, numPartitions=4 * cores).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    spark.range(4096, numPartitions=4 * cores).mapInPandas(lambda it: it, "id long").count()
     t0 = time.monotonic()
     n_tiles = burn_in(imgs, SCALE_GRID, per_layer=False).count()
     dt = time.monotonic() - t0
     spark.stop()
-    print(
-        "SCALE_RESULT "
-        + json.dumps(
-            {
-                "cores": cores,
-                "sec": round(dt, 2),
-                "rows": n_rows,
-                "rows_per_sec": round(n_rows / dt, 1),
-                "n_tiles": n_tiles,
-            }
-        )
-    )
+    print("SCALE_RESULT " + json.dumps({"cores": cores, "sec": round(dt, 2), "rows": n_rows,
+                                        "rows_per_sec": round(n_rows / dt, 1), "n_tiles": n_tiles}))
 
 
-def run_scaling() -> dict:
-    tmp = tempfile.mkdtemp(prefix="veranda_bench_")
-    parquet_path = os.path.join(tmp, "images")
-    # materialize the input once (untimed)
-    spark = get_spark(master="local[32]", shuffle_partitions=SCALE_PARTITIONS,
-                      app_name="bench_datagen")
+def make_scale_input(parquet_path: str) -> None:
+    """Child process: write the scaling input, outside any timed window."""
     from veranda_spark.fixtures import generate_images
 
-    generate_images(spark, SCALE_ROWS, partitions=SCALE_PARTITIONS).write.mode(
-        "overwrite"
-    ).parquet(parquet_path)
+    t0 = time.monotonic()
+    spark = get_spark(master=f"local[{CORES}]", shuffle_partitions=SCALE_PARTITIONS,
+                      app_name="bench_datagen")
+    generate_images(spark, SCALE_ROWS, partitions=SCALE_PARTITIONS).write.parquet(parquet_path)
     spark.stop()
-    stop_spark()
-
-    # Three levels, best-of-3 each (the shared host's throughput swings
-    # 2-5x between minutes; min-wall is the least-noisy estimator — and
-    # round 1's single n32 run hid an engine-side GC pathology, since
-    # fixed via Arrow batch sizing in session.py).
-    # PRIMARY N->4N evidence is 2->8 cores: the host's memory bus
-    # saturates near 8 cores (see controls), so 2->8 is the largest 4x
-    # step inside the linear region; 8->32 is reported alongside the
-    # hardware controls that explain its ceiling.
-    out: dict = {"rows": SCALE_ROWS}
-    rounds: list[dict] = []
-    for trio in (("n2", "n8", "n32"), ("n8", "n32", "n2"),
-                 ("n2", "n8", "n32")):
-        rnd: dict = {}
-        for label in trio:
-            cores = {"n2": 2, "n8": 8, "n32": 32}[label]
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--scale-run",
-                 str(cores), parquet_path],
-                capture_output=True, text=True, timeout=1800,
-            )
-            line = next(
-                (l for l in proc.stdout.splitlines()
-                 if l.startswith("SCALE_RESULT ")), None
-            )
-            if line is None:
-                raise RuntimeError(
-                    f"scale run {cores} failed: {proc.stderr[-2000:]}"
-                )
-            res = json.loads(line[len("SCALE_RESULT "):])
-            rnd[label] = res
-            if label not in out or res["sec"] < out[label]["sec"]:
-                out[label] = res
-        rounds.append(rnd)
-    out["scaling_efficiency"] = round(
-        (out["n8"]["rows_per_sec"] / out["n2"]["rows_per_sec"]) / 4.0, 3
-    )
-    out["scaling_efficiency_8_32"] = round(
-        (out["n32"]["rows_per_sec"] / out["n8"]["rows_per_sec"]) / 4.0, 3
-    )
-    # PAIRED efficiencies: each interleaved round measures n2 and n8
-    # minutes apart, so the ratio WITHIN a round cancels host weather
-    # that the min-based number (whose n2 and n8 mins can come from
-    # different minutes) cannot.  Median-of-3 is the headline paired
-    # estimator; the max is reported for the spread but is an
-    # upward-biased order statistic, not a "clean window" claim.
-    paired = sorted(
-        round((r["n8"]["rows_per_sec"] / r["n2"]["rows_per_sec"]) / 4.0, 3)
-        for r in rounds
-    )
-    out["scaling_efficiency_paired"] = paired
-    out["scaling_efficiency_paired_median"] = paired[len(paired) // 2]
-    out["scaling_efficiency_paired_best"] = paired[-1]
-    out["controls"] = hardware_controls()
-    # normalize out host weather: engine efficiency as a fraction of what
-    # perfectly-parallel pure-ALU work achieves on the same host minutes
-    # apart, matched step-for-step (2→8 engine vs 2→8 ALU)
-    alu = out["controls"]["alu"]["efficiency_2_8"]
-    out["efficiency_vs_alu_ceiling"] = round(
-        out["scaling_efficiency"] / max(alu, 1e-9), 3
-    )
-    out["efficiency_8_32_vs_alu_ceiling"] = round(
-        out["scaling_efficiency_8_32"]
-        / max(out["controls"]["alu"]["efficiency"], 1e-9), 3
-    )
-    return out
+    print("GEN_RESULT " + json.dumps({"sec": round(time.monotonic() - t0, 2)}))
 
 
-def minhash_micro(spark, sf_dir: str) -> dict:
-    """Signature-throughput micro-bench, apples-to-apples: the SAME
-    MinHash pipeline run twice on the same Spark session and input —
-    (a) round-2 path: shingles hashed JVM-side (xxhash64) + numpy
-    min-reduction UDF; (b) round-1 path: per-byte Python FNV hashing
-    inside the UDF (reconstructed here verbatim).  Docs replicated 20×
-    to amortize fixed job overhead out of the ratio."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from veranda_spark.functions.text import (
-        MINHASH_PERMS,
-        _MERSENNE,
-        _perm_params,
-        minhash_signature,
-        shingle_hashes,
-        word_ngrams,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    # web-page-length documents (text ×10) replicated ×4, RAW shingles
-    # (no distinct — throughput scales with shingle count, and the
-    # hashing loop must dominate the measurement, not Arrow transfer of
-    # tiny arrays: that is the regime a pretraining dedup run lives in)
-    sh = (
-        docs.withColumn("_r", F.explode(F.sequence(F.lit(1), F.lit(4))))
-        .withColumn("text", F.repeat(F.col("text"), 10))
-        .select(word_ngrams(F.col("text"), 3).alias("shingles"))
-        .repartition(32)
-        .cache()
-    )
-    n_docs = sh.count()
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_fnv_round1(shingles):
-        a, b = _perm_params(MINHASH_PERMS)
-        out = []
-        for toks in shingles:
-            if toks is None or len(toks) == 0:
-                out.append([0] * MINHASH_PERMS)
-                continue
-            hv = np.empty(len(toks), dtype=np.uint64)
-            for i, tok in enumerate(toks):
-                h = 14695981039346656037
-                for byte in tok.encode():
-                    h = ((h ^ byte) * 1099511628211) % (1 << 64)
-                hv[i] = h
-            hv %= np.uint64(_MERSENNE)
-            m = (np.outer(a, hv) + b[:, None]) % np.uint64(_MERSENNE)
-            out.append(m.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    def timed(sig_expr) -> float:
-        # value-dependent agg so Catalyst cannot prune the expression
-        t0 = time.monotonic()
-        sh.select(sig_expr.alias("sig")).agg(
-            F.sum(F.pmod(F.element_at(F.col("sig"), 1), F.lit(997)))
-        ).collect()
-        return time.monotonic() - t0
-
-    timed(minhash_signature(shingle_hashes(F.col("shingles"))))  # warm workers
-    engine_sec = timed(minhash_signature(shingle_hashes(F.col("shingles"))))
-    fnv_sec = timed(minhash_fnv_round1(F.col("shingles")))
-    sh.unpersist()
-    return {
-        "docs": n_docs,
-        "engine_sec": round(engine_sec, 3),
-        "round1_fnv_sec": round(fnv_sec, 3),
-        "engine_docs_per_sec": round(n_docs / engine_sec, 1),
-        "round1_docs_per_sec": round(n_docs / fnv_sec, 1),
-        "signature_stage_speedup_vs_round1": round(fnv_sec / engine_sec, 1),
-    }
-
-
-def _cpu_unit(_):
-    x = 0
-    for i in range(12_000_000):
-        x += i & 7
-    return x
-
-
-def _membw_unit(_):
-    import numpy as np
-
-    a = np.random.default_rng(1).integers(0, 255, 40_000_000, dtype=np.uint8)
-    s = 0
-    for _ in range(6):
-        s += int(a.copy()[::4096].sum())
-    return s
-
-
-def _pass_membw_control() -> float:
-    """Same-moment bus probe interleaved into EVERY headline pass
-    (VERDICT r7 #4): 16 membw units on 8 processes, best of 2 reps —
-    a couple of seconds of cost, run in the pass's child process BEFORE
-    its Spark session exists (never concurrent with engine work).  The
-    per-query normalized walls divide by this, so a pass that landed in
-    a bus-thrash window is normalized by the thrash it actually saw
-    instead of being explained by a paragraph of weather disclaimers."""
-    import multiprocessing as mp
-
-    best = 1e9
-    for _ in range(2):
-        with mp.Pool(8) as p:
-            t0 = time.monotonic()
-            p.map(_membw_unit, range(16))
-            best = min(best, time.monotonic() - t0)
-    return round(best, 3)
-
-
-def hardware_controls() -> dict:
-    """Environment ceiling controls: the same 8-vs-32-process comparison on
-    (a) pure-ALU work and (b) memory-streaming work, no Spark involved.
-    On this sandbox the memory bus saturates near 8 cores (membw control
-    ~0.2), so NO data-processing job can reach 0.8 here — the controls
-    attribute the gap to the host, not the engine's plan."""
-    import multiprocessing as mp
-
-    out = {}
-    for name, fn, units in (("alu", _cpu_unit, 128), ("membw", _membw_unit, 64)):
-        walls = {}
-        for procs in (2, 8, 32, 2, 8, 32):
-            with mp.Pool(procs) as p:
-                t0 = time.monotonic()
-                p.map(fn, range(units))
-                walls[procs] = min(walls.get(procs, 1e9), time.monotonic() - t0)
-        out[name] = {
-            "wall_2": round(walls[2], 2),
-            "wall_8": round(walls[8], 2),
-            "wall_32": round(walls[32], 2),
-            # the host's OWN ceiling on each 4x step, engine-free
-            "efficiency_2_8": round((walls[2] / walls[8]) / 4.0, 3),
-            "efficiency": round((walls[8] / walls[32]) / 4.0, 3),
-        }
-    return out
-
-
-def _norm_table(result: dict) -> str:
-    """Raw + weather-normalized per-query columns (VERDICT r7 #4)."""
-    norm = result.get("queries_norm")
-    ctls = result.get("membw_ctl_per_pass")
-    if not norm:
-        return ""
-    raw = result.get("queries_raw_best") or {}
-    rows = "".join(
-        f"| {q} | {raw.get(q, '—')} | {norm[q]} |\n"
-        for q in sorted(norm)
-    )
-    return (
-        "\n## Weather-normalized per-query walls\n\n"
-        "Every headline pass runs a ~2s membw probe (8-process numpy\n"
-        "copy+sum, `_pass_membw_control`) in its child process BEFORE\n"
-        "the Spark session exists.  The normalized column is\n"
-        "min-across-passes of (query wall ÷ SAME-PASS control wall) —\n"
-        "dimensionless multiples of the bus bandwidth that pass actually\n"
-        "had, so host-weather swings cancel and rounds compare without\n"
-        "disclaimers.  Raw seconds remain the headline for cross-round\n"
-        f"continuity.  Per-pass control walls: {json.dumps(ctls)}.\n\n"
-        "| query | raw best (s) | normalized (× membw ctl) |\n|---|---|---|\n"
-        + rows
-        + f"\nNormalized total: {result.get('value_norm')}\n"
-    )
-
-
-def write_bench_md(result: dict) -> None:
-    s = result.get("scaling")
-    if not s:
-        return
-    c = s.get("controls", {})
-    ctrl = ""
-    if c:
-        ctrl = (
-            "\n## Environment ceiling controls (no Spark)\n\n"
-            "The same 2/8/32-process comparison on pure-ALU and on\n"
-            "memory-streaming work, run right next to the engine job:\n\n"
-            "| control | wall 2p | wall 8p | wall 32p | eff 2→8 | eff 8→32 |\n|---|---|---|---|---|---|\n"
-            f"| pure ALU (tiny working set) | {c['alu'].get('wall_2', '—')} | {c['alu']['wall_8']} | {c['alu']['wall_32']} | {c['alu'].get('efficiency_2_8', '—')} | {c['alu']['efficiency']} |\n"
-            f"| memory streaming (numpy copy+sum) | {c['membw'].get('wall_2', '—')} | {c['membw']['wall_8']} | {c['membw']['wall_32']} | {c['membw'].get('efficiency_2_8', '—')} | {c['membw']['efficiency']} |\n\n"
-            "This sandbox's memory bus saturates near 8 cores: even a\n"
-            "perfectly parallel memory-streaming workload gets ~"
-            f"{c['membw']['efficiency']} efficiency from 8→32 procs, and pure\n"
-            f"ALU tops out at ~{c['alu']['efficiency']}.  A data-processing job\n"
-            "(inherently memory-streaming) therefore CANNOT exhibit 0.8 here;\n"
-            "the engine's efficiency should be read against the membw/ALU\n"
-            "ceiling, not against 1.0.  On a real multi-host cluster each\n"
-            "executor brings its own memory bus, so the plan-level properties\n"
-            "that matter — no driver-side loops, no per-row Python, shuffle\n"
-            "volume minimized by pre-shuffle patch slicing, partition counts\n"
-            "scaling with executors, map-side partial aggregation — are what\n"
-            "carry N→4N scaling, and they hold by construction.\n"
-        )
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "w") as f:
-        f.write(
-            "# BENCH — throughput + scaling evidence\n\n"
-            "North-rule scaling (BASELINE.json): identical spatial-join +\n"
-            "tile-assignment job (parquet scan → tile-cover join → per-tile\n"
-            "burn-in over a 64x32-tile grid) on the same pre-materialized\n"
-            "input, each parallelism level in a fresh JVM.\n\n"
-            f"| parallelism | wall (s) | rows/s |\n|---|---|---|\n"
-            f"| local[2]  | {s['n2']['sec']} | {s['n2']['rows_per_sec']} |\n"
-            f"| local[8]  | {s['n8']['sec']} | {s['n8']['rows_per_sec']} |\n"
-            f"| local[32] | {s['n32']['sec']} | {s['n32']['rows_per_sec']} |\n\n"
-            f"rows = {s['rows']}, tiles = {s['n32']['n_tiles']}\n\n"
-            f"**scaling efficiency N→4N (2→8 cores) = {s['scaling_efficiency']}**"
-            f" (target ≥ 0.8) — measured inside the host's linear region,\n"
-            + (
-                f"paired per-round estimates {s['scaling_efficiency_paired']}"
-                f" (median {s['scaling_efficiency_paired_median']}, max "
-                f"{s['scaling_efficiency_paired_best']} — an upward-biased "
-                "order statistic, shown for spread; each round measures "
-                "n2 and n8 minutes\napart so the WITHIN-round ratio cancels "
-                "host weather that the\nmin-based number — whose n2/n8 mins "
-                "can come from different\nminutes — cannot),\n"
-                if s.get("scaling_efficiency_paired") else ""
-            )
-            + f"with PER-LEVEL-FAIR Arrow configs (round 3 removed the r2 batch\n"
-            f"cap's 2× tax on the n2 denominator, so this number is no longer\n"
-            f"flattered by a degraded baseline).  Against the host's own\n"
-            f"same-run ceilings: {s.get('efficiency_vs_alu_ceiling', '?')} of the pure-ALU 2→8 ceiling, "
-            f"{round(s['scaling_efficiency'] / max(c['membw']['efficiency_2_8'], 1e-9), 3) if c.get('membw', {}).get('efficiency_2_8') else '?'} of\n"
-            f"the memory-streaming 2→8 ceiling (burn-in IS memory-streaming\n"
-            f"work, so the membw control is the apples-to-apples bound).\n"
-            f"Secondary 8→32: {s['scaling_efficiency_8_32']} raw, "
-            f"{s.get('efficiency_8_32_vs_alu_ceiling', '?')} of the ALU ceiling —\n"
-            f"bounded by the host memory bus, not the plan (controls below).\n"
-            f"History: r1's 6.5× 8→32 anomaly was 64 MB Arrow batches × 32\n"
-            f"tasks → ParallelGC pauses; r2 capped batches at 1024/32m, which\n"
-            f"fixed n32 but taxed n2 2×; r3 scales the cap with parallelism\n"
-            f"(session.py, measured batch-size sweep).\n"
-            + ctrl +
-            "\nHost-weather caveat: this sandbox's throughput on\n"
-            "memory-bound work swings 2-8x minute to minute (observed\n"
-            "membw-control efficiency 0.18-0.38 across runs in one\n"
-            "session).  Since round 3 the headline follows the repo's\n"
-            "fresh-JVM rule: "
-            f"{result.get('headline_passes', 3)} complete passes, each in its own\n"
-            "JVM, per-query wall = min across passes — comparable across\n"
-            "rounds without a weather disclaimer.  Raw 2->8 efficiency\n"
-            "across runs of the final round-2 code: 0.87-0.99.\n"
-            + f"\nHeadline per-query seconds at sf={result['sf']} "
-            f"(fresh-JVM best-of-{result.get('headline_passes', 3)}): "
-            f"{json.dumps(result['queries'])}\n"
-            + _norm_table(result)
-            + f"\nr2-comparable 14-query sum: {result.get('value_r2_comparable')}s "
-            "(r2 printed 29.198s for the same set, single shared-session pass)\n"
-            + (
-                f"\nRound-2 operator families (now IN the headline metric) at "
-                f"sf={result['sf']}: {json.dumps(result['newop_queries'])}\n"
-                if result.get("newop_queries")
-                else ""
-            )
-            + (
-                f"\nRound-3 operators at sf={result['sf']}: "
-                f"{json.dumps(result['round3_queries'])}\n"
-                if result.get("round3_queries")
-                else ""
-            )
-            + (
-                f"\nRound-4 operators at sf={result['sf']}: "
-                f"{json.dumps(result['round4_queries'])}\n"
-                if result.get("round4_queries")
-                else ""
-            )
-            + (
-                f"\nRound-5 operators at sf={result['sf']}: "
-                f"{json.dumps(result['round5_queries'])}\n"
-                if result.get("round5_queries")
-                else ""
-            )
-            + (
-                f"\nRound-6 operators at sf={result['sf']}: "
-                f"{json.dumps(result['round6_queries'])}\n"
-                if result.get("round6_queries")
-                else ""
-            )
-            + (
-                f"\nRound-7 ann_ivf wall split at sf={result['sf']}: "
-                f"{json.dumps(result['round7_queries'])}\n"
-                "`ann_ivf_build` is the one-time index cost (k-means + "
-                "assignment +\ntwo versioned-table writes, full rebuild "
-                "each pass); `ann_ivf_query`\nserves a batch against the "
-                "built index (no training job, partition-\npruned codes "
-                "scan) and is the round-over-round-comparable leg — also\n"
-                "the number to weigh against r5's 1.9s retrain-per-call "
-                "wall.\n`ann_ivf` (round-5 list) still times the full "
-                "graded build+query+\nrecall-gate pipeline.\n"
-                if result.get("round7_queries")
-                else ""
-            )
-            + (
-                f"\nACTION CHANGE (round 4): {json.dumps(result['full_eval_queries'])} "
-                "are timed under a\nfull-evaluation action (sum of xxhash64 over "
-                "all output columns) —\ncount() let Catalyst prune these "
-                "row-preserving projections to\nscan-only no-ops in r1-r3, so "
-                "their earlier walls measured session\noverhead.  Larger walls "
-                "here are the fix working, not a regression.\n"
-                if result.get("full_eval_queries")
-                else ""
-            )
-            + (
-                "\n## Round-6 measurement notes\n\n"
-                "- `ann_ivf` times STRICTLY MORE WORK than r5: the graded "
-                "path is now\n  the persisted index (build_ivf_index writes "
-                "two versioned tables,\n  query_ivf_index serves the batch, "
-                "plus the in-query brute-force\n  recall gate), vs r5's "
-                "in-memory retrain-per-call.  Its wall is not\n  comparable "
-                "across the r5→r6 boundary; the build-once/query-many\n"
-                "  amortization it buys is asserted by job-count pytest.\n"
-                "- VERDICT r5 #4 (clean-window check), historical record "
-                "from round 6:\n  `image_features` measured 0.748 s and "
-                "1.38 s in two same-code r6\n  windows (r5 0.819, r4 0.702) "
-                "— the first was BELOW r5 inside a\n  uniformly slower "
-                "window, so the r5 +17% was weather, case closed;\n  it is "
-                "also the most weather-volatile query in the suite, so "
-                "never\n  read its single-run delta as a regression signal."
-                "  `pyramid` moved\n  with the global window swing, also "
-                "weather.\n"
-            )
-            + (
-                "\n## Round-7 measurement notes\n\n"
-                "- `ann_ivf_query` is the leg to weigh against r5's 1.9s "
-                "retrain-per-call\n  wall; `ann_ivf` (round-5 list) times "
-                "strictly more work than either\n  r5 or r6 text implies: "
-                "build + persisted query + in-query brute\n  recall gate.\n"
-                "- `nc_roundtrip` now cycles FOUR container formats "
-                "(CDF-1/2/5 +\n  NETCDF4_CLASSIC incl. full HDF5 "
-                "encode/decode on a quarter of the\n  tiles) — not "
-                "comparable to r6's single-format wall.\n"
-                "- `resample_average` became a compound oracle (avg4 + "
-                "quicklook\n  stretch + two pyramid levels over formula "
-                "fixtures) — its wall is\n  dominated by fixed stage-"
-                "scheduling overhead of ~30 tiny stages and\n  is not "
-                "comparable to r4-r6.\n"
-                "- `reproject_merc` gained the NTv2 oracle leg (one "
-                "Arrow-batched\n  grid-shift UDF + .gsb write) — slightly "
-                "heavier than r6.\n"
-                "- Paired-estimator caveat: the within-round n2/n8 ratio "
-                "cancels\n  weather only when the host is STABLE across "
-                "the few minutes\n  separating that round's two runs.  In "
-                "a window where the bus\n  oscillates at minute scale "
-                "(observed: membw 8→32 control below 0.1\n  while the "
-                "2→8 control is healthy), individual paired rounds "
-                "collapse\n  and the min-based estimator — best n2 and "
-                "best n8 across rounds —\n  is the robust one; report "
-                "both and read the spread as the weather\n  band, not as "
-                "an engine property.\n"
-            )
-            + (
-                "\n## MinHash signature micro-bench\n\n"
-                f"{json.dumps(result['minhash_micro'])}\n\n"
-                "Same session, same cached web-page-length shingle arrays,\n"
-                "same minhash math: engine (JVM xxhash64 + numpy reduction)\n"
-                "vs round 1's per-byte Python FNV UDF reconstructed verbatim.\n"
-                "Speedup is Amdahl-capped by the shared numpy min-reduction\n"
-                "and Arrow transfer; the hashing loop itself no longer\n"
-                "registers.  Separately, round 2 fixed word_ngrams (shingle\n"
-                "construction): tokens are now lambda-bound so normalize+split\n"
-                "runs once per row instead of once per ELEMENT ACCESS, and\n"
-                "slice-per-index became element_at — 200 long docs took 125 s\n"
-                "before, all 5000 take 7.4 s after (≈400× on that shape).\n"
-                if result.get("minhash_micro")
-                else ""
-            )
-        )
-
-
-def headline_pass(
-    sf_dir: str, cpus: int, with_micro: bool, legacy_doc_tokens: bool
-) -> None:
-    """Child process: one complete headline pass in a fresh JVM.  Every
-    query runs exactly once (no repeat-trials inside one JVM) — which is
-    why doc_tokens' legacy count()-action timing (needed for the
-    r2-comparable sum) lives in its OWN dedicated pass
-    (``legacy_doc_tokens``) instead of re-running doc_tokens after its
-    full-eval timing in the same JVM."""
-    ctl = _pass_membw_control()  # BEFORE the session: never concurrent
-    spark = get_spark(master=f"local[{cpus}]", app_name="bench")
-    # warm-up outside measurement: JVM, codegen, and python workers on
-    # every task slot (session startup is excluded per BASELINE.md)
+def query_pass(sf_dir: str, event_dir: str, *names: str) -> None:
+    """Child process: one pass over ``names`` in a fresh JVM, each query once."""
+    spark = get_spark(master=f"local[{CORES}]", app_name="bench", extra_conf={
+        "spark.eventLog.enabled": "true", "spark.eventLog.dir": event_dir,
+        "spark.eventLog.compress": "false", "spark.eventLog.rolling.enabled": "false"})
+    sc = spark.sparkContext
+    # warm-up outside the walls: JVM, codegen, a Python worker on every task slot
     spark.range(1000).count()
-    spark.range(1024, numPartitions=2 * cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    if legacy_doc_tokens:
-        # untimed catalyst/parquet-path warmup on a DIFFERENT table
-        # (tpch_q1 runs exactly once in this JVM, so the no-repeat rule
-        # holds): without it the lone timed query absorbs the
-        # first-SQL-of-the-JVM overhead that the regular passes amortize
-        # over their earlier queries, and the legacy number stops being
-        # comparable to r2's mid-pass measurement
-        qs["tpch_q1"](spark, sf_dir).count()
-        t0 = time.monotonic()
-        qs["doc_tokens"](spark, sf_dir).count()
-        timings["doc_tokens_legacy_count"] = round(time.monotonic() - t0, 3)
-    else:
-        for name in (HEADLINE + NEWOP + ROUND3 + ROUND4 + ROUND5 + ROUND6
-                     + ROUND7):
-            t0 = time.monotonic()
-            _timed_action(qs[name](spark, sf_dir), name)
-            timings[name] = round(time.monotonic() - t0, 3)
-    mh = minhash_micro(spark, sf_dir) if with_micro else None
+    spark.range(1024, numPartitions=2 * CORES).mapInPandas(lambda it: it, "id long").count()
+    qs, spans = entrymod.queries(), {}
+    for name in names:  # a failing query ends the pass, and the run
+        sc.setJobDescription(name)
+        t0 = time.time()
+        _timed_action(qs[name](spark, sf_dir), name)
+        spans[name] = (t0, time.time())
+    app_id = sc.applicationId
     spark.stop()
-    print("HEADLINE_RESULT " + json.dumps(
-        {"timings": timings, "minhash_micro": mh, "membw_ctl_sec": ctl}
-    ))
+    print("PASS_RESULT " + json.dumps({"app_id": app_id, "spans": spans}))
 
 
-def run_headline(sf_dir: str, cpus: int, passes: int) -> dict:
-    per_pass: list[dict[str, float]] = []
-    micro = None
-    # N regular passes + ONE small legacy pass (its own JVM) for the
-    # r2-comparable doc_tokens count()-action timing
-    for i in range(passes + 1):
-        legacy = i == passes
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--headline-pass",
-             sf_dir, str(cpus), "1" if i == 0 else "0",
-             "legacy" if legacy else "full"],
-            capture_output=True, text=True, timeout=3600,
-        )
-        line = next(
-            (l for l in proc.stdout.splitlines() if l.startswith("HEADLINE_RESULT ")),
-            None,
-        )
-        if line is None:
-            raise RuntimeError(f"headline pass failed: {proc.stderr[-3000:]}")
-        res = json.loads(line[len("HEADLINE_RESULT "):])
-        res["timings"]["_membw_ctl_sec"] = res.get("membw_ctl_sec")
-        per_pass.append(res["timings"])
-        micro = micro or res.get("minhash_micro")
-        print(f"headline pass {i + 1}/{passes + 1}"
-              f"{' (legacy doc_tokens)' if legacy else ''}: "
-              f"{round(sum(v for k, v in res['timings'].items() if not k.startswith('_')), 1)}s total"
-              f" (membw ctl {res.get('membw_ctl_sec')}s)", file=sys.stderr)
-    ctls = [p.pop("_membw_ctl_sec", None) for p in per_pass]
-    keys = set().union(*per_pass)
-    best = {k: min(p[k] for p in per_pass if k in p) for k in keys}
-    # weather-normalized estimator (VERDICT r7 #4): each pass's walls in
-    # units of the SAME-PASS membw control wall, then min across passes
-    # — the ratio cancels the bus weather the pass actually saw, so it
-    # is the cross-round-comparable column; raw stays the headline
-    best_norm = {
-        k: round(min(
-            p[k] / c for p, c in zip(per_pass, ctls) if k in p and c
-        ), 3)
-        for k in keys
-        if any(k in p and c for p, c in zip(per_pass, ctls))
-    }
-    return {"best": best, "best_norm": best_norm, "per_pass": per_pass,
-            "membw_ctl_per_pass": ctls, "minhash_micro": micro}
+def layer_split(lines, spans: dict) -> dict[str, dict]:
+    """Event-log layer rows per job description ``spans`` maps to (t0, t1)."""
+    stats = eventlog.parse(lines, spans)
+    return {tag: {"wall": t1 - t0} | {k: stats[tag][k] for k in LAYERS} | {
+        "driver_s": t1 - t0 - eventlog.union_s(stats[tag]["job_intervals"], t0, t1)}
+        for tag, (t0, t1) in spans.items()}
+
+
+def query_names(argv: list[str]) -> list[str]:
+    return argv or list(entrymod.queries())
+
+
+def child(*args: str, env: dict) -> dict:
+    """Run this file with ``args`` in a fresh process; parse its result line."""
+    proc = subprocess.run([sys.executable, os.path.abspath(__file__), *args],
+                          capture_output=True, text=True, env=env, timeout=3600)
+    if proc.returncode != 0:
+        raise RuntimeError(f"{args[0]} exited with {proc.returncode}: {proc.stderr[-3000:]}")
+    return json.loads(proc.stdout.splitlines()[-1].split(" ", 1)[1])
+
+
+def run_queries(sf_dir: str, names: list[str], tmp: str, env: dict) -> dict[str, dict]:
+    best: dict[str, dict] = {}
+    for i in range(PASSES):
+        event_dir = os.path.join(tmp, f"events{i}")
+        os.makedirs(event_dir)
+        res = child("--pass", sf_dir, event_dir, *names, env=env)
+        with open(os.path.join(event_dir, res["app_id"]), encoding="utf-8") as f:
+            rows = layer_split(f, res["spans"])
+        for name, row in rows.items():
+            if name not in best or row["wall"] < best[name]["wall"]:
+                best[name] = row
+        print(f"pass {i + 1}: {sum(r['wall'] for r in rows.values()):.1f}s", file=sys.stderr)
+    return best
+
+
+def run_scaling(tmp: str, env: dict) -> dict:
+    path = os.path.join(tmp, "images")
+    gen_s = child("--gen", path, env=env)["sec"]
+    lo, hi = max(1, CORES // 4), CORES
+    levels = sorted({lo, hi})
+    best: dict[int, dict] = {}
+    for c in levels + levels[::-1] + levels:  # 3 interleaved rounds
+        res = child("--scale-run", str(c), path, env=env)
+        if c not in best or res["rows_per_sec"] > best[c]["rows_per_sec"]:
+            best[c] = res
+    eff = (best[hi]["rows_per_sec"] / best[lo]["rows_per_sec"]) / (hi / lo)
+    return {"rows": SCALE_ROWS, "gen_s": gen_s, "efficiency": round(eff, 3) if hi > lo else None,
+            "levels": {f"local[{c}]": best[c] for c in levels}}
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--scale-run":
-        scale_run(int(sys.argv[2]), sys.argv[3])
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--headline-pass":
-        headline_pass(
-            sys.argv[2], int(sys.argv[3]), sys.argv[4] == "1",
-            len(sys.argv) > 5 and sys.argv[5] == "legacy",
-        )
-        return
-
+    mode, a = (sys.argv + [""])[1], sys.argv[2:]
+    if mode == "--pass":
+        return query_pass(*a)
+    if mode == "--gen":
+        return make_scale_input(a[0])
+    if mode == "--scale-run":
+        return scale_run(int(a[0]), a[1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    passes = int(os.environ.get("SPARK_GRAFT_HEADLINE_PASSES", "3"))
-
-    stop_spark()
-    hl = run_headline(sf_dir, cpus, passes)
-    best = hl["best"]
-    timings = {k: best[k] for k in HEADLINE}
-    newop_timings = {k: best[k] for k in NEWOP}
-    round3_timings = {k: best[k] for k in ROUND3}
-    round4_timings = {k: best[k] for k in ROUND4}
-    round5_timings = {k: best[k] for k in ROUND5}
-    round6_timings = {k: best[k] for k in ROUND6}
-    round7_timings = {k: best[k] for k in ROUND7}
-
-    result = {
-        "metric": "headline_query_wall_sec_total",
-        # round-3 headline = ALL measured queries (old headline + r2
-        # families + r3 ops), fresh-JVM best-of-N per query; the
-        # auxiliary legacy-action timing is NOT a query and is excluded
-        "value": round(
-            sum(v for k, v in best.items()
-                if k != "doc_tokens_legacy_count"), 3
-        ),
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        "cpus": cpus,
-        "headline_passes": passes,
-        # r1/r2 printed a single shared-session pass over these 14; this is
-        # the same query set under the clean methodology.  doc_tokens uses
-        # its LEGACY count()-action timing here (its headline wall is now
-        # full-eval and thus not comparable)
-        "value_r2_comparable": round(
-            sum(timings.values()) - timings["doc_tokens"]
-            + best["doc_tokens_legacy_count"], 3
-        ),
-        "newop_queries": newop_timings,
-        "round3_queries": round3_timings,
-        "round4_queries": round4_timings,
-        "round5_queries": round5_timings,
-        "round6_queries": round6_timings,
-        "round7_queries": round7_timings,
-        "minhash_micro": hl["minhash_micro"],
-        # r4 action change: these queries are now timed under a
-        # full-evaluation hash-agg action instead of count() (VERDICT r3
-        # #1) — their walls are NOT comparable to r1-r3
-        "full_eval_queries": sorted(FULL_EVAL),
-        # weather-normalized column (VERDICT r7 #4): per-query wall in
-        # units of the same-pass membw control wall (dimensionless) —
-        # cancels host bus weather; raw seconds stay the headline
-        "membw_ctl_per_pass": hl.get("membw_ctl_per_pass"),
-        # authoritative raw-best map over EVERY query (review r8 pass-1
-        # #2: _norm_table must not rebuild this from per-round group
-        # keys, or a future group silently drops out of the table)
-        "queries_raw_best": {
-            k: v for k, v in sorted(best.items())
-            if k != "doc_tokens_legacy_count"
-        },
-        "queries_norm": {
-            k: v for k, v in sorted(hl.get("best_norm", {}).items())
-            if k != "doc_tokens_legacy_count"
-        },
-        "value_norm": round(
-            sum(v for k, v in hl.get("best_norm", {}).items()
-                if k != "doc_tokens_legacy_count"), 3
-        ) if hl.get("best_norm") else None,
-    }
-    if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        result["scaling"] = run_scaling()
-        result["scaling_efficiency"] = result["scaling"]["scaling_efficiency"]
-    write_bench_md(result)
-    print(json.dumps(result))
+    tmp = tempfile.mkdtemp(prefix="veranda_bench_")
+    # the children keep their temporary files (and Spark's) inside tmp
+    env = dict(os.environ, TMPDIR=tmp, SPARK_LOCAL_DIRS=os.path.join(tmp, "spark-local"))
+    t0 = time.monotonic()
+    try:
+        best = run_queries(sf_dir, query_names(sys.argv[1:]), tmp, env)
+        scaling = None if sys.argv[1:] else run_scaling(tmp, env)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    layers = {n: {k: round(v, 3) for k, v in r.items()} for n, r in best.items()}
+    cols = ("wall", "driver_s", *LAYERS)
+    for n, r in ({"query": dict(zip(cols, cols))} | layers).items():
+        print(f"{n:<20}" + "".join(f"{r[c]:>14}" for c in cols), file=sys.stderr)
+    print(json.dumps({
+        "metric": "query_wall_sec_total", "value": round(sum(r["wall"] for r in best.values()), 3),
+        "unit": "sec", "queries": {n: r["wall"] for n, r in layers.items()},
+        "sf": float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1),
+        "cores": CORES, "passes": PASSES, "layers": layers, "scaling": scaling,
+        "total_wall_s": round(time.monotonic() - t0, 1)}))
 
 
 if __name__ == "__main__":

@@ -1767,8 +1767,10 @@ def q_ann_ivf(spark, sf_dir):
     # index — build_ivf_index into a scratch dir, then query_ivf_index
     # serves the batch with no k-means/assignment job (the realistic
     # build-once/query-many shape).  Same seed/nlist/nprobe as the old
-    # train-per-call path, so the recall gate is unchanged.
-    import tempfile
+    # train-per-call path, so the recall gate is unchanged.  The index
+    # lives at a fixed per-sf path of its own, removed before each build
+    # (never after: the returned frame is lazy and still reads it).
+    import shutil
 
     from veranda_spark.operators.ann import (
         brute_force_topk, build_ivf_index, query_ivf_index,
@@ -1778,7 +1780,8 @@ def q_ann_ivf(spark, sf_dir):
     q = e.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    idx_path = tempfile.mkdtemp(prefix="ivf_idx_")
+    idx_path = _bench_ivf_path(sf_dir, "veranda_oracle_ivf")
+    shutil.rmtree(idx_path, ignore_errors=True)
     build_ivf_index(e, idx_path, nlist=16)
     ivf = query_ivf_index(
         spark, idx_path, q, k=5, nprobe=10
@@ -1793,16 +1796,17 @@ def q_ann_ivf(spark, sf_dir):
     ).select("n_queries", F.lit(5).alias("k"), "recall_ok")
 
 
-def _bench_ivf_path(sf_dir):
-    """Deterministic per-sf scratch location shared by ann_ivf_build and
-    ann_ivf_query — build rewrites it, query reads it (queries() puts
-    build first, and bench.py runs the entries in dict order)."""
+def _bench_ivf_path(sf_dir, prefix="veranda_bench_ivf"):
+    """Deterministic per-sf scratch location.  The default is shared by
+    ann_ivf_build and ann_ivf_query — build rewrites it, query reads it
+    (queries() puts build first, and bench.py runs the entries in dict
+    order); ann_ivf passes its own prefix so it clobbers neither."""
     import hashlib
     import os
     import tempfile
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"veranda_bench_ivf_{tag}")
+    return os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
 
 
 def q_ann_ivf_build(spark, sf_dir):
@@ -1850,13 +1854,15 @@ def q_ann_ivfpq(spark, sf_dir):
     # IVF + product quantization: ADC code scan JVM-side, exact cosine
     # re-rank of refine*k candidates (rows-only: approximate by design;
     # recall>=0.8 vs brute force is pytest-asserted)
-    from veranda_spark.operators.ann import ivf_pq_topk
+    from veranda_spark.operators.ann import ivf_topk
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 200 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_pq_topk(e, q, k=5, nlist=16, nprobe=10, m=8, ncodes=32, refine=8)
+    return ivf_topk(
+        e, q, k=5, nlist=16, nprobe=10, pq=True, m=8, ncodes=32, refine=8
+    )
 
 
 def q_embedding_neardup(spark, sf_dir):

@@ -180,16 +180,14 @@ def test_phash_neardup_radius_guard(spark):
 @pytest.mark.parametrize(
     "residual,opq", [(True, False), (False, False), (True, True)]
 )
-def test_ivf_pq_topk_recall(spark, embeddings, residual, opq):
-    from veranda_spark.operators.ann import ivf_pq_topk
-
+def test_ivf_topk_pq_recall(spark, embeddings, residual, opq):
     qs = embeddings.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = brute_force_topk(embeddings, qs, k=5).collect()
-    approx = ivf_pq_topk(
-        embeddings, qs, k=5, nlist=8, nprobe=4, m=8, ncodes=16, refine=4,
-        sample_rows=200, residual=residual, opq=opq,
+    approx = ivf_topk(
+        embeddings, qs, k=5, nlist=8, nprobe=4, pq=True, m=8, ncodes=16,
+        refine=4, sample_rows=200, residual=residual, opq=opq,
     ).collect()
     ex = {(r["query_id"], r["vec_id"]) for r in exact}
     ap = {(r["query_id"], r["vec_id"]) for r in approx}
@@ -390,10 +388,16 @@ def test_persisted_ivf_index_reuse(spark, embeddings, tmp_path):
     assert acc.value == before  # NO corpus pass on the query path
 
 
-def test_persisted_ivf_pq_index_matches_per_call(spark, embeddings, tmp_path):
+@pytest.mark.parametrize(
+    "residual,opq", [(True, False), (False, False), (True, True)]
+)
+def test_persisted_ivf_pq_index_matches_per_call(
+    spark, embeddings, tmp_path, residual, opq
+):
+    import re
+
     from veranda_spark.operators.ann import (
         build_ivf_index,
-        ivf_pq_topk,
         load_ivf_index,
         query_ivf_index,
     )
@@ -404,18 +408,27 @@ def test_persisted_ivf_pq_index_matches_per_call(spark, embeddings, tmp_path):
     path = str(tmp_path / "pq_idx")
     build_ivf_index(
         embeddings, path, nlist=8, pq=True, m=8, ncodes=16,
-        residual=True, opq=True, opq_iters=2, sample_rows=200,
+        residual=residual, opq=opq, opq_iters=2, sample_rows=200,
     )
     idx = load_ivf_index(spark, path)
     assert idx["params"]["pq"] and idx["books"].shape == (8, 16, 2)
-    assert idx["rot"].shape == (16, 16)
+    assert idx["params"]["residual"] == residual
+    assert (idx["rot"] is not None) == opq
+    if opq:
+        assert idx["rot"].shape == (16, 16)
 
+    one_shot = ivf_topk(
+        embeddings, qs, k=5, nlist=8, nprobe=4, pq=True, m=8, ncodes=16,
+        refine=4, residual=residual, opq=opq, opq_iters=2, sample_rows=200,
+    )
+    # the re-rank reads the encoded corpus frame; column pruning must keep
+    # the encoder out of that branch.  3 Python-eval nodes: the encoder
+    # twice on the ADC side (the join's inferred isnotnull(cell) filter
+    # evaluates it below the projection) and the query LUT UDF once.
+    plan = one_shot._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"(?:Arrow|Batch)EvalPython", plan)) == 3, plan
     fresh = sorted(
-        (r["query_id"], r["rank"], r["vec_id"])
-        for r in ivf_pq_topk(
-            embeddings, qs, k=5, nlist=8, nprobe=4, m=8, ncodes=16,
-            refine=4, residual=True, opq=True, opq_iters=2, sample_rows=200,
-        ).collect()
+        (r["query_id"], r["rank"], r["vec_id"]) for r in one_shot.collect()
     )
     served = sorted(
         (r["query_id"], r["rank"], r["vec_id"])

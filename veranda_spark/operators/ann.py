@@ -1,19 +1,20 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
 - brute_force_topk: exact cosine top-k (the correctness baseline and the
-  oracle for the approximate paths).  Scales as |queries| × |corpus| but
-  the corpus never shuffles: queries broadcast, partial top-k per
-  partition via window rank.
-- ivf_topk: IVF-style scale path — corpus is clustered into nlist
-  centroid cells (k-means on a sample, driver-side numpy); at query time
-  only nprobe nearest cells are scanned.
-- ivf_pq_topk: IVF + product quantization — corpus vectors compress to m
-  sub-space code bytes; the candidate scan is an ADC (asymmetric distance
-  computation) over codes via per-query lookup tables, entirely JVM-side
-  (element_at + aggregate), then an exact cosine re-rank of the top
-  refine×k candidates.  At 100 TB the code table is ~32× smaller than the
-  raw embeddings, so the probe scan reads code bytes, not vectors, and
-  only the surviving candidates' embeddings are fetched (equi-join).
+  oracle for the approximate paths).  The corpus never shuffles: queries
+  broadcast, partial top-k per partition via window rank.
+- ivf_topk(pq=False|True): one-shot IVF search, trained per call — the
+  corpus is clustered into nlist centroid cells (k-means on a sample,
+  driver-side numpy) and each query scans only its nprobe nearest cells.
+  pq=True adds product quantization (Jégou et al., TPAMI 2011): m
+  sub-space code bytes per vector, a JVM-side ADC scan over codes via
+  per-query lookup tables, then an exact re-rank of refine×k candidates.
+- build_ivf_index / query_ivf_index: the same index trained once and
+  persisted as cell-partitioned versioned tables, then served per query
+  batch with no training and no corpus pass.
+
+Both IVF forms run one trainer (_train_index), one encoder (_encode) and
+one searcher (_search); only the source of the index and corpus differs.
 """
 
 from __future__ import annotations
@@ -37,6 +38,32 @@ def _cos_pre(emb, qemb, n_emb, n_qemb):
     return dot(emb, qemb) / (n_emb * n_qemb)
 
 
+def _corpus(corpus: DataFrame, id_col: str, emb_col: str) -> DataFrame:
+    """(vec_id, emb array<double>) — the corpus as every path reads it."""
+    return corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(emb_col).cast("array<double>").alias("emb")
+    )
+
+
+def _query_frame(queries: DataFrame, query_id: str, query_emb: str) -> DataFrame:
+    """(query_id, qemb array<double>) — the query batch as every path reads it."""
+    return queries.select(
+        F.col(query_id).alias("query_id"),
+        F.col(query_emb).cast("array<double>").alias("qemb"),
+    )
+
+
+def _cosine_rank(scored: DataFrame, k: int) -> DataFrame:
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "cos", "rank")
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -48,13 +75,10 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: rank by (rounded cosine desc, id) so ordering is
     deterministic and reproducible in the SQL oracle."""
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(emb_col).cast("array<double>").alias("emb")
-    ).withColumn("_ne", norm(F.col("emb")))
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_emb).cast("array<double>").alias("qemb"),
-    ).withColumn("_nq", norm(F.col("qemb")))
+    c = _corpus(corpus, id_col, emb_col).withColumn("_ne", norm(F.col("emb")))
+    q = _query_frame(queries, query_id, query_emb).withColumn(
+        "_nq", norm(F.col("qemb"))
+    )
     scored = c.crossJoin(F.broadcast(q)).withColumn(
         "cos",
         F.round(
@@ -62,12 +86,7 @@ def brute_force_topk(
             6,
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _cosine_rank(scored, k)
 
 
 def _sq_dists(mat: np.ndarray, centroids: np.ndarray) -> np.ndarray:
@@ -83,6 +102,24 @@ def _sq_dists(mat: np.ndarray, centroids: np.ndarray) -> np.ndarray:
     for j, cj in enumerate(centroids):
         out[:, j] = ((mat - cj) ** 2).sum(-1)
     return out
+
+
+def _sub_dists(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m, ncodes) squared L2 distances from each of ``mat``'s m
+    sub-vectors to that subspace's codebook (m, ncodes, dim//m): argmin
+    over the last axis is the PQ code, a reshape to (n, m·ncodes) is the
+    ADC lookup table."""
+    m, ncodes, sub = books.shape
+    out = np.empty((len(mat), m, ncodes))
+    for j in range(m):
+        s = mat[:, j * sub : (j + 1) * sub]
+        out[:, j, :] = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(-1)
+    return out
+
+
+def _rotate(mat: np.ndarray, rot) -> np.ndarray:
+    """Apply the OPQ rotation, if any, before the subspace split."""
+    return mat if rot is None else mat @ rot.T
 
 
 def _kmeans(sample: np.ndarray, nlist: int, iters: int = 10, seed: int = 42) -> np.ndarray:
@@ -115,19 +152,79 @@ def _train_sample(c: DataFrame, sample_rows: int, seed: int) -> np.ndarray:
     return np.stack(pdf["emb"].to_numpy())
 
 
-def _cosine_rank(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
+def _train_pq(sample: np.ndarray, m: int, ncodes: int, seed: int = 42) -> np.ndarray:
+    """Per-subspace codebooks, shape (m, ncodes, dim//m) — k-means per
+    subspace on the training sample (raw vectors or residuals, depending
+    on what the caller passes)."""
+    dim = sample.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    return np.stack(
+        [
+            _kmeans(np.ascontiguousarray(sample[:, j * sub : (j + 1) * sub]),
+                    ncodes, seed=seed + j)
+            for j in range(m)
+        ]
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+
+
+def _train_opq(
+    train: np.ndarray, m: int, ncodes: int, seed: int, iters: int = 5
+) -> np.ndarray:
+    """OPQ rotation (Ge et al., CVPR 2013, non-parametric variant):
+    alternate PQ codebook training in the rotated space with the
+    orthogonal Procrustes update R = (U·Vᵀ)ᵀ from svd(Xᵀ·X̂).  The
+    rotation redistributes variance across subspaces so independent
+    per-subspace codebooks waste fewer bits on correlated dims.  Runs
+    driver-side on the training sample only."""
+    rot = np.eye(train.shape[1])
+    for it in range(iters):
+        xr = _rotate(train, rot)
+        books = _train_pq(xr, m, ncodes, seed=seed + 101 + it)
+        codes = _sub_dists(xr, books).argmin(2)
+        xhat = books[np.arange(m), codes].reshape(xr.shape)
+        u, _, vt = np.linalg.svd(train.T @ xhat)
+        rot = (u @ vt).T
+    return rot
+
+
+def _train_index(
+    c: DataFrame, nlist: int, pq: bool, m: int, ncodes: int, residual: bool,
+    opq: bool, opq_iters: int, sample_rows: int, seed: int,
+) -> dict:
+    """THE IVF trainer, on a seeded sample of the (vec_id, emb) corpus:
+    k-means centroids, then with ``pq`` the (residual, optionally
+    OPQ-rotated) per-subspace codebooks.  Returns the dict
+    load_ivf_index reads back from a persisted index: params,
+    centroids, books, rot."""
+    sample = _train_sample(c, sample_rows, seed)
+    centroids = _kmeans(sample, nlist, seed=seed)
+    dim = sample.shape[1]
+    books = rot = None
+    if pq:
+        ncodes = min(ncodes, max(2, len(sample) // 4))
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        if residual:
+            train = sample - centroids[_sq_dists(sample, centroids).argmin(1)]
+        else:
+            train = sample
+        # OPQ: orthonormal rotation applied before the subspace split;
+        # L2 distances are invariant under it, so ADC distances in the
+        # rotated space equal the originals and the exact re-rank is
+        # untouched — only code quality changes.
+        rot = _train_opq(train, m, ncodes, seed, iters=opq_iters) if opq else None
+        books = _train_pq(_rotate(train, rot), m, ncodes, seed=seed)
+    params = {"nlist": int(len(centroids)), "pq": bool(pq),
+              "m": int(m), "ncodes": int(ncodes),
+              "residual": bool(residual), "opq": bool(opq),
+              "dim": int(dim), "seed": int(seed)}
+    return {"params": params, "centroids": centroids, "books": books, "rot": rot}
 
 
 def _cell_udf(centroids: np.ndarray):
-    """Arrow-batched nearest-centroid assignment (the corpus encoder)."""
+    """Arrow-batched nearest-centroid assignment (the IVF corpus encoder)."""
 
     @F.pandas_udf(T.IntegerType())
     def cell_of(emb: pd.Series) -> pd.Series:
@@ -135,6 +232,38 @@ def _cell_udf(centroids: np.ndarray):
         return pd.Series(_sq_dists(m, centroids).argmin(1).astype("int32"))
 
     return cell_of
+
+
+def _pq_encode_udf(
+    centroids: np.ndarray, books: np.ndarray, rot, residual: bool
+):
+    """Arrow-batched IVF-PQ corpus encoder → (cell, codes[m])."""
+
+    @F.pandas_udf("cell int, codes array<int>")
+    def encode(emb: pd.Series) -> pd.DataFrame:
+        mat = np.stack(emb.to_numpy())
+        cell = _sq_dists(mat, centroids).argmin(1).astype("int32")
+        vecs = _rotate(mat - centroids[cell] if residual else mat, rot)
+        codes = _sub_dists(vecs, books).argmin(2).astype("int32")
+        return pd.DataFrame({"cell": cell, "codes": list(codes)})
+
+    return encode
+
+
+def _encode(c: DataFrame, idx: dict) -> DataFrame:
+    """THE corpus encoder: (vec_id, emb, cell[, codes]) in one Arrow
+    pass — what build_ivf_index persists and ivf_topk searches."""
+    centroids = idx["centroids"]
+    if not idx["params"]["pq"]:
+        return c.select(
+            "vec_id", "emb", _cell_udf(centroids)(F.col("emb")).alias("cell")
+        )
+    encode = _pq_encode_udf(
+        centroids, idx["books"], idx["rot"], idx["params"]["residual"]
+    )
+    return c.select("vec_id", "emb", encode(F.col("emb")).alias("e")).select(
+        "vec_id", "emb", "e.cell", "e.codes"
+    )
 
 
 def _select_probe_cells(
@@ -170,232 +299,24 @@ def _explode_query_cells(
     query_id: str,
     query_emb: str,
 ) -> DataFrame:
-    """(query_id, qemb, cell) — one row per (query, probed cell).  Built
-    ONCE per batch; the persisted-index path persists it so the prune
-    list and the join both read the same single UDF evaluation."""
+    """(query_id, qemb, cell) — one row per (query, probed cell).  Lazy
+    and never persisted: query_ivf_index builds it once for its
+    probed-cell collect and once more inside the scoring plan, so the
+    (cheap, batch × nlist) centroid assignment runs twice there."""
     probe_udf = _probe_cells_udf(centroids, nprobe)
-    return queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_emb).cast("array<double>").alias("qemb"),
-    ).withColumn("cell", F.explode(probe_udf(F.col("qemb"))))
-
-
-def _ivf_cosine_score(ck: DataFrame, qx: DataFrame, k: int) -> DataFrame:
-    """Exact-cosine rank of a cell-keyed corpus against the pre-exploded
-    (query_id, qemb, cell) frame — shared by the train-per-call path
-    (ivf_topk) and the persisted-index path.  Norms are hoisted below
-    the join (see _cos_pre)."""
-    scored = (
-        ck.withColumn("_ne", norm(F.col("emb")))
-        .join(
-            F.broadcast(qx.withColumn("_nq", norm(F.col("qemb")))), "cell"
-        )
-        .withColumn(
-            "cos",
-            F.round(
-                _cos_pre(
-                    F.col("emb"), F.col("qemb"), F.col("_ne"), F.col("_nq")
-                ),
-                6,
-            ),
-        )
+    return _query_frame(queries, query_id, query_emb).withColumn(
+        "cell", F.explode(probe_udf(F.col("qemb")))
     )
-    return _cosine_rank(scored, k)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 16,
-    nprobe: int = 4,
-    sample_rows: int = 10_000,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    query_id: str = "query_id",
-    query_emb: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-bucketed approximate top-k: corpus rows carry a centroid-cell
-    key; each query scans only its nprobe nearest cells.  At 100 TB the
-    cell key is the table's partition column, so the probe is partition
-    pruning, not a scan.  Trains per call — when one corpus serves many
-    query batches, build_ivf_index + query_ivf_index amortize the
-    training and assignment."""
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(emb_col).cast("array<double>").alias("emb")
-    )
-    sample = _train_sample(c, sample_rows, seed)
-    centroids = _kmeans(sample, nlist, seed=seed)
-    ck = c.withColumn("cell", _cell_udf(centroids)(F.col("emb")))
-    qx = _explode_query_cells(queries, centroids, nprobe, query_id, query_emb)
-    return _ivf_cosine_score(ck, qx, k)
-
-
-def _train_pq(sample: np.ndarray, m: int, ncodes: int, seed: int = 42) -> np.ndarray:
-    """Per-subspace codebooks, shape (m, ncodes, dim//m) — k-means per
-    subspace on the training sample (raw vectors or residuals, depending
-    on what the caller passes)."""
-    dim = sample.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    return np.stack(
-        [
-            _kmeans(np.ascontiguousarray(sample[:, j * sub : (j + 1) * sub]),
-                    ncodes, seed=seed + j)
-            for j in range(m)
-        ]
-    )
-
-
-def _train_opq(
-    train: np.ndarray, m: int, ncodes: int, seed: int, iters: int = 5
-) -> np.ndarray:
-    """OPQ rotation (Ge et al., CVPR 2013, non-parametric variant):
-    alternate PQ codebook training in the rotated space with the
-    orthogonal Procrustes update R = (U·Vᵀ)ᵀ from svd(Xᵀ·X̂).  The
-    rotation redistributes variance across subspaces so independent
-    per-subspace codebooks waste fewer bits on correlated dims.  Runs
-    driver-side on the training sample only."""
-    dim = train.shape[1]
-    sub = dim // m
-    rot = np.eye(dim)
-    for it in range(iters):
-        xr = train @ rot.T
-        books = _train_pq(xr, m, ncodes, seed=seed + 101 + it)
-        xhat = np.empty_like(xr)
-        for j in range(m):
-            s = xr[:, j * sub : (j + 1) * sub]
-            dj = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-            xhat[:, j * sub : (j + 1) * sub] = books[j][dj.argmin(1)]
-        u, _, vt = np.linalg.svd(train.T @ xhat)
-        rot = (u @ vt).T
-    return rot
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    ncodes: int = 32,
-    refine: int = 4,
-    sample_rows: int = 10_000,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    query_id: str = "query_id",
-    query_emb: str = "embedding",
-    seed: int = 42,
-    residual: bool = True,
-    opq: bool = False,
-    opq_iters: int = 5,
-) -> DataFrame:
-    """IVF-PQ approximate top-k with exact re-rank.
-
-    ``residual=True`` (default, the standard IVF-PQ form) quantizes
-    (vector − cell centroid) so the codebooks only need to span the
-    within-cell spread — better recall per code byte; the query LUT is
-    then per (query, probed cell).  ``residual=False`` quantizes raw
-    vectors with a single LUT per query.  ``opq=True`` additionally
-    learns an OPQ rotation (Ge et al. 2013) on the training sample and
-    applies it before the subspace split — worthwhile on real corpora
-    with correlated dims; a no-op-in-expectation on isotropic synthetic
-    embeddings.
-
-    Plan (each stage is the one you'd run at 10^12 vectors):
-      1. encode: corpus → (vec_id, cell, codes[m]) via one Arrow pass —
-         the code table is the only thing the probe scan ever reads;
-      2. probe: each query explodes to its nprobe cells and BROADCASTS a
-         flattened (m × ncodes) distance lookup table;
-      3. ADC scan: codes ⋈ queries on cell; approx distance =
-         Σ_j lut[j·ncodes + code_j] — pure JVM Column ops
-         (element_at + aggregate), no Python per candidate;
-      4. top refine·k per query by ADC, then fetch ONLY those candidates'
-         embeddings (equi-join on vec_id) for the exact cosine re-rank.
-    """
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(emb_col).cast("array<double>").alias("emb")
-    )
-    sample = _train_sample(c, sample_rows, seed)
-    centroids = _kmeans(sample, nlist, seed=seed)
-    ncodes = min(ncodes, max(2, len(sample) // 4))
-    if residual:
-        assign = _sq_dists(sample, centroids).argmin(1)
-        train = sample - centroids[assign]
-    else:
-        train = sample
-    dim = sample.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    # OPQ: orthonormal rotation applied before the subspace split;
-    # L2 distances are invariant under it, so ADC distances in the
-    # rotated space equal the originals and the exact re-rank is
-    # untouched — only code quality changes.
-    rot = _train_opq(train, m, ncodes, seed, iters=opq_iters) if opq else None
-    if rot is not None:
-        train = train @ rot.T
-    books = _train_pq(train, m, ncodes, seed=seed)  # (m, ncodes, sub)
-
-    enc = c.select(
-        "vec_id",
-        _pq_encode_udf(centroids, books, rot, residual)(F.col("emb")).alias("e"),
-    ).select("vec_id", "e.cell", "e.codes")
-    qp = _explode_query_luts(
-        queries, centroids, books, rot, residual, nprobe,
-        query_id, query_emb,
-    )
-    return _pq_adc_score(enc, c, qp, books.shape[1], k, refine)
-
-
-def _pq_encode_udf(
-    centroids: np.ndarray, books: np.ndarray, rot, residual: bool
-):
-    """Arrow-batched IVF-PQ corpus encoder → (cell, codes[m])."""
-    m, sub = books.shape[0], books.shape[2]
-
-    def _rotate(mat: np.ndarray) -> np.ndarray:
-        return mat if rot is None else mat @ rot.T
-
-    def _subspace_codes(mat: np.ndarray) -> np.ndarray:
-        codes = np.empty((len(mat), m), dtype="int32")
-        for j in range(m):
-            s = mat[:, j * sub : (j + 1) * sub]
-            dj = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(-1)
-            codes[:, j] = dj.argmin(1)
-        return codes
-
-    @F.pandas_udf("cell int, codes array<int>")
-    def encode(emb: pd.Series) -> pd.DataFrame:
-        mat = np.stack(emb.to_numpy())
-        cell = _sq_dists(mat, centroids).argmin(1).astype("int32")
-        codes = _subspace_codes(
-            _rotate(mat - centroids[cell] if residual else mat)
-        )
-        return pd.DataFrame({"cell": cell, "codes": list(codes)})
-
-    return encode
 
 
 def _pq_probe_udf(
     centroids: np.ndarray, books: np.ndarray, rot, residual: bool, nprobe: int
 ):
     """Per-query probe cells + flattened (m × ncodes) ADC lookup tables."""
-    m, ncodes, sub = books.shape
-
-    def _rotate(mat: np.ndarray) -> np.ndarray:
-        return mat if rot is None else mat @ rot.T
+    m, ncodes, _ = books.shape
 
     def _lut_of(vecs: np.ndarray) -> np.ndarray:
-        luts = np.empty((len(vecs), m * ncodes), dtype="float64")
-        for j in range(m):
-            s = vecs[:, j * sub : (j + 1) * sub]
-            luts[:, j * ncodes : (j + 1) * ncodes] = (
-                (s[:, None, :] - books[j][None, :, :]) ** 2
-            ).sum(-1)
-        return luts
+        return _sub_dists(_rotate(vecs, rot), books).reshape(len(vecs), m * ncodes)
 
     def probe_lut(emb: pd.Series) -> pd.Series:
         mat = np.stack(emb.to_numpy())
@@ -405,11 +326,11 @@ def _pq_probe_udf(
             probes = []
             if residual:
                 res = mat[i][None, :] - centroids[cells[i]]  # (nprobe, dim)
-                luts = _lut_of(_rotate(res))
+                luts = _lut_of(res)
                 for k_, cell in enumerate(cells[i]):
                     probes.append({"cell": int(cell), "lut": list(luts[k_])})
             else:
-                lut = _lut_of(_rotate(mat[i][None, :]))[0]
+                lut = _lut_of(mat[i][None, :])[0]
                 for cell in cells[i]:
                     probes.append({"cell": int(cell), "lut": list(lut)})
             out.append(probes)
@@ -431,14 +352,11 @@ def _explode_query_luts(
     query_emb: str,
 ) -> DataFrame:
     """(query_id, qemb, cell, lut) — one row per (query, probed cell)
-    with the flattened ADC lookup table.  Built ONCE per batch; the
-    persisted-index path persists it so the prune list and the ADC join
-    both read the same single UDF evaluation."""
+    with the flattened ADC lookup table.  The per-cell LUTs are built
+    once, inside the scoring plan; query_ivf_index's probed-cell collect
+    reads _explode_query_cells instead, so no LUT reaches the driver."""
     probe = _pq_probe_udf(centroids, books, rot, residual, nprobe)
-    return queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_emb).cast("array<double>").alias("qemb"),
-    ).select(
+    return _query_frame(queries, query_id, query_emb).select(
         "query_id", "qemb", F.explode(probe(F.col("qemb"))).alias("p")
     ).select(
         "query_id", "qemb",
@@ -446,24 +364,44 @@ def _explode_query_luts(
     )
 
 
+def _ivf_cosine_score(ck: DataFrame, qx: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine rank of a (vec_id, emb, cell) corpus against the
+    pre-exploded (query_id, qemb, cell) frame.  Norms are hoisted below
+    the join (see _cos_pre)."""
+    scored = (
+        ck.withColumn("_ne", norm(F.col("emb")))
+        .join(
+            F.broadcast(qx.withColumn("_nq", norm(F.col("qemb")))), "cell"
+        )
+        .withColumn(
+            "cos",
+            F.round(
+                _cos_pre(
+                    F.col("emb"), F.col("qemb"), F.col("_ne"), F.col("_nq")
+                ),
+                6,
+            ),
+        )
+    )
+    return _cosine_rank(scored, k)
+
+
 def _pq_adc_score(
-    enc: DataFrame,
-    c_emb: DataFrame,
-    qp: DataFrame,
-    ncodes: int,
-    k: int,
-    refine: int,
+    ck: DataFrame, qp: DataFrame, ncodes: int, k: int, refine: int
 ) -> DataFrame:
-    """ADC scan over (cell, codes) + exact re-rank of the refine·k
-    survivors — shared by ivf_pq_topk and the persisted-index path.
-    ``qp`` is the pre-exploded (query_id, qemb, cell, lut) frame."""
+    """ADC scan over ``ck``'s (cell, codes) + exact re-rank of the
+    refine·k survivors against ``ck``'s embeddings.  ``qp`` is the
+    pre-exploded (query_id, qemb, cell, lut) frame.  Each side selects
+    only its columns, so the scan reads codes and the re-rank reads
+    embeddings (and column pruning drops the encoder from the re-rank
+    when ``ck`` is an _encode result)."""
     # ADC: JVM-side lookup-table sum over the m code entries
     adc_terms = F.transform(
         F.col("codes"),
         lambda code, j: F.element_at(F.col("lut"), (j * ncodes + code + 1).cast("int")),
     )
     scored = (
-        enc.join(F.broadcast(qp), "cell")
+        ck.select("vec_id", "cell", "codes").join(F.broadcast(qp), "cell")
         .withColumn("adc", F.aggregate(adc_terms, F.lit(0.0), lambda a, x: a + x))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("vec_id").asc())
@@ -472,10 +410,77 @@ def _pq_adc_score(
         .filter(F.col("crank") <= refine * k)
         .select("query_id", "vec_id", "qemb")
     )
-    exact = cand.join(c_emb.select("vec_id", "emb"), "vec_id").withColumn(
+    exact = cand.join(ck.select("vec_id", "emb"), "vec_id").withColumn(
         "cos", F.round(cosine(F.col("emb"), F.col("qemb")), 6)
     )
     return _cosine_rank(exact, k)
+
+
+def _search(
+    idx: dict, ck: DataFrame, queries: DataFrame, k: int, nprobe: int,
+    refine: int, query_id: str, query_emb: str,
+) -> DataFrame:
+    """THE IVF searcher: rank ``queries`` against the cell-keyed corpus
+    ``ck`` — an _encode result (ivf_topk) or a partition-pruned scan of
+    a persisted codes table (query_ivf_index).  PQ indexes take the ADC
+    scan + exact re-rank, flat ones the exact cosine over probed cells."""
+    p, centroids = idx["params"], idx["centroids"]
+    if p["pq"]:
+        qp = _explode_query_luts(
+            queries, centroids, idx["books"], idx["rot"], p["residual"],
+            nprobe, query_id, query_emb,
+        )
+        return _pq_adc_score(ck, qp, idx["books"].shape[1], k, refine)
+    qx = _explode_query_cells(queries, centroids, nprobe, query_id, query_emb)
+    return _ivf_cosine_score(ck, qx, k)
+
+
+def ivf_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    nlist: int = 16,
+    nprobe: int = 4,
+    pq: bool = False,
+    m: int = 8,
+    ncodes: int = 32,
+    refine: int = 4,
+    residual: bool = True,
+    opq: bool = False,
+    opq_iters: int = 5,
+    sample_rows: int = 10_000,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
+    query_id: str = "query_id",
+    query_emb: str = "embedding",
+    seed: int = 42,
+) -> DataFrame:
+    """IVF-bucketed approximate top-k, trained per call: corpus rows
+    carry a centroid-cell key; each query scans only its nprobe nearest
+    cells (at 100 TB the cell key is the table's partition column, so the
+    probe is partition pruning).  build_ivf_index + query_ivf_index
+    amortize training and encoding over many batches, with the same rows.
+
+    ``pq=True`` is IVF-PQ: (1) encode the corpus to (cell, codes[m]) in
+    one Arrow pass; (2) each query explodes to its nprobe cells with a
+    broadcast (m × ncodes) lookup table; (3) ADC scan, Σ_j
+    lut[j·ncodes + code_j] in JVM Column ops; (4) exact cosine re-rank
+    of the top refine·k, fetching only their embeddings.
+    ``residual=True`` (the standard form) quantizes vector − centroid, so
+    codebooks span only the within-cell spread and the LUT is per
+    (query, cell); ``residual=False`` quantizes raw vectors, one LUT per
+    query.  ``opq=True`` learns an OPQ rotation (Ge et al. 2013) applied
+    before the subspace split — worthwhile on correlated dims.  ``m``,
+    ``ncodes``, ``refine``, ``residual``, ``opq`` and ``opq_iters`` are
+    ignored without ``pq``.
+    """
+    c = _corpus(corpus, id_col, emb_col)
+    idx = _train_index(
+        c, nlist, pq, m, ncodes, residual, opq, opq_iters, sample_rows, seed
+    )
+    return _search(
+        idx, _encode(c, idx), queries, k, nprobe, refine, query_id, query_emb
+    )
 
 
 # ---- persisted IVF / IVF-PQ index (build once, query many) -----------------
@@ -502,11 +507,12 @@ def build_ivf_index(
     emb_col: str = "embedding",
     seed: int = 42,
 ) -> int:
-    """Train ONCE and persist (VERDICT r5 #3): ivf_topk / ivf_pq_topk
-    retrain k-means and re-assign the whole corpus per call — fine for a
-    single batch, wasteful when many query batches hit the same corpus.
-    This writes two managed versioned tables (io/table.py machinery,
-    same time-travel/compaction semantics as every other table):
+    """Train ONCE and persist (VERDICT r5 #3): ivf_topk retrains and
+    re-encodes the whole corpus per call — fine for a single batch,
+    wasteful when many query batches hit the same corpus.  Same trainer
+    and encoder as ivf_topk; this writes their output as two managed
+    versioned tables (io/table.py machinery, same time-travel/compaction
+    semantics as every other table):
 
     * ``<path>/codes`` — (vec_id, emb, cell[, codes]) PARTITIONED BY the
       IVF cell, so a query batch's probe set becomes parquet partition
@@ -520,51 +526,19 @@ def build_ivf_index(
     import json
 
     from veranda_spark.io.table import create_table
+    from veranda_spark.session import local_df
 
-    spark = corpus.sparkSession
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(emb_col).cast("array<double>").alias("emb"),
+    c = _corpus(corpus, id_col, emb_col)
+    idx = _train_index(
+        c, nlist, pq, m, ncodes, residual, opq, opq_iters, sample_rows, seed
     )
-    sample = _train_sample(c, sample_rows, seed)
-    centroids = _kmeans(sample, nlist, seed=seed)
-    dim = sample.shape[1]
-    books = rot = None
-    if pq:
-        ncodes = min(ncodes, max(2, len(sample) // 4))
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        if residual:
-            assign = _sq_dists(sample, centroids).argmin(1)
-            train = sample - centroids[assign]
-        else:
-            train = sample
-        rot = _train_opq(train, m, ncodes, seed, iters=opq_iters) if opq else None
-        if rot is not None:
-            train = train @ rot.T
-        books = _train_pq(train, m, ncodes, seed=seed)
-
-    if pq:
-        ck = c.select(
-            "vec_id", "emb",
-            _pq_encode_udf(centroids, books, rot, residual)(F.col("emb")).alias("e"),
-        ).select("vec_id", "emb", "e.cell", "e.codes")
-    else:
-        ck = c.select(
-            "vec_id", "emb", _cell_udf(centroids)(F.col("emb")).alias("cell")
-        )
     codes_path, meta_path = _index_paths(path)
-    v = create_table(ck, codes_path, partition_by="cell")
+    v = create_table(_encode(c, idx), codes_path, partition_by="cell")
 
-    rows: list[tuple] = [(
-        "param", None, None, None,
-        json.dumps({"nlist": int(len(centroids)), "pq": bool(pq),
-                    "m": int(m), "ncodes": int(ncodes),
-                    "residual": bool(residual), "opq": bool(opq),
-                    "dim": int(dim), "seed": int(seed)}),
-    )]
-    for i, cvec in enumerate(centroids):
+    rows: list[tuple] = [("param", None, None, None, json.dumps(idx["params"]))]
+    for i, cvec in enumerate(idx["centroids"]):
         rows.append(("centroid", i, None, [float(x) for x in cvec], None))
+    books, rot = idx["books"], idx["rot"]
     if books is not None:
         for j in range(books.shape[0]):
             for code in range(books.shape[1]):
@@ -577,10 +551,9 @@ def build_ivf_index(
     # dim-sized meta in ONE file (guide §6 small files): the local
     # relation spans min(rows, defaultParallelism) partitions, and
     # coalescing it is free — its scan runs no Python
-    from veranda_spark.session import local_df
-
     meta = local_df(
-        spark, rows, "kind string, i int, j int, vec array<double>, sval string"
+        corpus.sparkSession, rows,
+        "kind string, i int, j int, vec array<double>, sval string",
     )
     create_table(meta.coalesce(1), meta_path)
     return v
@@ -639,45 +612,27 @@ def query_ivf_index(
     version: int | None = None,
 ) -> DataFrame:
     """Serve a query batch from a persisted index: NO k-means job, NO
-    corpus assignment pass — the only corpus work is a partition-pruned
-    scan of the probed cells.  The probe-cell union across the batch
-    (≤ nlist ints — the ONLY thing collected) comes from a cells-only
-    projection and is pushed as a literal IN filter so the parquet
-    reader prunes cell= directories up front (hand-rolled dynamic
-    partition pruning).  The scoring frame itself stays LAZY and
-    DISTRIBUTED: no persist pins executor storage across batches
-    (ADVICE r6), and nothing heavier than the cell list rides through
-    the driver (review r7 #4 — the brief r7 collect-and-rebuild
-    variant shipped per-(query, cell) PQ lookup tables driver-side,
-    ~GBs for big batches).  Cost accounting: the cheap centroid
-    cell-assignment (batch × nlist dot products) runs twice — once for
-    the collect, once inside the scoring plan — while the expensive
-    per-cell LUT construction runs exactly once, inside the scoring
-    plan; the job-count pytest still proves zero corpus passes."""
+    corpus encoding pass — the only corpus work is a partition-pruned
+    scan of the probed cells, through the same searcher as ivf_topk.
+    The probe-cell union across the batch (≤ nlist ints — the ONLY thing
+    collected) is pushed as a literal IN filter so the parquet reader
+    prunes cell= directories up front.  The scoring frame stays LAZY and
+    DISTRIBUTED: no persist pins executor storage across batches, and no
+    per-(query, cell) LUT rides through the driver.  The cheap centroid
+    assignment (batch × nlist) runs twice — for the collect and inside
+    the scoring plan; the LUT construction runs once, inside the plan."""
     from veranda_spark.io.table import read_table
 
     idx = load_ivf_index(spark, path)
-    p = idx["params"]
     codes_path, _ = _index_paths(path)
     codes = read_table(spark, codes_path, version)
-
-    cells_probe = _explode_query_cells(
-        queries, idx["centroids"], nprobe, query_id, query_emb
-    )
     probed = sorted(
-        r["cell"] for r in cells_probe.select("cell").distinct().collect()
+        r["cell"]
+        for r in _explode_query_cells(
+            queries, idx["centroids"], nprobe, query_id, query_emb
+        ).select("cell").distinct().collect()
     )
-    pruned = codes.filter(F.col("cell").isin(probed))
-
-    if p["pq"]:
-        qx = _explode_query_luts(
-            queries, idx["centroids"], idx["books"], idx["rot"],
-            p["residual"], nprobe, query_id, query_emb,
-        )
-        enc = pruned.select("vec_id", "cell", "codes")
-        return _pq_adc_score(
-            enc, pruned, qx, idx["books"].shape[1], k, refine
-        )
-    return _ivf_cosine_score(
-        pruned.select("vec_id", "emb", "cell"), cells_probe, k
+    return _search(
+        idx, codes.filter(F.col("cell").isin(probed)), queries,
+        k, nprobe, refine, query_id, query_emb,
     )

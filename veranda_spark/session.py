@@ -3,13 +3,112 @@
 Local-mode settings mirror what we would set on a real cluster:
 AQE on (runtime coalesce + skew-join splitting), Arrow on (every pixel
 kernel is a pandas UDF), shuffle partitions sized to cores not 200.
+
+The driver JVM that ``get_spark`` launches starts from a dynamic
+class-data-sharing archive (JEP 350) kept in
+``${XDG_CACHE_HOME:-~/.cache}/veranda_spark/cds/``: start-up is JVM
+start and class loading, and the archive maps the classes a session
+loads instead of reading them out of Spark's jars.  The first session on
+a host records the archive when its interpreter exits; later sessions
+map it.  Measured with perfbench on a 4-core host (``local[4]``, 2011m
+driver, JDK 17, Spark 4.1.2; medians of 10 interleaved pairs):
+``spatial_join`` ``get_spark`` 6.47 → 3.64 s, its Python-worker warm-up
+6.76 → 4.67 s and ``setup_s`` 15.87 → 10.46 s; ``tile_io`` ``setup_s``
+18.54 → 12.80 s.  The archive is 150–180 MB and resident in the mapping
+JVM (``spatial_join`` peak PSS 1389 → 1508 MB).  The recording session
+pays 2–5 s more set-up than a start without an archive, and 10–12 s at
+exit, while its JVM writes the archive.  No archive is used when the conf
+directory holds real files (CDS refuses a non-empty directory on the
+classpath) or when this process did not launch the JVM.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
+
+#: seconds an exiting interpreter waits for the JVM to write its archive
+_DUMP_WAIT_S = 120
+
+
+def _file_key(path: str) -> str:
+    st = os.stat(path)
+    return f"{path} {st.st_size} {st.st_mtime_ns}"
+
+
+def _cds_launch() -> tuple[str, str | None]:
+    """The class-data-sharing option for the driver JVM this process is
+    about to launch, and the ``SPARK_CONF_DIR`` to launch it with:
+    ``("", None)`` (launch as without CDS) when the JVM already runs, the
+    conf directory holds any file but a ``*.template``, or the cache
+    cannot be keyed or written.
+
+    The archive is named by a hash of the JVM's ``libjvm.so``, the jars and
+    the (empty) conf directory, the classpath the archive is valid for.
+    With no archive yet, this process records one: it takes
+    ``<key>.attempt`` with ``O_EXCL`` (an existing marker means another
+    process is recording or a recording failed: no CDS, no retry) and its
+    JVM writes ``<key>.jsa.<pid>.tmp`` at exit, which ``_publish_archive``
+    renames into place."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return "", None
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        return "", None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+                         "veranda_spark", "cds")
+    empty_conf = os.path.join(cache, "conf")
+    jars = os.path.join(spark_home, "jars")
+    try:
+        if not all(n.endswith(".template") for n in os.listdir(conf_dir)):
+            return "", None
+        libjvm = os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(java))),
+                              "lib", "server", "libjvm.so")
+        parts = [_file_key(libjvm), empty_conf]
+        parts += [_file_key(os.path.join(jars, n)) for n in sorted(os.listdir(jars))]
+        key = os.path.join(cache, hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16])
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.path.exists(key + ".jsa"):
+            return f"-XX:SharedArchiveFile={key}.jsa", empty_conf
+        os.close(os.open(key + ".attempt", os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+    except OSError:
+        return "", None
+    # -Xlog: the dump warns once per class it skips (hundreds of lines)
+    return f"-XX:ArchiveClassesAtExit={key}.jsa.{os.getpid()}.tmp -Xlog:cds=off", empty_conf
+
+
+def _publish_archive(proc: subprocess.Popen, tmp: str) -> None:
+    """At interpreter exit: close the gateway JVM's stdin, on which Spark's
+    ``PythonGatewayServer`` calls ``System.exit(0)`` so that the JVM writes
+    ``tmp``; wait for it, and rename the archive into place if it exited
+    with 0.  A JVM still dumping after ``_DUMP_WAIT_S`` is killed, and its
+    file is dropped."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:  # its accumulator server would see the JVM vanish
+        sc.stop()
+    proc.stdin.close()
+    try:
+        code = proc.wait(timeout=_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        code = proc.wait()
+    try:
+        if code == 0:
+            os.replace(tmp, tmp.rsplit(".", 2)[0])  # <key>.jsa.<pid>.tmp
+        else:
+            os.remove(tmp)
+    except OSError:
+        pass
 
 
 def _default_driver_mem() -> str:
@@ -55,6 +154,9 @@ def get_spark(
     )
     batch_mb = min(128, max(32, 512 // max(n_cores, 1)))
     batch_rec = 1024 * batch_mb // 32
+    cds_opt, conf_dir = _cds_launch()
+    if conf_dir is not None:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -100,7 +202,8 @@ def get_spark(
         # cores).  ParallelGC handles big short-lived arrays in eden.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+UseParallelGC " + os.environ.get("VERANDA_SPARK_DRIVER_JAVA_OPTS", ""),
+            "-XX:+UseParallelGC " + (cds_opt and cds_opt + " ")
+            + os.environ.get("VERANDA_SPARK_DRIVER_JAVA_OPTS", ""),
         )
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
@@ -118,6 +221,9 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if cds_opt.startswith("-XX:ArchiveClassesAtExit="):
+        tmp = cds_opt.split()[0].partition("=")[2]
+        atexit.register(_publish_archive, SparkContext._gateway.proc, tmp)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -106,19 +106,20 @@ def test_quicklook_checkpointed_matches_and_skips_pass1(spark, tmp_path):
 
     from veranda_spark.fixtures import generate_images
     from veranda_spark.io import table
-    from veranda_spark.operators.raster import quicklook, release_caches
+    from veranda_spark.operators.raster import quicklook
 
     imgs = generate_images(spark, 50, seed=9)
     ckpt = str(tmp_path / "ql_ckpt")
 
+    spark.catalog.clearCache()
     plain = quicklook(imgs, factor=4)
     want = {r["image_id"]: r["bytes"] for r in plain.collect()}
-    release_caches(plain)
 
     ck = quicklook(imgs, factor=4, checkpoint_dir=ckpt)
     got = {r["image_id"]: r["bytes"] for r in ck.collect()}
     assert got == want
-    assert not hasattr(ck, "_quicklook_mid")  # no leaked cache handle
+    # neither pass 1 (local checkpoint / table version) is a cached frame
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     mid = os.path.join(ckpt, "quicklook_mid")
     assert table.list_versions(mid) == [1]
@@ -189,12 +190,11 @@ def test_quicklook_checkpoint_ignores_leftover_stage(spark, tmp_path):
 
     from veranda_spark.fixtures import generate_images
     from veranda_spark.io import table
-    from veranda_spark.operators.raster import quicklook, release_caches
+    from veranda_spark.operators.raster import quicklook
 
     imgs = generate_images(spark, 20, seed=4)
     plain = quicklook(imgs, factor=4)
     want = {r["image_id"]: r["bytes"] for r in plain.collect()}
-    release_caches(plain)
 
     ckpt = str(tmp_path / "ql")
     mid = os.path.join(ckpt, "quicklook_mid")
@@ -220,12 +220,11 @@ def test_quicklook_checkpoint_killed_after_publish_resumes(spark, tmp_path, monk
 
     from veranda_spark.fixtures import generate_images
     from veranda_spark.io import table
-    from veranda_spark.operators.raster import quicklook, release_caches
+    from veranda_spark.operators.raster import quicklook
 
     imgs = generate_images(spark, 20, seed=6)
     plain = quicklook(imgs, factor=4)
     want = {r["image_id"]: r["bytes"] for r in plain.collect()}
-    release_caches(plain)
 
     publish = table._publish
 

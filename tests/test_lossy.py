@@ -48,8 +48,11 @@ def test_lossy_dtype_gate(spark, tmp_path):
             )
         ]
     )
+    spark.catalog.clearCache()
     with pytest.raises(Exception, match="uint8/uint16"):
         write_tiles_checkpointed(tiles, str(tmp_path / "sink"), lossy_fmt="dctq")
+    # the sink's cached batch is released on the failure path too
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_lossy_images_through_pipeline(spark):

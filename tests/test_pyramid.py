@@ -120,10 +120,9 @@ def test_pyramid_integer_nodata_and_rounding(spark):
 
 def test_pyramid_checkpointed_matches_and_resumes(spark, tmp_path):
     # VERDICT r3 #7: sink-committed pyramid — identical pixels to the
-    # in-memory chain, and a resumed build never recomputes a committed
-    # level (level markers; each level is one all-or-nothing sink commit)
+    # local-checkpoint chain, and a resumed build never recomputes a
+    # committed level (each level is one all-or-nothing table version)
     from veranda_spark.io.lineage import read_lineage
-    from veranda_spark.operators.raster import build_pyramid_checkpointed
 
     base = str(tmp_path / "pyr")
     imgs = generate_images(spark, 120, seed=3)
@@ -137,18 +136,18 @@ def test_pyramid_checkpointed_matches_and_resumes(spark, tmp_path):
         }
 
     want = snap(build_pyramid(tiles, levels=2))
-    got = snap(build_pyramid_checkpointed(tiles, base, levels=2))
+    got = snap(build_pyramid(tiles, levels=2, checkpoint_dir=base))
     assert got.keys() == want.keys()
     for k in want:
         assert got[k] == want[k], f"mismatch at {k}"
 
     # resume: a second build over the same base must add NO new lineage
-    # commits to either level (markers short-circuit the compute)
+    # commits to either level (a published version short-circuits it)
     n1 = {
         lvl: read_lineage(spark, os.path.join(base, f"level_{lvl}")).count()
         for lvl in (1, 2)
     }
-    again = snap(build_pyramid_checkpointed(tiles, base, levels=2))
+    again = snap(build_pyramid(tiles, levels=2, checkpoint_dir=base))
     n2 = {
         lvl: read_lineage(spark, os.path.join(base, f"level_{lvl}")).count()
         for lvl in (1, 2)
@@ -158,32 +157,20 @@ def test_pyramid_checkpointed_matches_and_resumes(spark, tmp_path):
 
     # partial build (levels=1) then extension to 2: level 1 untouched
     base2 = str(tmp_path / "pyr2")
-    build_pyramid_checkpointed(tiles, base2, levels=1).count()
+    build_pyramid(tiles, levels=1, checkpoint_dir=base2).count()
     c1 = read_lineage(spark, os.path.join(base2, "level_1")).count()
-    ext = snap(build_pyramid_checkpointed(tiles, base2, levels=2))
+    ext = snap(build_pyramid(tiles, levels=2, checkpoint_dir=base2))
     assert read_lineage(spark, os.path.join(base2, "level_1")).count() == c1
     assert ext.keys() == want.keys()
     tiles.unpersist()
 
 
-def test_release_caches_helper(spark):
-    from veranda_spark.operators.raster import release_caches
-
-    imgs = generate_images(spark, 40, seed=5)
-    tiles = burn_in(imgs, GRID, per_layer=False, out_dtype="float64")
-    pyr = build_pyramid(tiles, levels=2)
-    pyr.count()
-    assert release_caches(pyr) == 2  # one cached frame per level
-
-
 def test_pyramid_checkpoint_param_mismatch_raises(spark, tmp_path):
     import pytest as _pytest
-
-    from veranda_spark.operators.raster import build_pyramid_checkpointed
 
     imgs = generate_images(spark, 40, seed=13)
     tiles = burn_in(imgs, GRID, per_layer=False, out_dtype="float64")
     base = str(tmp_path / "pyrfp")
-    build_pyramid_checkpointed(tiles, base, levels=1).count()
+    build_pyramid(tiles, levels=1, checkpoint_dir=base).count()
     with _pytest.raises(ValueError, match="different parameters"):
-        build_pyramid_checkpointed(tiles, base, levels=1, nodata=0.0).count()
+        build_pyramid(tiles, levels=1, nodata=0.0, checkpoint_dir=base).count()

@@ -54,12 +54,6 @@ def char_count(text: Column) -> Column:
     return F.length(text)
 
 
-def punct_ratio(text: Column) -> Column:
-    """Punctuation chars / total chars (quality-scoring feature)."""
-    stripped = F.regexp_replace(text, r"[^\p{Punct}]", "")
-    return F.length(stripped) / F.greatest(F.length(text), F.lit(1))
-
-
 def stopword_hits(text: Column, lang: str = "en") -> Column:
     """Distinct stopwords of ``lang`` present in the text (set semantics —
     identical in Spark array_intersect and DuckDB list_intersect)."""

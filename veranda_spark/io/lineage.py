@@ -167,10 +167,12 @@ def write_tiles_checkpointed(
         .withColumn("completed_at", F.lit(time.time()))
         .cache()
     )
-    n_todo = todo.count()
-    if n_todo:
-        table.append_rows(todo, base, "tile_id")
-    todo.unpersist()
+    try:  # a failing re-encode raises from count(): release the cache anyway
+        n_todo = todo.count()
+        if n_todo:
+            table.append_rows(todo, base, "tile_id")
+    finally:
+        todo.unpersist()
     return {"run_id": run_id, "written": n_todo, "skipped": n_done}
 
 

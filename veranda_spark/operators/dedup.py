@@ -70,11 +70,15 @@ def ngram_jaccard_pairs(
     Plan: explode distinct shingles → self equi-join on shingle →
     distinct candidate pairs → Jaccard via array_intersect/union sizes.
     The shingle join is the LSH-free baseline; for web scale prefer
-    minhash_lsh_pairs (bounded candidates per band)."""
+    minhash_lsh_pairs (bounded candidates per band).
+
+    Eager: the shingle frame feeds the shingle join and both re-check
+    sides, so it is an eager ``localCheckpoint`` computed when this is
+    called (nothing enters the cache manager)."""
     sh = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(word_ngrams(F.col(text_col), n)).alias("shingles"),
-    ).cache()
+    ).localCheckpoint(eager=True)
     exploded = sh.select("id", F.explode("shingles").alias("shingle"))
     cand = (
         exploded.alias("a")
@@ -108,12 +112,19 @@ def minhash_lsh_pairs(
     join), exact Jaccard re-check on candidates.
 
     64 perms / ``bands`` bands of 64/bands rows each: collision prob for
-    Jaccard s is 1-(1-s^r)^b — tuned for s≥0.7 at the defaults."""
+    Jaccard s is 1-(1-s^r)^b — tuned for s≥0.7 at the defaults.
+
+    Eager: the (shingles, signature) frame feeds the band join and both
+    re-check sides, so it is an eager ``localCheckpoint`` computed when
+    this is called — the MinHash UDF runs once per document and nothing
+    enters the cache manager."""
     rows_per_band = MINHASH_PERMS // bands
     sh = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(word_ngrams(F.col(text_col), n)).alias("shingles"),
-    ).withColumn("sig", minhash_signature(shingle_hashes(F.col("shingles")))).cache()
+    ).withColumn(
+        "sig", minhash_signature(shingle_hashes(F.col("shingles")))
+    ).localCheckpoint(eager=True)
     band_keys = sh.select(
         "id",
         F.explode(
@@ -220,12 +231,17 @@ def simhash_pairs(
     """SimHash near-dup pairs within a Hamming radius.
 
     Candidates via the 4-block pigeonhole trick (see
-    _hamming_block_pairs); simhash itself is computed JVM-side from
-    xxhash64 shingle hashes."""
+    _hamming_block_pairs); the simhash UDF votes over xxhash64 shingle
+    hashes computed JVM-side.
+
+    Eager: both sides of the block self-join read the simhash frame, so
+    it is an eager ``localCheckpoint`` computed when this is called —
+    the UDF runs once per document and nothing enters the cache
+    manager."""
     sh = df.select(
         F.col(id_col).alias("id"),
         simhash64(shingle_hashes(F.array_distinct(word_ngrams(F.col(text_col), n)))).alias("sim"),
-    ).cache()
+    ).localCheckpoint(eager=True)
     return _hamming_block_pairs(sh, max_hamming, n_blocks=4)
 
 

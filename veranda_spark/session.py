@@ -173,11 +173,12 @@ def get_spark(
         # >> 64k, so the floor is inert there (guide §2.2).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # let AQE coalesce shuffles INSIDE cached plans too (off by
-        # default to keep cache partitioning stable): build_pyramid /
-        # quicklook persist their levels, and without this every cached
-        # level's keyed repartition stays at the static partition count —
-        # 32 near-empty Python-worker tasks per level at fixture scale
-        # (round-9; nothing here depends on cache partitioning)
+        # default to keep cache partitioning stable): no operator caches
+        # (intermediates are local checkpoints or table versions), but
+        # callers, perfbench and the tests cache frames that end in a
+        # keyed repartition, which would otherwise stay at the static
+        # partition count — near-empty Python-worker tasks at fixture
+        # scale (nothing here depends on cache partitioning)
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",

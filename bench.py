@@ -6,9 +6,10 @@ query wall = min across passes, frame build plus action.  The event log
 splits the best pass's wall into tagged jobs, task, GC, shuffle, Python-
 worker bytes and ``driver_s`` (wall outside any job).  Scaling phase, unless
 queries are named: burn-in at ``local[max(1, cores // 4)]`` and
-``local[cores]``, a fresh JVM per run, 3 interleaved rounds, best rows/s per
-level.  Per-query rows go to stderr; the last stdout line is one JSON object.
-All files the runs write live in one temporary directory, removed at exit.
+``local[cores]``, both with ``2 * cores`` shuffle partitions (strong
+scaling), a fresh JVM per run, 3 interleaved rounds, best rows/s per level.
+Per-query rows go to stderr; the last stdout line is one JSON object.  All
+files the runs write live in one temporary directory, removed at exit.
 """
 
 from __future__ import annotations
@@ -59,13 +60,13 @@ SCALE_PARTITIONS = 128
 SCALE_GRID = RegularGrid(tile_cols=64, tile_rows=64, n_tile_cols=64, n_tile_rows=32)
 
 
-def scale_run(cores: int, parquet_path: str) -> None:
+def scale_run(cores: int, partitions: int, parquet_path: str) -> None:
     """Child process: the timed north-rule job at one parallelism level."""
     from veranda_spark.operators.raster import burn_in
 
     spark = get_spark(
         master=f"local[{cores}]", app_name=f"scale_{cores}",
-        shuffle_partitions=2 * cores,  # 2 waves per core, scaled as N->4N executors
+        shuffle_partitions=partitions,
         # AQE's extra query-stage materialization roughly doubles wall time
         # for this short grouped-map pipeline, whose partitioning is explicit
         extra_conf={"spark.sql.adaptive.enabled": "false"},
@@ -162,7 +163,9 @@ def run_scaling(tmp: str, env: dict) -> dict:
     levels = sorted({lo, hi})
     best: dict[int, dict] = {}
     for c in levels + levels[::-1] + levels:  # 3 interleaved rounds
-        res = child("--scale-run", str(c), path, env=env)
+        # strong scaling: both levels burn the same 2 x hi tasks, so the
+        # figure is what more cores buy, not what a smaller task buys
+        res = child("--scale-run", str(c), str(2 * hi), path, env=env)
         if c not in best or res["rows_per_sec"] > best[c]["rows_per_sec"]:
             best[c] = res
     eff = (best[hi]["rows_per_sec"] / best[lo]["rows_per_sec"]) / (hi / lo)
@@ -177,7 +180,7 @@ def main() -> None:
     if mode == "--gen":
         return make_scale_input(a[0])
     if mode == "--scale-run":
-        return scale_run(int(a[0]), a[1])
+        return scale_run(int(a[0]), int(a[1]), a[2])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     tmp = tempfile.mkdtemp(prefix="veranda_bench_")
     # the children keep their temporary files (and Spark's) inside tmp

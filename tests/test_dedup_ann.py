@@ -177,6 +177,49 @@ def test_phash_neardup_radius_guard(spark):
         phash_neardup_pairs(df, max_hamming=4, n_blocks=4)
 
 
+def _multi_block_phashes(spark):
+    """Random bases, each with variants that flip one bit in chosen 16-bit
+    blocks, so near-dup pairs share 2, 3 or all 4 blocks."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for b in rng.integers(-(2**63), 2**63, size=6, dtype=np.int64):
+        for blocks in ((), (), (0,), (1,), (3,), (0, 2), (1, 3), (0, 1, 2)):
+            v = int(b) & (2**64 - 1)
+            for blk in blocks:
+                v ^= 1 << (16 * blk + int(rng.integers(16)))
+            rows.append((f"img_{len(rows):04d}", v - 2**64 if v >= 2**63 else v))
+    return rows, spark.createDataFrame(rows, schema="image_id string, phash long")
+
+
+@pytest.mark.parametrize("finder", ["ngram", "minhash", "simhash", "phash", "embedding"])
+def test_pair_finders_report_each_pair_once(spark, docs, embeddings, finder):
+    if finder == "phash":
+        rows, df = _multi_block_phashes(spark)
+        out = phash_neardup_pairs(df, max_hamming=3)
+    else:
+        out = {
+            "ngram": lambda: ngram_jaccard_pairs(docs, threshold=0.8),
+            "minhash": lambda: minhash_lsh_pairs(docs, threshold=0.8),
+            "simhash": lambda: simhash_pairs(docs, max_hamming=3),
+            "embedding": lambda: embedding_neardup_pairs(
+                embeddings, threshold=0.95, dim=16, n_planes=8
+            ),
+        }[finder]()
+    pairs = [(r["id_a"], r["id_b"]) for r in out.collect()]
+    assert pairs and len(pairs) == len(set(pairs))
+    assert all(a < b for a, b in pairs)
+    if finder == "phash":
+        # complete too: every pair within the radius, however many blocks
+        # it shares, is reported
+        want = {
+            (ia, ib)
+            for i, (ia, pa) in enumerate(rows)
+            for ib, pb in rows[i + 1:]
+            if bin((pa ^ pb) & (2**64 - 1)).count("1") <= 3
+        }
+        assert set(pairs) == want
+
+
 @pytest.mark.parametrize(
     "residual,opq", [(True, False), (False, False), (True, True)]
 )
@@ -422,11 +465,11 @@ def test_persisted_ivf_pq_index_matches_per_call(
         refine=4, residual=residual, opq=opq, opq_iters=2, sample_rows=200,
     )
     # the re-rank reads the encoded corpus frame; column pruning must keep
-    # the encoder out of that branch.  3 Python-eval nodes: the encoder
-    # twice on the ADC side (the join's inferred isnotnull(cell) filter
-    # evaluates it below the projection) and the query LUT UDF once.
+    # the encoder out of that branch.  2 Python-eval nodes: the encoder
+    # once on the ADC side (the join's inferred isnotnull(cell) filter
+    # stays above it) and the query LUT UDF once.
     plan = one_shot._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"(?:Arrow|Batch)EvalPython", plan)) == 3, plan
+    assert len(re.findall(r"(?:Arrow|Batch)EvalPython", plan)) == 2, plan
     fresh = sorted(
         (r["query_id"], r["rank"], r["vec_id"]) for r in one_shot.collect()
     )

@@ -33,15 +33,10 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> np.ndarray:
-    """Deterministic random hyperplanes for sign-LSH."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
-
-
-def lsh_bucket_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Pandas UDF: embedding → int64 sign-LSH bucket (batch matmul)."""
-    planes = hyperplanes(dim, n_planes, seed)
+def lsh_bucket_udf(dim: int, n_planes: int = 16):
+    """Pandas UDF: embedding → int64 sign-LSH bucket (batch matmul) over
+    ``n_planes`` fixed random hyperplanes (seed 42)."""
+    planes = np.random.default_rng(42).standard_normal((n_planes, dim))
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @F.pandas_udf(T.LongType())

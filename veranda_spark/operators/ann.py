@@ -252,15 +252,17 @@ def _pq_encode_udf(
 
 def _encode(c: DataFrame, idx: dict) -> DataFrame:
     """THE corpus encoder: (vec_id, emb, cell[, codes]) in one Arrow
-    pass — what build_ivf_index persists and ivf_topk searches."""
+    pass — what build_ivf_index persists and ivf_topk searches.  The
+    encoder is marked nondeterministic so the cell join's inferred
+    ``isnotnull(cell)`` is not pushed below the projection, where it
+    would evaluate the UDF a second time over every corpus row."""
     centroids = idx["centroids"]
     if not idx["params"]["pq"]:
-        return c.select(
-            "vec_id", "emb", _cell_udf(centroids)(F.col("emb")).alias("cell")
-        )
+        cell_of = _cell_udf(centroids).asNondeterministic()
+        return c.select("vec_id", "emb", cell_of(F.col("emb")).alias("cell"))
     encode = _pq_encode_udf(
         centroids, idx["books"], idx["rot"], idx["params"]["residual"]
-    )
+    ).asNondeterministic()
     return c.select("vec_id", "emb", encode(F.col("emb")).alias("e")).select(
         "vec_id", "emb", "e.cell", "e.codes"
     )

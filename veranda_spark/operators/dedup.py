@@ -10,10 +10,13 @@ table:
 - simhash:       64-bit simhash + hamming-radius self-join on bucket keys
 - embedding:     cosine near-dup via sign-LSH buckets
 
-Scale notes: every variant generates candidate pairs through an equi-join
-on a compact key (hash, band, bucket) — never an O(n²) cross join; the
-exact similarity re-check runs only on candidates.  Pair output is
-canonicalized (id_a < id_b) to avoid duplicates and self-pairs.
+One pair core: every near-dup finder's candidates come from
+``_self_pairs``, a self equi-join on a compact key (shingle, band, block,
+bucket) filtered to ``a.id < b.id`` — never an O(n²) cross join — and the
+exact re-check runs only on them.  Each pair comes out once: the Jaccard
+finders make candidates distinct (``_jaccard_pairs``), the Hamming
+finders keep a pair at its lowest shared block, and an embedding pair
+shares exactly one bucket.
 """
 
 from __future__ import annotations
@@ -58,6 +61,33 @@ def dedup_keep_first(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
+def _self_pairs(keyed: DataFrame, keys) -> DataFrame:
+    """THE candidate plan: self equi-join of an ``id``-carrying frame on
+    ``keys``, filtered to ``a.id < b.id`` (no self-pairs, one orientation);
+    ``a.*`` and ``b.*`` stay reachable for the re-check."""
+    return keyed.alias("a").join(keyed.alias("b"), keys).filter(F.col("a.id") < F.col("b.id"))
+
+
+def _jaccard_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard re-check of ``_self_pairs`` candidates against the
+    (id, shingles) frame ``sh``.  A pair that shares several keys
+    (shingles, bands) is a candidate once per key, so the pairs are made
+    distinct before the re-check fetches both shingle sets."""
+    a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        cand.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+        .join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -67,10 +97,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Candidate pairs by shared n-gram, exact Jaccard re-check.
 
-    Plan: explode distinct shingles → self equi-join on shingle →
-    distinct candidate pairs → Jaccard via array_intersect/union sizes.
-    The shingle join is the LSH-free baseline; for web scale prefer
-    minhash_lsh_pairs (bounded candidates per band).
+    Plan: explode distinct shingles → ``_self_pairs`` on shingle →
+    ``_jaccard_pairs``.  The shingle join is the LSH-free baseline; for
+    web scale prefer minhash_lsh_pairs (bounded candidates per band).
 
     Eager: the shingle frame feeds the shingle join and both re-check
     sides, so it is an eager ``localCheckpoint`` computed when this is
@@ -80,24 +109,7 @@ def ngram_jaccard_pairs(
         F.array_distinct(word_ngrams(F.col(text_col), n)).alias("shingles"),
     ).localCheckpoint(eager=True)
     exploded = sh.select("id", F.explode("shingles").alias("shingle"))
-    cand = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_pairs(_self_pairs(exploded, "shingle"), sh, threshold)
 
 
 def minhash_lsh_pairs(
@@ -108,8 +120,8 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """MinHash + banded LSH near-dup pairs (shingle→minhash→band→bucket
-    join), exact Jaccard re-check on candidates.
+    """MinHash + banded LSH near-dup pairs (shingle→minhash→band→
+    ``_self_pairs`` on (band, bucket)), ``_jaccard_pairs`` re-check.
 
     64 perms / ``bands`` bands of 64/bands rows each: collision prob for
     Jaccard s is 1-(1-s^r)^b — tuned for s≥0.7 at the defaults.
@@ -125,52 +137,26 @@ def minhash_lsh_pairs(
     ).withColumn(
         "sig", minhash_signature(shingle_hashes(F.col("shingles")))
     ).localCheckpoint(eager=True)
-    band_keys = sh.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.struct(
-                    bnd.alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(F.col("sig"), bnd * rows_per_band + 1, rows_per_band),
-                                lambda v: v.cast("string"),
-                            ),
-                        )
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.bucket")
-    cand = (
-        band_keys.alias("a")
-        .join(band_keys.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    band_hashes = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda bnd: F.xxhash64(F.concat_ws(",", F.transform(
+            F.slice(F.col("sig"), bnd * rows_per_band + 1, rows_per_band),
+            lambda v: v.cast("string"),
+        ))),
     )
-    a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    band_keys = sh.select("id", F.posexplode(band_hashes).alias("band", "bucket"))
+    return _jaccard_pairs(_self_pairs(band_keys, ["band", "bucket"]), sh, threshold)
 
 
 def _hamming_block_pairs(sh: DataFrame, max_hamming: int, n_blocks: int) -> DataFrame:
-    """Shared pigeonhole candidate + exact re-check over a (id, sim) frame.
+    """Pigeonhole candidates + exact re-check over an (id, sim) frame.
 
     Any pair with hamming ≤ n_blocks-1 shares at least one identical
-    64/n_blocks-bit block → equi-join per block, exact bit_count re-check.
-    All JVM Column ops — no Python in the pair path."""
+    64/n_blocks-bit block → ``_self_pairs`` on (block, key), exact
+    bit_count re-check.  A pair is reported only at its lowest shared
+    block (no lower block of ``a.sim ^ b.sim`` is zero), so it is one
+    row with no distinct.  All JVM Column ops — no Python in the pair
+    path."""
     if max_hamming > n_blocks - 1:
         raise ValueError(
             f"pigeonhole completeness needs max_hamming <= n_blocks-1 "
@@ -179,45 +165,29 @@ def _hamming_block_pairs(sh: DataFrame, max_hamming: int, n_blocks: int) -> Data
     if 64 % n_blocks:
         raise ValueError("n_blocks must divide 64")
     width = 64 // n_blocks
-    mask = (1 << width) - 1
+    mask = F.lit((1 << width) - 1)
+
+    def block(c, i):
+        return F.shiftrightunsigned(c, i * width).bitwiseAND(mask)
+
     blocks = sh.select(
         "id",
         "sim",
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block"),
-                        F.shiftrightunsigned(F.col("sim"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
+            F.array(*[F.struct(F.lit(i).alias("block"), block(F.col("sim"), i).alias("key"))
+                      for i in range(n_blocks)])
         ).alias("bk"),
     ).select("id", "sim", "bk.block", "bk.key")
-    # Exact re-check BEFORE the distinct (round-9, guide §2.3 "shuffle
-    # fewer bytes"): hamming64 is a codegen'd bit op on columns already
-    # present at the join output, so filtering first costs nothing extra
-    # per candidate while the distinct then shuffles only TRUE pairs
-    # (≤ n_blocks duplicates each) instead of the full candidate
-    # explosion — on a degenerate block key (dense ids: the high blocks
-    # are all zero) that is orders of magnitude fewer rows through the
-    # Exchange.  Output-identical: hamming is a function of the pair, so
-    # distinct over (id_a, id_b, hamming) == distinct over (id_a, id_b).
+    diff = F.col("a.sim").bitwiseXOR(F.col("b.sim"))
+    lowest = F.lit(True)
+    for i in range(n_blocks - 1):
+        lowest = lowest & ((F.col("block") <= i) | (block(diff, i) != 0))
     return (
-        blocks.alias("a")
-        .join(blocks.alias("b"), ["block", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
+        _self_pairs(blocks, ["block", "key"])
+        .filter(lowest)
         .withColumn("hamming", hamming64(F.col("a.sim"), F.col("b.sim")))
         .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            "hamming",
-        )
-        .distinct()
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "hamming")
     )
 
 
@@ -257,10 +227,11 @@ def phash_neardup_pairs(
 
     Same pigeonhole-block plan as simhash_pairs but over an EXISTING int64
     column, so the whole pipeline is JVM Column ops: explode n_blocks keys
-    per row → equi-join on (block, key) → bit_count re-check.  At 10^12
-    images the block key is a shuffle-bounded equi-join (no all-pairs); a
-    hot key (e.g. phash=0 for blank images) is the same skew class as any
-    hot join key — pre-filter degenerate phashes or salt the block join.
+    per row → equi-join on (block, key) → bit_count re-check, each pair
+    at its lowest shared block.  At 10^12 images the block key is a
+    shuffle-bounded equi-join (no all-pairs); a hot key (e.g. phash=0 for
+    blank images) is the same skew class as any hot join key — pre-filter
+    degenerate phashes or salt the block join.
     """
     sh = df.select(F.col(id_col).alias("id"), F.col(phash_col).cast("long").alias("sim"))
     return _hamming_block_pairs(sh, max_hamming, n_blocks=n_blocks)
@@ -274,28 +245,22 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
-    """Embedding-cosine near-dup via sign-LSH buckets + exact cosine
-    re-check.  n_planes trades recall vs candidate volume (12 planes →
-    4096 buckets)."""
-    bucketer = lsh_bucket_udf(dim, n_planes)
-    e = df.select(
-        F.col(id_col).alias("id"), F.col(emb_col).cast("array<double>").alias("emb")
-    ).withColumn("bucket", bucketer(F.col("emb")))
-    cand = (
-        e.alias("a")
-        .join(e.alias("b"), "bucket")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.emb").alias("emb_a"),
-            F.col("b.emb").alias("emb_b"),
-        )
-    )
+    """Embedding-cosine near-dup via sign-LSH buckets (``_self_pairs`` on
+    bucket) + exact cosine re-check.  n_planes trades recall vs candidate
+    volume (12 planes → 4096 buckets); a pair shares exactly one bucket.
+
+    Eager: both join sides read the bucketed frame, so it is an eager
+    ``localCheckpoint`` computed when this is called — the LSH UDF runs
+    once per vector and nothing enters the cache manager."""
+    emb = F.col(emb_col).cast("array<double>")
+    bucket = lsh_bucket_udf(dim, n_planes)(emb)
+    e = df.select(F.col(id_col).alias("id"), emb.alias("emb"), bucket.alias("bucket"))
     return (
-        cand.withColumn("cos", cosine(F.col("emb_a"), F.col("emb_b")))
+        _self_pairs(e.localCheckpoint(eager=True), "bucket")
+        .withColumn("cos", cosine(F.col("a.emb"), F.col("b.emb")))
         .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                F.round("cos", 6).alias("cos"))
     )
 
 
